@@ -291,32 +291,6 @@ def _winding_crossings_many(pts: np.ndarray, rings: list[np.ndarray]):
     return wn, cr
 
 
-def _seg_intersections(a0, a1, b0, b1):
-    """Proper + endpoint intersections of two segments -> list of t in
-    (0,1) for segment A (param positions where A must split)."""
-    r = a1 - a0
-    s = b1 - b0
-    denom = r[0] * s[1] - r[1] * s[0]
-    ts = []
-    if denom != 0.0:
-        q = b0 - a0
-        t = (q[0] * s[1] - q[1] * s[0]) / denom
-        u = (q[0] * r[1] - q[1] * r[0]) / denom
-        if 0.0 < t < 1.0 and 0.0 <= u <= 1.0:
-            ts.append(t)
-    else:
-        # collinear overlap: split at the other segment's endpoints
-        cross = (b0 - a0)[0] * r[1] - (b0 - a0)[1] * r[0]
-        if cross == 0.0:
-            rr = float(r @ r)
-            if rr > 0:
-                for p in (b0, b1):
-                    t = float((p - a0) @ r) / rr
-                    if 0.0 < t < 1.0:
-                        ts.append(t)
-    return ts
-
-
 def _winding_and_crossings(pt, rings):
     """(winding number, crossing count) of pt w.r.t. rings (ray to +x)."""
     wn = 0
@@ -336,18 +310,6 @@ def _winding_and_crossings(pt, rings):
         wn += int(np.sum(upward & hit)) - int(np.sum(downward & hit))
         cross += int(np.sum((upward | downward) & hit))
     return wn, cross
-
-
-def _filled(wn: int, cross: int, fill_type: str) -> bool:
-    if fill_type == "even_odd":
-        return cross % 2 == 1
-    if fill_type == "non_zero":
-        return wn != 0
-    if fill_type == "positive":
-        return wn > 0
-    if fill_type == "negative":
-        return wn < 0
-    raise ValueError(fill_type)
 
 
 def _filled_many(wn: np.ndarray, cross: np.ndarray, fill_type: str) -> np.ndarray:

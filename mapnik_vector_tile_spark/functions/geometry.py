@@ -167,55 +167,63 @@ def to_wkt_batch(geoms: list) -> list:
     return out
 
 
-def wkt_from_segmented(entry: dict, is_polygon: bool):
-    """Segmented batch-decode output (commands.decode_geometry_vec_batch
-    segmented=True) -> (feature ids, WKT strings). Ring structure is
-    read off plain int lists (no per-feature ndarray is ever built) and
-    every coordinate renders in ONE C-level %-format pass — the WKT
-    boundary costs O(points), not O(features) Python."""
-    rl = entry["ring_len"].tolist()
-    rf = entry["ring_feat"].tolist()
-    ex = entry["exterior"].tolist() if is_polygon else None
-    ids: list[int] = []
-    templates: list[str] = []
-    tcache: dict = {}
-    i, n = 0, len(rl)
-    while i < n:
-        fi = rf[i]
-        j = i
-        if is_polygon:
-            polys: list[list[int]] = []
-            cur: list[int] | None = None
-            while j < n and rf[j] == fi:
-                if ex[j] or cur is None:  # first kept ring is exterior
-                    cur = [rl[j]]
-                    polys.append(cur)
-                else:
-                    cur.append(rl[j])
-                j += 1
-            key = (
-                ("PG", tuple(polys[0]))
-                if len(polys) == 1
-                else ("MPG", tuple(tuple(p) for p in polys))
-            )
+def _packed_key(kind: str, off: list, ext) -> tuple:
+    """Structure key (as in _flat_rings) of a packed geometry: a polygon
+    starts at the first ring and at every later exterior, as in
+    gpack_from_packed; a single part is a POINT / LINESTRING / POLYGON."""
+    if kind == "multipoint":
+        return ("P",) if off[-1] == 1 else ("MP", off[-1])
+    lens = [b - a for a, b in zip(off, off[1:])]
+    if kind == "multilinestring":
+        return ("L", lens[0]) if len(lens) == 1 else ("ML", tuple(lens))
+    polys: list[list[int]] = []
+    for n, e in zip(lens, ext):
+        if e or not polys:
+            polys.append([n])
         else:
-            rings: list[int] = []
-            while j < n and rf[j] == fi:
-                rings.append(rl[j])
-                j += 1
-            key = ("L", rings[0]) if len(rings) == 1 else ("ML", tuple(rings))
-        i = j
-        ids.append(fi)
-        tpl = tcache.get(key)
+            polys[-1].append(n)
+    if len(polys) == 1:
+        return ("PG", tuple(polys[0]))
+    return ("MPG", tuple(tuple(p) for p in polys))
+
+
+def wkt_from_packed(packs: list) -> list:
+    """Packed ragged geometries ({kind, xs, ys, offsets[, exterior]}, or
+    None) -> WKT strings (None stays None), the same text to_wkt writes
+    for the tuple form. Templates are cached on the raw offsets and
+    exterior bytes, so a tile of same-shaped features builds one
+    template, and every coordinate renders in ONE C-level %-format
+    pass."""
+    out: list = [None] * len(packs)
+    tcache: dict = {}
+    templates: list[str] = []
+    xs_parts: list = []
+    ys_parts: list = []
+    idxs: list[int] = []
+    for i, pk in enumerate(packs):
+        if pk is None:
+            continue
+        kind = pk["kind"]
+        off = pk["offsets"]
+        ext = pk.get("exterior") if kind == "multipolygon" else None
+        raw = (kind, off.tobytes(), None if ext is None else ext.tobytes())
+        tpl = tcache.get(raw)
         if tpl is None:
-            tpl = tcache[key] = _wkt_template(key)
+            key = _packed_key(kind, off.tolist(), None if ext is None else ext.tolist())
+            tpl = tcache[raw] = _wkt_template(key)
         templates.append(tpl)
-    if not ids:
-        return ids, []
-    rendered = ("\x00".join(templates)) % tuple(
-        np.asarray(entry["coords"], dtype=np.float64).ravel().tolist()
-    )
-    return ids, rendered.split("\x00")
+        xs_parts.append(pk["xs"])
+        ys_parts.append(pk["ys"])
+        idxs.append(i)
+    if not idxs:
+        return out
+    flat = np.empty((sum(len(v) for v in xs_parts), 2), dtype=np.float64)
+    flat[:, 0] = np.concatenate(xs_parts)
+    flat[:, 1] = np.concatenate(ys_parts)
+    rendered = ("\x00".join(templates)) % tuple(flat.ravel().tolist())
+    for i, s in zip(idxs, rendered.split("\x00")):
+        out[i] = s
+    return out
 
 
 def gpack_from_packed(kind: str, xs, ys, offsets, exterior=None):
@@ -817,118 +825,6 @@ def transform_geom(geom, vt: ViewTransform):
     raise ValueError(kind)
 
 
-def transform_geoms_batch(geoms: list, vt: ViewTransform) -> list:
-    """transform_geom over a BATCH of features with ONE flat
-    transform+quantize pass (per-feature numpy-call overhead was ~25%
-    of the geometry encode cost). Returns [(tile_geom, px_bbox)] where
-    px_bbox = (minx, miny, maxx, maxy) over the kept integer points or
-    None for empty — callers use it for the clip-skip fast path."""
-    flats: list[np.ndarray] = []
-    for g in geoms:
-        kind, val = g
-        if kind == "empty" or kind == "geometrycollection":
-            continue
-        if kind == "point":
-            flats.append(np.asarray(val, dtype=np.float64).reshape(1, 2))
-        elif kind in ("multipoint", "linestring"):
-            flats.append(np.asarray(val, dtype=np.float64).reshape(-1, 2))
-        elif kind in ("multilinestring", "polygon"):
-            flats.extend(np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in val)
-        elif kind == "multipolygon":
-            flats.extend(
-                np.asarray(r, dtype=np.float64).reshape(-1, 2)
-                for poly in val for r in poly
-            )
-        else:
-            raise ValueError(kind)
-    if flats:
-        coords = np.concatenate(flats, axis=0)
-        px_all, ok_all = quantize(coords, vt)
-    else:
-        px_all = np.empty((0, 2), dtype=np.int64)
-        ok_all = np.empty(0, dtype=bool)
-    all_ok = bool(ok_all.all()) if len(ok_all) else True
-
-    # per-ring bboxes in ONE reduceat pass (the per-ring min/max calls
-    # were a top-5 cost of the whole geometry encode)
-    ring_lens = np.fromiter((len(f) for f in flats), dtype=np.int64, count=len(flats))
-    if len(ring_lens):
-        offs = np.concatenate([[0], np.cumsum(ring_lens)[:-1]])
-        rmin = np.minimum.reduceat(px_all, offs, axis=0)
-        rmax = np.maximum.reduceat(px_all, offs, axis=0)
-    else:
-        rmin = rmax = np.empty((0, 2), dtype=np.int64)
-
-    pos = 0
-    ring_i = 0
-
-    def take(n: int):
-        nonlocal pos, ring_i
-        px = px_all[pos : pos + n]
-        pos += n
-        ring_i += 1
-        if all_ok:
-            return px
-        ok = ok_all[pos - n : pos]
-        return px[ok] if not ok.all() else px
-
-    out = []
-    for g in geoms:
-        kind, val = g
-        if kind == "empty":
-            out.append((("empty", None), None))
-            continue
-        if kind == "geometrycollection":  # rare: per-feature path
-            tg = transform_geom(g, vt)
-            out.append((tg, _geom_px_bbox(tg)))
-            continue
-        r0 = ring_i
-        if kind == "point":
-            px = take(1)
-            tg = ("point", px[0]) if len(px) else ("empty", None)
-        elif kind == "multipoint":
-            px = take(len(val))
-            tg = ("multipoint", px) if len(px) else ("empty", None)
-        elif kind == "linestring":
-            px = take(len(val))
-            tg = ("linestring", px) if len(px) >= 2 else ("empty", None)
-        elif kind == "multilinestring":
-            parts = [take(len(line)) for line in val]
-            keep = [p for p in parts if len(p) >= 2]
-            tg = ("multilinestring", keep) if keep else ("empty", None)
-        elif kind == "polygon":
-            rings = [take(len(r)) for r in val]
-            tg = (
-                ("polygon", rings)
-                if rings and len(rings[0]) >= 3
-                else ("empty", None)
-            )
-        else:  # multipolygon
-            polys = []
-            for poly in val:
-                rings = [take(len(r)) for r in poly]
-                if rings and len(rings[0]) >= 3:
-                    polys.append(rings)
-            tg = ("multipolygon", polys) if polys else ("empty", None)
-        if tg[0] == "empty":
-            out.append((tg, None))
-        elif all_ok:
-            # bbox from the precomputed per-ring extrema; covers every
-            # consumed ring incl. rebuilt-away parts — a superset bbox
-            # only makes the inside fast-path check CONSERVATIVE
-            if ring_i - r0 == 1:
-                bb = (int(rmin[r0, 0]), int(rmin[r0, 1]),
-                      int(rmax[r0, 0]), int(rmax[r0, 1]))
-            else:
-                lo = rmin[r0:ring_i].min(axis=0)
-                hi = rmax[r0:ring_i].max(axis=0)
-                bb = (int(lo[0]), int(lo[1]), int(hi[0]), int(hi[1]))
-            out.append((tg, bb))
-        else:
-            out.append((tg, _geom_px_bbox(tg)))
-    return out
-
-
 def _geom_px_bbox(tg):
     kind, val = tg
     if kind == "empty" or val is None:
@@ -1462,14 +1358,6 @@ def _clip_polygon_rings(rings, box, area_threshold, process_all_rings):
 # both ~linear, so the gate is now a pathological-input backstop only —
 # the reference's Wagyu union has no limit (clipper.hpp:226-301).
 RESOLVE_VERTEX_BUDGET = 1_000_000
-
-
-def _segments_intersect(a0, a1, b0, b1) -> bool:
-    d1 = (b1[0] - b0[0]) * (a0[1] - b0[1]) - (b1[1] - b0[1]) * (a0[0] - b0[0])
-    d2 = (b1[0] - b0[0]) * (a1[1] - b0[1]) - (b1[1] - b0[1]) * (a1[0] - b0[0])
-    d3 = (a1[0] - a0[0]) * (b0[1] - a0[1]) - (a1[1] - a0[1]) * (b0[0] - a0[0])
-    d4 = (a1[0] - a0[0]) * (b1[1] - a0[1]) - (a1[1] - a0[1]) * (b1[0] - a0[0])
-    return ((d1 > 0) != (d2 > 0)) and ((d3 > 0) != (d4 > 0))
 
 
 def _needs_fill_resolution_scalar(rings) -> bool:

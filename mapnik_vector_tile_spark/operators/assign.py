@@ -49,27 +49,6 @@ def assign_tiles(df: DataFrame, z: int, lon="lon", lat="lat") -> DataFrame:
     return df.withColumn("z", F.lit(z)).withColumn("x", x).withColumn("y", y)
 
 
-def assign_tiles_multizoom(df: DataFrame, zooms, lon="lon", lat="lat") -> DataFrame:
-    """Explode each row into one (z, x, y) per requested zoom."""
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(z).alias("z"),
-                tilemath.lonlat_to_tile_cols(F.col(lon), F.col(lat), z)[0].alias("x"),
-                tilemath.lonlat_to_tile_cols(F.col(lon), F.col(lat), z)[1].alias("y"),
-            )
-            for z in zooms
-        ]
-    )
-    return (
-        df.withColumn("cell", F.explode(cells))
-        .withColumn("z", F.col("cell.z"))
-        .withColumn("x", F.col("cell.x"))
-        .withColumn("y", F.col("cell.y"))
-        .drop("cell")
-    )
-
-
 def assign_tiles_buffered(
     df: DataFrame, z: int, buffer_px: int, tile_size: int = 4096, lon="lon", lat="lat"
 ) -> DataFrame:
@@ -130,9 +109,3 @@ def tile_counts(assigned: DataFrame) -> DataFrame:
     return assigned.groupBy("z", "x", "y").agg(F.count("*").alias("n_rows"))
 
 
-def with_salt(df: DataFrame, buckets: int, key_col: str = "image_id") -> DataFrame:
-    """Deterministic salt for hotspot cells feeding applyInPandas stages.
-
-    Uses a hash of the row key (not rand()) so retries/resume are stable.
-    """
-    return df.withColumn("salt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(buckets)))

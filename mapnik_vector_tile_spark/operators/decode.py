@@ -1,11 +1,24 @@
 """Tile decode — mapInPandas inverse of operators.encode (S2/S3, K6/K7).
 
-The reference's tile_datasource_pbf + tile_featureset_pbf pull model
-(src/vector_tile_datasource_pbf.ipp:35-194,
-src/vector_tile_featureset_pbf.ipp:113-325) becomes a batch kernel:
-tile binary -> feature rows with decoded mercator lon/lat (or WKT) and
-stringified properties. Used for round-trip verification and as the
-decode scan of composite's slow path.
+The reference decodes through one feature iterator,
+tile_featureset_pbf::next (src/vector_tile_datasource_pbf.ipp:35-194,
+src/vector_tile_featureset_pbf.ipp:113-325). Here that iterator is
+`_layer_features`: the only code that turns a layer message into
+features. It yields EVERY feature as (name, feature_id, geom_type,
+packed-or-None, props, raster), the geometry in the packed ragged form
+{kind, xs, ys, offsets[, exterior]} in mercator coordinates. One tile
+loop (`_tile_layers`: decompress, tile bounds, layer split) feeds it,
+and every scan is a projection of that walk:
+
+  * WKT rows (decode_layer_rows / decode_tile_rows / decode_tiles)
+    render the packed form with geometry.wkt_from_packed;
+  * the packed and gpack scans (iter_layer_packed / decode_tiles_packed
+    / decode_tiles_gpack) drop features with no geometry and no raster,
+    like the reference's next() skip;
+  * the columnar kernel's fallback lane takes mx/my from single-point
+    features (NaN for every other feature). Its fast lane
+    (pbf.parse_layers_batch -> pbf.uniform_point_columns) decodes this
+    engine's uniform point framing without the walk.
 
 Decode applies tile_x/tile_y/scale like the reference:
 scale = extent / tile_mercator_size(z); decoded coord =
@@ -31,19 +44,19 @@ DECODED_SCHEMA = (
 
 
 class _LayerBatch:
-    """Uniform per-layer decode state shared by the WKT and packed
-    scans: feature fields as GLOBAL flat arrays when the lockstep wire
-    walk holds (pbf.decode_features_batch return_global) with the
-    geometry batch-decoded straight off the global varint array
+    """Per-layer decode state of _layer_features: feature fields as
+    GLOBAL flat arrays when the lockstep wire walk holds
+    (pbf.decode_features_batch return_global) with the geometry
+    batch-decoded straight off the global varint array
     (commands.decode_geometry_vec_batch_global — vectorized frontier
-    header walk), falling back to per-feature parsing on exotic wire
-    shapes. Either way the exposed surface is identical."""
+    header walk), falling back to per-feature parsing on few big
+    features and exotic wire shapes. Either way the exposed surface is
+    identical."""
 
     __slots__ = ("n", "ids", "types", "tags", "tag_off", "glen",
-                 "batched", "seg", "_feats", "_fb", "dec_args")
+                 "batched", "seg", "_feats", "_fb")
 
     def __init__(self, layer: dict, dec_args: dict):
-        self.dec_args = dec_args
         msgs = layer["features"]
         # shape heuristic: the lockstep walk + ragged gathers win on
         # MANY SMALL features (the dense-tile shape) but cost ~3x the
@@ -99,16 +112,6 @@ class _LayerBatch:
         s = fb["rast_s"][fi]
         return fb["buf"][s : s + fb["rast_l"][fi]].tobytes() if s >= 0 else None
 
-    def fallback_geom(self, fi: int):
-        """Per-feature re-decode for features the batch declined —
-        the vectorized/scalar paths own the exact v1/v2 error matrix."""
-        g = None
-        if self.glen[fi] >= 64:
-            g = Cmd.decode_geometry_vec(self.geom(fi), self.types[fi], **self.dec_args)
-        if g is None:
-            g = Cmd.decode_geometry(self.geom(fi), self.types[fi], **self.dec_args)
-        return g
-
     def props_of(self, fi: int, keys: list, vals_str: list) -> dict:
         # out-of-range indices are silently skipped, like the reference
         # featureset (vector_tile_featureset_pbf.ipp:147-148)
@@ -150,64 +153,110 @@ def _layer_dec_args(layer: dict, bounds, bbox) -> dict:
     )
 
 
-def decode_layer_rows(
-    z: int, x: int, y: int, layer_bytes: bytes, bbox=None, bounds=None
-) -> list[tuple]:
-    """One layer message -> decoded feature rows (mercator coordinates).
-    `bounds` is the tile mercator bbox (computed from z/x/y if absent) —
-    passing it lets callers amortize it across a tile's layers."""
-    if bounds is None:
-        bounds = tilemath.tile_mercator_bbox_np(x, y, z)
+def _layer_features(layer_bytes: bytes, bounds, bbox=None, typed: bool = False) -> list[tuple]:
+    """One layer message -> one (name, feature_id, geom_type, packed,
+    props, raster) tuple per feature, in wire order — the engine's only
+    layer decode. packed is the ragged geometry {kind, xs, ys,
+    offsets[, exterior]} or None (no geometry, or all of it outside
+    `bbox`). Features the batch decoder declines replay through
+    decode_geometry_vec and then the scalar decode_geometry, which own
+    the exact v1/v2 error matrix. typed=True keeps property values as
+    their decoded python variants (int/float/bool/str) instead of
+    stringifying — the re-encode merge path needs the Value types back
+    (vector_tile_load_tile.hpp:93-137)."""
     layer = pbf.decode_layer(bytes(layer_bytes))
     if not _layer_ok(layer):
         return []
-    dec_args = _layer_dec_args(layer, bounds, bbox)
-    lb = _LayerBatch(layer, dec_args)
-    # features the batch kept segmented render straight from the flat
-    # ring arrays; everything else goes through the tuple writer
-    seg_wkt: dict[int, str] = {}
-    for gt, entry in (lb.seg or {}).items():
-        ids, wkts = G.wkt_from_segmented(entry, is_polygon=(gt == Cmd.POLYGON))
-        seg_wkt.update(zip(ids, wkts))
-    wkt_out: list = [None] * lb.n
-    fallback: list = []  # (feature index, geom tuple) — one batch WKT pass
-    for fi in range(lb.n):
-        if not lb.glen[fi]:
-            continue
-        g = lb.batched[fi]
-        if g == "seg":
-            wkt_out[fi] = seg_wkt.get(fi)
-        else:
-            if g is None:
-                g = lb.fallback_geom(fi)
-            if g[0] != "empty":
-                fallback.append((fi, g))
-    if fallback:
-        for (fi, _), s in zip(fallback, G.to_wkt_batch([g for _, g in fallback])):
-            wkt_out[fi] = s
+    kw = _layer_dec_args(layer, bounds, bbox)
+    lb = _LayerBatch(layer, kw)
+    seg_pk = _packed_from_seg(lb.seg)
     keys = layer["keys"]
-    # stringify the value dictionary ONCE (tags reference it repeatedly)
-    vals_str = [None if v is None else str(v) for v in layer["values"]]
+    if typed:
+        vals = list(layer["values"])
+    else:
+        vals = [None if v is None else str(v) for v in layer["values"]]
     name = layer["name"]
-    return [
-        (
-            z, x, y, name, lb.ids[fi], lb.types[fi],
-            wkt_out[fi], lb.props_of(fi, keys, vals_str), lb.raster(fi),
+    out = []
+    for fi in range(lb.n):
+        pk = None
+        if lb.glen[fi]:
+            g = lb.batched[fi]
+            if g == "seg":
+                pk = seg_pk.get(fi)
+            else:
+                if g is None:
+                    g = Cmd.decode_geometry_vec(lb.geom(fi), lb.types[fi], packed=True, **kw)
+                if g is None:
+                    g = Cmd.decode_geometry(lb.geom(fi), lb.types[fi], **kw)
+                pk = g[1] if g[0] == "packed" else _pack_from_parts(g)[1]
+        out.append(
+            (name, lb.ids[fi], lb.types[fi], pk, lb.props_of(fi, keys, vals), lb.raster(fi))
         )
-        for fi in range(lb.n)
+    return out
+
+
+def _tile_layers(z: int, x: int, y: int, tile: bytes, bbox=None, typed: bool = False):
+    """The tile loop of every walk-based scan: decompress, the tile's
+    mercator bounds once, then each layer through _layer_features.
+    Yields one feature list per layer, in wire order."""
+    if not tile:
+        return
+    data = Z.decompress(bytes(tile))
+    bounds = tilemath.tile_mercator_bbox_np(x, y, z)
+    for layer_bytes in pbf.decode_tile(data):
+        yield _layer_features(layer_bytes, bounds, bbox=bbox, typed=typed)
+
+
+def _wkt_rows(z: int, x: int, y: int, feats: list[tuple]) -> list[tuple]:
+    wkts = G.wkt_from_packed([f[3] for f in feats])
+    return [
+        (z, x, y, name, fid, gt, wkt, props, raster)
+        for (name, fid, gt, _pk, props, raster), wkt in zip(feats, wkts)
     ]
+
+
+def _kept(feats: list[tuple]) -> list[tuple]:
+    """The packed scans' filter: features with no geometry and no raster
+    are dropped, like the reference featureset's next() skip."""
+    return [f for f in feats if f[3] is not None or f[5] is not None]
+
+
+def decode_layer_rows(
+    z: int, x: int, y: int, layer_bytes: bytes, bbox=None, bounds=None
+) -> list[tuple]:
+    """One layer message -> decoded feature rows (mercator coordinates,
+    WKT geometry). `bounds` is the tile mercator bbox (computed from
+    z/x/y if absent) — passing it lets callers amortize it across a
+    tile's layers."""
+    if bounds is None:
+        bounds = tilemath.tile_mercator_bbox_np(x, y, z)
+    return _wkt_rows(z, x, y, _layer_features(layer_bytes, bounds, bbox=bbox))
 
 
 def decode_tile_rows(z: int, x: int, y: int, tile: bytes, bbox=None) -> list[tuple]:
     """One tile -> decoded feature rows (mercator coordinates)."""
-    if not tile:
-        return []
-    data = Z.decompress(bytes(tile))
-    bounds = tilemath.tile_mercator_bbox_np(x, y, z)
     rows = []
-    for layer_bytes in pbf.decode_tile(data):
-        rows.extend(decode_layer_rows(z, x, y, layer_bytes, bbox=bbox, bounds=bounds))
+    for feats in _tile_layers(z, x, y, tile, bbox=bbox):
+        rows.extend(_wkt_rows(z, x, y, feats))
     return rows
+
+
+def _scan(tiles: DataFrame, schema: str, columns: list[str], rows_of, keep=()) -> DataFrame:
+    """mapInPandas scaffold of the walk-based scans: rows_of(z, x, y,
+    tile, extras) -> output rows of one tile, where extras are the
+    tile's values of the `keep` columns."""
+
+    def kernel(iterator):
+        for pdf in iterator:
+            out = []
+            for z, x, y, tile, *extras in zip(
+                pdf["z"], pdf["x"], pdf["y"], pdf["tile"], *(pdf[c] for c in keep)
+            ):
+                out.extend(rows_of(int(z), int(x), int(y), tile, tuple(extras)))
+            if out:
+                yield pd.DataFrame(out, columns=columns)
+
+    return tiles.select("z", "x", "y", "tile", *keep).mapInPandas(kernel, schema=schema)
 
 
 def _layer_sections(data: bytes):
@@ -449,9 +498,11 @@ def explode_hot_tiles(
     300k-feature z13 straggler) is split on feature-frame boundaries
     into standalone mini-tiles of ~chunk_bytes each, which then decode
     in PARALLEL tasks. Output schema is (z, x, y, tile) — the chunks are
-    valid uncompressed tile messages, so decode_tiles /
-    decode_tiles_packed / decode_tiles_gpack / decode_tiles_columnar
-    consume them unchanged (decompress passes raw pbf through).
+    valid uncompressed tile messages, so the shared tile loop of
+    decode_tiles / decode_tiles_packed / decode_tiles_gpack and the
+    columnar kernel consume them unchanged (decompress passes raw pbf
+    through). A chunk is a layer cut on feature-frame boundaries, so the
+    one layer walk decodes it exactly as it decodes the whole layer.
 
     Only rows whose stored payload is >= hot_bytes pay the split + the
     round-robin shuffle that spreads their chunks across tasks; cold
@@ -502,22 +553,11 @@ def decode_tiles(tiles: DataFrame, bbox=None) -> DataFrame:
     """tiles: (z, x, y, tile binary, ...) -> decoded feature rows (WKT
     text out — the compat/interop scan; pipelines ride the packed/gpack
     forms). `bbox` pushes a mercator query box into the decoder."""
-
-    def kernel(iterator):
-        for pdf in iterator:
-            out = []
-            for z, x, y, tile in zip(pdf["z"], pdf["x"], pdf["y"], pdf["tile"]):
-                out.extend(decode_tile_rows(int(z), int(x), int(y), tile, bbox=bbox))
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "z", "x", "y", "layer", "feature_id", "geom_type",
-                        "geom_wkt", "props", "raster",
-                    ],
-                )
-
-    return tiles.select("z", "x", "y", "tile").mapInPandas(kernel, schema=DECODED_SCHEMA)
+    return _scan(
+        tiles, DECODED_SCHEMA,
+        ["z", "x", "y", "layer", "feature_id", "geom_type", "geom_wkt", "props", "raster"],
+        lambda z, x, y, tile, _extras: decode_tile_rows(z, x, y, tile, bbox=bbox),
+    )
 
 
 PACKED_SCHEMA = (
@@ -530,52 +570,12 @@ PACKED_SCHEMA = (
 def iter_layer_packed(layer_bytes: bytes, bounds, bbox=None, typed: bool = False) -> list[tuple]:
     """One layer message -> (name, feature_id, geom_type, pk_dict, props,
     raster) tuples, where pk_dict is the packed ragged geometry
-    {kind, xs, ys, offsets[, exterior]} or None (raster-only feature).
-    Shared decode core of every packed consumer (packed scan, gpack
-    scan, packed point lookup); empty/bbox-filtered geometry features
-    without raster are dropped, like the reference featureset's
-    next() skip (src/vector_tile_featureset_pbf.ipp:113-180).
-    typed=True keeps property values as their decoded python variants
-    (int/float/bool/str) instead of stringifying — the re-encode merge
-    path needs the Value types back (vector_tile_load_tile.hpp:93-137)."""
-    layer = pbf.decode_layer(bytes(layer_bytes))
-    if not _layer_ok(layer):
-        return []
-    kw = _layer_dec_args(layer, bounds, bbox)
-    lb = _LayerBatch(layer, kw)
-    seg_pk = _packed_from_seg(lb.seg)
-    keys = layer["keys"]
-    if typed:
-        vals_str = list(layer["values"])
-    else:
-        vals_str = [None if v is None else str(v) for v in layer["values"]]
-    name = layer["name"]
-    out = []
-    for fi in range(lb.n):
-        pk = None
-        if lb.glen[fi]:
-            g = lb.batched[fi]
-            if g == "seg":
-                pk = ("packed", seg_pk[fi])
-            elif g is not None:
-                pk = _pack_from_parts(g)
-            else:
-                pk = Cmd.decode_geometry_vec(
-                    lb.geom(fi), lb.types[fi], packed=True, **kw
-                )
-                if pk is None:
-                    pk = _pack_from_parts(Cmd.decode_geometry(lb.geom(fi), lb.types[fi], **kw))
-            if pk[0] == "empty":
-                pk = None
-            else:
-                pk = pk[1]
-        raster = lb.raster(fi)
-        if pk is None and raster is None:
-            continue
-        out.append(
-            (name, lb.ids[fi], lb.types[fi], pk, lb.props_of(fi, keys, vals_str), raster)
-        )
-    return out
+    {kind, xs, ys, offsets[, exterior]} or None (raster-only feature):
+    the layer walk with empty/bbox-filtered geometry features without
+    raster dropped, like the reference featureset's next() skip
+    (src/vector_tile_featureset_pbf.ipp:113-180). typed as in
+    _layer_features."""
+    return _kept(_layer_features(layer_bytes, bounds, bbox=bbox, typed=typed))
 
 
 def decode_tiles_packed(tiles: DataFrame, bbox=None) -> DataFrame:
@@ -584,46 +584,27 @@ def decode_tiles_packed(tiles: DataFrame, bbox=None) -> DataFrame:
     object or a WKT string. This is the scale form of S2/S3 — a feature
     with 168k line parts (the reference's multi_line bench tile) is
     three arrays here, and downstream Spark ops explode/aggregate the
-    list columns JVM-side. Non-canonical features fall back through the
-    scalar decoder and are re-packed from its part lists. `bbox` pushes
-    a mercator query box INTO the geometry decoder (the reference's
-    filter_at_point/bbox query, src/vector_tile_datasource_pbf.ipp:196-216)."""
+    list columns JVM-side. `bbox` pushes a mercator query box INTO the
+    geometry decoder (the reference's filter_at_point/bbox query,
+    src/vector_tile_datasource_pbf.ipp:196-216)."""
+    no_geom = (None,) * 5
 
-    def kernel(iterator):
-        for pdf in iterator:
-            out = []
-            for z, x, y, tile in zip(pdf["z"], pdf["x"], pdf["y"], pdf["tile"]):
-                z, x, y = int(z), int(x), int(y)
-                if not tile:
-                    continue
-                data = Z.decompress(bytes(tile))
-                bounds = tilemath.tile_mercator_bbox_np(x, y, z)
-                for layer_bytes in pbf.decode_tile(data):
-                    for name, fid, gt, pk, props, raster in iter_layer_packed(
-                        layer_bytes, bounds, bbox=bbox
-                    ):
-                        if pk is None:
-                            out.append(
-                                (z, x, y, name, fid, gt, None, None, None,
-                                 None, None, props, raster)
-                            )
-                        else:
-                            out.append(
-                                (z, x, y, name, fid, gt, pk["kind"], pk["xs"],
-                                 pk["ys"], pk["offsets"], pk.get("exterior"),
-                                 props, raster)
-                            )
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "z", "x", "y", "layer", "feature_id", "geom_type",
-                        "kind", "xs", "ys", "offsets", "exterior", "props",
-                        "raster",
-                    ],
-                )
+    def rows_of(z, x, y, tile, _extras):
+        return [
+            (z, x, y, name, fid, gt,
+             *(no_geom if pk is None else
+               (pk["kind"], pk["xs"], pk["ys"], pk["offsets"], pk.get("exterior"))),
+             props, raster)
+            for feats in _tile_layers(z, x, y, tile, bbox=bbox)
+            for name, fid, gt, pk, props, raster in _kept(feats)
+        ]
 
-    return tiles.select("z", "x", "y", "tile").mapInPandas(kernel, schema=PACKED_SCHEMA)
+    return _scan(
+        tiles, PACKED_SCHEMA,
+        ["z", "x", "y", "layer", "feature_id", "geom_type", "kind", "xs", "ys",
+         "offsets", "exterior", "props", "raster"],
+        rows_of,
+    )
 
 
 GPACK_SCHEMA = (
@@ -668,11 +649,10 @@ def decode_tiles_gpack(
     by_name = {f.name: f for f in tiles.schema}
     for c in keep:
         schema += f", {c} {by_name[c].dataType.simpleString()}"
-    base_cols = [
+    out_cols = [
         "z", "x", "y", "layer", "feature_id", "geom_type",
         "_gpk", "env_minx", "env_miny", "env_maxx", "env_maxy", "props",
     ]
-    out_cols = list(base_cols)
     if ordinals:
         out_cols += ["layer_idx", "feat_idx"]
     if typed:
@@ -680,56 +660,32 @@ def decode_tiles_gpack(
     if with_raster:
         out_cols += ["raster"]
     out_cols += keep
+    no_geom = (bytes([0]), (float("nan"),) * 4)
 
-    def kernel(iterator):
-        for pdf in iterator:
-            out = []
-            keep_vals = [pdf[c] for c in keep]
-            for z, x, y, tile, *extras in zip(
-                pdf["z"], pdf["x"], pdf["y"], pdf["tile"], *keep_vals
-            ):
-                z, x, y = int(z), int(x), int(y)
-                if not tile:
-                    continue
-                extras = tuple(extras)
-                data = Z.decompress(bytes(tile))
-                bounds = tilemath.tile_mercator_bbox_np(x, y, z)
-                for li, layer_bytes in enumerate(pbf.decode_tile(data)):
-                    fi = 0
-                    for name, fid, gt, pk, props, raster in iter_layer_packed(
-                        layer_bytes, bounds, bbox=bbox, typed=typed
-                    ):
-                        if pk is None:
-                            if not with_raster:
-                                continue  # raster-only: nothing to re-tile
-                            gpk = bytes([0])
-                            env = (float("nan"),) * 4
-                        else:
-                            gpk, env = G.gpack_from_packed(
-                                pk["kind"], pk["xs"], pk["ys"], pk["offsets"],
-                                pk.get("exterior"),
-                            )
-                        rec = [z, x, y, name, fid, gt, gpk,
-                               env[0], env[1], env[2], env[3]]
-                        if typed:
-                            rec.append(
-                                {k: None if v is None else str(v)
-                                 for k, v in props.items()}
-                            )
-                        else:
-                            rec.append(props)
-                        if ordinals:
-                            rec += [li, fi]
-                        if typed:
-                            rec.append({k: _vtag(v) for k, v in props.items()})
-                        if with_raster:
-                            rec.append(raster)
-                        out.append((*rec, *extras))
-                        fi += 1
-            if out:
-                yield pd.DataFrame(out, columns=out_cols)
+    def rows_of(z, x, y, tile, extras):
+        out = []
+        for li, feats in enumerate(_tile_layers(z, x, y, tile, bbox=bbox, typed=typed)):
+            # the default scan drops raster-only features: nothing to re-tile
+            kept = _kept(feats) if with_raster else [f for f in feats if f[3] is not None]
+            for fi, (name, fid, gt, pk, props, raster) in enumerate(kept):
+                gpk, env = no_geom if pk is None else G.gpack_from_packed(
+                    pk["kind"], pk["xs"], pk["ys"], pk["offsets"], pk.get("exterior"),
+                )
+                rec = [z, x, y, name, fid, gt, gpk, env[0], env[1], env[2], env[3]]
+                if typed:
+                    rec.append({k: None if v is None else str(v) for k, v in props.items()})
+                else:
+                    rec.append(props)
+                if ordinals:
+                    rec += [li, fi]
+                if typed:
+                    rec.append({k: _vtag(v) for k, v in props.items()})
+                if with_raster:
+                    rec.append(raster)
+                out.append((*rec, *extras))
+        return out
 
-    return tiles.select("z", "x", "y", "tile", *keep).mapInPandas(kernel, schema=schema)
+    return _scan(tiles, schema, out_cols, rows_of, keep=keep)
 
 
 def _vtag(v) -> str:
@@ -761,8 +717,8 @@ def parse_tagged_value(v, tag: str):
 
 def _packed_from_seg(seg) -> dict:
     """Segmented batch-decode arrays -> {feature id: packed dict}. Per
-    feature this is three array VIEWS into the flat batch output plus an
-    offsets subtraction — no vstack, no per-part objects."""
+    feature this is four array VIEWS into flat per-batch arrays — no
+    vstack, no per-part objects, no per-feature numpy arithmetic."""
     out: dict[int, dict] = {}
     if not seg:
         return out
@@ -775,22 +731,30 @@ def _packed_from_seg(seg) -> dict:
         coords = entry["coords"]
         ex = entry.get("exterior")
         roff = np.concatenate([[0], np.cumsum(rl)]).astype(np.int64)
-        fb = np.flatnonzero(np.concatenate([[True], rf[1:] != rf[:-1]]))
+        first = np.concatenate([[True], rf[1:] != rf[:-1]])
+        fb = np.flatnonzero(first)
         fe = np.concatenate([fb[1:], [len(rl)]])
+        # every feature's offsets [0, ring ends relative to its first
+        # point] laid out back to back: feature k's run starts at fb[k] + k
+        ford = np.cumsum(first) - 1
+        local = np.zeros(len(rl) + len(fb), dtype=np.int64)
+        local[np.arange(len(rl)) + ford + 1] = roff[1:] - roff[fb][ford]
         kind = kind_of[gt]
         xs_all = np.ascontiguousarray(coords[:, 0])
         ys_all = np.ascontiguousarray(coords[:, 1])
-        for a, b in zip(fb.tolist(), fe.tolist()):
-            s, e = roff[a], roff[b]
+        for k, (a, b, s, e, fid) in enumerate(zip(
+            fb.tolist(), fe.tolist(), roff[fb].tolist(), roff[fe].tolist(),
+            rf[fb].tolist(),
+        )):
             d = {
                 "kind": kind,
                 "xs": xs_all[s:e],
                 "ys": ys_all[s:e],
-                "offsets": roff[a : b + 1] - s,
+                "offsets": local[a + k : b + k + 1],
             }
             if ex is not None:
                 d["exterior"] = ex[a:b]
-            out[int(rf[a])] = d
+            out[fid] = d
     return out
 
 
@@ -864,18 +828,19 @@ def features_at_point(
 # benchmark direction, bench/readme.md:24-30)
 # ---------------------------------------------------------------------------
 
-def _wkt_point_xy(wkt) -> tuple[float, float]:
-    """POINT(x y) -> (x, y); anything else -> (nan, nan)."""
-    if isinstance(wkt, str) and wkt.startswith("POINT"):
-        lp, rp = wkt.find("("), wkt.rfind(")")
-        if 0 < lp < rp:
-            parts = wkt[lp + 1 : rp].split()
-            if len(parts) == 2:
-                try:
-                    return float(parts[0]), float(parts[1])
-                except ValueError:
-                    pass
-    return (float("nan"), float("nan"))
+def _fallback_rows(z: int, x: int, y: int, layer_bytes: bytes) -> list[tuple]:
+    """Columnar-kernel fallback: every feature of a layer the fast lane
+    cannot take, as (z, x, y, layer, mx, my, props). Single-point
+    features carry their exact decoded coordinates; every other feature
+    carries NaN by design."""
+    bounds = tilemath.tile_mercator_bbox_np(x, y, z)
+    rows = []
+    for name, _fid, _gt, pk, props, _raster in _layer_features(layer_bytes, bounds):
+        mx = my = float("nan")
+        if pk is not None and pk["kind"] == "multipoint" and len(pk["xs"]) == 1:
+            mx, my = float(pk["xs"][0]), float(pk["ys"][0])
+        rows.append((z, x, y, name, mx, my, props))
+    return rows
 
 
 def _packed_rows_ok(m: np.ndarray, ml: np.ndarray, c: int) -> np.ndarray:
@@ -905,30 +870,6 @@ def _packed_rows_ok(m: np.ndarray, ml: np.ndarray, c: int) -> np.ndarray:
     for j in range(c):
         ok &= mi[:, 4 + 2 * j] == j
     return ok
-
-
-def decode_point_layer_vec(layer: dict, region: bytes):
-    """Uniform point layers (this engine's packed framing) decode as one
-    varint stream + reshape: per feature
-    [0x12 flen 0x12 tlen tags*(2c) 0x18 0x01 0x22 glen 0x09 zzx zzy].
-    Returns (tags (n,2c) int64, px, py int64) or None if the layer is
-    not uniform (caller falls back to the per-feature walk)."""
-    c = len(layer["keys"])
-    if c == 0 or region is None:
-        return None
-    res = pbf.uniform_point_columns(region, c)
-    if res is None:
-        return None
-    vidx, zz, row_ok = res
-    if not row_ok.all():
-        return None
-    n = len(vidx)
-    tags = np.empty((n, 2 * c), dtype=np.int64)
-    tags[:, 0::2] = np.arange(c, dtype=np.int64)
-    tags[:, 1::2] = vidx.astype(np.int64)
-    px = Cmd.unzigzag32(zz[:, 0]).astype(np.int64)
-    py = Cmd.unzigzag32(zz[:, 1]).astype(np.int64)
-    return tags, px, py
 
 
 def decode_tiles_columnar(tiles: DataFrame, prop_keys: list[str]) -> DataFrame:
@@ -986,7 +927,7 @@ def columnar_kernel(prop_keys: list[str]):
                 for i, lb in enumerate(blobs):
                     t = blob_tile[i]
                     fallback_rows.extend(
-                        decode_layer_rows(int(zs[t]), int(xs[t]), int(ys[t]), lb)
+                        _fallback_rows(int(zs[t]), int(xs[t]), int(ys[t]), lb)
                     )
                 nlay = 0
             if nlay:
@@ -1029,7 +970,7 @@ def columnar_kernel(prop_keys: list[str]):
                 for i in np.flatnonzero(~uniform):
                     t = blob_tile[i]
                     fallback_rows.extend(
-                        decode_layer_rows(int(zs[t]), int(xs[t]), int(ys[t]), blobs[i])
+                        _fallback_rows(int(zs[t]), int(xs[t]), int(ys[t]), blobs[i])
                     )
 
             if nlay and len(cand):
@@ -1060,7 +1001,7 @@ def columnar_kernel(prop_keys: list[str]):
                         i = cand[ci]
                         t = blob_tile[i]
                         fallback_rows.extend(
-                            decode_layer_rows(int(zs[t]), int(xs[t]), int(ys[t]), blobs[i])
+                            _fallback_rows(int(zs[t]), int(xs[t]), int(ys[t]), blobs[i])
                         )
                     keep = ~bad_meta[rep]
                     if res is not None:
@@ -1104,19 +1045,14 @@ def columnar_kernel(prop_keys: list[str]):
                         )
                     )
             if fallback_rows:
-                # recover point coordinates from the decoded WKT instead of
-                # nulling them (non-point geometries keep NaN by design)
-                fmx, fmy = zip(*(_wkt_point_xy(r[6]) for r in fallback_rows))
+                fz, fx, fy, fname, fmx, fmy, fprops = zip(*fallback_rows)
                 frames.append(
                     pd.DataFrame(
                         {
-                            "z": [r[0] for r in fallback_rows],
-                            "x": [r[1] for r in fallback_rows],
-                            "y": [r[2] for r in fallback_rows],
-                            "layer": [r[3] for r in fallback_rows],
+                            "z": fz, "x": fx, "y": fy, "layer": fname,
                             "mx": np.array(fmx, dtype=np.float64),
                             "my": np.array(fmy, dtype=np.float64),
-                            **{k: [r[7].get(k) for r in fallback_rows] for k in prop_keys},
+                            **{k: [p.get(k) for p in fprops] for k in prop_keys},
                         }
                     )
                 )

@@ -344,31 +344,6 @@ def _encode_tiles_segmented(
 # public API
 # ---------------------------------------------------------------------------
 
-def encode_point_layer(
-    pdf: pd.DataFrame,
-    z: int,
-    x: int,
-    y: int,
-    layer_name: str,
-    prop_cols: list[str],
-    extent: int = 4096,
-    buffer_px: int = 0,
-    id_col: str | None = None,
-    raster_col: str | None = None,
-    version: int = 2,
-) -> tuple[bytes, int]:
-    """One tile-layer from point rows (mx, my mercator cols required).
-    Returns (layer_bytes, n_features)."""
-    tmp = pdf.copy()
-    tmp["z"], tmp["x"], tmp["y"] = z, x, y
-    px, py, ok = _quantize_batch(tmp, extent, buffer_px)
-    tmp = tmp.loc[ok].reset_index(drop=True)
-    if len(tmp) == 0:
-        return b"", 0
-    tmp["_px"], tmp["_py"] = px[ok], py[ok]
-    return _encode_group_prequantized(tmp, layer_name, prop_cols, extent, version, raster_col)
-
-
 def _scalar_geom_feature(geom, vt, clip_box, simplify_distance,
                           area_threshold, stats,
                           fill_type="even_odd", strictly_simple=False,

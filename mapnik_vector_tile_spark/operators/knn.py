@@ -38,15 +38,6 @@ from mapnik_vector_tile_spark import tilemath
 EARTH_R_M = 6371008.8  # mean earth radius
 
 
-def _lon_of_col(xc, n: int):
-    return xc.cast("double") / F.lit(float(n)) * 360.0 - 180.0
-
-
-def _lat_of_col(yc, n: int):
-    t = F.lit(math.pi) * (F.lit(1.0) - F.lit(2.0) * yc.cast("double") / F.lit(float(n)))
-    return F.degrees(F.atan(F.sinh(t)))
-
-
 def _euclid_d2(lon_a, lon_b, lat_a, lat_b):
     # explicit multiplication (not pow) so the DuckDB twin is bit-safe
     dlon = lon_a - lon_b

@@ -7,10 +7,10 @@ Schema (exactly the hinted shape — location is *derived*, never stored):
 
 ``generate_images`` synthesizes the table deterministically per
 FIXTURES.md §1 (seeded by construction, no RNG), writing parquet so both
-Spark and the numpy oracle read identical bytes. At real scale the same
-reader points at an Iceberg table (``format="iceberg"``) — the engine
-only ever touches the DataFrame, so the swap is a one-liner; Iceberg
-jars are absent in this environment and gated behind a try.
+Spark and the numpy oracle read identical bytes. Callers scan it with
+``spark.read.parquet(ensure_images(...))``; at real scale an Iceberg
+table reader is a drop-in swap, because the engine only ever touches
+the DataFrame.
 
 ``with_location`` adds (lon, lat) columns with pure Column math — the
 FIXTURES.md location rule incl. the hotspot skew clause (rows with
@@ -99,17 +99,6 @@ def generate_images(
     df = starts.mapInPandas(gen, schema=IMAGES_SCHEMA)
     df.write.mode("overwrite").parquet(path)
     return path
-
-
-def read_images(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    if fmt == "iceberg":
-        try:
-            return spark.read.format("iceberg").load(path)
-        except Exception as exc:  # jars absent in this environment
-            raise NotImplementedError(
-                "Iceberg runtime not on classpath; pass fmt='parquet'"
-            ) from exc
-    return spark.read.parquet(path)
 
 
 def with_location(images: DataFrame) -> DataFrame:

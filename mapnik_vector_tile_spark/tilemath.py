@@ -86,24 +86,6 @@ def mercator_sql(lon: str, lat: str) -> dict[str, str]:
     }
 
 
-def phash_lonlat_sql(phash: str) -> dict[str, str]:
-    """FIXTURES.md §1 deterministic location rule, with the hotspot skew
-    clause (rows where row_index % 10 < 3 cluster at a city point).
-
-    Split unsigned-64 phash: u = upper 32 bits, v = lower 32 bits;
-    lon = u/2^32*360 - 180 ; lat = v/2^32*170 - 85.
-    Integer ops only (identical in Spark SQL / DuckDB for BIGINT).
-    """
-    # phash is a signed int64; reinterpret as unsigned: if negative add 2^64.
-    # upper 32 = floor(unsigned / 2^32); with signed math:
-    u = f"(cast(floor((cast({phash} as double) + case when {phash} < 0 then 18446744073709551616.0 else 0.0 end) / 4294967296.0) as double))"
-    v = f"(cast({phash} % 4294967296 as double) + case when ({phash} % 4294967296) < 0 then 4294967296.0 else 0.0 end)"
-    return {
-        "lon": f"({u} / 4294967296.0 * 360.0 - 180.0)",
-        "lat": f"({v} / 4294967296.0 * 170.0 - 85.0)",
-    }
-
-
 def images_lonlat_sql(image_id: str = "image_id", phash: str = "phash") -> dict[str, str]:
     """Exact-integer portable SQL form of the FIXTURES.md §1 location
     rule INCLUDING the hotspot skew clause — bit-identical to the Spark

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 import pytest
 
@@ -10,6 +11,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def pytest_configure(config):
     config.addinivalue_line("markers", "slow: long-running scale test")
+
+
+def pytest_terminal_summary(terminalreporter):
+    """A skipped test is not a pass: list how many tests skipped for
+    each reason, even under -q."""
+    skipped = terminalreporter.stats.get("skipped", [])
+    if not skipped:
+        return
+    reasons: Counter = Counter()
+    for rep in skipped:
+        lr = rep.longrepr
+        reason = lr[2] if isinstance(lr, tuple) and len(lr) == 3 else str(lr)
+        reasons[reason.removeprefix("Skipped: ")] += 1
+    terminalreporter.write_sep("=", f"{len(skipped)} skipped, by reason")
+    for reason, n in reasons.most_common():
+        terminalreporter.write_line(f"{n:5d}  {reason}")
 
 
 @pytest.fixture(scope="session")

@@ -458,8 +458,9 @@ def test_batch_global_matches_list_batch(version):
 @pytest.mark.parametrize("use_bbox", [False, True])
 def test_segmented_matches_tuple_assembly(version, use_bbox):
     """segmented=True must describe exactly the geometry the tuple
-    assembly builds: WKT written from the flat ring arrays equals
-    to_wkt of the tuple, and the packed dict equals _pack_from_parts."""
+    assembly builds: the packed dict cut from the flat ring arrays
+    equals _pack_from_parts, and WKT written from it equals to_wkt of
+    the tuple."""
     from mapnik_vector_tile_spark.functions import geometry as G
     from mapnik_vector_tile_spark.operators.decode import (
         _pack_from_parts, _packed_from_seg,
@@ -472,11 +473,8 @@ def test_segmented_matches_tuple_assembly(version, use_bbox):
         kw["bbox"] = (500.0, 500.0, 3000.0, 3000.0)
     tuples = Cmd.decode_geometry_vec_batch(geoms, gtypes, **kw)
     marked, seg = Cmd.decode_geometry_vec_batch(geoms, gtypes, segmented=True, **kw)
-    seg_wkt = {}
-    for gt, entry in seg.items():
-        ids, wkts = G.wkt_from_segmented(entry, is_polygon=(gt == Cmd.POLYGON))
-        seg_wkt.update(zip(ids, wkts))
     seg_pk = _packed_from_seg(seg)
+    seg_wkt = dict(zip(seg_pk, G.wkt_from_packed(list(seg_pk.values()))))
     n_seg = 0
     for fi, (t, m) in enumerate(zip(tuples, marked)):
         if m != "seg":
@@ -573,7 +571,7 @@ def _packed_region(n, c, seed=11, feature_ids=None):
 def test_uniform_point_columns_matches_full_decode():
     """The targeted-column lane must return exactly the columns the full
     decode_varints_vec + _packed_rows_ok path produced (it replaced that
-    path in the splitter, the columnar kernel, and decode_point_layer_vec)."""
+    path in the splitter and the columnar kernel)."""
     from mapnik_vector_tile_spark.functions import pbf as P
     from mapnik_vector_tile_spark.operators.decode import _packed_rows_ok
 

@@ -2,9 +2,9 @@
 pipeline (transform_geom -> simplify_geom -> clip_geom[_inside] ->
 encode_geometry): per-feature byte parity over a fuzz corpus.
 
-The scalar twin below is a faithful copy of the encode_geom_layer
-per-feature loop (operators/encode.py) — the behavior the vector path
-must reproduce exactly."""
+The scalar twin below makes the calls of the production eject lane,
+encode._scalar_geom_feature (operators/encode.py) — the behavior the
+vector path must reproduce exactly."""
 
 from __future__ import annotations
 
@@ -18,13 +18,14 @@ from mapnik_vector_tile_spark.functions import ragged as RG
 
 def scalar_pipeline(geoms, vt, clip_box, simplify_distance, area_threshold,
                     stats=None):
-    """encode_geom_layer's per-feature loop, verbatim semantics."""
-    transformed = G.transform_geoms_batch(geoms, vt)
+    """encode._scalar_geom_feature per feature, verbatim semantics."""
     cx0, cy0, cx1, cy1 = clip_box
     out = {}
-    for i, (tg0, bbox) in enumerate(transformed):
+    for i, geom in enumerate(geoms):
+        tg0 = G.transform_geom(geom, vt)
         if tg0[0] == "empty":
             continue
+        bbox = G._geom_px_bbox(tg0)
         if simplify_distance > 0:
             tg0 = G.simplify_geom(tg0, simplify_distance)
             if tg0[0] == "empty":

@@ -275,17 +275,14 @@ def test_columnar_decode_multilayer_no_duplicates(spark):
     col = decode.decode_tiles_columnar(tiles2, pk).toPandas()
     assert sorted(col["image_id"]) == ["im-1", "im-2"]  # exactly once each
     assert np.isfinite(col["mx"]).all() and np.isfinite(col["my"]).all()
-    # fallback coordinates agree with the generic decoder's WKT
-    gen = decode.decode_tiles(tiles2).toPandas()
+    # fallback coordinates are the generic decoder's, bit for bit
+    gen = decode.decode_tiles_packed(tiles2).toPandas()
     gxy = {
-        m["image_id"]: tuple(
-            float(v) for v in w[w.find("(") + 1 : w.rfind(")")].split()
-        )
-        for m, w in zip(gen["props"], gen["geom_wkt"])
+        m["image_id"]: (xs[0], ys[0])
+        for m, xs, ys in zip(gen["props"], gen["xs"], gen["ys"])
     }
     for _, r in col.iterrows():
-        ex, ey = gxy[r["image_id"]]
-        assert abs(r["mx"] - ex) < 1e-6 and abs(r["my"] - ey) < 1e-6
+        assert (r["mx"], r["my"]) == gxy[r["image_id"]]
 
 
 def test_columnar_decode_mixed_uniform_and_fallback(spark, tiles):
