@@ -588,32 +588,26 @@ def decode_real_tile_anchor() -> dict:
             continue
         buf = open(path, "rb").read()
         minx, _miny, maxx, maxy = tilemath.tile_mercator_bbox_np(x, y, z)
-        for mode in ("", "_packed"):
-            packed = bool(mode)
-            best = float("inf")
-            for _ in range(7):
-                t0 = _t.perf_counter()
-                data = Z.decompress(buf)
-                for lb in P.decode_tile(data):
-                    lay = P.decode_layer(lb)
-                    scale = lay["extent"] / (float(maxx) - float(minx))
-                    for fm in lay["features"]:
-                        f = P.decode_feature_arrays(fm)
-                        if not len(f["geometry"]):
-                            continue
-                        g = Cmd.decode_geometry_vec(
-                            f["geometry"], f["type"], version=lay["version"],
-                            tile_x=float(minx), tile_y=float(maxy),
-                            scale_x=scale, scale_y=-scale, packed=packed,
-                        )
-                        if g is None:
-                            g = Cmd.decode_geometry(
-                                f["geometry"], f["type"], version=lay["version"],
-                                tile_x=float(minx), tile_y=float(maxy),
-                                scale_x=scale, scale_y=-scale,
-                            )
-                best = min(best, _t.perf_counter() - t0)
-            out[name + mode] = round(best * 1e3, 1)
+        # the list form is gone: one vectorized decode emits the packed
+        # form, so both historical keys time the same code
+        best = float("inf")
+        for _ in range(7):
+            t0 = _t.perf_counter()
+            data = Z.decompress(buf)
+            for lb in P.decode_tile(data):
+                lay = P.decode_layer(lb)
+                scale = lay["extent"] / (float(maxx) - float(minx))
+                kw = dict(version=lay["version"], tile_x=float(minx), tile_y=float(maxy),
+                          scale_x=scale, scale_y=-scale)
+                for fm in lay["features"]:
+                    f = P.decode_feature_arrays(fm)
+                    if not len(f["geometry"]):
+                        continue
+                    g = Cmd.decode_geometry_vec_batch([f["geometry"]], [f["type"]], **kw)[0]
+                    if g is None:
+                        g = Cmd.decode_geometry(f["geometry"], f["type"], **kw)
+            best = min(best, _t.perf_counter() - t0)
+        out[name] = out[name + "_packed"] = round(best * 1e3, 1)
         # composite-slow-path / pyramid-retile decode leg: the EXACT
         # stages decode_tiles_gpack distributes (packed layer decode ->
         # gpack + envelope), single-core per tile
@@ -634,6 +628,74 @@ def decode_real_tile_anchor() -> dict:
                         )
             best = min(best, _t.perf_counter() - t0)
         out[name + "_gpack"] = round(best * 1e3, 1)
+    return out
+
+
+def _synthetic_bench_tiles() -> dict:
+    """Tiles of the reference's decode bench shapes (bench/readme.md),
+    built by this engine's own encoder: name -> (tile bytes, z, x, y).
+    enf_z14 is 34 multipoints of 19,882 points (~676k in total);
+    multi_line_z13 is one feature of 168k two-point segments."""
+    import zlib as _z
+
+    import numpy as np
+
+    from mapnik_vector_tile_spark.functions import commands as Cmd
+    from mapnik_vector_tile_spark.functions import pbf as P
+
+    rng = np.random.default_rng(14)
+    feats = []
+    for i in range(34):
+        pts = rng.integers(0, 4096, size=(19_882, 2))
+        feats.append(P.encode_feature(i + 1, [0, i % 3], *Cmd.encode_geometry(("multipoint", pts))))
+    vals = [P.encode_value(v) for v in ("a", "b", "c")]
+    enf = P.encode_tile([P.encode_layer("enf", feats, ["kind"], vals)])
+
+    # encode_geometry's per-part rollback copies the stream so far, which
+    # is quadratic at 168k parts: write the (MoveTo(1), LineTo(1)) pairs
+    # it would emit directly
+    a = rng.integers(0, 4096, size=(168_000, 2))
+    b = a + rng.integers(1, 40, size=(168_000, 2))
+    pts = np.stack([a, b], axis=1).reshape(-1, 2)
+    zz = Cmd.zigzag32(np.diff(pts, axis=0, prepend=[[0, 0]])).reshape(-1, 4)
+    cmds = np.empty((len(a), 6), dtype=np.int64)
+    cmds[:, 0], cmds[:, 1:3] = 9, zz[:, :2]
+    cmds[:, 3], cmds[:, 4:] = (1 << 3) | Cmd.LINE_TO, zz[:, 2:]
+    line = P.encode_layer(
+        "multi_line", [P.encode_feature(1, [0, 0], Cmd.LINESTRING, cmds.ravel().tolist())],
+        ["kind"], [P.encode_value("line")],
+    )
+    return {
+        "enf_z14": (_z.compress(enf), 14, 13089, 8506),
+        "multi_line_z13": (_z.compress(P.encode_tile([line])), 13, 1310, 3166),
+    }
+
+
+def decode_synthetic_anchor() -> dict:
+    """decode_real_tile_anchor's stand-in that needs no reference
+    checkout: the same two bench shapes on tiles this engine encodes
+    (_synthetic_bench_tiles). Single-core, best of 7, milliseconds per
+    tile for decompress + pbf.decode_tile + iter_layer_packed (the
+    production layer walk down to packed mercator arrays)."""
+    import time as _t
+
+    from mapnik_vector_tile_spark import tilemath
+    from mapnik_vector_tile_spark.functions import compression as Z
+    from mapnik_vector_tile_spark.functions import pbf as P
+    from mapnik_vector_tile_spark.operators import decode as D
+
+    out = {}
+    for name, (tile, z, x, y) in _synthetic_bench_tiles().items():
+        bounds = tilemath.tile_mercator_bbox_np(x, y, z)
+        best = float("inf")
+        for _ in range(7):
+            t0 = _t.perf_counter()
+            n = 0
+            for lb in P.decode_tile(Z.decompress(tile)):
+                n += len(D.iter_layer_packed(lb, bounds))
+            best = min(best, _t.perf_counter() - t0)
+        assert n in (34, 1), (name, n)
+        out[name] = round(best * 1e3, 1)
     return out
 
 
@@ -901,6 +963,7 @@ def main() -> None:
     decode_buildings = round(decode_buildings_anchor(), 1)
     reproject_rows = round(reproject_anchor(), 1)
     real_tiles = decode_real_tile_anchor()
+    synthetic_tiles = decode_synthetic_anchor()
     # calibration-gated wall section (r5 verdict item 1): the shared
     # host drifts ~2x slow for tens of minutes; if the calibration
     # bracketing a pass reads slow, re-run the pass (bounded retries)
@@ -968,6 +1031,7 @@ def main() -> None:
         "decode_buildings_feats_per_sec_core": decode_buildings,
         "reproject_rows_per_sec_core": reproject_rows,
         **{f"decode_real_{k}_ms": v for k, v in real_tiles.items()},
+        **{f"decode_synthetic_{k}_ms": v for k, v in synthetic_tiles.items()},
         **hot_fields,
         **scaling_fields,
     }

@@ -8,10 +8,11 @@ repeated points skipped, ring closing dup dropped, degenerate parts
 Decode: src/vector_tile_geometry_decoder.ipp — stateful cursor with the
 full v1-lenient / v2-strict error matrix, zero-delta LineTo skipping,
 ring winding classification (first ring defines exterior orientation,
-v2 rejects CW first ring), negative-scale ring reversal.
-
-Everything is numpy-vectorizable per feature; zigzag/delta math is
-array ops.
+v2 rejects CW first ring), negative-scale ring reversal. Two decoders:
+the scalar cursor `decode_geometry` (the error matrix and the test
+reference) and the vectorized `decode_geometry_vec_batch_global` (plus
+its list entry), which decodes a layer's canonical streams in array
+ops and declines everything else to the cursor.
 """
 
 from __future__ import annotations
@@ -353,47 +354,134 @@ def decode_geometry(
     return ("empty", None)  # UNKNOWN ignored (decoder.ipp:826-833)
 
 
-def decode_geometry_vec(
-    commands,
-    geom_type: int,
+# Streams shorter than this many varints take the frontier header walk;
+# longer ones the periodic-run walk. Both fill the same block table.
+_FRONTIER_MAX = 512
+
+EMPTY = ("empty", None)
+
+
+def decode_geometry_vec_batch(geoms: list, gtypes, **kw):
+    """List entry of the vectorized decoder: the command streams are
+    concatenated and decoded as one global array by
+    decode_geometry_vec_batch_global (same keywords, same output)."""
+    if not len(geoms):
+        return []
+    off = np.zeros(len(geoms) + 1, dtype=np.int64)
+    np.cumsum([len(g) for g in geoms], out=off[1:])
+    vals = np.concatenate([np.asarray(g, dtype=np.uint64) for g in geoms],
+                          dtype=np.uint32, casting="unsafe")
+    return decode_geometry_vec_batch_global(vals, off, gtypes, **kw)
+
+
+def decode_geometry_vec_batch_global(
+    geom_vals,
+    geom_off,
+    gtypes,
     version: int = 2,
     tile_x: float = 0.0,
     tile_y: float = 0.0,
     scale_x: float = 1.0,
     scale_y: float = 1.0,
     bbox=None,
-    value_type: str = "double",
-    packed: bool = False,
 ):
-    """Vectorized decode for CANONICAL command streams — the shapes every
-    conformant encoder emits (POINT: MoveTo blocks only; LINESTRING:
-    [MoveTo(1), LineTo(k>=1)+]*; POLYGON: [MoveTo(1), LineTo(k>=2)+,
-    Close]*). Cost is O(#command headers) Python + O(#points) numpy:
-    one unzigzag + cumsum replaces the per-point cursor walk, which is
-    what the reference's decode bench actually measures (its z14 anchor
-    tile is 34 multipoints totalling ~676k points, bench/readme.md).
+    """Vectorized decode of a layer's geometries for CANONICAL command
+    streams — the shapes every conformant encoder emits (POINT: MoveTo
+    blocks only; LINESTRING: [MoveTo(1), LineTo(k>=1)+]*; POLYGON:
+    [MoveTo(1), LineTo(k>=2)+, Close]*). Feature fi's stream is
+    geom_vals[geom_off[fi]:geom_off[fi+1]] (pbf.decode_features_batch
+    return_global form).
 
-    Returns None to DECLINE — any structural deviation, degenerate part
-    (all-zero LineTo runs), or coordinate overflow — and the caller
-    replays through decode_geometry's exact per-point state machine, so
-    the full v1/v2 error matrix and leniency behavior stay bit-identical.
-    Raises the same first-ring-clockwise DecodeError as the scalar path
-    (the only error reachable from a canonical stream).
+    A header walk turns the streams into one block table (command,
+    count, value start, feature) — the frontier walk for short streams,
+    the periodic-run walk for long ones — and _batch_decode_core then
+    runs the per-point work (unzigzag, segmented cursor cumsum, scaling,
+    shoelace) once over every feature. A z14 buildings tile (6,800
+    four-vertex polygons) pays ~9 array ops for its whole header walk;
+    the reference's multi_line bench feature (168k (MoveTo(1),
+    LineTo(1)) pairs) pays a handful of strided compares.
 
-    packed=True returns ("packed", {kind, xs, ys, offsets[, exterior]})
-    — flat coordinate arrays + part offsets, NO per-part Python objects.
-    This is the scale form: a feature with 168k parts (the reference's
-    multi_line bench tile) costs three arrays instead of 168k views,
-    and maps 1:1 onto Arrow list columns for the Spark decode scan."""
-    g = np.asarray(commands, dtype=np.uint64)
-    n = len(g)
-    if n == 0 or geom_type not in (POINT, LINESTRING, POLYGON):
-        return None
+    Returns one entry per feature: the packed dict {kind, xs, ys,
+    offsets[, exterior]} (kind multipoint / multilinestring /
+    multipolygon; arrays are views into per-batch arrays), EMPTY when
+    nothing survives (degenerate parts, bbox), or None to DECLINE — any
+    structural deviation, v2 degeneracy, v2 clockwise first ring or
+    coordinate overflow. Declined features go to decode_geometry's
+    per-point state machine, which owns the exact v1/v2 error matrix.
+    Raises nothing itself."""
+    geom_off = np.asarray(geom_off, dtype=np.int64)
+    n_feats = len(geom_off) - 1
+    out: list = [None] * n_feats
+    if n_feats <= 0 or len(geom_vals) == 0:
+        return out
+    gtypes = np.asarray(gtypes, dtype=np.int64)
+    G_all = np.asarray(geom_vals)
+    if G_all.dtype != np.uint32:  # the scalar cursor's & 0xFFFFFFFF
+        G_all = np.asarray(geom_vals, dtype=np.uint64).astype(np.uint32)
+    mlen = np.diff(geom_off)
+    feat_ok = (mlen > 0) & ((gtypes == POINT) | (gtypes == LINESTRING) | (gtypes == POLYGON))
+    short = feat_ok & (mlen < _FRONTIER_MAX)
+    tables = [_frontier_walk(G_all, geom_off, np.flatnonzero(short), feat_ok)]
+    for fi in np.flatnonzero(feat_ok & ~short).tolist():
+        t = _periodic_walk(G_all, int(geom_off[fi]), int(geom_off[fi + 1]))
+        if t is None:
+            feat_ok[fi] = False
+        else:
+            tables.append((*t, np.full(len(t[0]), fi, dtype=np.int64)))
+    table = tables[0]
+    if len(tables) > 1:
+        table = [np.concatenate(c) for c in zip(*tables)]
+        if len(tables[0][0]):  # restore feature-major order
+            order = np.argsort(table[3], kind="stable")
+            table = [c[order] for c in table]
+    if len(table[0]):
+        _batch_decode_core(out, G_all, mlen, *table, feat_ok, gtypes, version,
+                           tile_x, tile_y, scale_x, scale_y, bbox)
+    return out
 
-    # --- header walk: Python per UNIQUE block shape, vectorized over
-    # periodic runs (real tiles repeat one header pattern — e.g. the
-    # reference's multi_line bench tile is 168k (MoveTo(1), LineTo(1))
-    # pairs — so the walk closes whole runs with one strided compare) ---
+
+def _frontier_walk(G, geom_off, feats, feat_ok):
+    """Header walk over many short streams at once: one
+    read-classify-advance numpy step per block DEPTH (a buildings tile
+    has depth 3 — MoveTo/LineTo/Close). Clears feat_ok for malformed
+    streams and returns their survivors' block table (cmds, cnts,
+    vstarts, bfeat), feature-major."""
+    p = geom_off[:-1].copy()
+    ends = geom_off[1:]
+    active = feats
+    parts = []
+    while len(active):
+        h = G[p[active]].astype(np.int64)
+        c = h & 7
+        k = h >> 3
+        is_mtlt = (c == MOVE_TO) | (c == LINE_TO)
+        is_cl = c == CLOSE
+        nxt = p[active] + np.where(is_mtlt, 1 + 2 * k, 1)
+        bad = ~(is_mtlt | is_cl) | (is_mtlt & (k == 0)) | (nxt > ends[active])
+        if bad.any():
+            feat_ok[active[bad]] = False
+            good = ~bad
+            active, c, k, nxt, is_cl = active[good], c[good], k[good], nxt[good], is_cl[good]
+        parts.append((c, np.where(is_cl, 0, k), p[active] + 1, active))
+        p[active] = nxt
+        active = active[nxt < ends[active]]
+    if not parts:
+        return tuple(np.zeros(0, dtype=np.int64) for _ in range(4))
+    cmds, cnts, vstarts, bfeat = (np.concatenate(c) for c in zip(*parts))
+    # drop blocks of streams that went bad after contributing blocks;
+    # the stable sort keeps each stream's blocks in stream order
+    keep = np.flatnonzero(feat_ok[bfeat])
+    order = keep[np.argsort(bfeat[keep], kind="stable")]
+    return cmds[order], cnts[order], vstarts[order], bfeat[order]
+
+
+def _periodic_walk(G, lo: int, hi: int):
+    """Header walk over ONE long stream G[lo:hi]: Python per unique
+    block shape, vectorized over periodic runs (real tiles repeat one
+    header pattern, so the walk closes whole runs with one strided
+    compare). -> (cmds, cnts, vstarts) or None for a malformed stream."""
+    g = G[lo:hi]
+    n = hi - lo
     seg_cmd: list[np.ndarray] = []
     seg_cnt: list[np.ndarray] = []
     seg_vst: list[np.ndarray] = []
@@ -413,6 +501,7 @@ def decode_geometry_vec(
                     return None
                 nq = q + 1 + 2 * k
             elif c == CLOSE:
+                k = 0
                 nq = q + 1
             else:
                 return None
@@ -440,925 +529,329 @@ def decode_geometry_vec(
         if run:
             L, period, reps = run
             lane_off = np.asarray([probe[j][0] - p + 1 for j in range(L)], dtype=np.int64)
-            cmd_pat = np.asarray([probe[j][2] for j in range(L)], dtype=np.int64)
-            cnt_pat = np.asarray([probe[j][3] for j in range(L)], dtype=np.int64)
             rep_idx = np.repeat(np.arange(reps, dtype=np.int64), L)
-            seg_cmd.append(np.tile(cmd_pat, reps))
-            seg_cnt.append(np.tile(cnt_pat, reps))
-            seg_vst.append(p + rep_idx * period + np.tile(lane_off, reps))
+            seg_cmd.append(np.tile(np.asarray([probe[j][2] for j in range(L)]), reps))
+            seg_cnt.append(np.tile(np.asarray([probe[j][3] for j in range(L)]), reps))
+            seg_vst.append(lo + p + rep_idx * period + np.tile(lane_off, reps))
             p += period * reps
         else:
             q0, _h, c, k, nq = probe[0]
-            seg_cmd.append(np.asarray([c], dtype=np.int64))
-            seg_cnt.append(np.asarray([k], dtype=np.int64))
-            seg_vst.append(np.asarray([q0 + 1], dtype=np.int64))
+            seg_cmd.append(np.asarray([c]))
+            seg_cnt.append(np.asarray([k]))
+            seg_vst.append(np.asarray([lo + q0 + 1]))
             p = nq
-    cmds = np.concatenate(seg_cmd) if len(seg_cmd) > 1 else seg_cmd[0]
-    cnts = np.concatenate(seg_cnt) if len(seg_cnt) > 1 else seg_cnt[0]
-    vstarts = np.concatenate(seg_vst) if len(seg_vst) > 1 else seg_vst[0]
+    return tuple(
+        (np.concatenate(s) if len(s) > 1 else s[0]).astype(np.int64)
+        for s in (seg_cmd, seg_cnt, seg_vst)
+    )
 
-    # --- canonical structure checks (vectorized) ---
+
+def _run_starts(a: np.ndarray) -> np.ndarray:
+    """True where a value differs from the one before it (and at 0)."""
+    m = np.empty(len(a), dtype=bool)
+    m[:1] = True
+    np.not_equal(a[1:], a[:-1], out=m[1:])
+    return m
+
+
+def _shift(a: np.ndarray, fill) -> np.ndarray:
+    """a[i+1] at position i; `fill` past the end."""
+    s = np.empty_like(a)
+    s[:-1] = a[1:]
+    s[-1] = fill
+    return s
+
+
+def _batch_decode_core(out, G_all, mlen, cmds, cnts, vstarts, bfeat, feat_ok, gtypes,
+                       version, tile_x, tile_y, scale_x, scale_y, bbox):
+    """Back half of the vectorized decoder, whichever walk filled the
+    block table: canonical structure checks, global delta decode with a
+    per-feature segmented cumsum, and the per-type assembly into packed
+    dicts. Features it cannot decode exactly keep out[fi] = None."""
     is_mt = cmds == MOVE_TO
     is_lt = cmds == LINE_TO
     is_cl = cmds == CLOSE
-    if geom_type == POINT:
-        if not is_mt.all():
-            return None
-    elif geom_type == LINESTRING:
-        if is_cl.any() or not is_mt[0] or (cnts[is_mt] != 1).any():
-            return None
-        if version != 1:
-            # v2 forbids a MoveTo with no LineTo following (repeated
-            # MOVETO / trailing MOVETO raise in the scalar walk)
-            if is_mt[-1] or (is_mt[:-1] & is_mt[1:]).any():
-                return None
-    else:  # POLYGON: strict (MT(1), LT+, CLOSE)* grouping
-        if not is_mt[0] or not is_cl[-1] or (cnts[is_mt] != 1).any():
-            return None
-        if (is_mt[:-1] & ~is_lt[1:]).any():
-            return None  # MOVETO without LINETO
-        if (is_lt[:-1] & is_mt[1:]).any():
-            return None  # ring not closed by CLOSE
-        if (is_cl[:-1] & ~is_mt[1:]).any():
-            return None  # CLOSE followed by CLOSE / LINETO
-
-    # --- gather all deltas in visit order; cumsum -> raw int coords ---
-    m = ~is_cl
-    sp_start = vstarts[m]
-    sp_npts = cnts[m]
-    sp_cmd = cmds[m]
-    nvals = sp_npts * 2
-    tot = int(nvals.sum())
-    if tot == 0:
-        return None
-    if len(sp_start) == 1:  # one block (multipoint / single long line)
-        vals = g[sp_start[0] : sp_start[0] + tot]
-    else:
-        # the header walk tiles the whole stream, so the deltas are
-        # exactly the non-header positions, in order
-        hdr = np.zeros(n, dtype=bool)
-        hdr[vstarts - 1] = True
-        vals = g[~hdr]
-    v64 = vals.astype(np.int64)
-    deltas = ((v64 >> 1) ^ -(v64 & 1)).reshape(-1, 2)  # fused unzigzag32
-    pts = np.cumsum(deltas, axis=0)
-    if len(pts) and np.abs(pts).max() > (1 << 25):
-        return None  # keep the int area math exact; scalar handles extremes
-
-    per_pt_cmd = np.repeat(sp_cmd, sp_npts)
-    part_id = np.repeat(np.arange(len(sp_cmd), dtype=np.int64), sp_npts)
-    # part index per MoveTo group (polygon ring / line id): cumsum of MTs
-    is_mt_blk = sp_cmd == MOVE_TO
-    grp_of_blk = np.cumsum(is_mt_blk) - 1
-    grp = grp_of_blk[part_id] if geom_type != POINT else part_id
-
-    if geom_type == POINT:
-        X = tile_x + pts[:, 0] / scale_x
-        Y = tile_y + pts[:, 1] / scale_y
-        if value_type == "int64":
-            X, Y = _round_half_away(pts[:, 0] / scale_x) + tile_x, _round_half_away(
-                pts[:, 1] / scale_y
-            ) + tile_y
-        if bbox is not None:
-            m = (bbox[0] <= X) & (X <= bbox[2]) & (bbox[1] <= Y) & (Y <= bbox[3])
-            X, Y = X[m], Y[m]
-        if len(X) == 0:
-            return ("empty", None)
-        if packed:
-            return ("packed", {
-                "kind": "multipoint",
-                "xs": X.astype(np.float64), "ys": Y.astype(np.float64),
-                "offsets": np.array([0, len(X)], dtype=np.int64),
-            })
-        arr = np.column_stack([X, Y]).astype(np.float64)
-        return ("point", arr[0]) if len(arr) == 1 else ("multipoint", arr)
-
-    # skip-zero: zero LineTo deltas never append a vertex (line_next /
-    # ring_next with skip_zero=True); MoveTo deltas always do
-    zero = (deltas[:, 0] == 0) & (deltas[:, 1] == 0) & (per_pt_cmd == LINE_TO)
-    keep = ~zero
-    kpts = pts[keep]
-    kgrp = grp[keep]
-    kcmd = per_pt_cmd[keep]
-    ngroups = int(grp_of_blk[-1]) + 1
-    counts = np.bincount(kgrp, minlength=ngroups)
-    mt_counts = np.bincount(kgrp[kcmd == MOVE_TO], minlength=ngroups)
-    lt_counts = counts - mt_counts
-    min_lt = 1 if geom_type == LINESTRING else 2
-    bad_grp = (mt_counts != 1) | (lt_counts < min_lt)
-    if bad_grp.any():
-        if version != 1:
-            return None  # v2: scalar replays the exact error
-        # v1 leniency (line_next/ring_next "move_to"/"close" resets): a
-        # part whose LineTos all collapsed is silently dropped; its
-        # deltas already advanced the shared cursor via the cumsum, so
-        # dropping the points here reproduces the scalar walk exactly
-        dm = ~bad_grp[kgrp]
-        kpts, kgrp, kcmd = kpts[dm], kgrp[dm], kcmd[dm]
-        counts = np.bincount(kgrp, minlength=ngroups)
-
-    if value_type == "int64":
-        X = tile_x + _round_half_away(kpts[:, 0] / scale_x)
-        Y = tile_y + _round_half_away(kpts[:, 1] / scale_y)
-    else:
-        X = tile_x + kpts[:, 0] / scale_x
-        Y = tile_y + kpts[:, 1] / scale_y
-    starts = np.concatenate([[0], np.cumsum(counts)[:-1]]).astype(np.int64)
-
-    if geom_type == LINESTRING:
-        gi_keep = np.flatnonzero(counts >= 2)
-        if bbox is not None and len(gi_keep):
-            st = starts[gi_keep]
-            mnx = np.minimum.reduceat(X, st)
-            mxx = np.maximum.reduceat(X, st)
-            mny = np.minimum.reduceat(Y, st)
-            mxy = np.maximum.reduceat(Y, st)
-            inb = ~((mxx < bbox[0]) | (mnx > bbox[2])
-                    | (mxy < bbox[1]) | (mny > bbox[3]))
-            gi_keep = gi_keep[inb]
-        if len(gi_keep) == 0:
-            return ("empty", None)
-        if packed:
-            lens = counts[gi_keep]
-            if len(gi_keep) == ngroups and int(lens.sum()) == len(X):
-                xs, ys = X, Y  # nothing dropped: already contiguous
-            else:
-                base = np.repeat(starts[gi_keep], lens)
-                idx = base + (np.arange(int(lens.sum()), dtype=np.int64)
-                              - np.repeat(np.cumsum(lens) - lens, lens))
-                xs, ys = X[idx], Y[idx]
-            offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
-            return ("packed", {
-                "kind": "multilinestring",
-                "xs": xs.astype(np.float64), "ys": ys.astype(np.float64),
-                "offsets": offsets,
-            })
-        # parts are VIEWS into one (N,2) array — a 168k-segment feature
-        # (the reference's multi_line bench tile) costs one column_stack
-        # plus slice handles, not 168k small copies
-        XY = np.column_stack([X, Y])
-        lines = [
-            XY[starts[gi] : starts[gi] + counts[gi]] for gi in gi_keep
-        ]
-        if len(lines) == 1:
-            return ("linestring", lines[0]) if len(lines[0]) > 1 else ("empty", None)
-        return ("multilinestring", lines)
-
-    # POLYGON — per-ring int shoelace (exact: |coord| <= 2^25), closing
-    # points inserted in ONE global scatter, then the scalar path's
-    # classification/assembly over ring views
-    cross = kpts[:-1, 0] * kpts[1:, 1] - kpts[:-1, 1] * kpts[1:, 0]
-    same = kgrp[:-1] == kgrp[1:]
-    areas = np.bincount(kgrp[:-1][same], weights=cross[same].astype(np.float64),
-                        minlength=ngroups).astype(np.float64)
-
-    gi_all = np.flatnonzero(counts > 0)
-    a_arr = starts[gi_all]
-    b_arr = a_arr + counts[gi_all]
-    need = (X[a_arr] != X[b_arr - 1]) | (Y[a_arr] != Y[b_arr - 1])
-    areas = areas[gi_all]
-    areas[need] += (
-        kpts[b_arr - 1, 0] * kpts[a_arr, 1] - kpts[b_arr - 1, 1] * kpts[a_arr, 0]
-    )[need].astype(np.float64)
-    out_len = counts[gi_all] + need
-    out_starts = np.concatenate([[0], np.cumsum(out_len)[:-1]]).astype(np.int64)
-    OUT = np.empty((int(out_len.sum()), 2), dtype=np.float64)
-    # ordinal ring index per kept point -> shifted destination
-    ord_of_grp = np.full(ngroups, -1, dtype=np.int64)
-    ord_of_grp[gi_all] = np.arange(len(gi_all))
-    shift = np.concatenate([[0], np.cumsum(need)[:-1]]).astype(np.int64)
-    dest = np.arange(len(X), dtype=np.int64) + shift[ord_of_grp[kgrp]]
-    OUT[dest, 0] = X
-    OUT[dest, 1] = Y
-    closers = np.flatnonzero(need)
-    OUT[(out_starts + out_len - 1)[closers], 0] = X[a_arr[closers]]
-    OUT[(out_starts + out_len - 1)[closers], 1] = Y[a_arr[closers]]
-    if bbox is not None and len(gi_all):
-        mnx = np.minimum.reduceat(OUT[:, 0], out_starts)
-        mxx = np.maximum.reduceat(OUT[:, 0], out_starts)
-        mny = np.minimum.reduceat(OUT[:, 1], out_starts)
-        mxy = np.maximum.reduceat(OUT[:, 1], out_starts)
-
-    if packed:
-        # vectorized twin of the classification loop below
-        valid = out_len > 3
-        vi = np.flatnonzero(valid)
-        if len(vi) == 0:
-            return ("empty", None)
-        cw = areas < 0.0
-        first_cw = bool(cw[vi[0]])
-        if version != 1 and first_cw:
-            raise DecodeError("POLYGON first ring clockwise (invalid in v2)")
-        ext = (cw == first_cw) & valid
-        if bbox is not None:
-            in_box = ~((mxx < bbox[0]) | (mnx > bbox[2])
-                       | (mxy < bbox[1]) | (mny > bbox[3]))
-        else:
-            in_box = np.ones(len(gi_all), dtype=bool)
-        ext_kept = ext & in_box
-        # interior rings attach to the nearest preceding exterior; they
-        # are kept only when that exterior was kept (the scalar loop's
-        # last_exterior_not_included), and dropped with no owner at all
-        has_owner = np.cumsum(ext) > 0
-        owner = np.maximum(np.cumsum(ext) - 1, 0)
-        owner_ord = np.cumsum(ext) - 1  # ordinal among exteriors
-        ext_kept_by_ord = ext_kept[np.flatnonzero(ext)] if ext.any() else np.zeros(0, bool)
-        keep_r = valid & np.where(
-            ext, ext_kept,
-            in_box & has_owner
-            & np.where(has_owner, ext_kept_by_ord[np.maximum(owner_ord, 0)], False),
-        )
-        ri = np.flatnonzero(keep_r)
-        if len(ri) == 0:
-            return ("empty", None)
-        lens = out_len[ri]
-        tot_o = int(lens.sum())
-        reverse_rings = ((scale_x * scale_y) < 0) != first_cw
-        off_in = np.repeat(np.cumsum(lens) - lens, lens)
-        pos_in = np.arange(tot_o, dtype=np.int64) - off_in
-        if reverse_rings:
-            idx = np.repeat(out_starts[ri] + lens - 1, lens) - pos_in
-        else:
-            idx = np.repeat(out_starts[ri], lens) + pos_in
-        return ("packed", {
-            "kind": "multipolygon",
-            "xs": OUT[idx, 0], "ys": OUT[idx, 1],
-            "offsets": np.concatenate([[0], np.cumsum(lens)]).astype(np.int64),
-            "exterior": ext[ri],
-        })
-
-    rings: list[np.ndarray] = []
-    rings_exterior: list[bool] = []
-    first_ring = True
-    first_ring_is_clockwise = False
-    last_exterior_not_included = False
-    for ri in range(len(gi_all)):
-        if out_len[ri] <= 3:
-            continue
-        area_cw = float(areas[ri]) < 0.0
-        if first_ring:
-            first_ring_is_clockwise = area_cw
-            if version != 1 and first_ring_is_clockwise:
-                raise DecodeError("POLYGON first ring clockwise (invalid in v2)")
-            first_ring = False
-        is_exterior = first_ring_is_clockwise == area_cw
-        in_box = True
-        if bbox is not None:
-            in_box = not (
-                mxx[ri] < bbox[0] or mnx[ri] > bbox[2]
-                or mxy[ri] < bbox[1] or mny[ri] > bbox[3]
-            )
-        if (not is_exterior and last_exterior_not_included) or not in_box:
-            if is_exterior:
-                last_exterior_not_included = True
-        else:
-            if is_exterior:
-                last_exterior_not_included = False
-            rings.append(OUT[out_starts[ri] : out_starts[ri] + out_len[ri]])
-            rings_exterior.append(is_exterior)
-    if not rings:
-        return ("empty", None)
-    reverse_rings = ((scale_x * scale_y) < 0) != first_ring_is_clockwise
-    polys: list[list[np.ndarray]] = []
-    for ring, is_ext in zip(rings, rings_exterior):
-        r = ring[::-1].copy() if reverse_rings else ring
-        if is_ext:
-            polys.append([r])
-        elif polys:
-            polys[-1].append(r)
-    if len(polys) == 1:
-        return ("polygon", polys[0])
-    return ("multipolygon", polys)
-
-
-def _round_half_away(v: np.ndarray) -> np.ndarray:
-    """Vector twin of _scale_pt_int's std::round (half away from zero)."""
-    return np.floor(np.abs(v) + 0.5) * np.where(v >= 0, 1.0, -1.0)
-
-
-def decode_geometry_vec_batch(
-    geoms: list,
-    gtypes,
-    version: int = 2,
-    tile_x: float = 0.0,
-    tile_y: float = 0.0,
-    scale_x: float = 1.0,
-    scale_y: float = 1.0,
-    bbox=None,
-    segmented: bool = False,
-):
-    """Batch twin of decode_geometry_vec for MANY (typically small)
-    features: the per-point work — unzigzag, cursor cumsum, scaling,
-    shoelace — runs ONCE over every feature's deltas concatenated, with
-    per-feature cursor resets expressed as a segmented cumsum. This is
-    the decode mirror of the ragged encode kernel: a z14 buildings tile
-    (6,800 four-vertex polygons) pays ~3 Python header reads per
-    feature instead of ~16 per-point cursor steps.
-
-    Returns a list with one entry per feature: a geom tuple, or None
-    meaning "decode this feature through decode_geometry_vec /
-    decode_geometry individually" (non-canonical structure, v2
-    degeneracy, overflow — the per-feature paths own the exact error
-    matrix). Raises nothing itself.
-
-    segmented=True returns (out, seg) and LINESTRING/POLYGON features
-    stay in FLAT arrays instead of per-feature tuples: out[fi] is the
-    marker string "seg" and seg[gtype] holds
-    {coords (n,2) float64 (winding reversal already applied),
-     ring_len, ring_feat[, exterior]} with rings feature-major in
-    decode order. This skips ALL per-feature list/ndarray assembly —
-    the WKT writer and the packed scan consume the arrays directly."""
-    n_feats = len(geoms)
-    out: list = [None] * n_feats
-    seg: dict | None = {} if segmented else None
-    if n_feats == 0:
-        return (out, seg) if segmented else out
-    gtypes = np.asarray(gtypes, dtype=np.int64)
-
-    # --- global header walk (Python over HEADERS only; values are
-    # appended as whole arrays, never element-wise) ---
-    val_parts: list[np.ndarray] = []
-    b_cmd: list[int] = []
-    b_cnt: list[int] = []
-    b_vst: list[int] = []          # global index into the value stream
-    b_feat: list[int] = []
-    feat_ok = np.zeros(n_feats, dtype=bool)
-    base = 0
-    for fi in range(n_feats):
-        g = geoms[fi]
-        gt = int(gtypes[fi])
-        m = len(g)
-        if m == 0 or m >= 512 or gt not in (POINT, LINESTRING, POLYGON):
-            # big features decline: decode_geometry_vec's periodic-run
-            # header walk beats this per-header loop there
-            continue
-        p = 0
-        ok = True
-        start_blk = len(b_cmd)
-        while p < m:
-            h = int(g[p]) & 0xFFFFFFFF
-            c = h & 7
-            k = h >> 3
-            if c == MOVE_TO or c == LINE_TO:
-                if k == 0 or p + 1 + 2 * k > m:
-                    ok = False
-                    break
-                b_cmd.append(c)
-                b_cnt.append(k)
-                b_vst.append(base + p + 1)
-                b_feat.append(fi)
-                p += 1 + 2 * k
-            elif c == CLOSE:
-                b_cmd.append(CLOSE)
-                b_cnt.append(0)
-                b_vst.append(base + p + 1)
-                b_feat.append(fi)
-                p += 1
-            else:
-                ok = False
-                break
-        if not ok:
-            del b_cmd[start_blk:], b_cnt[start_blk:], b_vst[start_blk:], b_feat[start_blk:]
-            continue
-        feat_ok[fi] = True
-        val_parts.append(np.asarray(g, dtype=np.uint64))
-        base += m
-    if not b_cmd:
-        return (out, seg) if segmented else out
-    # features that failed the walk contributed no values: b_vst already
-    # indexes the compacted value stream
-    G_all = np.concatenate(val_parts).astype(np.uint32)
-    cmds = np.asarray(b_cmd, dtype=np.int64)
-    cnts = np.asarray(b_cnt, dtype=np.int64)
-    vstarts = np.asarray(b_vst, dtype=np.int64)
-    bfeat = np.asarray(b_feat, dtype=np.int64)
-    return _batch_decode_core(
-        out, seg, segmented, G_all, cmds, cnts, vstarts, bfeat, feat_ok,
-        gtypes, version, tile_x, tile_y, scale_x, scale_y, bbox,
-    )
-
-
-def decode_geometry_vec_batch_global(
-    geom_vals,
-    geom_off,
-    gtypes,
-    version: int = 2,
-    tile_x: float = 0.0,
-    tile_y: float = 0.0,
-    scale_x: float = 1.0,
-    scale_y: float = 1.0,
-    bbox=None,
-    segmented: bool = False,
-):
-    """decode_geometry_vec_batch over a layer's GLOBAL geometry varint
-    array (pbf.decode_features_batch return_global form): feature fi's
-    command stream is geom_vals[geom_off[fi]:geom_off[fi+1]]. The
-    command-header walk itself is vectorized as a FRONTIER: one
-    read-classify-advance numpy step per block DEPTH (a 6,800-feature
-    buildings tile has depth 3 — MoveTo/LineTo/Close — so the whole
-    walk is ~9 array ops), instead of a Python loop per feature. Output
-    contract is identical to decode_geometry_vec_batch(segmented=...).
-    """
-    geom_off = np.asarray(geom_off, dtype=np.int64)
-    n_feats = len(geom_off) - 1
-    out: list = [None] * n_feats
-    seg: dict | None = {} if segmented else None
-    if n_feats == 0 or len(geom_vals) == 0:
-        return (out, seg) if segmented else out
-    gtypes = np.asarray(gtypes, dtype=np.int64)
-    G_all = np.asarray(geom_vals, dtype=np.uint64).astype(np.uint32)
-    mlen = np.diff(geom_off)
-    feat_ok = np.zeros(n_feats, dtype=bool)
-
-    # frontier walk (features with huge streams decline to the
-    # per-feature periodic-run walker, same 512 cutoff as the list path)
-    attempt = (
-        (mlen > 0) & (mlen < 512)
-        & ((gtypes == POINT) | (gtypes == LINESTRING) | (gtypes == POLYGON))
-    )
-    walk_ok = attempt.copy()
-    p = geom_off[:-1].copy()
-    ends = geom_off[1:]
-    active = np.flatnonzero(attempt)
-    cmd_parts: list[np.ndarray] = []
-    cnt_parts: list[np.ndarray] = []
-    vst_parts: list[np.ndarray] = []
-    feat_parts: list[np.ndarray] = []
-    while len(active):
-        h = G_all[p[active]].astype(np.int64)
-        c = h & 7
-        k = h >> 3
-        is_mtlt = (c == MOVE_TO) | (c == LINE_TO)
-        is_cl = c == CLOSE
-        nxt = p[active] + np.where(is_mtlt, 1 + 2 * k, 1)
-        bad = ~(is_mtlt | is_cl) | (is_mtlt & (k == 0)) | (nxt > ends[active])
-        if bad.any():
-            walk_ok[active[bad]] = False
-            goodm = ~bad
-            active = active[goodm]
-            if not len(active):
-                break
-            c, k, nxt, is_cl = c[goodm], k[goodm], nxt[goodm], is_cl[goodm]
-        cmd_parts.append(c)
-        cnt_parts.append(np.where(is_cl, 0, k))
-        vst_parts.append(p[active] + 1)
-        feat_parts.append(active)
-        p[active] = nxt
-        active = active[nxt < ends[active]]
-    if not cmd_parts:
-        return (out, seg) if segmented else out
-    cmds = np.concatenate(cmd_parts)
-    cnts = np.concatenate(cnt_parts)
-    vstarts = np.concatenate(vst_parts)
-    bfeat = np.concatenate(feat_parts)
-    # drop blocks of features that went bad after contributing blocks,
-    # then restore feature-major block order (stable sort keeps the
-    # frontier's per-feature iteration order)
-    keep = walk_ok[bfeat]
-    if not keep.all():
-        cmds, cnts, vstarts, bfeat = cmds[keep], cnts[keep], vstarts[keep], bfeat[keep]
-    if len(cmds) == 0:
-        return (out, seg) if segmented else out
-    order = np.argsort(bfeat, kind="stable")
-    cmds, cnts, vstarts, bfeat = cmds[order], cnts[order], vstarts[order], bfeat[order]
-    feat_ok[:] = walk_ok
-    return _batch_decode_core(
-        out, seg, segmented, G_all, cmds, cnts, vstarts, bfeat, feat_ok,
-        gtypes, version, tile_x, tile_y, scale_x, scale_y, bbox,
-    )
-
-
-def _batch_decode_core(out, seg, segmented, G_all, cmds, cnts, vstarts, bfeat,
-                       feat_ok, gtypes, version, tile_x, tile_y, scale_x,
-                       scale_y, bbox):
-    """Shared back half of the batch decoders: canonical structure
-    checks, global delta decode + per-feature segmented cumsum, and
-    per-type assembly — identical whether the block table came from the
-    per-feature header walk (decode_geometry_vec_batch) or the
-    vectorized frontier walk (decode_geometry_vec_batch_global)."""
-
-    is_mt = cmds == MOVE_TO
-    is_lt = cmds == LINE_TO
-    is_cl = cmds == CLOSE
-    ft_of_blk = gtypes[bfeat]
-    new_feat = np.empty(len(cmds), dtype=bool)
-    new_feat[0] = True
-    new_feat[1:] = bfeat[1:] != bfeat[:-1]
-    nxt_same = np.empty(len(cmds), dtype=bool)
-    nxt_same[:-1] = bfeat[1:] == bfeat[:-1]
-    nxt_same[-1] = False
+    present = [gt for gt in (POINT, LINESTRING, POLYGON) if (gtypes[feat_ok] == gt).any()]
+    mixed = len(present) > 1  # else no per-type selection is needed
+    ft_of_blk = gtypes[bfeat] if mixed else None
 
     # --- canonical structure checks, feature-vectorized ---
-    bad_blk = np.zeros(len(cmds), dtype=bool)
-    # POINT: MoveTo blocks only
-    bad_blk |= (ft_of_blk == POINT) & ~is_mt
-    # LINESTRING: no CLOSE; starts with MT(1); MT followed (same feat) by LT
-    ls = ft_of_blk == LINESTRING
-    bad_blk |= ls & is_cl
-    bad_blk |= ls & new_feat & ~is_mt
-    bad_blk |= ls & is_mt & (cnts != 1)
-    if version != 1:
-        nxt_is_lt = np.empty(len(cmds), dtype=bool)
-        nxt_is_lt[:-1] = is_lt[1:]
-        nxt_is_lt[-1] = False
-        bad_blk |= ls & is_mt & ~(nxt_same & nxt_is_lt)
-    # POLYGON: strict (MT(1), LT+, CLOSE)* per feature
-    pg = ft_of_blk == POLYGON
-    nxt_is_mt = np.empty(len(cmds), dtype=bool)
-    nxt_is_mt[:-1] = is_mt[1:]
-    nxt_is_mt[-1] = False
-    nxt_is_lt2 = np.empty(len(cmds), dtype=bool)
-    nxt_is_lt2[:-1] = is_lt[1:]
-    nxt_is_lt2[-1] = False
-    last_of_feat = ~nxt_same
-    bad_blk |= pg & new_feat & ~is_mt
-    bad_blk |= pg & last_of_feat & ~is_cl
-    bad_blk |= pg & is_mt & (cnts != 1)
-    bad_blk |= pg & is_mt & ~(nxt_same & nxt_is_lt2)
-    bad_blk |= pg & is_lt & nxt_same & nxt_is_mt
-    bad_blk |= pg & is_cl & nxt_same & ~nxt_is_mt
-    if bad_blk.any():
-        feat_ok[np.unique(bfeat[bad_blk])] = False
-
-    # drop blocks of non-ok features
-    keep_blk = feat_ok[bfeat]
-    if not keep_blk.all():
-        cmds, cnts, vstarts, bfeat = (
-            cmds[keep_blk], cnts[keep_blk], vstarts[keep_blk], bfeat[keep_blk]
+    new_feat = _run_starts(bfeat)
+    last = _shift(new_feat, True)  # last block of its feature
+    nxt_lt = _shift(is_lt, False) & ~last
+    nxt_mt = _shift(is_mt, False) & ~last
+    bad = np.zeros(len(cmds), dtype=bool)
+    for gt in present:
+        if gt == POINT:
+            rule = ~is_mt
+        else:
+            # both start with MT(1), and every MT is followed by a LineTo
+            # (LINESTRING v1 tolerates repeated and trailing MoveTos)
+            rule = (new_feat & ~is_mt) | (is_mt & (cnts != 1))
+            if gt == POLYGON or version != 1:
+                rule |= is_mt & ~nxt_lt
+            if gt == LINESTRING:
+                rule |= is_cl
+            else:  # strict (MT(1), LT+, CLOSE)* grouping
+                rule |= (last & ~is_cl) | (is_lt & nxt_mt) | (is_cl & ~last & ~nxt_mt)
+        bad |= rule & (ft_of_blk == gt) if mixed else rule
+    if bad.any():
+        feat_ok[bfeat[bad]] = False
+        keep = feat_ok[bfeat]
+        cmds, cnts, vstarts, bfeat, is_cl = (
+            cmds[keep], cnts[keep], vstarts[keep], bfeat[keep], is_cl[keep]
         )
-        is_mt, is_cl = is_mt[keep_blk], is_cl[keep_blk]
         if len(cmds) == 0:
-            return (out, seg) if segmented else out
+            return
 
     # --- global delta decode + per-feature segmented cumsum ---
-    mtlt = ~is_cl
-    sp_start = vstarts[mtlt]
-    sp_npts = cnts[mtlt]
-    sp_cmd = cmds[mtlt]
-    sp_feat = bfeat[mtlt]
-    nvals = sp_npts * 2
-    tot = int(nvals.sum())
-    if tot == 0:
-        return (out, seg) if segmented else out
-    gbase = np.repeat(sp_start, nvals)
-    goffs = np.arange(tot, dtype=np.int64) - np.repeat(np.cumsum(nvals) - nvals, nvals)
-    v64 = G_all[gbase + goffs].astype(np.int64)
-    deltas = ((v64 >> 1) ^ -(v64 & 1)).reshape(-1, 2)
-    per_pt_feat = np.repeat(sp_feat, sp_npts)
-    pts = np.cumsum(deltas, axis=0)
-    # cursor resets at feature starts: subtract the running total before
-    # each feature's first point
-    fstart_pt = np.empty(len(per_pt_feat), dtype=bool)
-    fstart_pt[0] = True
-    fstart_pt[1:] = per_pt_feat[1:] != per_pt_feat[:-1]
-    seg_idx = np.cumsum(fstart_pt) - 1
-    seg_base = np.zeros((int(seg_idx[-1]) + 1, 2), dtype=np.int64)
-    starts_pt = np.flatnonzero(fstart_pt)
-    seg_base[1:] = pts[starts_pt[1:] - 1]
-    pts = pts - seg_base[seg_idx]
-    if np.abs(pts).max() > (1 << 25):
-        over_feats = np.unique(per_pt_feat[(np.abs(pts) > (1 << 25)).any(axis=1)])
-        feat_ok[over_feats] = False
-        keep_p = feat_ok[per_pt_feat]
-        keep_b = feat_ok[sp_feat]
-        pts, deltas, per_pt_feat = pts[keep_p], deltas[keep_p], per_pt_feat[keep_p]
-        sp_cmd, sp_npts, sp_feat = sp_cmd[keep_b], sp_npts[keep_b], sp_feat[keep_b]
-        if len(pts) == 0:
-            return (out, seg) if segmented else out
-    per_pt_cmd = np.repeat(sp_cmd, sp_npts)
+    # the walks tile each stream exactly, so the values are every
+    # position of a decoded feature's stream that is not a block header
+    vmask = np.repeat(feat_ok, mlen)
+    vmask[vstarts - 1] = False
+    if is_cl.any():
+        mtlt = ~is_cl
+        vstarts, cnts, cmds, bfeat = vstarts[mtlt], cnts[mtlt], cmds[mtlt], bfeat[mtlt]
+    pts, X, Y, over = _cursor_pass(G_all, vmask, vstarts, cnts, bfeat,
+                                   tile_x, tile_y, scale_x, scale_y)
+    px, py = pts[:, 0], pts[:, 1]
+    if over is not None:
+        # keep the int area math exact; the scalar walk handles extremes
+        pt_feat = np.repeat(bfeat, cnts)
+        feat_ok[pt_feat[over]] = False
+        kp, kb = feat_ok[pt_feat], feat_ok[bfeat]
+        px, py, X, Y = px[kp], py[kp], X[kp], Y[kp]
+        cmds, cnts, bfeat = cmds[kb], cnts[kb], bfeat[kb]
+        if len(px) == 0:
+            return
 
     # --- per-type assembly ---
-    _assemble_batch_points(
-        out, feat_ok, gtypes, pts, per_pt_feat,
-        tile_x, tile_y, scale_x, scale_y, bbox,
-    )
-    for gt in (LINESTRING, POLYGON):
-        _assemble_batch_paths(
-            out, feat_ok, gtypes, gt, version, pts, deltas, per_pt_feat,
-            per_pt_cmd, sp_cmd, sp_npts, sp_feat,
-            tile_x, tile_y, scale_x, scale_y, bbox, seg,
-        )
-    return (out, seg) if segmented else out
+    for gt in present:
+        t = (X, Y, px, py, cmds, cnts, bfeat)
+        if mixed:
+            bsel = gtypes[bfeat] == gt
+            if not bsel.any():
+                continue
+            psel = np.repeat(bsel, cnts)
+            t = (*(a[psel] for a in t[:4]), *(a[bsel] for a in t[4:]))
+        if gt == POINT:
+            _assemble_points(out, t[0], t[1], *t[5:], bbox)
+        else:
+            _assemble_paths(out, feat_ok, gt, version, *t, scale_x * scale_y < 0, bbox)
+        for fi in np.flatnonzero(feat_ok & (gtypes == gt)).tolist():
+            if out[fi] is None:
+                out[fi] = EMPTY
 
 
-def _assemble_batch_points(out, feat_ok, gtypes, pts, per_pt_feat,
-                           tile_x, tile_y, scale_x, scale_y, bbox):
-    sel = feat_ok[per_pt_feat] & (gtypes[per_pt_feat] == POINT)
-    if not sel.any():
+# points per slice of _cursor_pass: a slice's temporaries stay in cache
+_SLICE = 1 << 15
+# largest |cursor coordinate| decoded here: int32 storage and exact
+# int64 ring areas; features reaching past it go to the scalar walk
+_REACH = 1 << 25
+
+
+def _cursor_pass(G_all, vmask, vstarts, cnts, bfeat, tile_x, tile_y, scale_x, scale_y):
+    """The MoveTo/LineTo blocks' zigzag values (G_all where vmask) ->
+    cursor positions (n, 2) as int32, with the cursor reset to (0, 0) at
+    each feature's first point, their scaled X and Y, and a mask of the
+    points past _REACH (None when there are none). Runs over slices of
+    whole blocks holding ~_SLICE points (a bigger block is a slice of
+    its own): each slice's gather, unzigzag and int64 cumsum stay in
+    cache, and a carried cursor joins the slices."""
+    blk_pt0 = np.cumsum(cnts) - cnts
+    n = int(blk_pt0[-1] + cnts[-1])
+    f_pt0 = blk_pt0[_run_starts(bfeat)]
+    first = np.flatnonzero(_run_starts(blk_pt0 // _SLICE))
+    last = np.append(first[1:], len(cnts)) - 1
+    p_lo, p_hi = blk_pt0[first], blk_pt0[last] + cnts[last]
+    g_lo, g_hi = vstarts[first], vstarts[last] + 2 * cnts[last]
+    pts = np.empty((n, 2), dtype=np.int32)
+    X = np.empty(n)
+    Y = np.empty(n)
+    buf = np.empty((int((p_hi - p_lo).max()), 2), dtype=np.int64)
+    carry = np.zeros(2, dtype=np.int64)
+    over = None
+    for a, b, ga, gb in zip(p_lo.tolist(), p_hi.tolist(), g_lo.tolist(), g_hi.tolist()):
+        vs = G_all[ga:gb][vmask[ga:gb]]
+        d = (vs >> 1).view(np.int32)  # unzigzag32, in 4-byte lanes
+        sign = (vs & 1).view(np.int32)
+        d ^= np.negative(sign, out=sign)
+        seg = buf[: b - a]
+        seg[...] = d.reshape(-1, 2)
+        fs = f_pt0[np.searchsorted(f_pt0, a) : np.searchsorted(f_pt0, b)] - a
+        if not len(fs) or fs[0]:
+            seg[0] += carry  # a feature runs on from the previous slice
+            fs = np.insert(fs, 0, 0)
+        if len(fs) > 1:
+            # each feature's first delta also takes back the delta sum
+            # of the run before it
+            seg[fs[1:]] -= np.add.reduceat(seg, fs, axis=0)[:-1]
+        np.cumsum(seg, axis=0, out=seg)
+        carry = seg[-1].copy()
+        if max(int(seg.max()), -int(seg.min())) > _REACH:
+            if over is None:
+                over = np.zeros(n, dtype=bool)
+            over[a:b] = (np.abs(seg) > _REACH).any(axis=1)
+        pts[a:b] = seg
+        np.divide(seg[:, 0], scale_x, out=X[a:b])
+        X[a:b] += tile_x
+        np.divide(seg[:, 1], scale_y, out=Y[a:b])
+        Y[a:b] += tile_y
+    return pts, X, Y, over
+
+
+def _emit_packed(out, kind, xs, ys, lens, part_feat, exterior=None):
+    """Flat part arrays (feature-major) -> one packed dict per feature in
+    out. Per feature this is array VIEWS into xs/ys and into one shared
+    offsets array — no per-part objects, no per-feature arithmetic."""
+    if len(lens) == 0:
         return
-    P = pts[sel]
-    F = per_pt_feat[sel]
-    X = tile_x + P[:, 0] / scale_x
-    Y = tile_y + P[:, 1] / scale_y
+    roff = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=roff[1:])
+    first = _run_starts(part_feat)
+    fb = np.flatnonzero(first)
+    fe = np.append(fb[1:], len(lens))
+    # every feature's offsets [0, part ends relative to its first point]
+    # laid out back to back: feature k's run starts at fb[k] + k
+    ford = np.cumsum(first) - 1
+    local = np.zeros(len(lens) + len(fb), dtype=np.int64)
+    local[np.arange(len(lens)) + ford + 1] = roff[1:] - roff[fb][ford]
+    for k, (a, b, s, e, fid) in enumerate(zip(
+        fb.tolist(), fe.tolist(), roff[fb].tolist(), roff[fe].tolist(),
+        part_feat[fb].tolist(),
+    )):
+        d = {"kind": kind, "xs": xs[s:e], "ys": ys[s:e], "offsets": local[a + k : b + k + 1]}
+        if exterior is not None:
+            d["exterior"] = exterior[a:b]
+        out[fid] = d
+
+
+def _part_envelopes(X, Y, starts):
+    """Per-part (minx, miny, maxx, maxy) of contiguous parts."""
+    return (np.minimum.reduceat(X, starts), np.minimum.reduceat(Y, starts),
+            np.maximum.reduceat(X, starts), np.maximum.reduceat(Y, starts))
+
+
+def _in_box(env, bbox):
+    mnx, mny, mxx, mxy = env
+    return ~((mxx < bbox[0]) | (mnx > bbox[2]) | (mxy < bbox[1]) | (mny > bbox[3]))
+
+
+def _assemble_points(out, X, Y, cnts, bfeat, bbox):
+    """Every point of a feature is one multipoint part; bbox filters
+    points one by one."""
+    fb = np.flatnonzero(_run_starts(bfeat))
+    lens = np.add.reduceat(cnts, fb)
     if bbox is not None:
         m = (bbox[0] <= X) & (X <= bbox[2]) & (bbox[1] <= Y) & (Y <= bbox[3])
-        X, Y, F = X[m], Y[m], F[m]
-    XY = np.column_stack([X, Y])
-    # feature slices (points of one feature are contiguous)
-    bounds = np.flatnonzero(np.concatenate([[True], F[1:] != F[:-1]])) if len(F) else []
-    ends = np.concatenate([bounds[1:], [len(F)]]) if len(F) else []
-    feats_with_pts = set()
-    for a, b in zip(bounds, ends):
-        fi = int(F[a])
-        feats_with_pts.add(fi)
-        arr = XY[a:b]
-        out[fi] = ("point", arr[0]) if len(arr) == 1 else ("multipoint", arr)
-    for fi in np.flatnonzero(feat_ok & (gtypes == POINT)):
-        if int(fi) not in feats_with_pts:
-            out[int(fi)] = ("empty", None)  # all points bbox-filtered
+        lens = np.add.reduceat(m, np.cumsum(lens) - lens, dtype=np.int64)
+        X, Y = X[m], Y[m]
+    has = lens > 0
+    _emit_packed(out, "multipoint", X, Y, lens[has], bfeat[fb][has])
 
 
-def _seg_gather(coords_x, coords_y, starts, lens, rev=None):
-    """Gather kept rings into one contiguous (n,2) float64 array,
-    optionally reversing flagged rings — all array ops, no per-ring
-    slicing."""
-    total = int(lens.sum())
-    base = np.repeat(starts, lens)
-    pos = np.arange(total, dtype=np.int64) - np.repeat(
-        np.cumsum(lens) - lens, lens
-    )
-    if rev is not None and rev.any():
-        rev_pt = np.repeat(rev, lens)
-        src = np.where(rev_pt, base + np.repeat(lens, lens) - 1 - pos, base + pos)
-    else:
-        src = base + pos
-    cc = np.empty((total, 2), dtype=np.float64)
-    cc[:, 0] = coords_x[src]
-    cc[:, 1] = coords_y[src]
-    return cc
-
-
-def _assemble_batch_paths(out, feat_ok, gtypes, gt, version, pts, deltas,
-                          per_pt_feat, per_pt_cmd, sp_cmd, sp_npts, sp_feat,
-                          tile_x, tile_y, scale_x, scale_y, bbox, seg=None):
-    """LINESTRING / POLYGON assembly over the batch: group bookkeeping
-    and areas global, per-part structure via one pass of light Python.
-    Features whose parts degenerate under v2 fall back (out[fi]=None
-    stays) so the scalar path raises the exact error.
-
-    seg (a dict) switches on SEGMENTED output: kept rings stay in flat
-    arrays under seg[gt] and covered features get out[fi]="seg" — no
-    per-feature ndarray or tuple is ever built (see
-    decode_geometry_vec_batch's docstring for the layout)."""
-    psel = feat_ok[per_pt_feat] & (gtypes[per_pt_feat] == gt)
-    bsel = feat_ok[sp_feat] & (gtypes[sp_feat] == gt)
-    if not psel.any():
-        return
-    kdel = deltas[psel]
-    kcmd = per_pt_cmd[psel]
-    kfeat = per_pt_feat[psel]
-    kpts = pts[psel]
-    scmd = sp_cmd[bsel]
-    sfeat = sp_feat[bsel]
-    # group id: cumsum of MoveTo blocks (global across this type's feats);
-    # every group starts with exactly one MT, so group->feature is just
-    # the MT blocks' feature ids in order
-    is_mt_blk = scmd == MOVE_TO
+def _assemble_paths(out, feat_ok, gt, version, X, Y, px, py, cmds, cnts, bfeat,
+                    reverse_sign, bbox):
+    """LINESTRING / POLYGON assembly: part (MoveTo group) bookkeeping,
+    ring areas and the winding / hole / bbox rules, all vectorized over
+    the batch. Features whose parts degenerate under v2 are declined so
+    the scalar path raises the exact error."""
+    is_mt_blk = cmds == MOVE_TO
+    # part id: cumsum of MoveTo blocks; every part starts with exactly
+    # one MT(1), so part -> feature is the MT blocks' feature ids
     grp_of_blk = np.cumsum(is_mt_blk) - 1
-    snp = sp_npts[bsel]
-    grp = np.repeat(grp_of_blk, snp)
-    gfeat = sfeat[is_mt_blk]
-    ngroups = int(grp_of_blk[-1]) + 1
-
-    zero = (kdel[:, 0] == 0) & (kdel[:, 1] == 0) & (kcmd == LINE_TO)
-    keep = ~zero
-    kpts, kgrp, kcmd2, kfeat2 = kpts[keep], grp[keep], kcmd[keep], kfeat[keep]
-    counts = np.bincount(kgrp, minlength=ngroups)
-    mt_counts = np.bincount(kgrp[kcmd2 == MOVE_TO], minlength=ngroups)
-    lt_counts = counts - mt_counts
-    min_lt = 1 if gt == LINESTRING else 2
-    bad_grp = (mt_counts != 1) | (lt_counts < min_lt)
+    gfeat = bfeat[is_mt_blk]
+    grp = np.repeat(grp_of_blk, cnts)
+    # skip-zero: zero LineTo deltas never append a vertex (line_next /
+    # ring_next with skip_zero=True); MoveTo deltas always do
+    zero = np.empty(len(px), dtype=bool)
+    zero[0] = False
+    zero[1:] = (px[1:] == px[:-1]) & (py[1:] == py[:-1])
+    zero[(np.cumsum(cnts) - cnts)[is_mt_blk]] = False
+    if zero.any():
+        keep = ~zero
+        px, py, X, Y, grp = px[keep], py[keep], X[keep], Y[keep], grp[keep]
+    counts = np.bincount(grp, minlength=len(gfeat))
+    # a part needs its MoveTo plus >=1 (line) or >=2 (ring) LineTos
+    bad_grp = counts <= (1 if gt == LINESTRING else 2)
     if bad_grp.any():
         if version != 1:
-            # per-FEATURE fallback; scalar replays the exact error
-            bad_feats = np.unique(gfeat[np.flatnonzero(bad_grp)])
-            feat_ok[bad_feats] = False
-            km = feat_ok[kfeat2]
-            kpts, kgrp, kcmd2, kfeat2 = kpts[km], kgrp[km], kcmd2[km], kfeat2[km]
-            counts = np.bincount(kgrp, minlength=ngroups) if len(kgrp) else counts * 0
-        else:
-            dm = ~bad_grp[kgrp]
-            kpts, kgrp, kcmd2, kfeat2 = kpts[dm], kgrp[dm], kcmd2[dm], kfeat2[dm]
-            counts = np.bincount(kgrp, minlength=ngroups) if len(kgrp) else counts * 0
-    if len(kpts) == 0:
-        for fi in np.flatnonzero(feat_ok & (gtypes == gt)):
-            out[int(fi)] = ("empty", None)
-        return
-
-    X = tile_x + kpts[:, 0] / scale_x
-    Y = tile_y + kpts[:, 1] / scale_y
-    starts = np.concatenate([[0], np.cumsum(counts)[:-1]]).astype(np.int64)
+            # per-FEATURE decline; the scalar walk replays the exact error
+            feat_ok[gfeat[bad_grp]] = False
+            bad_grp = ~feat_ok[gfeat]
+        # v1 leniency (the cursor's "move_to"/"close" resets): a part
+        # whose LineTos all collapsed is silently dropped; its deltas
+        # already advanced the shared cursor via the cumsum
+        dm = ~bad_grp[grp]
+        px, py, X, Y, grp = px[dm], py[dm], X[dm], Y[dm], grp[dm]
+        counts[bad_grp] = 0
+        if len(grp) == 0:
+            return
+    gi = np.flatnonzero(counts)
+    lens = counts[gi]
+    starts = np.cumsum(lens) - lens  # parts of gi are contiguous in X/Y
 
     if gt == LINESTRING:
-        gi_keep = np.flatnonzero(counts >= 2)
-        if bbox is not None and len(gi_keep):
-            st = starts[gi_keep]
-            mnx = np.minimum.reduceat(X, st)
-            mxx = np.maximum.reduceat(X, st)
-            mny = np.minimum.reduceat(Y, st)
-            mxy = np.maximum.reduceat(Y, st)
-            inb = ~((mxx < bbox[0]) | (mnx > bbox[2])
-                    | (mxy < bbox[1]) | (mny > bbox[3]))
-            gi_keep = gi_keep[inb]
-        if seg is not None:
-            ln = counts[gi_keep]
-            rf = gfeat[gi_keep]
-            seg[gt] = {
-                "coords": _seg_gather(X, Y, starts[gi_keep], ln),
-                "ring_len": ln,
-                "ring_feat": rf,
-            }
-            has = np.zeros(len(out), dtype=bool)
-            has[rf] = True
-            for fi in np.flatnonzero(feat_ok & (gtypes == gt)):
-                fi = int(fi)
-                out[fi] = "seg" if has[fi] else ("empty", None)
-            return
-        XY = np.column_stack([X, Y])
-        per_feat_lines: dict[int, list] = {}
-        for gi in gi_keep:
-            fi = int(gfeat[gi])
-            per_feat_lines.setdefault(fi, []).append(
-                XY[starts[gi] : starts[gi] + counts[gi]]
-            )
-        for fi in np.flatnonzero(feat_ok & (gtypes == gt)):
-            fi = int(fi)
-            lines = per_feat_lines.get(fi)
-            if not lines:
-                out[fi] = ("empty", None)
-            elif len(lines) == 1:
-                out[fi] = ("linestring", lines[0])
-            else:
-                out[fi] = ("multilinestring", lines)
-        return
-
-    # POLYGON
-    cross = kpts[:-1, 0] * kpts[1:, 1] - kpts[:-1, 1] * kpts[1:, 0]
-    same = kgrp[:-1] == kgrp[1:]
-    areas = np.bincount(kgrp[:-1][same], weights=cross[same].astype(np.float64),
-                        minlength=ngroups).astype(np.float64)
-    gi_all = np.flatnonzero(counts > 0)
-    a_arr = starts[gi_all]
-    b_arr = a_arr + counts[gi_all]
-    need = (X[a_arr] != X[b_arr - 1]) | (Y[a_arr] != Y[b_arr - 1])
-    areas = areas[gi_all]
-    areas[need] += (
-        kpts[b_arr - 1, 0] * kpts[a_arr, 1] - kpts[b_arr - 1, 1] * kpts[a_arr, 0]
-    )[need].astype(np.float64)
-    out_len = counts[gi_all] + need
-    out_starts = np.concatenate([[0], np.cumsum(out_len)[:-1]]).astype(np.int64)
-    OUT = np.empty((int(out_len.sum()), 2), dtype=np.float64)
-    ord_of_grp = np.full(ngroups, -1, dtype=np.int64)
-    ord_of_grp[gi_all] = np.arange(len(gi_all))
-    shift = np.concatenate([[0], np.cumsum(need)[:-1]]).astype(np.int64)
-    dest = np.arange(len(X), dtype=np.int64) + shift[ord_of_grp[kgrp]]
-    OUT[dest, 0] = X
-    OUT[dest, 1] = Y
-    closers = np.flatnonzero(need)
-    OUT[(out_starts + out_len - 1)[closers], 0] = X[a_arr[closers]]
-    OUT[(out_starts + out_len - 1)[closers], 1] = Y[a_arr[closers]]
-    if bbox is not None and len(gi_all):
-        mnx = np.minimum.reduceat(OUT[:, 0], out_starts)
-        mxx = np.maximum.reduceat(OUT[:, 0], out_starts)
-        mny = np.minimum.reduceat(OUT[:, 1], out_starts)
-        mxy = np.maximum.reduceat(OUT[:, 1], out_starts)
-
-    ring_feat = gfeat[gi_all]
-    reverse_sign = (scale_x * scale_y) < 0
-
-    if seg is not None:
-        # segmented polygon assembly: one light-Python pass over RING
-        # headers (keep / exterior / reverse decisions — the stateful
-        # winding + hole-after-dropped-exterior rules of the scalar
-        # decoder, decoder.ipp:656-788), then ONE vectorized gather
-        nr = len(gi_all)
-        keepf = np.zeros(nr, dtype=bool)
-        extf = np.zeros(nr, dtype=bool)
-        revf = np.zeros(nr, dtype=bool)
-        area_cw_arr = (areas < 0.0).tolist()
-        olen = out_len.tolist()
-        rfeat = ring_feat.tolist()
-        v2s = version != 1
-        cur_fi = -1
-        first = True
-        first_cw = False
-        last_ext_excl = False
-        rev = False
-        for ri in range(nr):
-            fi = rfeat[ri]
-            if fi != cur_fi:
-                cur_fi = fi
-                first = True
-                last_ext_excl = False
-            if not feat_ok[fi] or olen[ri] <= 3:
-                continue
-            area_cw = area_cw_arr[ri]
-            if first:
-                first_cw = area_cw
-                if v2s and first_cw:
-                    feat_ok[fi] = False  # scalar replays the CW error
-                    continue
-                first = False
-                rev = reverse_sign != first_cw
-            is_ext = first_cw == area_cw
-            in_box = True
-            if bbox is not None:
-                in_box = not (
-                    mxx[ri] < bbox[0] or mnx[ri] > bbox[2]
-                    or mxy[ri] < bbox[1] or mny[ri] > bbox[3]
-                )
-            if (not is_ext and last_ext_excl) or not in_box:
-                if is_ext:
-                    last_ext_excl = True
-                continue
-            if is_ext:
-                last_ext_excl = False
-            keepf[ri] = True
-            extf[ri] = is_ext
-            revf[ri] = rev
-        kidx = np.flatnonzero(keepf)
-        # feat_ok may have flipped inside the loop (v2 CW first ring):
-        # drop any ring kept before its feature was invalidated
-        if len(kidx):
-            kidx = kidx[feat_ok[ring_feat[kidx]]]
-        ln = out_len[kidx]
-        rf = ring_feat[kidx]
-        seg[gt] = {
-            "coords": _seg_gather(
-                OUT[:, 0], OUT[:, 1], out_starts[kidx], ln, revf[kidx]
-            ),
-            "ring_len": ln,
-            "ring_feat": rf,
-            "exterior": extf[kidx],
-        }
-        has = np.zeros(len(out), dtype=bool)
-        has[rf] = True
-        for fi in np.flatnonzero(feat_ok & (gtypes == gt)):
-            fi = int(fi)
-            out[fi] = "seg" if has[fi] else ("empty", None)
-        return
-
-    cur_fi = -1
-    state = None  # (first_ring, first_cw, last_ext_excl, rings, exts)
-    results: dict[int, tuple] = {}
-
-    def flush(fi, state):
-        if fi < 0 or state is None:
-            return
-        _fr, first_cw, _le, rings, exts = state
-        if not rings:
-            results[fi] = ("empty", None)
-            return
-        rev = reverse_sign != first_cw
-        polys: list[list[np.ndarray]] = []
-        for ring, is_ext in zip(rings, exts):
-            r = ring[::-1].copy() if rev else ring
-            if is_ext:
-                polys.append([r])
-            elif polys:
-                polys[-1].append(r)
-        results[fi] = (
-            ("polygon", polys[0]) if len(polys) == 1 else ("multipolygon", polys)
-        )
-
-    v2 = version != 1
-    for ri in range(len(gi_all)):
-        fi = int(ring_feat[ri])
-        if fi != cur_fi:
-            flush(cur_fi, state)
-            cur_fi = fi
-            state = [True, False, False, [], []]
-        if not feat_ok[fi] or out_len[ri] <= 3:
-            continue
-        area_cw = float(areas[ri]) < 0.0
-        first_ring, first_cw, last_excl, rings, exts = state
-        if first_ring:
-            first_cw = area_cw
-            if v2 and first_cw:
-                feat_ok[fi] = False  # scalar replays the CW error
-                state = [False, first_cw, last_excl, [], []]
-                continue
-            state[0] = False
-            state[1] = first_cw
-        is_ext = state[1] == area_cw
-        in_box = True
         if bbox is not None:
-            in_box = not (
-                mxx[ri] < bbox[0] or mnx[ri] > bbox[2]
-                or mxy[ri] < bbox[1] or mny[ri] > bbox[3]
-            )
-        if (not is_ext and state[2]) or not in_box:
-            if is_ext:
-                state[2] = True
-        else:
-            if is_ext:
-                state[2] = False
-            rings.append(OUT[out_starts[ri] : out_starts[ri] + out_len[ri]])
-            exts.append(is_ext)
-    flush(cur_fi, state)
-    for fi in np.flatnonzero(feat_ok & (gtypes == gt)):
-        fi = int(fi)
-        out[fi] = results.get(fi, ("empty", None))
+            inb = _in_box(_part_envelopes(X, Y, starts), bbox)
+            if not inb.all():  # gather the kept parts
+                gi, lens = gi[inb], lens[inb]
+                src = np.repeat(starts[inb] - (np.cumsum(lens) - lens), lens)
+                src += np.arange(len(src))
+                X, Y = X[src], Y[src]
+        _emit_packed(out, "multilinestring", X, Y, lens, gfeat[gi])
+        return
+
+    # POLYGON — per-ring int64 shoelace (exact: |coord| <= _REACH),
+    # closing point appended when the last point differs from the first
+    px, py = px.astype(np.int64), py.astype(np.int64)
+    cross = px[:-1] * py[1:] - py[:-1] * px[1:]
+    same = grp[:-1] == grp[1:]
+    areas = np.bincount(grp[:-1][same], weights=cross[same].astype(np.float64),
+                        minlength=len(gfeat))[gi]
+    last = starts + lens - 1
+    need = (X[starts] != X[last]) | (Y[starts] != Y[last])
+    areas[need] += (
+        px[last] * py[starts] - py[last] * px[starts]
+    )[need].astype(np.float64)
+    out_len = lens + need
+
+    # ring classification (decoder.ipp:656-788): a feature's first valid
+    # ring fixes the exterior winding (v2 rejects clockwise); a hole is
+    # kept only when its exterior was kept; bbox drops whole rings
+    vi = np.flatnonzero(out_len > 3)
+    if len(vi) == 0:
+        return
+    vfeat = gfeat[gi[vi]]
+    ffirst = _run_starts(vfeat)
+    ford = np.cumsum(ffirst) - 1
+    cw = areas[vi] < 0.0
+    first_cw = cw[ffirst]
+    if version != 1 and first_cw.any():
+        feat_ok[vfeat[ffirst][first_cw]] = False
+    ext = cw == first_cw[ford]
+    in_box = (np.ones(len(vi), dtype=bool) if bbox is None
+              else _in_box(_part_envelopes(X, Y, starts), bbox)[vi])
+    # the latest exterior at or before each ring (a feature's first
+    # valid ring is exterior, so it never reaches into another feature)
+    owner = np.maximum.accumulate(np.where(ext, np.arange(len(vi)), 0))
+    keep = in_box & in_box[owner] & feat_ok[vfeat]
+    ri = vi[keep]
+    rev = (reverse_sign != first_cw[ford])[keep]
+    lens_o = out_len[ri]
+    if len(ri) == len(out_len) and not need.any() and not rev.any():
+        xs, ys = X, Y  # nothing dropped, closed, or reversed
+    else:
+        q = np.arange(int(lens_o.sum()), dtype=np.int64) - np.repeat(
+            np.cumsum(lens_o) - lens_o, lens_o)
+        if rev.any():
+            flip = np.repeat(lens_o - 1, lens_o) - q
+            q = flip if rev.all() else np.where(np.repeat(rev, lens_o), flip, q)
+        # position lens[r] is the appended closing point: the ring start
+        q[q == np.repeat(lens[ri], lens_o)] = 0
+        src = np.repeat(starts[ri], lens_o) + q
+        xs, ys = X[src], Y[src]
+    _emit_packed(out, "multipolygon", xs, ys, lens_o, vfeat[keep], ext[keep])
 
 
 def _bbox_pt(bbox, x, y):

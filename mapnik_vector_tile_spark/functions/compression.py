@@ -71,11 +71,11 @@ def compress(data: bytes, level: int = 6, use_gzip: bool = False) -> bytes:
         # tiny payloads (the typical per-tile pbf): zlib.compress spends
         # ~40us per call allocating the default memLevel-8 hash state —
         # measured at 54% of the whole 695k-tile encode kernel. memLevel
-        # 2 allocates a fraction of that, sets up ~4x faster, keeps the
-        # 0x78/wbits-15 header the sniffers (ours and the reference's)
-        # key on, and produced byte-identical streams for every sampled
-        # payload <= 2 KB (divergence starts beyond the shorter hash
-        # chains' reach, well past this threshold).
+        # 2 allocates a fraction of that and sets up ~4x faster. The
+        # contract is decoded equality, not byte identity with
+        # zlib.compress: zlib.decompress returns the input, and the
+        # stream keeps the 0x78 (wbits-15) header the sniffers (ours and
+        # the reference's) key on (test_compress_contract).
         co = zlib.compressobj(level, zlib.DEFLATED, 15, 2)
         return co.compress(data) + co.flush()
     return zlib.compress(data, level)

@@ -521,7 +521,8 @@ def decode_features_batch(feature_msgs: list[bytes], return_global: bool = False
     if return_global:
         # zero per-feature objects: callers pair this with
         # commands.decode_geometry_vec_batch_global, which walks the
-        # global geometry array directly via geom_off
+        # global geometry array directly via geom_off (the frontier
+        # walk for short streams, the periodic-run walk for long ones)
         return {
             "n": n,
             "ids": ids,

@@ -254,10 +254,10 @@ def cosine_near_dups(
                 with np.errstate(divide="ignore", invalid="ignore"):
                     C = (Ma @ Mb.T) / np.outer(na, nb_)
                 hit = C >= thr
+                # equal ids hash to one block, so they only meet in
+                # diagonal blocks, where ids_a < ids_b drops them
                 if ba == bb:
                     hit &= ids_a[:, None] < ids_b[None, :]
-                else:
-                    hit &= ids_a[:, None] != ids_b[None, :]
                 ia, ib = np.nonzero(hit)
                 if len(ia) == 0:
                     continue

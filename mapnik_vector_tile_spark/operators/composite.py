@@ -344,45 +344,3 @@ def merge_tiles_reencode_geom(
         )
 
     return first.groupBy("z", "x", "y").applyInPandas(kernel, schema=TILE_SCHEMA)
-
-
-def merge_tiles_reencode(
-    tiles: DataFrame,
-    prop_cols: list[str],
-    layer_name: str = "layer",
-    extent: int = 4096,
-    buffer_px: int = 0,
-) -> DataFrame:
-    """Slow-path merge: decode all sources, re-encode one layer per tile
-    (the v1->v2 upgrade path of load_tile.hpp:53-137). Points-only
-    single-layer form — decoded rows re-enter build_point_tiles; the
-    general mixed-geometry multi-layer form is merge_tiles_reencode_geom.
-
-    Rides the packed ragged scan: coordinates come back as Arrow list
-    columns and the mercator->lon/lat inverse is pure Column math
-    (JVM-side), so no WKT string is ever formatted or parsed."""
-    import math
-
-    from mapnik_vector_tile_spark import tilemath
-    from mapnik_vector_tile_spark.operators import decode as D
-    from mapnik_vector_tile_spark.operators.encode import build_point_tiles
-
-    decoded = D.decode_tiles_packed(tiles).where(F.col("geom_type") == 1)
-    r = float(tilemath.EARTH_RADIUS)
-    pt = F.explode(F.arrays_zip(F.col("xs").alias("mx"), F.col("ys").alias("my")))
-    rows = (
-        decoded.select("z", "x", "y", "feature_id", "props", pt.alias("pt"))
-        .select(
-            "z", "x", "y", "feature_id",
-            F.degrees(F.col("pt.mx") / F.lit(r)).alias("lon"),
-            F.degrees(
-                F.lit(2.0) * F.atan(F.exp(F.col("pt.my") / F.lit(r)))
-                - F.lit(math.pi / 2.0)
-            ).alias("lat"),
-            *[F.col("props").getItem(c).alias(c) for c in prop_cols],
-        )
-    )
-    return build_point_tiles(
-        rows, prop_cols, layer_name=layer_name, extent=extent, buffer_px=buffer_px,
-        order_col="feature_id",
-    )

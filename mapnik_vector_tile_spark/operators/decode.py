@@ -46,15 +46,15 @@ DECODED_SCHEMA = (
 class _LayerBatch:
     """Per-layer decode state of _layer_features: feature fields as
     GLOBAL flat arrays when the lockstep wire walk holds
-    (pbf.decode_features_batch return_global) with the geometry
-    batch-decoded straight off the global varint array
-    (commands.decode_geometry_vec_batch_global — vectorized frontier
-    header walk), falling back to per-feature parsing on few big
-    features and exotic wire shapes. Either way the exposed surface is
-    identical."""
+    (pbf.decode_features_batch return_global), falling back to parsing
+    each feature message alone on few big features and exotic wire
+    shapes. Either way every geometry goes through ONE vectorized
+    decode (commands.decode_geometry_vec_batch_global, or its list entry
+    decode_geometry_vec_batch), and `batched` holds its per-feature
+    output: a packed dict, the EMPTY marker, or None (declined)."""
 
     __slots__ = ("n", "ids", "types", "tags", "tag_off", "glen",
-                 "batched", "seg", "_feats", "_fb")
+                 "batched", "_feats", "_fb")
 
     def __init__(self, layer: dict, dec_args: dict):
         msgs = layer["features"]
@@ -77,9 +77,8 @@ class _LayerBatch:
             self.tags = fb["tag_vals"].tolist()
             self.tag_off = fb["tag_off"].tolist()
             self.glen = np.diff(fb["geom_off"]).tolist()
-            self.batched, self.seg = Cmd.decode_geometry_vec_batch_global(
-                fb["geom_vals"], fb["geom_off"], fb["types"],
-                segmented=True, **dec_args,
+            self.batched = Cmd.decode_geometry_vec_batch_global(
+                fb["geom_vals"], fb["geom_off"], fb["types"], **dec_args,
             )
         else:  # exotic wire shapes: parse each feature alone
             feats = [pbf.decode_feature_arrays(m) for m in layer["features"]]
@@ -94,9 +93,8 @@ class _LayerBatch:
                 tag_off.append(len(tags))
             self.tags, self.tag_off = tags, tag_off
             self.glen = [len(f["geometry"]) for f in feats]
-            self.batched, self.seg = Cmd.decode_geometry_vec_batch(
-                [f["geometry"] for f in feats], self.types,
-                segmented=True, **dec_args,
+            self.batched = Cmd.decode_geometry_vec_batch(
+                [f["geometry"] for f in feats], self.types, **dec_args,
             )
 
     def geom(self, fi: int):
@@ -158,18 +156,16 @@ def _layer_features(layer_bytes: bytes, bounds, bbox=None, typed: bool = False) 
     props, raster) tuple per feature, in wire order — the engine's only
     layer decode. packed is the ragged geometry {kind, xs, ys,
     offsets[, exterior]} or None (no geometry, or all of it outside
-    `bbox`). Features the batch decoder declines replay through
-    decode_geometry_vec and then the scalar decode_geometry, which own
-    the exact v1/v2 error matrix. typed=True keeps property values as
-    their decoded python variants (int/float/bool/str) instead of
-    stringifying — the re-encode merge path needs the Value types back
-    (vector_tile_load_tile.hpp:93-137)."""
+    `bbox`). Features the vectorized decoder declines replay through the
+    scalar decode_geometry, which owns the exact v1/v2 error matrix.
+    typed=True keeps property values as their decoded python variants
+    (int/float/bool/str) instead of stringifying — the re-encode merge
+    path needs the Value types back (vector_tile_load_tile.hpp:93-137)."""
     layer = pbf.decode_layer(bytes(layer_bytes))
     if not _layer_ok(layer):
         return []
     kw = _layer_dec_args(layer, bounds, bbox)
     lb = _LayerBatch(layer, kw)
-    seg_pk = _packed_from_seg(lb.seg)
     keys = layer["keys"]
     if typed:
         vals = list(layer["values"])
@@ -181,14 +177,9 @@ def _layer_features(layer_bytes: bytes, bounds, bbox=None, typed: bool = False) 
         pk = None
         if lb.glen[fi]:
             g = lb.batched[fi]
-            if g == "seg":
-                pk = seg_pk.get(fi)
-            else:
-                if g is None:
-                    g = Cmd.decode_geometry_vec(lb.geom(fi), lb.types[fi], packed=True, **kw)
-                if g is None:
-                    g = Cmd.decode_geometry(lb.geom(fi), lb.types[fi], **kw)
-                pk = g[1] if g[0] == "packed" else _pack_from_parts(g)[1]
+            if g is None:
+                g = _pack_from_parts(Cmd.decode_geometry(lb.geom(fi), lb.types[fi], **kw))[1]
+            pk = g if isinstance(g, dict) else None
         out.append(
             (name, lb.ids[fi], lb.types[fi], pk, lb.props_of(fi, keys, vals), lb.raster(fi))
         )
@@ -713,49 +704,6 @@ def parse_tagged_value(v, tag: str):
     if tag == "b":
         return v == "True"
     return v
-
-
-def _packed_from_seg(seg) -> dict:
-    """Segmented batch-decode arrays -> {feature id: packed dict}. Per
-    feature this is four array VIEWS into flat per-batch arrays — no
-    vstack, no per-part objects, no per-feature numpy arithmetic."""
-    out: dict[int, dict] = {}
-    if not seg:
-        return out
-    kind_of = {Cmd.LINESTRING: "multilinestring", Cmd.POLYGON: "multipolygon"}
-    for gt, entry in seg.items():
-        rl = entry["ring_len"]
-        if len(rl) == 0:
-            continue
-        rf = entry["ring_feat"]
-        coords = entry["coords"]
-        ex = entry.get("exterior")
-        roff = np.concatenate([[0], np.cumsum(rl)]).astype(np.int64)
-        first = np.concatenate([[True], rf[1:] != rf[:-1]])
-        fb = np.flatnonzero(first)
-        fe = np.concatenate([fb[1:], [len(rl)]])
-        # every feature's offsets [0, ring ends relative to its first
-        # point] laid out back to back: feature k's run starts at fb[k] + k
-        ford = np.cumsum(first) - 1
-        local = np.zeros(len(rl) + len(fb), dtype=np.int64)
-        local[np.arange(len(rl)) + ford + 1] = roff[1:] - roff[fb][ford]
-        kind = kind_of[gt]
-        xs_all = np.ascontiguousarray(coords[:, 0])
-        ys_all = np.ascontiguousarray(coords[:, 1])
-        for k, (a, b, s, e, fid) in enumerate(zip(
-            fb.tolist(), fe.tolist(), roff[fb].tolist(), roff[fe].tolist(),
-            rf[fb].tolist(),
-        )):
-            d = {
-                "kind": kind,
-                "xs": xs_all[s:e],
-                "ys": ys_all[s:e],
-                "offsets": local[a + k : b + k + 1],
-            }
-            if ex is not None:
-                d["exterior"] = ex[a:b]
-            out[fid] = d
-    return out
 
 
 def _pack_from_parts(geom) -> tuple:

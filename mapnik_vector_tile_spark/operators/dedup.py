@@ -66,9 +66,21 @@ def minhash_lsh_candidates(
     directly and emits a pair only from its FIRST matching band — the
     output is exact and already distinct, eliminating the former
     20M-row pair shuffle + 9.6M-group count aggregation (sf0.1 shape)
-    behind the old band join. Returns (doc_a, doc_b, n_bands_hit)."""
+    behind the old band join. Returns (doc_a, doc_b, n_bands_hit).
+
+    doc_id must be an integral column: ids travel through the kernels
+    as int64 and pairs are ordered numerically. Any other type raises
+    TypeError here, before a job runs."""
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import IntegralType
+
+    id_type = df.schema["doc_id"].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            "minhash_lsh_candidates needs an integral doc_id column, "
+            f"got doc_id {id_type.simpleString()}"
+        )
 
     rows_per_band = n_perm // bands
     sig = minhash_signatures(df, text_col, n_perm)

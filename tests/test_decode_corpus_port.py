@@ -6,14 +6,15 @@ and pins, per spec version, an exact WKT, an empty geometry, or a
 throw. The fixture data (command ints + expected outcome) is scraped
 from the reference's test source when the checkout is mounted — the
 same skip-if-absent pattern the real-tile anchors use — and every case
-is driven through ALL FOUR decode paths of this engine:
+is driven through BOTH geometry decoders of this engine, the
+vectorized one through each of its header walks and entries:
 
-  scalar   functions.commands.decode_geometry       (owns the error matrix)
-  vec      decode_geometry_vec                      (periodic-run walk)
-  batch    decode_geometry_vec_batch                (per-feature header walk)
-  global   decode_geometry_vec_batch_global         (vectorized frontier walk)
+  scalar    functions.commands.decode_geometry     (owns the error matrix)
+  batch     decode_geometry_vec_batch              (list entry, frontier walk)
+  global    decode_geometry_vec_batch_global       (global entry, frontier walk)
+  periodic  decode_geometry_vec_batch_global       (periodic-run walk forced)
 
-The vectorized paths may DECLINE (None) — that is the fallback
+The vectorized decoder may DECLINE (None) — that is the fallback
 contract — but must never disagree with the scalar outcome.
 """
 
@@ -175,7 +176,7 @@ def test_reference_decode_corpus(fname, name, gtype, cmds, outcomes):
             return "raises"
         if g is None:
             return None
-        return "empty" if g[0] == "empty" else G.to_wkt(g)
+        return "empty" if g == Cmd.EMPTY else G.wkt_from_packed([g])[0]
 
     for version, want in outcomes.items():
         got = _scalar_outcome(cmds, gtype, version)
@@ -185,7 +186,6 @@ def test_reference_decode_corpus(fname, name, gtype, cmds, outcomes):
         arr = np.asarray(cmds, dtype=np.uint64)
         goff = np.asarray([0, len(cmds)], dtype=np.int64)
         paths = {
-            "vec": lambda: Cmd.decode_geometry_vec(arr, gtype, **kw),
             "batch": lambda: Cmd.decode_geometry_vec_batch([cmds], [gtype], **kw)[0],
             "global": lambda: Cmd.decode_geometry_vec_batch_global(
                 arr, goff, [gtype], **kw
@@ -194,6 +194,10 @@ def test_reference_decode_corpus(fname, name, gtype, cmds, outcomes):
         for pname, fn in paths.items():
             got_p = outcome_of(fn)
             assert got_p in (None, want), (version, pname, got_p, want)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(Cmd, "_FRONTIER_MAX", 0)
+            got_p = outcome_of(paths["global"])
+        assert got_p in (None, want), (version, "periodic", got_p, want)
 
 
 def test_corpus_size_and_coverage():

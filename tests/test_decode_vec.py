@@ -1,13 +1,23 @@
 """Vectorized geometry decode: bit-exact parity with the scalar walk.
 
-decode_geometry_vec replaces the per-point cursor with one
-unzigzag+cumsum pass for canonical command streams, declining anything
-else back to decode_geometry. Parity matters feature-by-feature: kind,
-part structure, and every coordinate must be identical — including the
-v1 leniency behaviors (degenerate parts dropped, repeated MOVETO) and
-the v2 first-ring-clockwise error. The reference's own bench tiles
-(34-multipoint enf z14, 168k-segment multi_line z13 — both v1, from a
-foreign encoder) are the end-to-end fixtures."""
+decode_geometry_vec_batch / _batch_global replace the per-point cursor
+with one unzigzag+cumsum pass over every feature's canonical command
+stream, emitting the packed form and declining anything else (None) to
+decode_geometry. Parity matters feature-by-feature: part structure,
+exterior flags and every coordinate must equal the scalar result packed
+by _pack_from_parts — including the v1 leniency behaviors (degenerate
+parts dropped, repeated MOVETO), while v2 degeneracy and a v2
+clockwise first ring decline so the scalar path raises.
+
+Streams reach the shared back half through one of two header walks,
+picked by stream length (commands._FRONTIER_MAX): the frontier walk
+for short streams and the periodic-run walk for long ones. `_decode`
+runs every parity check at the default cutoff, again with every stream
+forced through the periodic walk, and once more with the cursor pass
+cut into 5-point slices (commands._SLICE) so each check crosses slice
+boundaries; all runs must give identical output. The reference's own bench tiles (34-multipoint enf z14,
+168k-segment multi_line z13 — both v1, from a foreign encoder) are the
+end-to-end fixtures."""
 
 from __future__ import annotations
 
@@ -20,35 +30,51 @@ from hypothesis import given, settings, strategies as st
 from mapnik_vector_tile_spark import tilemath
 from mapnik_vector_tile_spark.functions import commands as Cmd
 from mapnik_vector_tile_spark.functions import compression as Z
+from mapnik_vector_tile_spark.functions import geometry as G
 from mapnik_vector_tile_spark.functions import pbf
+from mapnik_vector_tile_spark.operators.decode import _pack_from_parts
 
 BENCH = "/root/reference/bench"
 
 
-def _flat(gm):
-    k, v = gm
-    if k == "empty":
-        return []
-    if k in ("point", "multipoint", "linestring"):
-        return [np.atleast_2d(v)]
-    if k == "multilinestring":
-        return [np.asarray(p) for p in v]
-    if k == "polygon":
-        return [np.asarray(r) for r in v]
-    return [np.asarray(r) for p in v for r in p]  # multipolygon
+def _assert_packed_equal(a, b):
+    if not isinstance(a, dict) or not isinstance(b, dict):
+        assert a == b, (a, b)
+        return
+    assert a["kind"] == b["kind"], (a["kind"], b["kind"])
+    for k in ("xs", "ys", "offsets"):
+        assert np.array_equal(a[k], b[k]), k
+    if a["kind"] == "multipolygon":
+        assert np.array_equal(a["exterior"], b["exterior"])
 
 
-def _assert_same(gv, gs):
-    assert gv[0] == gs[0], (gv[0], gs[0])
-    fv, fs = _flat(gv), _flat(gs)
-    assert len(fv) == len(fs), (len(fv), len(fs))
-    for a, b in zip(fv, fs):
-        assert a.shape == b.shape and np.array_equal(a, b)
+def _assert_same(got, gs):
+    """A batch entry (packed dict or EMPTY) vs a scalar decode result."""
+    _assert_packed_equal(got, _pack_from_parts(gs)[1] if gs[0] != "empty" else Cmd.EMPTY)
+
+
+def _decode(geoms, gtypes, **kw):
+    """decode_geometry_vec_batch as is, with every stream forced through
+    the periodic-run walk, and with 5-point cursor slices; all runs must
+    agree entry by entry (declines included)."""
+    a = Cmd.decode_geometry_vec_batch(geoms, gtypes, **kw)
+    for name in ("_FRONTIER_MAX", "_SLICE"):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(Cmd, name, 0 if name == "_FRONTIER_MAX" else 5)
+            b = Cmd.decode_geometry_vec_batch(geoms, gtypes, **kw)
+        assert len(a) == len(b)
+        for ga, gb in zip(a, b):
+            _assert_packed_equal(ga, gb)
+    return a
+
+
+def _decode1(cmds, gtype, **kw):
+    return _decode([cmds], [gtype], **kw)[0]
 
 
 def _both(cmds, gtype, **kw):
     """Run vec + scalar; vec must NOT decline; outputs must match."""
-    gv = Cmd.decode_geometry_vec(cmds, gtype, **kw)
+    gv = _decode1(cmds, gtype, **kw)
     gs = Cmd.decode_geometry(cmds, gtype, **kw)
     assert gv is not None
     _assert_same(gv, gs)
@@ -85,9 +111,9 @@ def test_v1_degenerate_segment_dropped():
     cmds = [9, z(1), z(1), (1 << 3) | 2, z(0), z(0),
             9, z(4), z(4), (1 << 3) | 2, z(3), z(3)]
     gv = _both(cmds, 2, version=1)
-    assert gv[0] == "linestring" and len(gv[1]) == 2
+    assert gv["kind"] == "multilinestring" and gv["offsets"].tolist() == [0, 2]
     # v2: the vec path declines and the scalar raises
-    assert Cmd.decode_geometry_vec(cmds, 2, version=2) is None
+    assert _decode1(cmds, 2, version=2) is None
     with pytest.raises(Cmd.DecodeError):
         Cmd.decode_geometry(cmds, 2, version=2)
 
@@ -95,8 +121,9 @@ def test_v1_degenerate_segment_dropped():
 def test_v2_first_ring_clockwise_raises_in_both():
     z = Cmd._zz32
     cw = [9, z(0), z(0), (3 << 3) | 2, z(0), z(10), z(10), z(0), z(0), z(-10), 15]
-    with pytest.raises(Cmd.DecodeError):
-        Cmd.decode_geometry_vec(cw, 3, version=2)
+    # v2: the vec path declines, so the production decode replays the
+    # feature through the scalar walk, which raises
+    assert _decode1(cw, 3, version=2) is None
     with pytest.raises(Cmd.DecodeError):
         Cmd.decode_geometry(cw, 3, version=2)
     # v1 accepts it
@@ -112,6 +139,32 @@ def test_parity_scaled_and_bbox():
     _both(cmds, 1, **kw)
     bbox = (-20037508.34, 20037000.0, -20030000.0, 20037508.34)
     _both(cmds, 1, bbox=bbox, **kw)
+
+
+def test_parity_hole_after_dropped_exterior():
+    """bbox drops whole rings, and a hole goes with its exterior: a hole
+    inside the box whose exterior is outside it is dropped too."""
+    z = Cmd._zz32
+    cur = [0, 0]
+
+    def ring(x0, y0, s, hole=False):  # square at (x0, y0): CCW, or CW if hole
+        pts = [(x0, y0), (x0 + s, y0), (x0 + s, y0 + s), (x0, y0 + s)]
+        if hole:
+            pts = pts[:1] + pts[:0:-1]
+        out = []
+        for i, (x, y) in enumerate(pts):
+            out += ([9] if i == 0 else [(3 << 3) | 2] if i == 1 else [])
+            out += [z(x - cur[0]), z(y - cur[1])]
+            cur[:] = [x, y]
+        return out + [15]
+
+    # an exterior out of the box with a hole in it, then an exterior and
+    # its hole both in the box
+    cmds = (ring(5000, 5000, 100) + ring(10, 10, 20, hole=True)
+            + ring(100, 100, 500) + ring(200, 200, 50, hole=True))
+    got = _both(cmds, 3, version=1, bbox=(0.0, 0.0, 1000.0, 1000.0))
+    assert got["exterior"].tolist() == [True, False]
+    assert got["offsets"].tolist() == [0, 5, 10]
 
 
 coord = st.integers(min_value=-4200, max_value=4200)
@@ -130,7 +183,7 @@ def test_parity_random_lines(parts, use_bbox):
     if not enc:
         return
     bbox = (-100.0, -100.0, 2000.0, 2000.0) if use_bbox else None
-    gv = Cmd.decode_geometry_vec(enc, 2, bbox=bbox)
+    gv = _decode1(enc, 2, bbox=bbox)
     gs = Cmd.decode_geometry(enc, 2, bbox=bbox)
     if gv is not None:
         _assert_same(gv, gs)
@@ -155,16 +208,11 @@ def test_parity_random_polygons(rings):
             err = None
         except Cmd.DecodeError as e:
             gs, err = None, e
-        if err is None:
-            gv = Cmd.decode_geometry_vec(cmds, 3, version=version)
-            if gv is not None:
-                _assert_same(gv, gs)
-        else:
-            try:
-                gv = Cmd.decode_geometry_vec(cmds, 3, version=version)
-            except Cmd.DecodeError:
-                gv = "raised"
-            assert gv in (None, "raised")
+        gv = _decode1(cmds, 3, version=version)
+        if err is not None:
+            assert gv is None  # declined: the scalar walk raises
+        elif gv is not None:
+            _assert_same(gv, gs)
 
 
 @pytest.mark.skipif(not os.path.isdir(BENCH), reason="reference bench not mounted")
@@ -190,7 +238,7 @@ def test_parity_reference_bench_tiles(name, z, x, y):
                 continue
             kw = dict(version=lay["version"], tile_x=float(minx),
                       tile_y=float(maxy), scale_x=scale, scale_y=-scale)
-            gv = Cmd.decode_geometry_vec(f["geometry"], f["type"], **kw)
+            gv = _decode1(f["geometry"], f["type"], **kw)
             assert gv is not None, "vec path declined a real-world feature"
             _assert_same(gv, Cmd.decode_geometry(f["geometry"], f["type"], **kw))
             n_vec += 1
@@ -207,9 +255,22 @@ def test_decode_feature_arrays_matches_decode_feature():
     assert list(a["geometry"]) == [int(v) for v in b["geometry"]]
 
 
-def _unpack(pk):
+def _flat(gm):
+    """Scalar decode result -> list of (n,2) part arrays."""
+    k, v = gm
+    if k == "empty":
+        return []
+    if k in ("point", "multipoint", "linestring"):
+        return [np.atleast_2d(v)]
+    if k == "multilinestring":
+        return [np.asarray(p) for p in v]
+    if k == "polygon":
+        return [np.asarray(r) for r in v]
+    return [np.asarray(r) for p in v for r in p]  # multipolygon
+
+
+def _unpack(d):
     """packed dict -> list of (n,2) part arrays (+exterior flags)."""
-    d = pk[1]
     offs = d["offsets"]
     parts = [
         np.column_stack([d["xs"][offs[i] : offs[i + 1]], d["ys"][offs[i] : offs[i + 1]]])
@@ -225,6 +286,8 @@ def _unpack(pk):
      ("multi_line_13_1310_3166.vector.mvt", 13, 1310, 3166)],
 )
 def test_packed_matches_list_api_reference_tiles(name, z, x, y):
+    """The packed parts of every bench-tile feature are the scalar
+    decoder's list-form parts, in order."""
     buf = open(f"{BENCH}/{name}", "rb").read()
     data = Z.decompress(buf)
     minx, _miny, maxx, maxy = tilemath.tile_mercator_bbox_np(x, y, z)
@@ -237,9 +300,9 @@ def test_packed_matches_list_api_reference_tiles(name, z, x, y):
                 continue
             kw = dict(version=lay["version"], tile_x=float(minx),
                       tile_y=float(maxy), scale_x=scale, scale_y=-scale)
-            pk = Cmd.decode_geometry_vec(f["geometry"], f["type"], packed=True, **kw)
-            gl = Cmd.decode_geometry_vec(f["geometry"], f["type"], **kw)
-            assert pk is not None and gl is not None
+            pk = _decode1(f["geometry"], f["type"], **kw)
+            gl = Cmd.decode_geometry(f["geometry"], f["type"], **kw)
+            assert pk is not None
             parts, _ = _unpack(pk)
             flat_parts = _flat(gl)
             assert len(parts) == len(flat_parts)
@@ -251,22 +314,22 @@ def test_packed_matches_list_api_reference_tiles(name, z, x, y):
 @given(st.lists(st.lists(st.tuples(coord, coord), min_size=3, max_size=10),
                 min_size=1, max_size=4))
 def test_packed_matches_list_api_random_polygons(rings):
+    """Packed polygons vs the scalar decoder's list form: same rings in
+    order, and the exterior flags regroup them into the same polygons."""
     arrs = [np.asarray(pts + pts[:1], dtype=np.int64) for pts in rings]
     gt, cmds = Cmd.encode_geometry(("polygon", arrs), [0, 0])
     if gt is None:
         return
+    pk = _decode1(cmds, 3, version=2)
     try:
-        gl = Cmd.decode_geometry_vec(cmds, 3, version=2)
+        gl = Cmd.decode_geometry(cmds, 3, version=2)
     except Cmd.DecodeError:
-        with pytest.raises(Cmd.DecodeError):
-            Cmd.decode_geometry_vec(cmds, 3, version=2, packed=True)
+        assert pk is None
         return
-    pk = Cmd.decode_geometry_vec(cmds, 3, version=2, packed=True)
-    if gl is None or pk is None:
-        assert gl is None and pk is None
+    if pk is None:
         return
     if gl[0] == "empty":
-        assert pk[0] == "empty"
+        assert pk == Cmd.EMPTY
         return
     parts, ext = _unpack(pk)
     flat_parts = _flat(gl)
@@ -340,7 +403,7 @@ def test_batch_decode_matches_per_feature(specs, version):
         return
     kw = dict(version=version, tile_x=-100.0, tile_y=100.0,
               scale_x=0.25, scale_y=-0.25)
-    batched = Cmd.decode_geometry_vec_batch(geoms, gtypes, **kw)
+    batched = _decode(geoms, gtypes, **kw)
     for fi, b in enumerate(batched):
         try:
             ref = Cmd.decode_geometry(geoms[fi], gtypes[fi], **kw)
@@ -367,7 +430,7 @@ def test_batch_decode_buildings_tile():
         geoms.append(np.asarray(cmds, dtype=np.uint64))
         gtypes.append(gt)
     kw = dict(version=2, tile_x=0.0, tile_y=4096.0, scale_x=1.0, scale_y=-1.0)
-    batched = Cmd.decode_geometry_vec_batch(geoms, gtypes, **kw)
+    batched = _decode(geoms, gtypes, **kw)
     assert all(b is not None for b in batched)
     for fi, b in enumerate(batched):
         _assert_same(b, Cmd.decode_geometry(geoms[fi], gtypes[fi], **kw))
@@ -378,11 +441,11 @@ def test_batch_decode_v1_degenerates_and_v2_fallback():
     degen = [9, z(1), z(1), (1 << 3) | 2, z(0), z(0)]   # MT + zero LT
     good = [9, z(4), z(4), (1 << 3) | 2, z(3), z(3)]
     # v1: degenerate feature decodes empty, good feature decodes
-    b1 = Cmd.decode_geometry_vec_batch([degen, good], [2, 2], version=1)
-    assert b1[0] == ("empty", None)
+    b1 = _decode([degen, good], [2, 2], version=1)
+    assert b1[0] == Cmd.EMPTY
     _assert_same(b1[1], Cmd.decode_geometry(good, 2, version=1))
     # v2: degenerate feature falls back (None) so scalar can raise
-    b2 = Cmd.decode_geometry_vec_batch([degen, good], [2, 2], version=2)
+    b2 = _decode([degen, good], [2, 2], version=2)
     assert b2[0] is None
     assert b2[1] is not None
 
@@ -436,72 +499,106 @@ def _random_feature_corpus(rng, n=400):
 
 @pytest.mark.parametrize("version", [1, 2])
 def test_batch_global_matches_list_batch(version):
-    """decode_geometry_vec_batch_global (vectorized frontier header
-    walk over the layer's global varint array) must agree entry-by-entry
-    with the per-feature-walk batch — same declines, same geometry."""
+    """The list entry (default walk cutoff) and the global-array entry
+    with every stream forced through the periodic-run walk agree entry
+    by entry — same declines, same geometry."""
     rng = np.random.default_rng(11)
     geoms, gtypes = _random_feature_corpus(rng)
     kw = dict(version=version, tile_x=-5.0, tile_y=5.0, scale_x=0.5, scale_y=-0.5)
     a = Cmd.decode_geometry_vec_batch(geoms, gtypes, **kw)
     gvals = np.concatenate(geoms)
     goff = np.concatenate([[0], np.cumsum([len(g) for g in geoms])])
-    b = Cmd.decode_geometry_vec_batch_global(gvals, goff, gtypes, **kw)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(Cmd, "_FRONTIER_MAX", 0)
+        b = Cmd.decode_geometry_vec_batch_global(gvals, goff, gtypes, **kw)
     assert len(a) == len(b)
     for ga, gb in zip(a, b):
-        if ga is None or gb is None:
-            assert ga is None and gb is None
-            continue
-        _assert_same(ga, gb)
+        _assert_packed_equal(ga, gb)
 
 
 @pytest.mark.parametrize("version", [1, 2])
 @pytest.mark.parametrize("use_bbox", [False, True])
-def test_segmented_matches_tuple_assembly(version, use_bbox):
-    """segmented=True must describe exactly the geometry the tuple
-    assembly builds: the packed dict cut from the flat ring arrays
-    equals _pack_from_parts, and WKT written from it equals to_wkt of
-    the tuple."""
-    from mapnik_vector_tile_spark.functions import geometry as G
-    from mapnik_vector_tile_spark.operators.decode import (
-        _pack_from_parts, _packed_from_seg,
-    )
-
+def test_batch_matches_scalar_corpus(version, use_bbox):
+    """Every feature of a mixed corpus: the batch's packed dict equals
+    the scalar result through _pack_from_parts, and the WKT written from
+    it equals to_wkt of the scalar result. Only the malformed streams
+    decline."""
     rng = np.random.default_rng(7)
     geoms, gtypes = _random_feature_corpus(rng)
     kw = dict(version=version, tile_x=0.0, tile_y=4096.0, scale_x=1.0, scale_y=-1.0)
     if use_bbox:
         kw["bbox"] = (500.0, 500.0, 3000.0, 3000.0)
-    tuples = Cmd.decode_geometry_vec_batch(geoms, gtypes, **kw)
-    marked, seg = Cmd.decode_geometry_vec_batch(geoms, gtypes, segmented=True, **kw)
-    seg_pk = _packed_from_seg(seg)
-    seg_wkt = dict(zip(seg_pk, G.wkt_from_packed(list(seg_pk.values()))))
-    n_seg = 0
-    for fi, (t, m) in enumerate(zip(tuples, marked)):
-        if m != "seg":
-            continue  # POINT features / declines keep the tuple path
-        n_seg += 1
-        assert t is not None and t[0] != "empty"
-        assert seg_wkt[fi] == G.to_wkt(t)
-        want = _pack_from_parts(t)[1]
-        got = seg_pk[fi]
-        assert got["kind"] == want["kind"]
-        assert np.array_equal(got["xs"], want["xs"])
-        assert np.array_equal(got["ys"], want["ys"])
-        assert np.array_equal(got["offsets"], want["offsets"])
-        if want.get("exterior") is not None:
-            assert np.array_equal(got["exterior"], want["exterior"])
-    assert n_seg > 100  # the corpus is mostly canonical lines/polygons
-    # features segmented in one mode must be segmented/empty-consistent
-    for t, m in zip(tuples, marked):
-        if m is None:
-            assert t is None
-        elif m == ("empty", None):
-            assert t == ("empty", None)
+    batched = _decode(geoms, gtypes, **kw)
+    n_packed = 0
+    for fi, b in enumerate(batched):
+        if b is None:
+            with pytest.raises(Cmd.DecodeError):
+                Cmd.decode_geometry(geoms[fi], gtypes[fi], **kw)
+            continue
+        gs = Cmd.decode_geometry(geoms[fi], gtypes[fi], **kw)
+        _assert_same(b, gs)
+        if isinstance(b, dict):
+            n_packed += 1
+            assert G.wkt_from_packed([b])[0] == G.to_wkt(gs)
+    assert sum(b is None for b in batched) == 3  # the malformed streams
+    assert n_packed > 100
+
+
+def _stream(blocks):
+    """Block list [(cmd, count, values)] -> one command stream."""
+    out = []
+    for c, k, vals in blocks:
+        out.append((k << 3) | c)
+        out.extend(vals)
+    return out
+
+
+# MoveTo / LineTo / Close plus two unknown command ids; count 0 and a
+# cut-off tail make malformed streams
+_block = st.tuples(
+    st.sampled_from([Cmd.MOVE_TO, Cmd.LINE_TO, Cmd.CLOSE, 3, 0]),
+    st.integers(min_value=0, max_value=3),
+).map(lambda ck: (*ck, list(range(2 * ck[1])) if ck[0] in (Cmd.MOVE_TO, Cmd.LINE_TO) else []))
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(
+    st.tuples(
+        st.lists(_block, min_size=1, max_size=3),   # repeated pattern
+        st.integers(min_value=1, max_value=12),      # repetitions
+        st.lists(_block, max_size=3),                # tail
+        st.integers(min_value=0, max_value=2),       # values cut off the end
+    ),
+    min_size=1, max_size=5,
+))
+def test_walks_fill_identical_block_tables(specs):
+    """The frontier walk and the periodic-run walk turn the same streams
+    into the same block table (command, count, value start, feature)
+    and decline the same malformed streams."""
+    streams = []
+    for pattern, reps, tail, cut in specs:
+        s = _stream(pattern * reps + tail)
+        s = s[: max(1, len(s) - cut)]
+        streams.append(s)
+    G_all = np.concatenate([np.asarray(s, dtype=np.uint32) for s in streams])
+    off = np.concatenate([[0], np.cumsum([len(s) for s in streams])]).astype(np.int64)
+    ok_f = np.ones(len(streams), dtype=bool)
+    frontier = Cmd._frontier_walk(G_all, off, np.arange(len(streams)), ok_f)
+    ok_p = np.ones(len(streams), dtype=bool)
+    periodic = []
+    for fi in range(len(streams)):
+        t = Cmd._periodic_walk(G_all, int(off[fi]), int(off[fi + 1]))
+        if t is None:
+            ok_p[fi] = False
+        else:
+            periodic.append((*t, np.full(len(t[0]), fi, dtype=np.int64)))
+    assert ok_f.tolist() == ok_p.tolist()
+    want = [np.concatenate(c) for c in zip(*periodic)] if periodic else [[]] * 4
+    for got, exp in zip(frontier, want):
+        assert np.asarray(got).tolist() == np.asarray(exp).tolist()
 
 
 def test_to_wkt_batch_matches_scalar():
-    from mapnik_vector_tile_spark.functions import geometry as G
-
     rng = np.random.default_rng(3)
     geoms = [
         ("empty", None),
@@ -518,9 +615,6 @@ def test_to_wkt_batch_matches_scalar():
 def test_gpack_from_packed_roundtrip():
     """gpack bytes built straight from the packed arrays must gunpack to
     the same rings/part structure the tuple form carries."""
-    from mapnik_vector_tile_spark.functions import geometry as G
-    from mapnik_vector_tile_spark.operators.decode import _pack_from_parts
-
     rng = np.random.default_rng(5)
     cases = [
         ("multipoint", rng.uniform(-100, 100, size=(3, 2))),

@@ -331,10 +331,9 @@ def test_mutation_fuzz_real_tiles_total(seed):
                         f = P.decode_feature_arrays(fm)
                         if not len(f["geometry"]):
                             continue
-                        g = Cmd.decode_geometry_vec(
-                            f["geometry"], f["type"],
-                            version=lay["version"], packed=True,
-                        )
+                        g = Cmd.decode_geometry_vec_batch(
+                            [f["geometry"]], [f["type"]], version=lay["version"],
+                        )[0]
                         if g is None:
                             Cmd.decode_geometry(
                                 f["geometry"], f["type"], version=lay["version"]

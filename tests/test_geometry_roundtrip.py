@@ -970,12 +970,12 @@ def test_system_encode_and_decode(wkt):
             tile_x=0.0, tile_y=0.0, scale_x=1.0, scale_y=1.0,
         )
         assert G.to_wkt(back) == wkt, (version, G.to_wkt(back))
-        vec = Cmd.decode_geometry_vec(
-            np.asarray(cmds, dtype=np.uint64), gtype, version=version,
+        vec = Cmd.decode_geometry_vec_batch(
+            [np.asarray(cmds, dtype=np.uint64)], [gtype], version=version,
             tile_x=0.0, tile_y=0.0, scale_x=1.0, scale_y=1.0,
-        )
+        )[0]
         if vec is not None:
-            assert G.to_wkt(vec) == wkt, (version, "vec")
+            assert G.wkt_from_packed([vec])[0] == wkt, (version, "vec")
 
 
 def test_from_wkt_batch_mixed_dimensions_not_misparsed():

@@ -17,6 +17,23 @@ def test_zlib_roundtrip_and_sniff(payload):
     assert Z.decompress(z) == payload
 
 
+@pytest.mark.parametrize("size", [0, 1, 2047, 2048, 2049, 4096])
+@pytest.mark.parametrize("kind", ["random", "repetitive"])
+def test_compress_contract(size, kind):
+    """compress's contract on both sides of its 2 KB memLevel switch:
+    zlib.decompress gives the input back, and the stream starts with
+    the 0x78 zlib header byte."""
+    import zlib
+
+    if kind == "random":
+        x = np.random.default_rng(size).integers(0, 256, size=size, dtype=np.uint8).tobytes()
+    else:
+        x = (b"feature-tag-" * (size // 12 + 1))[:size]
+    z = Z.compress(x)
+    assert zlib.decompress(z) == x
+    assert z[0] == 0x78
+
+
 @pytest.mark.parametrize("payload", [b"", b"tile data" * 123])
 def test_gzip_roundtrip_and_sniff(payload):
     g = Z.compress(payload, use_gzip=True)

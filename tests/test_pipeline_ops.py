@@ -58,6 +58,14 @@ def test_minhash_lsh_chunked_expansion_invariance(docs):
     assert all(a < b for a, b in key(base))
 
 
+def test_minhash_lsh_rejects_non_integral_doc_id(spark):
+    """The integral doc_id contract is checked when the operator is
+    called, with an error naming the column, not when a job runs."""
+    docs = spark.createDataFrame([("a", "x y z"), ("b", "x y z")], "doc_id string, text string")
+    with pytest.raises(TypeError, match="doc_id"):
+        dedup.minhash_lsh_candidates(docs, n_perm=8, bands=4)
+
+
 def test_ngram_jaccard_scores(docs):
     out = dedup.ngram_jaccard(docs, threshold=0.5).toPandas()
     pairs = {(a, b): j for a, b, j in out.to_numpy()}

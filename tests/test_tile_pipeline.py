@@ -342,8 +342,8 @@ def test_composite_reencode_upgrades_v1_to_v2(spark):
     tiles = spark.createDataFrame(
         [(3, 1, 3, tile_v1, 1, 1, True)],
         "z int, x long, y long, tile binary, n_features long, n_layers int, painted boolean",
-    )
-    upgraded = composite.merge_tiles_reencode(tiles, prop_cols=["caption"])
+    ).withColumn("source", F.lit(0))
+    upgraded = composite.merge_tiles_reencode_geom(tiles)
     row = upgraded.where(F.col("painted")).first()
     layers = pbf.decode_tile(Z.decompress(bytes(row["tile"])))
     meta = pbf.decode_layer(layers[0])
