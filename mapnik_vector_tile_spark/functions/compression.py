@@ -6,6 +6,7 @@ to zlib (or gzip on request). One call per tile payload, never per-row.
 from __future__ import annotations
 
 import gzip
+import struct
 import zlib
 
 
@@ -31,8 +32,7 @@ _ADLER_BASE = 65521
 def adler32_combine(ad1: int, ad2: int, len2: int) -> int:
     """zlib's adler32_combine: checksum of A+B from adler32(A),
     adler32(B), len(B) — lets independently-checksummed segments form
-    one valid zlib stream without re-reading the bytes (the parallel
-    salted-encode assemble, operators/encode.py)."""
+    one valid zlib stream without re-reading the bytes (zlib_join)."""
     rem = len2 % _ADLER_BASE
     sum1 = ad1 & 0xFFFF
     sum2 = (rem * sum1) % _ADLER_BASE
@@ -62,6 +62,28 @@ def deflate_stream_tail() -> bytes:
     """The final (BFINAL=1) empty block closing a segmented stream."""
     co = zlib.compressobj(1, zlib.DEFLATED, -15)
     return co.compress(b"") + co.flush(zlib.Z_FINISH)
+
+
+def deflate_piece(data: bytes, level: int = 6) -> tuple[bytes, int, int]:
+    """One piece of a segmented zlib stream: (deflate_segment(data),
+    adler32(data), len(data)) — what zlib_join needs of it, so the
+    uncompressed bytes can be dropped right away."""
+    return deflate_segment(data, level), zlib.adler32(data), len(data)
+
+
+def zlib_join(pieces) -> bytes:
+    """One valid zlib stream from deflate_piece outputs, in order: the
+    header, the segments, the final empty block and the payload's adler32
+    combined from the pieces' checksums (a hot tile's segments,
+    operators/encode.py)."""
+    out = [b"\x78\x9c"]
+    ad = 1  # adler32 of no bytes
+    for seg, adl, n in pieces:
+        out.append(seg)
+        ad = adler32_combine(ad, adl, n)
+    out.append(deflate_stream_tail())
+    out.append(struct.pack(">I", ad))
+    return b"".join(out)
 
 
 def compress(data: bytes, level: int = 6, use_gzip: bool = False) -> bytes:

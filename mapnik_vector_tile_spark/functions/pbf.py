@@ -1504,7 +1504,7 @@ def parse_layers_batch(layer_blobs: list[bytes]) -> dict:
     active_idx = np.arange(n)
     py_finish: list[int] = []
     # long-tail escape: the masked walk costs O(active) per FRAME step,
-    # so a single huge layer (e.g. a salted hot tile with 10^5 value
+    # so a single huge layer (e.g. a monolithic hot tile with 10^5 value
     # frames) would dominate; after max_steps the stragglers finish on
     # the per-frame Python walker and splice back in below
     max_steps = 96

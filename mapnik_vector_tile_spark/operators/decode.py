@@ -376,7 +376,7 @@ def _layer_sections_fast(data: bytes):
 
 def _split_uniform_point_layer(layer_bytes: bytes, chunk_bytes: int):
     """Dictionary-slicing split for this engine's uniform point framing
-    (the salted encoder's output — operators/encode.py — whose
+    (the hot-tile encoder's output — operators/encode.py — whose
     per-occurrence dictionary makes values ~70% of a hot tile's bytes):
     each chunk re-encodes its features with tag value indices SHIFTED so
     it carries only the [vmin, vmax] slice of the value dictionary its
@@ -478,10 +478,13 @@ def split_tile_chunks_smart(tile_data: bytes, chunk_bytes: int) -> list[bytes]:
     return out if out else [tile_data]
 
 
+HOT_BYTES = 1 << 21  # explode_hot_tiles' default: a stored row this big is split
+
+
 def explode_hot_tiles(
     tiles: DataFrame,
     chunk_bytes: int = 1 << 20,
-    hot_bytes: int = 1 << 21,
+    hot_bytes: int = HOT_BYTES,
     shuffle: bool = True,
 ) -> DataFrame:
     """Scale pre-stage for every decode scan: a monolithic tile (one
@@ -501,17 +504,18 @@ def explode_hot_tiles(
     per-tile decoded row set is preserved exactly (feature order within
     a layer is preserved across its chunk sequence); a tile's features
     merely arrive from several tasks — the same contract as any
-    distributed scan. Counterpart of the salted ENCODE path
-    (operators/encode.py) on the decode side."""
+    distributed scan. Counterpart of the encoder's hot-tile pieces
+    (operators/encode.py, prechunk_hot) on the decode side."""
     from pyspark.sql import functions as F
 
     src = tiles.select("z", "x", "y", "tile")
     cold = src.where(F.length("tile") < hot_bytes)
     hot = src.where(F.length("tile") >= hot_bytes)
     # r7: prechunked storage (build_point_tiles(prechunk_hot=True)) never
-    # stores a row >= hot_bytes, yet the split machinery still cost a
-    # second full scan, a union and an (empty) round-robin exchange
-    # (+0.7s on the 695k-tile bench decode). One bounded probe decides:
+    # stores a row >= HOT_BYTES (a piece that would is cut in halves), yet
+    # the split machinery still cost a second full scan, a union and an
+    # (empty) round-robin exchange (+0.7s on the 695k-tile bench
+    # decode). One bounded probe decides:
     # when no stored row is hot, the cold filter IS the whole input.
     if hot.isEmpty():
         return cold

@@ -1,34 +1,34 @@
-"""Tile encode — shuffle-to-tile + batch kernel (SURVEY.md §2.10).
+"""Tile encode — one clustered exchange + batch kernels (SURVEY.md §2.10).
 
 Replaces the reference's per-tile pull pipeline
 (processor::create_tile -> layer_builder_pbf, src/vector_tile_processor.ipp
 + src/vector_tile_layer.ipp:84-126) with:
 
-  assigned rows --one window shuffle (per-tile counts + row numbers +
-  (z,x,y)-clustered sort)--> cold/hot routing:
+  assigned rows --one (z,x,y) hash exchange + a (z,x,y,order) sort
+  within partitions--> one mapInPandas kernel (point_tile_kernel), many
+  tiles per Arrow batch. Tiles straddling Arrow batches carry (as a
+  frame list, no quadratic copy).
 
-  COLD (size <= hot_threshold): mapInPandas kernel, many tiles per
-  Arrow batch — batch-wide vectorized quantize (std::round semantics,
-  per-row tile origin), segmented per-group first-seen dictionaries
-  (batch-global factorize + first-occurrence ranking, insertion-order
-  parity with vector_tile_layer.ipp:92-124), whole-batch packed feature
-  stream, per-tile assembly = two byte slices + zlib. Tiles straddling
-  Arrow batches carry (as a frame list, no quadratic copy).
+  COLD (size <= hot_threshold): batch-wide vectorized quantize
+  (std::round semantics, per-row tile origin), segmented per-group
+  first-seen dictionaries (batch-global factorize + first-occurrence
+  ranking, insertion-order parity with vector_tile_layer.ipp:92-124),
+  whole-batch packed feature stream, per-tile assembly = two byte
+  slices + zlib.
 
-  HOT (skewed city-scale tiles — north rule): salted two-phase encode.
-  Phase 1 packs contiguous row-number chunks of a hot tile in parallel
-  tasks (per-occurrence dictionary slots = global stream index, so no
-  cross-chunk dictionary merge); phase 2 concatenates chunk blobs into
-  the layer and compresses (adaptive deflate level for huge layers —
-  the single zlib stream is the only serial stage).
+  HOT (skewed city-scale tiles — north rule): one task encodes the tile,
+  as the reference does, in pieces of hot_threshold rows as the rows
+  arrive, so its memory stays bounded. A piece is its own tile row
+  (prechunk_hot), or it is packed with per-occurrence dictionary slots
+  (no dictionary shared between pieces) and deflated as segments that
+  join into one zlib stream at tile close (compression.zlib_join).
 """
 
 from __future__ import annotations
 
-import zlib
-
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from mapnik_vector_tile_spark import tilemath
@@ -37,6 +37,7 @@ from mapnik_vector_tile_spark.functions import compression as Z
 from mapnik_vector_tile_spark.functions import geometry as G
 from mapnik_vector_tile_spark.functions import pbf
 from mapnik_vector_tile_spark.functions import ragged as RG
+from mapnik_vector_tile_spark.operators.decode import HOT_BYTES
 
 TILE_SCHEMA = "z int, x long, y long, tile binary, n_features long, n_layers int, painted boolean"
 
@@ -166,6 +167,19 @@ def _value_field_bytes(v) -> bytes:
     return bytes(head) + enc
 
 
+def _value_fields(values):
+    """Layer.values fields of ``values`` as (buf uint8, offsets, lengths),
+    one segment per value: the vectorized string writer, or the scalar
+    value encoding for a non-string column."""
+    try:
+        return pbf.encode_string_value_fields(values)
+    except pa.ArrowException:
+        pieces = [_value_field_bytes(v) for v in values]
+        b = np.frombuffer(b"".join(pieces), dtype=np.uint8)
+        l = np.array([len(p) for p in pieces], dtype=np.int64)
+        return b, np.cumsum(l) - l, l
+
+
 # ---------------------------------------------------------------------------
 # segmented vectorized lane: all tiles of a batch at once
 # ---------------------------------------------------------------------------
@@ -198,13 +212,7 @@ def _segmented_value_dicts(pdf, prop_cols, gid, local_row, n_groups):
         if (codes < 0).any():
             return None
         uniques = list(uniques)
-        try:
-            b, o, l = pbf.encode_string_value_fields(uniques)
-        except Exception:  # non-string column -> scalar value encoding
-            pieces = [_value_field_bytes(v) for v in uniques]
-            b = np.frombuffer(b"".join(pieces), dtype=np.uint8)
-            l = np.array([len(p) for p in pieces], dtype=np.int64)
-            o = np.concatenate([[0], np.cumsum(l)[:-1]]).astype(np.int64)
+        b, o, l = _value_fields(uniques)
         col_codes.append(codes)
         col_base.append(base)
         bufs.append(b)
@@ -724,6 +732,242 @@ def _layer_prefix_suffix(layer_name: str, prop_cols: list[str], extent: int, ver
     return bytes(prefix), bytes(suffix)
 
 
+# ---------------------------------------------------------------------------
+# point tiles: one clustered exchange + a streaming kernel
+# ---------------------------------------------------------------------------
+
+def _hot_piece(pdf: pd.DataFrame, prop_cols: list[str], vbase: int):
+    """Features and values of one piece of a hot tile (quantized rows,
+    _px/_py set). Dictionary slots are per occurrence: the k-th non-null
+    (row, column) entry in row-major order gets slot vbase + k, so the
+    pieces of a tile share no dictionary. Null properties are dropped,
+    as in the cold lane and the reference (vector_tile_layer.ipp:90-91).
+    Returns (features blob, values blob, number of values)."""
+    n = len(pdf)
+    valid = np.column_stack([pdf[col].notna().to_numpy() for col in prop_cols]) \
+        if prop_cols else np.zeros((n, 0), dtype=bool)
+    bufs, offs, lens = [], [], []
+    base = 0
+    for j, col in enumerate(prop_cols):
+        b, o, l = _value_fields(pdf[col][valid[:, j]])
+        bufs.append(b)
+        offs.append(o + base)
+        lens.append(l)
+        base += len(b)
+    # entry (i, j) -> its value's index in the column-major segment list
+    col_start = np.concatenate([[0], np.cumsum(valid.sum(axis=0))[:-1]]).astype(np.int64)
+    seg_idx = np.cumsum(valid, axis=0) - 1 + col_start
+    order = seg_idx[valid]  # boolean indexing walks row-major
+    nv = len(order)
+    gathered, _ = pbf.ragged_gather(
+        np.concatenate(bufs) if bufs else np.empty(0, np.uint8),
+        np.concatenate(offs) if offs else np.empty(0, np.int64),
+        np.concatenate(lens) if lens else np.empty(0, np.int64),
+        order,
+    )
+    tags = np.column_stack([np.nonzero(valid)[1], vbase + np.arange(nv)]).reshape(-1)
+    cmds = np.column_stack([
+        np.full(n, 9, dtype=np.uint64),
+        Cmd.zigzag32(pdf["_px"].to_numpy()).astype(np.uint64),
+        Cmd.zigzag32(pdf["_py"].to_numpy()).astype(np.uint64),
+    ]).reshape(-1)
+    fblob = pbf.encode_features_packed_ragged(
+        np.full(n, Cmd.POINT, dtype=np.int64), cmds, np.full(n, 3, dtype=np.int64),
+        tags, 2 * valid.sum(axis=1),
+    )
+    return fblob, gathered.tobytes(), nv
+
+
+def point_tile_kernel(
+    prop_cols: list[str],
+    layer_name: str = "layer",
+    extent: int = 4096,
+    buffer_px: int = 0,
+    raster_col: str | None = None,
+    compress_tiles: bool = True,
+    hot_threshold: int = 120_000,
+    prechunk_hot: bool = False,
+):
+    """The mapInPandas kernel of build_point_tiles, exposed so tests and
+    benches can drive it single-core. Frames in: z, x, y, the property
+    columns, mx, my (and raster_col), sorted by (z, x, y, feature order);
+    frames out: TILE_SCHEMA rows.
+
+    A tile's rows are gathered across Arrow batches (a list of frames,
+    concatenated once per close or piece). A tile of at most
+    ``hot_threshold`` rows goes to the cold lane whole. Past that, pieces
+    of ``hot_threshold`` rows are encoded as they arrive — each its own
+    tile row (prechunk_hot; cut in halves while it would reach
+    decode.HOT_BYTES), or a pair of deflated segments (values, features)
+    of one layer that are joined into one zlib stream when the tile
+    closes — so the task holds at most ``hot_threshold`` rows plus
+    one batch, plus the hot tile's compressed bytes. hot_threshold <= 0,
+    or a raster column (group lane), never splits a tile."""
+    split = hot_threshold if raster_col is None and hot_threshold > 0 else 0
+    prefix, suffix = _layer_prefix_suffix(layer_name, prop_cols, extent, 2)
+    cols = ["z", "x", "y", "tile", "n_features", "n_layers", "painted"]
+
+    def quantized(pdf: pd.DataFrame) -> pd.DataFrame:
+        px, py, ok = _quantize_batch(pdf, extent, buffer_px)
+        pdf = pdf.loc[ok].reset_index(drop=True)
+        pdf["_px"], pdf["_py"] = px[ok], py[ok]
+        return pdf
+
+    def cold(pdf: pd.DataFrame) -> list[tuple]:
+        """Whole tiles of a sorted frame, dense dictionaries."""
+        pdf = quantized(pdf)
+        if len(pdf) == 0:
+            return []
+        if raster_col is None:
+            out = _encode_tiles_segmented(
+                pdf, layer_name, prop_cols, extent, 2, compress_tiles
+            )
+            if out:  # [] means nulls present -> group lane
+                return out
+        out = []
+        for (z, x, y), grp in pdf.groupby(["z", "x", "y"], sort=False):
+            layer, nf = _encode_group_prequantized(
+                grp, layer_name, prop_cols, extent, 2, raster_col
+            )
+            tile = pbf.encode_tile([layer])
+            if compress_tiles:
+                tile = Z.compress(tile)
+            out.append((int(z), int(x), int(y), tile, nf, 1, True))
+        return out
+
+    def standalone(pdf: pd.DataFrame) -> list[tuple]:
+        """A prechunk piece as its own tile row, cut in halves while the
+        row would reach HOT_BYTES, so explode_hot_tiles passes every
+        piece through untouched."""
+        out = cold(pdf)
+        if len(pdf) > 1 and out and len(out[0][3]) >= HOT_BYTES:
+            h = len(pdf) // 2
+            return standalone(pdf.iloc[:h]) + standalone(pdf.iloc[h:])
+        return out
+
+    def segment(blob: bytes):
+        if not compress_tiles:
+            return blob
+        return Z.deflate_piece(blob, 6 if len(blob) < (4 << 20) else 1)
+
+    class Run:
+        """One tile's rows as they arrive."""
+
+        def __init__(self, key: tuple):
+            self.key = key
+            self.frames: list[pd.DataFrame] = []
+            self.n = 0
+            self.hot = False
+            self.n_feat = self.n_vals = self.n_bytes = 0
+            self.vals: list = []
+            self.feats: list = []
+
+        def rows(self) -> pd.DataFrame:
+            if len(self.frames) == 1:
+                return self.frames[0]
+            return pd.concat(self.frames, ignore_index=True)
+
+        def add(self, frame: pd.DataFrame) -> list[tuple]:
+            self.frames.append(frame)
+            self.n += len(frame)
+            if not split or self.n <= split:
+                return []
+            rows = self.rows()
+            k = (self.n - 1) // split  # whole pieces; 1..split rows stay
+            out = []
+            for i in range(k):
+                out += self.piece(rows.iloc[i * split : (i + 1) * split])
+            self.frames, self.n = [rows.iloc[k * split :]], self.n - k * split
+            return out
+
+        def piece(self, pdf: pd.DataFrame) -> list[tuple]:
+            self.hot = True
+            if prechunk_hot:
+                return standalone(pdf)
+            pdf = quantized(pdf)
+            fblob, vblob, nv = _hot_piece(pdf, prop_cols, self.n_vals)
+            self.n_feat += len(pdf)
+            self.n_vals += nv
+            self.n_bytes += len(fblob) + len(vblob)
+            self.vals.append(segment(vblob))
+            self.feats.append(segment(fblob))
+            return []
+
+        def close(self) -> list[tuple]:
+            if not self.hot:
+                return cold(self.rows())
+            out = self.piece(self.rows())
+            if prechunk_hot:
+                return out
+            head = bytearray()
+            pbf.write_varint(head, pbf.tag(3, pbf.WT_LEN))
+            pbf.write_varint(head, len(prefix) + len(suffix) + self.n_bytes)
+            lead = bytes(head) + prefix
+            if compress_tiles:
+                tile = Z.zlib_join(
+                    [Z.deflate_piece(lead), *self.vals, Z.deflate_piece(suffix), *self.feats]
+                )
+            else:
+                tile = b"".join([lead, *self.vals, suffix, *self.feats])
+            n = self.n_feat
+            return [(*self.key, tile, n, 1 if n else 0, n > 0)]
+
+    def whole(pdf: pd.DataFrame, bounds: np.ndarray, keys: np.ndarray,
+              g0: int, g1: int) -> list[tuple]:
+        """Groups g0..g1-1 of a batch, each complete: runs of cold groups
+        in one cold call, every group past the threshold in pieces."""
+        sizes = np.diff(bounds[g0 : g1 + 1])
+        big = (g0 + np.flatnonzero(sizes > split)).tolist() if split else []
+        out: list[tuple] = []
+        lo = g0
+        for g in big + [g1]:
+            if lo < g:
+                out += cold(pdf.iloc[bounds[lo] : bounds[g]])
+            if g < g1:
+                run = Run(tuple(int(v) for v in keys[g]))
+                out += run.add(pdf.iloc[bounds[g] : bounds[g + 1]])
+                out += run.close()
+            lo = g + 1
+        return out
+
+    def kernel(iterator):
+        run = None  # the tile the stream ends in so far
+        for pdf in iterator:
+            n = len(pdf)
+            if n == 0:
+                continue
+            zxy = np.column_stack(
+                [pdf[c].to_numpy(np.int64) for c in ("z", "x", "y")]
+            )
+            change = np.ones(n, dtype=bool)
+            change[1:] = (zxy[1:] != zxy[:-1]).any(axis=1)
+            starts = np.flatnonzero(change)
+            bounds = np.append(starts, n)
+            keys = zxy[starts]
+            out: list[tuple] = []
+            first = 0
+            if run is not None:
+                if tuple(int(v) for v in keys[0]) == run.key:
+                    out += run.add(pdf.iloc[: bounds[1]])
+                    first = 1
+                if first < len(starts):
+                    out += run.close()
+                    run = None
+            if run is None:
+                last = len(starts) - 1  # may go on in the next batch
+                out += whole(pdf, bounds, keys, first, last)
+                run = Run(tuple(int(v) for v in keys[last]))
+                out += run.add(pdf.iloc[bounds[last] :])
+            if out:
+                yield pd.DataFrame(out, columns=cols)
+        if run is not None:
+            out = run.close()
+            if out:
+                yield pd.DataFrame(out, columns=cols)
+
+    return kernel
+
+
 def build_point_tiles(
     assigned: DataFrame,
     prop_cols: list[str],
@@ -740,25 +984,49 @@ def build_point_tiles(
     """assigned: DataFrame with z,x,y + lon/lat + prop columns.
     One output row per tile: zlib'd Tile pbf + painted stats (A4).
 
-    prechunk_hot=True stores each hot tile as MULTIPLE rows (one valid
-    standalone tile per salt bucket) instead of one monolithic blob —
-    the 100x-scale storage contract: no single row ever holds a
-    city-hotspot tile, the salted path loses its only serial stage
-    (per-tile concat + one zlib stream), and the decode side gets
-    hot-tile parallelism for free (no explode_hot_tiles split pass).
+    Plan: exactly one clustered exchange — repartition by (z, x, y),
+    sort within partitions by (z, x, y, order_col or id_col), then
+    point_tile_kernel. Calling this launches no Spark job and persists
+    nothing.
+
+    Skew handling (north rule): a tile of more than ``hot_threshold``
+    rows is encoded by one task, as the reference builds a tile in one
+    pass, but in pieces of at most ``hot_threshold`` rows as the rows
+    arrive, so that task's memory stays bounded. Trade-off: the hot
+    tile's encode is serial in that task — 5-7 µs per row on one core
+    of a 4-core x86 host (three string properties), and that task also
+    holds its hash share of the cold tiles, so at high parallelism it
+    is the stage's straggler. bench.py's 8M-row tile_pipeline (a
+    2.4M-row hotspot tile, shuffle partitions = cores) measured on that
+    host, two runs each: local[1] 80-84 s against 121-138 s for the
+    routed, salted two-plan encoder this replaced, local[4] 46-47 s
+    against 45-48 s, so the N->4N efficiency fell from 0.70-0.74 to
+    0.49-0.51 with no slower wall at either level. Spreading one tile over several
+    tasks needs its row count before the exchange (a probe job) or a
+    second exchange to join its pieces; this plan has neither.
+    By default each piece is packed with per-occurrence dictionary slots
+    (no dictionary shared between pieces; decoded properties are the
+    same, the layer is larger when values repeat) and deflated as its
+    own segment; the segments form one zlib stream at tile close.
+    Feature order is (z, x, y, order) throughout. Tiles at or under the
+    threshold take the dense-dictionary kernel. hot_threshold <= 0
+    never splits; a raster_col keeps every tile on the group lane.
+
+    prechunk_hot=True stores each hot tile as MULTIPLE rows, one valid
+    standalone tile per piece — the 100x-scale storage contract: no
+    single row ever holds a city-hotspot tile. A piece is at most
+    ``hot_threshold`` rows and, cut in halves while needed, under
+    decode.HOT_BYTES stored bytes, so explode_hot_tiles passes every
+    piece through without its split pass. The pieces of one tile leave
+    the kernel in the partition of the task that encoded them: a scan
+    over that partition decodes them in one task unless the stored
+    rows are repartitioned.
     Decoded feature multiset is identical; sinks that need one blob per
     (z,x,y) merge rows via operators.composite.merge_tiles. Contract
     note (r6 advisor): a hot tile whose features are ALL clipped away
     emits ZERO rows in prechunk mode, whereas the monolithic path emits
     one empty tile row — sinks keyed on tile presence must not rely on
-    empty hot tiles existing.
-
-    Skew handling (north rule): tiles with more than ``hot_threshold``
-    rows take the *salted* two-phase path — contiguous row-number chunks
-    of a hot tile pack their feature/value blobs in parallel tasks
-    (per-occurrence dictionary slots need no cross-chunk coordination),
-    and a per-tile second phase just concatenates chunk blobs into the
-    layer. Cold tiles take the dense-dictionary single-phase kernel."""
+    empty hot tiles existing."""
     from mapnik_vector_tile_spark.operators.assign import _mercator_cols
 
     mx, my = _mercator_cols("lon", "lat")
@@ -769,389 +1037,12 @@ def build_point_tiles(
         slim_cols.append(order_col)
     slim = assigned.withColumn("mx", mx).withColumn("my", my).select(*slim_cols, "mx", "my")
     sort_col = order_col or id_col
-    cols = ["z", "x", "y", "tile", "n_features", "n_layers", "painted"]
-
-    def encode_group(z: int, x: int, y: int, grp: pd.DataFrame):
-        if sort_col:  # deterministic feature order (SURVEY.md §2.5)
-            grp = grp.sort_values(sort_col, kind="mergesort").reset_index(drop=True)
-        layer, nf = _encode_group_prequantized(
-            grp, layer_name, prop_cols, extent, 2, raster_col
-        )
-        if nf == 0:
-            return (z, x, y, b"", 0, 0, False)
-        tile = pbf.encode_tile([layer])
-        if compress_tiles:
-            tile = Z.compress(tile)
-        return (z, x, y, tile, nf, 1, True)
-
-    def process_chunk(pdf: pd.DataFrame) -> list[tuple]:
-        px, py, ok = _quantize_batch(pdf, extent, buffer_px)
-        pdf = pdf.loc[ok].reset_index(drop=True)
-        if len(pdf) == 0:
-            return []
-        pdf["_px"], pdf["_py"] = px[ok], py[ok]
-        if raster_col is None:
-            out = _encode_tiles_segmented(
-                pdf, layer_name, prop_cols, extent, 2, compress_tiles
-            )
-            if out:  # [] means nulls present -> group lane fallback
-                return out
-        out = []
-        for (gz, gx, gy), grp in pdf.groupby(["z", "x", "y"], sort=False):
-            out.append(encode_group(int(gz), int(gx), int(gy), grp))
-        return out
-
-    def kernel(iterator):
-        """Tiles straddling Arrow batches carry into the next batch
-        (list of frames, concat only at group close — no quadratic copy)."""
-        carry: list[pd.DataFrame] = []
-        carry_key = None
-
-        def keys_of(pdf, i):
-            return (pdf["z"].iloc[i], pdf["x"].iloc[i], pdf["y"].iloc[i])
-
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            if carry:
-                if keys_of(pdf, 0) == carry_key:
-                    same = (
-                        (pdf["z"] == carry_key[0])
-                        & (pdf["x"] == carry_key[1])
-                        & (pdf["y"] == carry_key[2])
-                    ).to_numpy()
-                    split = int(np.argmin(same)) if not same.all() else len(pdf)
-                    carry.append(pdf.iloc[:split])
-                    if split == len(pdf):
-                        continue  # whole batch belongs to the carried group
-                    full = pd.concat(carry, ignore_index=True)
-                    carry, carry_key = [], None
-                    rows = process_chunk(full)
-                    if rows:
-                        yield pd.DataFrame(rows, columns=cols)
-                    pdf = pdf.iloc[split:].reset_index(drop=True)
-                else:
-                    full = pd.concat(carry, ignore_index=True)
-                    carry, carry_key = [], None
-                    rows = process_chunk(full)
-                    if rows:
-                        yield pd.DataFrame(rows, columns=cols)
-            lk = keys_of(pdf, len(pdf) - 1)
-            tail_mask = (
-                (pdf["z"] == lk[0]) & (pdf["x"] == lk[1]) & (pdf["y"] == lk[2])
-            ).to_numpy()
-            n_tail = int(tail_mask[::-1].argmin()) if not tail_mask.all() else len(pdf)
-            carry = [pdf.iloc[len(pdf) - n_tail :]]
-            carry_key = lk
-            body = pdf.iloc[: len(pdf) - n_tail]
-            if len(body):
-                rows = process_chunk(body)
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-        if carry:
-            full = pd.concat(carry, ignore_index=True)
-            rows = process_chunk(full)
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    from pyspark.sql import Window, functions as F
-
     npart = int(slim.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if raster_col is not None or hot_threshold <= 0:
-        clustered = slim.repartition(npart, "z", "x", "y").sortWithinPartitions(
-            "z", "x", "y", *([sort_col] if sort_col else [])
-        )
-        return clustered.mapInPandas(kernel, schema=TILE_SCHEMA)
-
-    # hot/cold routing: map-side-combined counts identify skewed tiles;
-    # the hot list is tiny and broadcasts. The routed projection feeds
-    # three consumers (counts, cold branch, hot branch) — persist it so
-    # the scan + location math run once (spills to disk at scale;
-    # ContextCleaner reclaims it when the plan is GC'd).
-    from pyspark import StorageLevel
-
-    slim = slim.persist(StorageLevel.MEMORY_AND_DISK)
-    # ONE eager counts pass (r7): the lazy form re-built this full
-    # groupBy subtree under every broadcast that consumed it — the cold
-    # anti-join, the hot semi-join AND the bucket-offset table each
-    # re-aggregated the whole input (3 extra scans + 2 extra 695k-group
-    # shuffles on the bench shape). The hot list is bounded by
-    # n_rows / hot_threshold, so the checkpoint is tiny.
-    hot_list_df = (
-        slim.groupBy("z", "x", "y").agg(F.count("*").alias("_cnt"))
-        .where(F.col("_cnt") > hot_threshold)
-        .select("z", "x", "y")
-        .localCheckpoint(eager=True)
+    clustered = slim.repartition(npart, "z", "x", "y").sortWithinPartitions(
+        "z", "x", "y", *([sort_col] if sort_col else [])
     )
-    if hot_list_df.isEmpty():
-        # no skewed tile anywhere: the routing joins would be no-ops —
-        # take the single clustered shuffle directly (the common case
-        # for every query at oracle scale)
-        clustered = slim.repartition(npart, "z", "x", "y").sortWithinPartitions(
-            "z", "x", "y", *([sort_col] if sort_col else [])
-        )
-        return clustered.mapInPandas(kernel, schema=TILE_SCHEMA)
-    hot_list = F.broadcast(hot_list_df)
-    cold = slim.join(hot_list, ["z", "x", "y"], "left_anti")
-    cold_tiles = (
-        cold.repartition(npart, "z", "x", "y")
-        .sortWithinPartitions("z", "x", "y", *([sort_col] if sort_col else []))
-        .mapInPandas(kernel, schema=TILE_SCHEMA)
+    kernel = point_tile_kernel(
+        prop_cols, layer_name, extent, buffer_px, raster_col, compress_tiles,
+        hot_threshold, prechunk_hot,
     )
-
-    hot = slim.join(hot_list, ["z", "x", "y"], "left_semi")
-    hot_tiles = _build_hot_tiles(
-        hot, prop_cols, layer_name, extent, buffer_px, compress_tiles, npart,
-        sort_col=sort_col, prechunk=prechunk_hot,
-    )
-    return cold_tiles.unionByName(hot_tiles)
-
-
-def _build_hot_tiles(
-    hot: DataFrame,
-    prop_cols: list[str],
-    layer_name: str,
-    extent: int,
-    buffer_px: int,
-    compress_tiles: bool,
-    npart: int,
-    sort_col: str | None = None,
-    salt_buckets: int = 64,
-    prechunk: bool = False,
-) -> DataFrame:
-    """Salted two-phase encode for skewed tiles (north rule).
-
-    Salt = hash(sort key) % buckets, so even the per-bucket row
-    numbering (window) parallelizes — no single-task stage touches a
-    whole hot tile except the final byte concat + deflate.
-
-    Phase 1 (parallel over (z,x,y,salt)): pack the bucket's features
-    with per-occurrence dictionary slots (slot = global stream index =
-    (bucket offset + row-in-bucket) * ncols + col — needs no cross-
-    bucket dictionary merge; decoded properties are identical, the
-    uncompressed layer is a little larger when values repeat) plus the
-    bucket's values blob. Bucket offsets come from a tiny per-bucket
-    count table (broadcast).
-
-    Phase 2 (per tile, #buckets rows): concatenate bucket blobs in salt
-    order -> layer -> tile pbf -> zlib. Feature order = (salt, sort
-    key): deterministic, though not globally sorted by the sort key.
-
-    prechunk=True is the store-time pre-chunking mode: every salt
-    bucket ships as its OWN standalone single-layer tile row (local
-    per-occurrence dictionary slots need no bucket offsets), so phase 2
-    — the per-tile byte concat + single zlib stream, the only serial
-    stage of this path — disappears entirely, and the decode side never
-    sees a monolithic hot tile to split. Multiple rows per hot (z,x,y);
-    decoded feature multiset identical to the monolithic tile.
-    """
-    from pyspark.sql import Window, functions as F
-
-    c = len(prop_cols)
-    prefix, suffix = _layer_prefix_suffix(layer_name, prop_cols, extent, 2)
-    salt_src = sort_col if sort_col else "mx"
-    hot = hot.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_src)), F.lit(salt_buckets)))
-    if prechunk:
-        # bucket-local dictionary slots: no offset table, no broadcast
-        hot = hot.withColumn("_boff", F.lit(0)).withColumn("_chunk", F.col("_salt"))
-    else:
-        # bucket offsets: one narrow map-side-combined agg + a window over
-        # the tiny per-bucket count table (broadcast back) — no window over
-        # the data itself; row numbers are assigned inside the pack kernel
-        bucket_counts = hot.groupBy("z", "x", "y", "_salt").agg(F.count("*").alias("_bcnt"))
-        woff = (
-            Window.partitionBy("z", "x", "y")
-            .orderBy("_salt")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = bucket_counts.withColumn(
-            "_boff", F.coalesce(F.sum("_bcnt").over(woff), F.lit(0))
-        ).select("z", "x", "y", "_salt", "_boff")
-        hot = hot.join(F.broadcast(offsets), ["z", "x", "y", "_salt"], "inner").withColumn(
-            "_chunk", F.col("_salt")
-        )
-    part_schema = (
-        "z int, x long, y long, chunk long, seq long, n long, "
-        "fblob binary, vblob binary"
-    )
-    # r7: with compression on, phase 1 ships DEFLATED segments plus
-    # (uncompressed length, adler32) per blob, and phase 2 concatenates
-    # segments and combines checksums into one valid zlib stream —
-    # phase 2's single zlib pass over the whole hot layer (the salted
-    # path's only serial stage) disappears, and the per-tile exchange
-    # carries compressed bytes (~3x fewer). Decoded bytes identical;
-    # the stored stream differs only in block boundaries.
-    part_schema_seg = (
-        "z int, x long, y long, chunk long, seq long, n long, "
-        "fseg binary, vseg binary, fulen long, vulen long, "
-        "fadler long, vadler long"
-    )
-
-    def pack_chunk(iterator):
-        seen: dict[tuple, int] = {}  # rows already packed per bucket (batch straddle)
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for (gz, gx, gy, gchunk), grp in pdf.groupby(
-                ["z", "x", "y", "_chunk"], sort=False
-            ):
-                grp = grp.reset_index(drop=True)
-                gkey = (gz, gx, gy, gchunk)
-                start = seen.get(gkey, 0)
-                seen[gkey] = start + len(grp)
-                if prechunk:
-                    # each emitted piece is a self-contained mini-tile:
-                    # slots are local to THIS group (a bucket straddling
-                    # Arrow batches just ships as two mini-tiles)
-                    rn_base = np.int64(0)
-                else:
-                    rn_base = grp["_boff"].to_numpy(dtype=np.int64) + start
-                grp = grp.assign(_rn=rn_base + np.arange(len(grp)))
-                px, py, ok = _quantize_batch(grp, extent, buffer_px)
-                kept = grp.loc[ok].reset_index(drop=True)
-                rn = kept["_rn"].to_numpy(dtype=np.int64)
-                n = len(kept)
-                if n:
-                    tags = np.empty((n, 2 * c), dtype=np.int64)
-                    for j in range(c):
-                        tags[:, 2 * j] = j
-                        # slot = global stream index over ALL tile rows
-                        tags[:, 2 * j + 1] = rn * c + j
-                    zz = np.column_stack(
-                        [Cmd.zigzag32(px[ok]), Cmd.zigzag32(py[ok])]
-                    )
-                    fblob = pbf.encode_point_features_packed(tags, zz)
-                else:
-                    fblob = b""
-                # values blob covers every (pre-mask) row so global slot
-                # positions stay aligned across chunks even when the
-                # buffer mask drops a feature
-                bufs, offs, lens = [], [], []
-                bbase = 0
-                n_all = len(grp)
-                for col in prop_cols:
-                    vals = list(grp[col])
-                    try:
-                        b, o, l = pbf.encode_string_value_fields(vals)
-                    except Exception:
-                        pieces = [_value_field_bytes(v) for v in vals]
-                        b = np.frombuffer(b"".join(pieces), dtype=np.uint8)
-                        l = np.array([len(p) for p in pieces], dtype=np.int64)
-                        o = np.concatenate([[0], np.cumsum(l)[:-1]]).astype(np.int64)
-                    bufs.append(b)
-                    offs.append(o + bbase)
-                    lens.append(l)
-                    bbase += len(b)
-                vbuf = np.concatenate(bufs)
-                voff = np.concatenate(offs)
-                vlen = np.concatenate(lens)
-                order = (np.arange(n_all * c) % c) * n_all + (np.arange(n_all * c) // c)
-                gathered, _ = pbf.ragged_gather(vbuf, voff, vlen, order)
-                if prechunk:
-                    if n == 0:
-                        continue  # sibling buckets carry the tile's rows
-                    layer = prefix + gathered.tobytes() + suffix + fblob
-                    head = bytearray()
-                    pbf.write_varint(head, pbf.tag(3, pbf.WT_LEN))
-                    pbf.write_varint(head, len(layer))
-                    tile = bytes(head) + layer
-                    if compress_tiles:
-                        tile = Z.compress(tile)
-                    out.append((int(gz), int(gx), int(gy), tile, n, 1, True))
-                elif compress_tiles:
-                    vblob = gathered.tobytes()
-                    lf = 6 if len(fblob) < (4 << 20) else 1
-                    lv = 6 if len(vblob) < (4 << 20) else 1
-                    out.append(
-                        (int(gz), int(gx), int(gy), int(gchunk), start, n,
-                         Z.deflate_segment(fblob, lf),
-                         Z.deflate_segment(vblob, lv),
-                         len(fblob), len(vblob),
-                         zlib.adler32(fblob), zlib.adler32(vblob))
-                    )
-                else:
-                    out.append(
-                        (int(gz), int(gx), int(gy), int(gchunk), start, n,
-                         fblob, gathered.tobytes())
-                    )
-            if out:
-                if prechunk:
-                    cols_out = ["z", "x", "y", "tile", "n_features", "n_layers", "painted"]
-                elif compress_tiles:
-                    cols_out = ["z", "x", "y", "chunk", "seq", "n",
-                                "fseg", "vseg", "fulen", "vulen", "fadler", "vadler"]
-                else:
-                    cols_out = ["z", "x", "y", "chunk", "seq", "n", "fblob", "vblob"]
-                yield pd.DataFrame(out, columns=cols_out)
-
-    packed = (
-        hot.repartition(npart, "z", "x", "y", "_chunk")
-        .sortWithinPartitions(
-            "z", "x", "y", "_chunk", *([sort_col] if sort_col else ["mx"])
-        )
-        .mapInPandas(
-            pack_chunk,
-            schema=TILE_SCHEMA if prechunk
-            else (part_schema_seg if compress_tiles else part_schema),
-        )
-    )
-    if prechunk:
-        return packed
-
-    def assemble(key, pdf):
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
-        pdf = pdf.sort_values(["chunk", "seq"], kind="mergesort")
-        values = b"".join(bytes(b) for b in pdf["vblob"])
-        feats = b"".join(bytes(b) for b in pdf["fblob"])
-        layer = prefix + values + suffix + feats
-        head = bytearray()
-        pbf.write_varint(head, pbf.tag(3, pbf.WT_LEN))
-        pbf.write_varint(head, len(layer))
-        tile = bytes(head) + layer
-        n = int(pdf["n"].sum())
-        return pd.DataFrame(
-            [(z, x, y, tile, n, 1 if n else 0, bool(n))],
-            columns=["z", "x", "y", "tile", "n_features", "n_layers", "painted"],
-        )
-
-    def assemble_seg(key, pdf):
-        """Concatenate pre-deflated bucket segments into one zlib
-        stream: header + deflate(head+prefix) + value segments +
-        deflate(suffix) + feature segments + final block + combined
-        adler32. No pass over the uncompressed layer — the former
-        single-stream deflate was the salted path's only serial stage."""
-        import struct
-
-        z, x, y = int(key[0]), int(key[1]), int(key[2])
-        pdf = pdf.sort_values(["chunk", "seq"], kind="mergesort")
-        layer_len = (
-            len(prefix) + int(pdf["vulen"].sum())
-            + len(suffix) + int(pdf["fulen"].sum())
-        )
-        head = bytearray()
-        pbf.write_varint(head, pbf.tag(3, pbf.WT_LEN))
-        pbf.write_varint(head, layer_len)
-        lead = bytes(head) + prefix
-        pieces = [b"\x78\x9c", Z.deflate_segment(lead)]
-        ad = zlib.adler32(lead)
-        for seg, adl, ulen in zip(pdf["vseg"], pdf["vadler"], pdf["vulen"]):
-            pieces.append(bytes(seg))
-            ad = Z.adler32_combine(ad, int(adl), int(ulen))
-        pieces.append(Z.deflate_segment(suffix))
-        ad = zlib.adler32(suffix, ad)
-        for seg, adl, ulen in zip(pdf["fseg"], pdf["fadler"], pdf["fulen"]):
-            pieces.append(bytes(seg))
-            ad = Z.adler32_combine(ad, int(adl), int(ulen))
-        pieces.append(Z.deflate_stream_tail())
-        pieces.append(struct.pack(">I", ad))
-        tile = b"".join(pieces)
-        n = int(pdf["n"].sum())
-        return pd.DataFrame(
-            [(z, x, y, tile, n, 1 if n else 0, bool(n))],
-            columns=["z", "x", "y", "tile", "n_features", "n_layers", "painted"],
-        )
-
-    return packed.groupBy("z", "x", "y").applyInPandas(
-        assemble_seg if compress_tiles else assemble, schema=TILE_SCHEMA
-    )
+    return clustered.mapInPandas(kernel, schema=TILE_SCHEMA)
