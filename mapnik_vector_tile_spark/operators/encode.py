@@ -5,20 +5,23 @@ Replaces the reference's per-tile pull pipeline
 + src/vector_tile_layer.ipp:84-126) with:
 
   assigned rows --one (z,x,y) hash exchange + a (z,x,y,order) sort
-  within partitions--> one mapInPandas kernel (point_tile_kernel), many
-  tiles per Arrow batch. Tiles straddling Arrow batches carry (as a
+  within partitions--> one mapInPandas kernel, many tiles per Arrow
+  batch: tile_stream, the loop of both tile builders (points here,
+  geometries in geom_tiles). Tiles straddling Arrow batches carry (as a
   frame list, no quadratic copy).
 
-  COLD (size <= hot_threshold): batch-wide vectorized quantize
-  (std::round semantics, per-row tile origin), segmented per-group
-  first-seen dictionaries (batch-global factorize + first-occurrence
-  ranking, insertion-order parity with vector_tile_layer.ipp:92-124),
-  whole-batch packed feature stream, per-tile assembly = two byte
-  slices + zlib.
+  ONE encode core for every tile of a batch at once: per-tile first-seen
+  dictionaries (batch-global factorize + segmented first-occurrence
+  ranking, insertion-order parity with vector_tile_layer.ipp:92-124;
+  nulls get no tag), one feature stream for the whole batch (ids and
+  rasters included), per-tile assembly = two byte slices + zlib. Points
+  quantize batch-wide (std::round semantics, per-row tile origin);
+  geometries run the ragged kernel and replay its ejects through the
+  scalar pipeline. encode_geom_layer is its one-tile call.
 
-  HOT (skewed city-scale tiles — north rule): one task encodes the tile,
-  as the reference does, in pieces of hot_threshold rows as the rows
-  arrive, so its memory stays bounded. A piece is its own tile row
+  HOT points (skewed city-scale tiles — north rule): one task encodes the
+  tile, as the reference does, in pieces of hot_threshold rows as the
+  rows arrive, so its memory stays bounded. A piece is its own tile row
   (prechunk_hot), or it is packed with per-occurrence dictionary slots
   (no dictionary shared between pieces) and deflated as segments that
   join into one zlib stream at tile close (compression.zlib_join).
@@ -46,51 +49,125 @@ TILE_SCHEMA = "z int, x long, y long, tile binary, n_features long, n_layers int
 # dictionaries (A1/A2)
 # ---------------------------------------------------------------------------
 
-def build_value_dicts(pdf: pd.DataFrame, prop_cols: list[str],
-                      key_names: list[str] | None = None):
-    """First-seen (row-major, column-within-row) key/value dictionaries —
-    order parity with layer_builder_pbf::add_feature
-    (vector_tile_layer.ipp:84-126). Returns (keys, value_list, tags_array)
-    where tags_array is (n_rows, 2*n_cols) int64 (key_idx, val_idx pairs),
-    with -1 marking dropped nulls. key_names overrides the written key
-    dictionary when the DATA columns were renamed to dodge the tile
-    coordinate columns (a feature property named 'x'/'y'/'z' is legal
-    wire-wise — the reference's linestrings_and_point fixture has one)."""
+def _factorize(col: pd.Series):
+    """(codes, uniques) of one property column, a null coded -1. An
+    object column of mixed Python types is factorized on its encoded
+    Value, so int 1, bool true and float 1.0 stay three values, as the
+    reference keys its value map by type (vector_tile_layer.hpp:54-69);
+    pd.factorize alone merges values that compare equal."""
+    if col.dtype == object and pd.api.types.infer_dtype(col, skipna=True).startswith("mixed"):
+        na = col.isna().to_numpy()
+        codes, _ = pd.factorize(
+            pd.Series([None if m else pbf.encode_value(v) for v, m in zip(col, na)],
+                      dtype=object),
+            use_na_sentinel=True,
+        )
+        valid = np.flatnonzero(codes >= 0)
+        _, first = np.unique(codes[valid], return_index=True)  # codes are first-seen
+        return codes, list(col.iloc[valid[first]])
+    codes, uniques = pd.factorize(col, use_na_sentinel=True)
+    return codes, list(uniques)
+
+
+def _value_fields(values):
+    """Layer.values fields of ``values`` as (buf uint8, offsets, lengths),
+    one segment per value: the vectorized string writer, or the scalar
+    value encoding for a non-string column."""
+    try:
+        return pbf.encode_string_value_fields(values)
+    except pa.ArrowException:
+        pieces = []
+        for v in values:
+            field = bytearray()
+            pbf.add_len_field(field, 4, pbf.encode_value(v))
+            pieces.append(bytes(field))
+        b = np.frombuffer(b"".join(pieces), dtype=np.uint8)
+        l = np.array([len(p) for p in pieces], dtype=np.int64)
+        return b, np.cumsum(l) - l, l
+
+
+def _cat(parts: list, dtype) -> np.ndarray:
+    return np.concatenate(parts) if parts else np.empty(0, dtype=dtype)
+
+
+def _segmented_value_dicts(pdf, prop_cols, gid, local_row, n_groups):
+    """The dictionary builder of every encoder: per-GROUP first-seen
+    value dictionaries for a whole sorted batch (batch-global factorize +
+    segmented first-occurrence ranking — insertion-order parity with
+    vector_tile_layer.ipp:92-124). A null value gets no tag and no
+    dictionary entry (vector_tile_layer.ipp:90-91).
+
+    Returns (tags, values): tags (n, 2c) int64 (key, value slot) pairs,
+    -1 marking a dropped null; values = (gathered_bytes, gat_off,
+    dict_off), group g's values blob being
+    gathered_bytes[gat_off[dict_off[g]] : gat_off[dict_off[g+1]]].
+
+    Dictionary policy (a documented deviation): values are deduplicated
+    within a column, and each column has its own slots. The reference
+    also merges one value that appears in two columns; here it takes a
+    slot per column. Decoded properties are identical, the tile is a few
+    bytes larger in that case."""
     n = len(pdf)
-    ncols = len(prop_cols)
-    keys = list(key_names or prop_cols)  # key dict = column order (fixed schema)
-    val_index: dict[tuple, int] = {}
-    values: list = []
-    tags = np.full((n, 2 * ncols), -1, dtype=np.int64)
-    col_codes = []
-    col_uniques = []
-    for c in prop_cols:
-        codes, uniques = pd.factorize(pdf[c], use_na_sentinel=True)
-        col_codes.append(codes)
-        col_uniques.append(list(uniques))
-    # first occurrence rank of each (col, code): row*ncols + col (vectorized)
-    order = []
-    for j in range(ncols):
-        codes = col_codes[j]
-        valid = codes >= 0
-        uniq, first_idx = np.unique(codes[valid], return_index=True)
-        rows_idx = np.nonzero(valid)[0][first_idx]
-        order.extend(zip((rows_idx * ncols + j).tolist(), [j] * len(uniq), uniq.tolist()))
-    order.sort()
-    slot_of: dict[tuple[int, int], int] = {}
-    for _rank, j, code in order:
-        v = col_uniques[j][code]
-        tagged = (pbf.value_type_tag(v), v)
-        if tagged not in val_index:
-            val_index[tagged] = len(values)
-            values.append(v)
-        slot_of[(j, code)] = val_index[tagged]
-    for j in range(ncols):
-        codes = col_codes[j]
-        valid = codes >= 0
-        tags[valid, 2 * j] = j
-        tags[valid, 2 * j + 1] = [slot_of[(j, c)] for c in codes[valid]]
-    return keys, values, tags
+    c = len(prop_cols)
+    sel: list = []
+    ent_gid: list[np.ndarray] = []
+    ent_gvid: list[np.ndarray] = []
+    ent_stream: list[np.ndarray] = []
+    bufs: list[np.ndarray] = []
+    offs: list[np.ndarray] = []
+    lens: list[np.ndarray] = []
+    base = 0
+    buf_bytes = 0
+    for j, col in enumerate(prop_cols):
+        codes, uniques = _factorize(pdf[col])
+        b, o, l = _value_fields(uniques)
+        bufs.append(b)
+        offs.append(o + buf_bytes)
+        lens.append(l)
+        # entries (row, column) of the non-null values only
+        r = slice(None) if (codes >= 0).all() else codes >= 0
+        sel.append(r)
+        ent_gid.append(gid[r])
+        ent_gvid.append(base + codes[r])
+        ent_stream.append(local_row[r] * c + j)
+        base += len(uniques)
+        buf_bytes += len(b)
+    counts = [len(e) for e in ent_gid]
+    val_buf = _cat(bufs, np.uint8)
+    val_off = _cat(offs, np.int64)
+    val_len = _cat(lens, np.int64)
+    ent_gid = _cat(ent_gid, np.int64)
+    ent_gvid = _cat(ent_gvid, np.int64)
+    ent_stream = _cat(ent_stream, np.int64)
+
+    # first occurrence of each (gid, gvid): sort by (gid, gvid, stream);
+    # run = the dictionary entry of each sorted entry
+    order1 = np.lexsort((ent_stream, ent_gvid, ent_gid))
+    sg, sv, ss = ent_gid[order1], ent_gvid[order1], ent_stream[order1]
+    first = np.ones(len(sg), dtype=bool)
+    first[1:] = (sg[1:] != sg[:-1]) | (sv[1:] != sv[:-1])
+    run = np.cumsum(first) - 1
+    # slots: dictionary entries ranked by first occurrence within a group
+    order2 = np.lexsort((ss[first], sg[first]))
+    dg, dv = sg[first][order2], sv[first][order2]
+    slot = np.empty(len(dg), dtype=np.int64)
+    slot[order2] = np.arange(len(dg)) - np.searchsorted(dg, dg)
+    ent_slot = np.empty(len(sg), dtype=np.int64)
+    ent_slot[order1] = slot[run]
+
+    tags = np.full((n, 2 * c), -1, dtype=np.int64)
+    e0 = 0
+    for j, r in enumerate(sel):
+        tags[r, 2 * j] = j
+        tags[r, 2 * j + 1] = ent_slot[e0 : e0 + counts[j]]
+        e0 += counts[j]
+
+    # per-group values blob: dict entries (dg, dv) are sorted by
+    # (group, slot) — exactly layer insertion order
+    dict_counts = np.bincount(dg, minlength=n_groups)
+    dict_off = np.concatenate([[0], np.cumsum(dict_counts)])
+    gathered, gat_off = pbf.ragged_gather(val_buf, val_off, val_len, dv)
+    return tags, (gathered.tobytes(), gat_off, dict_off)
 
 
 # ---------------------------------------------------------------------------
@@ -120,236 +197,180 @@ def _quantize_batch(pdf: pd.DataFrame, extent: int, buffer_px: int):
 
 
 # ---------------------------------------------------------------------------
-# group lane
+# the batch encode core: groups, feature frames, per-tile assembly
 # ---------------------------------------------------------------------------
 
-def _encode_group_prequantized(
-    pdf: pd.DataFrame,
-    layer_name: str,
-    prop_cols: list[str],
-    extent: int,
-    version: int,
-    raster_col: str | None,
-) -> tuple[bytes, int]:
-    keys, values, tags = build_value_dicts(pdf, prop_cols)
-    vals = [pbf.encode_value(v) for v in values]
-    zz = np.column_stack(
-        [Cmd.zigzag32(pdf["_px"].to_numpy()), Cmd.zigzag32(pdf["_py"].to_numpy())]
+def _groups(pdf: pd.DataFrame):
+    """Tile groups of a (z, x, y)-sorted batch: (keys (G, 3) int64,
+    group id per row, first row of each group)."""
+    zxy = np.column_stack([pdf[c].to_numpy(np.int64) for c in ("z", "x", "y")])
+    change = np.ones(len(zxy), dtype=bool)
+    change[1:] = (zxy[1:] != zxy[:-1]).any(axis=1)
+    starts = np.flatnonzero(change)
+    return zxy[starts], np.cumsum(change) - 1, starts
+
+
+def _rasters(pdf: pd.DataFrame, raster_col: str | None):
+    """Feature.raster bytes per row (None for none), or None when no row
+    of the batch carries one."""
+    if not raster_col or raster_col not in pdf.columns:
+        return None
+    rl = list(pdf[raster_col])
+    return rl if any(r is not None for r in rl) else None
+
+
+def _feature_frames(tags, rows, gtypes, cmds, clens, ids=None, rasters=None):
+    """Layer.features frames of a batch's features in row order, in one
+    numpy pass (pbf.encode_features_packed_ragged): feature k is row
+    rows[k]'s gtypes[k] and clens[k] commands, with the row's non-null
+    tags and id. Returns (blob, frame lengths, frame rows).
+
+    rasters (per row, None for none) follow raster_to_feature
+    (vector_tile_geometry_feature.hpp:23-34): a raster row's FIRST
+    feature is rewritten by the scalar writer with its raster (field
+    order id, tags, type, geometry, raster), and a raster row with no
+    feature left becomes a geometry-less UNKNOWN-type feature."""
+    kt = tags[rows]
+    tm = kt >= 0
+    blob, flens = pbf.encode_features_packed_ragged(
+        gtypes, cmds, clens, kt[tm], tm.sum(axis=1),
+        None if ids is None else ids[rows].astype(np.int64),
+        return_lengths=True,
     )
-    rasters = pdf[raster_col] if raster_col else None
-    if rasters is None and (tags >= 0).all():
-        blob = pbf.encode_point_features_packed(tags, zz)
-        layer = pbf.encode_layer_packed(
-            layer_name, blob, keys, vals, extent=extent, version=version
+    if rasters is None:
+        return blob, flens, rows
+
+    def raster_frame(row: int, gtype: int, geom) -> bytes:
+        trow = tags[row]
+        msg = pbf.encode_feature(
+            int(ids[row]) if ids is not None else None,
+            [int(t) for t in trow[trow >= 0]],
+            gtype,
+            [int(c) for c in geom],
+            raster=bytes(rasters[row]),
         )
-        return layer, len(pdf)
-    feats = []
-    for i in range(len(pdf)):
-        trow = tags[i]
-        tag_list = [int(t) for t in trow[trow >= 0]]
-        r = rasters.iloc[i] if rasters is not None else None
-        feats.append(
-            pbf.encode_feature(
-                None, tag_list, Cmd.POINT,
-                [9, int(zz[i, 0]), int(zz[i, 1])],
-                raster=bytes(r) if r is not None else None,
-            )
-        )
-    layer = pbf.encode_layer(layer_name, feats, keys, vals, extent=extent, version=version)
-    return layer, len(feats)
+        framed = bytearray()
+        pbf.add_len_field(framed, 2, msg)  # Layer.features framing
+        return bytes(framed)
 
-
-def _value_field_bytes(v) -> bytes:
-    enc = pbf.encode_value(v)
-    head = bytearray()
-    pbf.write_varint(head, pbf.tag(4, pbf.WT_LEN))
-    pbf.write_varint(head, len(enc))
-    return bytes(head) + enc
-
-
-def _value_fields(values):
-    """Layer.values fields of ``values`` as (buf uint8, offsets, lengths),
-    one segment per value: the vectorized string writer, or the scalar
-    value encoding for a non-string column."""
-    try:
-        return pbf.encode_string_value_fields(values)
-    except pa.ArrowException:
-        pieces = [_value_field_bytes(v) for v in values]
-        b = np.frombuffer(b"".join(pieces), dtype=np.uint8)
-        l = np.array([len(p) for p in pieces], dtype=np.int64)
-        return b, np.cumsum(l) - l, l
-
-
-# ---------------------------------------------------------------------------
-# segmented vectorized lane: all tiles of a batch at once
-# ---------------------------------------------------------------------------
-
-def _segmented_value_dicts(pdf, prop_cols, gid, local_row, n_groups):
-    """Per-GROUP first-seen value dictionaries for a whole sorted batch
-    (batch-global factorize + segmented first-occurrence ranking —
-    insertion-order parity with vector_tile_layer.ipp:92-124).
-
-    Returns None when any property value is null (callers fall back to
-    the per-group lane), else (tags (n,2c) int64, gathered_bytes,
-    gat_off, dict_off): group g's values blob is
-    gathered_bytes[gat_off[dict_off[g]] : gat_off[dict_off[g+1]]].
-
-    NOTE (documented deviation): identical values appearing in
-    *different columns* each get their own dictionary slot here —
-    decoded properties are identical, the tile is just a few bytes
-    larger in that rare case. Within a column dedup is exact."""
-    n = len(pdf)
-    c = len(prop_cols)
-    col_codes = []
-    col_base = []
-    bufs: list[np.ndarray] = []
-    offs: list[np.ndarray] = []
-    lens: list[np.ndarray] = []
-    base = 0
-    buf_bytes = 0
-    for col in prop_cols:
-        codes, uniques = pd.factorize(pdf[col], use_na_sentinel=True)
-        if (codes < 0).any():
-            return None
-        uniques = list(uniques)
-        b, o, l = _value_fields(uniques)
-        col_codes.append(codes)
-        col_base.append(base)
-        bufs.append(b)
-        offs.append(o + buf_bytes)
-        lens.append(l)
-        base += len(uniques)
-        buf_bytes += len(b)
-    val_buf = np.concatenate(bufs) if bufs else np.empty(0, np.uint8)
-    val_off = np.concatenate(offs) if offs else np.empty(0, np.int64)
-    val_len = np.concatenate(lens) if lens else np.empty(0, np.int64)
-
-    U = max(base, 1)
-    # entry stream: (gid, gvid, stream_pos) for every row x column
-    ent_gid = np.tile(gid, c)
-    ent_gvid = np.concatenate([col_base[j] + col_codes[j] for j in range(c)]) \
-        if c else np.empty(0, np.int64)
-    ent_stream = np.concatenate([local_row * c + j for j in range(c)]) \
-        if c else np.empty(0, np.int64)
-
-    # first occurrence of each (gid, gvid): sort by (gid, gvid, stream)
-    order1 = np.lexsort((ent_stream, ent_gvid, ent_gid))
-    sg, sv, ss = ent_gid[order1], ent_gvid[order1], ent_stream[order1]
-    first = np.empty(len(sg), dtype=bool)
-    if len(sg):
-        first[0] = True
-        first[1:] = (sg[1:] != sg[:-1]) | (sv[1:] != sv[:-1])
-    dict_gid, dict_gvid, dict_stream = sg[first], sv[first], ss[first]
-    # slots: rank by stream within group
-    order2 = np.lexsort((dict_stream, dict_gid))
-    dg, dv = dict_gid[order2], dict_gvid[order2]
-    grp_change = np.empty(len(dg), dtype=bool)
-    if len(dg):
-        grp_change[0] = True
-        grp_change[1:] = dg[1:] != dg[:-1]
-    slot_rank = np.arange(len(dg)) - np.maximum.accumulate(
-        np.where(grp_change, np.arange(len(dg)), 0)
+    fo = np.concatenate([[0], np.cumsum(flens)])
+    co = np.concatenate([[0], np.cumsum(clens)])
+    frames = [blob[fo[k] : fo[k + 1]] for k in range(len(rows))]
+    lead = np.ones(len(rows), dtype=bool)  # a row's first feature
+    lead[1:] = rows[1:] != rows[:-1]
+    for k in np.flatnonzero(lead):
+        if rasters[rows[k]] is not None:
+            frames[k] = raster_frame(int(rows[k]), int(gtypes[k]), cmds[co[k] : co[k + 1]])
+    have = set(rows.tolist())
+    extra = [i for i, r in enumerate(rasters) if r is not None and i not in have]
+    frames += [raster_frame(i, 0, []) for i in extra]
+    all_rows = np.concatenate([rows, np.asarray(extra, dtype=np.int64)])
+    order = np.argsort(all_rows, kind="stable")
+    frames = [frames[k] for k in order]
+    return (
+        b"".join(frames),
+        np.array([len(f) for f in frames], dtype=np.int64),
+        all_rows[order],
     )
-    # lookup (gid, gvid) -> slot via sorted combined key
-    key_sorted = dg.astype(np.int64) * U + dv
-    key_order = np.argsort(key_sorted, kind="stable")
-    key_sorted_sorted = key_sorted[key_order]
-    slot_sorted = slot_rank[key_order]
-    ent_key = ent_gid.astype(np.int64) * U + ent_gvid
-    pos = np.searchsorted(key_sorted_sorted, ent_key)
-    ent_slot = slot_sorted[pos]
 
-    tags = np.empty((n, 2 * c), dtype=np.int64)
-    for j in range(c):
-        tags[:, 2 * j] = j
-        tags[:, 2 * j + 1] = ent_slot[j * n : (j + 1) * n]
 
-    # per-group values blob: dict entries (dg, dv) are sorted by
-    # (group, slot) — exactly layer insertion order
-    dict_counts = np.bincount(dg, minlength=n_groups)
-    dict_off = np.concatenate([[0], np.cumsum(dict_counts)])
-    gathered, gat_off = pbf.ragged_gather(val_buf, val_off, val_len, dv)
-    return tags, gathered.tobytes(), gat_off, dict_off
+def _layer_prefix_suffix(layer_name: str, prop_cols: list[str], extent: int, version: int):
+    prefix = bytearray()
+    pbf.add_len_field(prefix, 1, layer_name.encode("utf-8"))
+    for k in prop_cols:
+        pbf.add_len_field(prefix, 3, k.encode("utf-8"))
+    suffix = bytearray()
+    pbf.add_varint_field(suffix, 5, extent)
+    pbf.add_varint_field(suffix, 15, version)
+    return bytes(prefix), bytes(suffix)
 
+
+def _group_layers(n_groups, frame_gid, blob, flens, values, prefix, suffix):
+    """(layer bytes, feature count) per tile group of a batch: the
+    group's values blob and its feature frames (contiguous, frames being
+    in row order) sliced out of the batch buffers, in the
+    encode_layer_packed layout. A group with no feature gives (b"", 0)."""
+    gathered, gat_off, dict_off = values
+    fo = np.concatenate([[0], np.cumsum(flens)])
+    bounds = np.searchsorted(frame_gid, np.arange(n_groups + 1))
+    out: list[tuple[bytes, int]] = []
+    for g in range(n_groups):
+        lo, hi = bounds[g], bounds[g + 1]
+        if lo == hi:
+            out.append((b"", 0))
+            continue
+        vals = gathered[gat_off[dict_off[g]] : gat_off[dict_off[g + 1]]]
+        out.append((prefix + vals + suffix + blob[fo[lo] : fo[hi]], int(hi - lo)))
+    return out
+
+
+def _tile_rows(keys: np.ndarray, layers: list, compress_tiles: bool) -> list[tuple]:
+    """TILE_SCHEMA rows of one-layer tiles; a layer with no feature
+    gives an unpainted empty tile."""
+    out: list[tuple] = []
+    for (z, x, y), (layer, nf) in zip(keys.tolist(), layers):
+        if nf == 0:
+            out.append((z, x, y, b"", 0, 0, False))
+            continue
+        head = bytearray(b"\x1a")  # Tile.layers: field 3, length-delimited
+        pbf.write_varint(head, len(layer))
+        tile = bytes(head) + layer  # pbf.encode_tile([layer]), minus its copies
+        if compress_tiles:
+            tile = Z.compress(tile)
+        out.append((z, x, y, tile, nf, 1, True))
+    return out
+
+
+# ---------------------------------------------------------------------------
+# points
+# ---------------------------------------------------------------------------
 
 def _encode_tiles_segmented(
     pdf: pd.DataFrame,
     layer_name: str,
     prop_cols: list[str],
     extent: int,
-    version: int,
     compress_tiles: bool,
+    raster_col: str | None = None,
 ) -> list[tuple]:
     """Encode every (z,x,y) group of a sorted batch without per-group
-    pandas work. Per-group first-seen dictionaries are computed with
-    batch-global factorize + a segmented first-occurrence ranking, the
-    feature stream is packed once for the whole batch, and per-group
-    assembly is a couple of byte slices + zlib.
+    pandas work: the batch's dictionaries (_segmented_value_dicts), the
+    feature stream packed once for the whole batch, and per-group
+    assembly = a couple of byte slices + zlib.
 
-    Requires: rows sorted by (z,x,y); columns _px/_py present; no raster.
-    Null property values fall back to the caller's group lane.
-    """
+    Requires: rows sorted by (z,x,y); columns _px/_py present. A batch
+    with no null value and no raster takes the dense point writer
+    (pbf.encode_point_features_packed); otherwise the ragged writer
+    drops the null tags and _feature_frames adds the rasters. The two
+    writers give the same bytes on null-free input."""
     n = len(pdf)
-    c = len(prop_cols)
-    # group ids over the sorted batch
-    zxy = np.column_stack(
-        [pdf["z"].to_numpy(np.int64), pdf["x"].to_numpy(np.int64), pdf["y"].to_numpy(np.int64)]
+    keys, gid, starts = _groups(pdf)
+    tags, values = _segmented_value_dicts(
+        pdf, prop_cols, gid, np.arange(n) - starts[gid], len(keys)
     )
-    change = np.empty(n, dtype=bool)
-    change[0] = True
-    change[1:] = (zxy[1:] != zxy[:-1]).any(axis=1)
-    gid = np.cumsum(change) - 1
-    n_groups = int(gid[-1]) + 1
-    group_start = np.flatnonzero(change)
-    group_rows = np.diff(np.append(group_start, n))
-    local_row = np.arange(n) - group_start[gid]
-
-    dicts = _segmented_value_dicts(pdf, prop_cols, gid, local_row, n_groups)
-    if dicts is None:
-        return []  # caller falls back to the group lane
-    tags, gathered_b, gat_off, dict_off = dicts
-
     zz = np.column_stack(
         [Cmd.zigzag32(pdf["_px"].to_numpy()), Cmd.zigzag32(pdf["_py"].to_numpy())]
     )
-    blob, flens = pbf.encode_point_features_packed(tags, zz, return_lengths=True)
-    feat_off = np.concatenate([[0], np.cumsum(flens)])
-
-    # constant layer pieces
-    prefix = bytearray()
-    pbf.add_len_field(prefix, 1, layer_name.encode("utf-8"))
-    for k in prop_cols:
-        pbf.add_len_field(prefix, 3, k.encode("utf-8"))
-    prefix = bytes(prefix)
-    suffix = bytearray()
-    pbf.add_varint_field(suffix, 5, extent)
-    pbf.add_varint_field(suffix, 15, version)
-    suffix = bytes(suffix)
-
-    zs = zxy[group_start, 0]
-    xs = zxy[group_start, 1]
-    ys = zxy[group_start, 2]
-    fs = feat_off[group_start]
-    fe = feat_off[np.append(group_start[1:], n)]
-    out: list[tuple] = []
-    compress = Z.compress  # small-payload fast path (functions.compression)
-    for g in range(n_groups):
-        vals = gathered_b[gat_off[dict_off[g]] : gat_off[dict_off[g + 1]]]
-        layer = prefix + vals + suffix + blob[fs[g] : fe[g]]
-        head = bytearray()
-        pbf.write_varint(head, pbf.tag(3, pbf.WT_LEN))
-        pbf.write_varint(head, len(layer))
-        tile = bytes(head) + layer
-        if compress_tiles:
-            tile = compress(tile, 6)
-        out.append(
-            (int(zs[g]), int(xs[g]), int(ys[g]), tile, int(group_rows[g]), 1, True)
+    rasters = _rasters(pdf, raster_col)
+    if rasters is None and (tags >= 0).all():
+        blob, flens = pbf.encode_point_features_packed(tags, zz, return_lengths=True)
+        frame_gid = gid
+    else:
+        cmds = np.column_stack(
+            [np.full(n, 9, dtype=np.uint64), zz.astype(np.uint64)]
+        ).reshape(-1)
+        blob, flens, rows = _feature_frames(
+            tags, np.arange(n), np.full(n, Cmd.POINT, dtype=np.int64), cmds,
+            np.full(n, 3, dtype=np.int64), rasters=rasters,
         )
-    return out
+        frame_gid = gid[rows]
+    prefix, suffix = _layer_prefix_suffix(layer_name, prop_cols, extent, 2)
+    layers = _group_layers(len(keys), frame_gid, blob, flens, values, prefix, suffix)
+    return _tile_rows(keys, layers, compress_tiles)
 
 
 # ---------------------------------------------------------------------------
-# public API
+# geometries
 # ---------------------------------------------------------------------------
 
 def _scalar_geom_feature(geom, vt, clip_box, simplify_distance,
@@ -401,141 +422,113 @@ def _scalar_geom_feature(geom, vt, clip_box, simplify_distance,
     emit(tg)
     return out
 
-
-def _encode_geom_tiles_segmented(
+def _encode_geom_groups(
     pdf: pd.DataFrame,
+    groups: tuple,
     layer_name: str,
     prop_cols: list[str],
-    extent: int,
-    buffer_px: int,
-    simplify_distance: float,
-    area_threshold: float,
-    geom_col: str,
-    compress_tiles: bool,
+    extent: int = 4096,
+    buffer_px: int = 0,
+    simplify_distance: float = 0.0,
+    area_threshold: float = 0.1,
+    geom_col: str = "_gpk",
+    id_col: str | None = None,
     version: int = 2,
     fill_type: str = "even_odd",
     strictly_simple: bool = False,
+    multi_polygon_union: bool = False,
+    process_all_rings: bool = False,
     key_names: list[str] | None = None,
-) -> list[tuple] | None:
-    """Encode every (z,x,y) geometry group of a sorted batch through ONE
-    ragged kernel invocation (functions/ragged.py) — the geometry
-    sibling of _encode_tiles_segmented. Per-feature tile transforms feed
-    the batch quantize; per-group assembly is dictionary-blob + feature
-    byte-range slices + zlib. Returns rows
-    (z, x, y, tile, n_features, n_layers, painted, n_unresolved),
-    or None when a property value is null (per-group fallback)."""
+    raster_col: str | None = None,
+):
+    """The general-geometry pipeline for every tile group of a sorted
+    batch — the geometry sibling of _encode_tiles_segmented. groups is
+    _groups(pdf) (keys, gid, starts). Per-feature tile transforms feed
+    ONE ragged kernel call (functions/ragged.py, the fused vectorized
+    twin of the reference's per-feature visitor chain,
+    src/vector_tile_processor.ipp:82-174); its ejects (geometry
+    collections, fill-resolver polygons) replay through the scalar
+    pipeline and merge back in feature order. Either non-default wagyu
+    knob (processor.set_multi_polygon_union / set_process_all_rings)
+    ejects every feature: the ragged lane models the default semantics.
+
+    geom_col: compact packed geometry (geometry.gpack). id_col: Feature.id
+    per row. raster_col: Feature.raster bytes per row; a raster row whose
+    geometry does not survive is written as a geometry-less raster
+    feature (_feature_frames), as the re-encode merge path needs.
+    key_names overrides the written key dictionary when the data columns
+    were renamed to dodge the tile coordinate columns.
+
+    Returns (layers, unresolved): (layer bytes, feature count) per group
+    ((b"", 0) for a group with no feature), and the count of
+    fill-resolver budget fallbacks per group."""
+    keys, gid, starts = groups
     n = len(pdf)
-    if n == 0:
-        return []
-    zxy = np.column_stack(
-        [pdf["z"].to_numpy(np.int64), pdf["x"].to_numpy(np.int64), pdf["y"].to_numpy(np.int64)]
+    n_groups = len(keys)
+    tags, values = _segmented_value_dicts(
+        pdf, prop_cols, gid, np.arange(n) - starts[gid], n_groups
     )
-    change = np.empty(n, dtype=bool)
-    change[0] = True
-    change[1:] = (zxy[1:] != zxy[:-1]).any(axis=1)
-    gid = np.cumsum(change) - 1
-    n_groups = int(gid[-1]) + 1
-    group_start = np.flatnonzero(change)
-    local_row = np.arange(n) - group_start[gid]
-
-    dicts = _segmented_value_dicts(pdf, prop_cols, gid, local_row, n_groups)
-    if dicts is None:
-        return None
-    tags, gathered_b, gat_off, dict_off = dicts
-
-    # per-group view transforms (exact tile_mercator_bbox_np math so the
-    # quantization is bit-identical to the per-tile lane)
-    gz, gx, gy = zxy[group_start, 0], zxy[group_start, 1], zxy[group_start, 2]
-    minxg, minyg, maxxg, maxyg = tilemath.tile_mercator_bbox_np(gx, gy, gz)
-    sxg = extent / (maxxg - minxg)
-    syg = extent / (maxyg - minyg)
+    # per-group view transforms (exact tile_mercator_bbox_np math, as
+    # G.ViewTransform computes it, so the ragged and scalar lanes
+    # quantize bit-identically)
+    minx, miny, maxx, maxy = tilemath.tile_mercator_bbox_np(keys[:, 1], keys[:, 2], keys[:, 0])
+    sx = extent / (maxx - minx)
+    sy = extent / (maxy - miny)
     clip_box = tilemath.buffered_tile_px_box(extent, buffer_px)
 
     blobs = pdf[geom_col].to_numpy()
     stats: dict = {}
-    feat_rows, gtypes_v, cmds_flat, clens, ejects = RG.encode_batch_gpack(
-        blobs, (minxg[gid], maxyg[gid], sxg[gid], syg[gid]), clip_box,
-        simplify_distance, area_threshold, stats,
-        force_resolve=strictly_simple,
-    )
-    if ejects:
-        s_rows: list[int] = []
-        s_gtypes: list[int] = []
-        s_cmds: list[np.ndarray] = []
-        for i in ejects:
-            g = gid[i]
-            vt_i = G.ViewTransform(
-                float(minxg[g]), float(minyg[g]), float(maxxg[g]),
-                float(maxyg[g]), extent, extent,
-            )
-            st_i: dict = {}
-            encoded = _scalar_geom_feature(
-                G.gunpack(bytes(blobs[i])), vt_i, clip_box,
-                simplify_distance, area_threshold, st_i,
-                fill_type=fill_type, strictly_simple=strictly_simple,
-            )
-            ov = st_i.get("budget_exceeded", 0)
-            if ov:
-                stats["budget_exceeded"] = stats.get("budget_exceeded", 0) + ov
-                stats.setdefault("budget_exceeded_feats", []).extend([i] * ov)
-            for gtype, cmds in encoded:  # collections: one feature/member
-                s_rows.append(i)
-                s_gtypes.append(gtype)
-                s_cmds.append(np.asarray(cmds, dtype=np.uint64))
-        if s_rows:
-            pieces = np.split(cmds_flat, np.cumsum(clens)[:-1]) if len(clens) else []
-            rows_all = np.concatenate([feat_rows, np.asarray(s_rows, dtype=np.int64)])
-            order = np.argsort(rows_all, kind="stable")
-            all_cmds = pieces + s_cmds
-            all_gtypes = np.concatenate(
-                [gtypes_v, np.asarray(s_gtypes, dtype=np.int64)]
-            )
-            feat_rows = rows_all[order]
-            gtypes_v = all_gtypes[order]
-            cmd_list = [all_cmds[j] for j in order]
-            cmds_flat = np.concatenate(cmd_list)
-            clens = np.array([len(c) for c in cmd_list], dtype=np.int64)
-
-    unresolved = np.zeros(n_groups, dtype=np.int64)
-    for f in stats.get("budget_exceeded_feats", []):
-        unresolved[gid[f]] += 1
-
-    # feature framing for the whole batch; per-group = byte-range slice
-    if len(feat_rows):
-        kt = tags[feat_rows]
-        blob, flens = pbf.encode_features_packed_ragged(
-            gtypes_v, cmds_flat, clens,
-            kt.reshape(-1), np.full(len(feat_rows), kt.shape[1], dtype=np.int64),
-            None, return_lengths=True,
-        )
-        feat_gid = gid[feat_rows]
-        fo = np.concatenate([[0], np.cumsum(flens)])
-        g_lo = np.searchsorted(feat_gid, np.arange(n_groups), side="left")
-        g_hi = np.searchsorted(feat_gid, np.arange(n_groups), side="right")
+    if multi_polygon_union or process_all_rings:
+        rows = gtypes = clens = np.empty(0, dtype=np.int64)
+        cmds = np.empty(0, dtype=np.uint64)
+        ejects = range(n)
     else:
-        blob = b""
-        fo = np.zeros(1, dtype=np.int64)
-        g_lo = g_hi = np.zeros(n_groups, dtype=np.int64)
+        rows, gtypes, cmds, clens, ejects = RG.encode_batch_gpack(
+            blobs, (minx[gid], maxy[gid], sx[gid], sy[gid]), clip_box,
+            simplify_distance, area_threshold, stats,
+            force_resolve=strictly_simple,
+        )
+    over = list(stats.get("budget_exceeded_feats", []))
+    s_rows: list[int] = []
+    s_gtypes: list[int] = []
+    s_cmds: list[np.ndarray] = []
+    for i in ejects:
+        g = gid[i]
+        vt = G.ViewTransform(
+            float(minx[g]), float(miny[g]), float(maxx[g]), float(maxy[g]), extent, extent,
+        )
+        st: dict = {}
+        for gtype, c in _scalar_geom_feature(
+            G.gunpack(bytes(blobs[i])), vt, clip_box, simplify_distance,
+            area_threshold, st, fill_type=fill_type,
+            strictly_simple=strictly_simple,
+            multi_polygon_union=multi_polygon_union,
+            process_all_rings=process_all_rings,
+        ):  # collections: one wire feature per member
+            s_rows.append(i)
+            s_gtypes.append(gtype)
+            s_cmds.append(np.asarray(c, dtype=np.uint64))
+        over += [i] * st.get("budget_exceeded", 0)
+    if s_rows:
+        # merge the replayed features back in feature order
+        pieces = np.split(cmds, np.cumsum(clens)[:-1]) if len(clens) else []
+        all_rows = np.concatenate([rows, np.asarray(s_rows, dtype=np.int64)])
+        order = np.argsort(all_rows, kind="stable")
+        all_cmds = pieces + s_cmds
+        rows = all_rows[order]
+        gtypes = np.concatenate([gtypes, np.asarray(s_gtypes, dtype=np.int64)])[order]
+        cmd_list = [all_cmds[j] for j in order]
+        cmds = np.concatenate(cmd_list)
+        clens = np.array([len(c) for c in cmd_list], dtype=np.int64)
+    unresolved = np.bincount(gid[np.asarray(over, dtype=np.int64)], minlength=n_groups)
 
-    prefix, suffix = _layer_prefix_suffix(
-        layer_name, key_names or prop_cols, extent, version
+    blob, flens, frame_rows = _feature_frames(
+        tags, rows, gtypes, cmds, clens,
+        pdf[id_col].to_numpy() if id_col else None, _rasters(pdf, raster_col),
     )
-    out: list[tuple] = []
-    compress = Z.compress
-    for g in range(n_groups):
-        nf = int(g_hi[g] - g_lo[g])
-        if nf == 0:
-            out.append((int(gz[g]), int(gx[g]), int(gy[g]), b"", 0, 0, False,
-                        int(unresolved[g])))
-            continue
-        vals = gathered_b[gat_off[dict_off[g]] : gat_off[dict_off[g + 1]]]
-        layer = prefix + vals + suffix + blob[fo[g_lo[g]] : fo[g_hi[g]]]
-        tile = pbf.encode_tile([layer])
-        if compress_tiles:
-            tile = compress(tile)
-        out.append((int(gz[g]), int(gx[g]), int(gy[g]), tile, nf, 1, True,
-                    int(unresolved[g])))
-    return out
+    prefix, suffix = _layer_prefix_suffix(layer_name, key_names or prop_cols, extent, version)
+    layers = _group_layers(n_groups, gid[frame_rows], blob, flens, values, prefix, suffix)
+    return layers, unresolved
 
 
 def encode_geom_layer(
@@ -545,14 +538,13 @@ def encode_geom_layer(
     y: int,
     layer_name: str,
     prop_cols: list[str],
-    wkt_col: str = "geom_wkt",
     extent: int = 4096,
     buffer_px: int = 0,
     simplify_distance: float = 0.0,
     area_threshold: float = 0.1,
     id_col: str | None = None,
     version: int = 2,
-    geom_col: str | None = None,
+    geom_col: str = "_gpk",
     stats: dict | None = None,
     fill_type: str = "even_odd",
     strictly_simple: bool = False,
@@ -561,179 +553,156 @@ def encode_geom_layer(
     key_names: list[str] | None = None,
     raster_col: str | None = None,
 ) -> tuple[bytes, int]:
-    """General-geometry layer through the fused transform/simplify/clip
-    kernel, then ONE ragged batch command-stream + feature framing pass
-    (pbf.encode_features_packed_ragged) — no per-feature pbf writer.
-    geom_col: compact packed geometry (geometry.gpack) — preferred; the
-    WKT column is parsed only when no packed column is present.
-    stats: optional dict accumulating fill-resolver budget_exceeded.
-    raster_col: Feature.raster bytes per row (the re-encode merge path,
-    raster_to_feature semantics — vector_tile_geometry_feature.hpp:23-34):
-    raster-bearing rows keep their geometry AND raster; rows with
-    raster but no surviving geometry are written as geometry-less
-    raster features (type UNKNOWN), like the reference's raster
-    features."""
-    minx, miny, maxx, maxy = tilemath.tile_mercator_bbox_np(x, y, z)
-    vt = G.ViewTransform(float(minx), float(miny), float(maxx), float(maxy), extent, extent)
-    clip_box = tilemath.buffered_tile_px_box(extent, buffer_px)
-    keys, values, tags = build_value_dicts(pdf, prop_cols, key_names)
-    ids = pdf[id_col].to_numpy() if id_col else None
-    rasters = None
-    if raster_col and raster_col in pdf.columns:
-        rl = list(pdf[raster_col])
-        if any(r is not None for r in rl):
-            rasters = rl
-    geoms = (
-        [G.gunpack(bytes(b)) for b in pdf[geom_col]]
-        if geom_col
-        else G.from_wkt_batch(list(pdf[wkt_col]))
+    """One general-geometry layer of tile (z, x, y): the one-group call
+    of _encode_geom_groups (see there for geom_col, id_col, raster_col
+    and key_names). Returns (layer bytes, feature count), (b"", 0) when
+    no feature survives. stats: optional dict accumulating the
+    fill-resolver budget_exceeded count."""
+    groups = (
+        np.array([[z, x, y]], dtype=np.int64),
+        np.zeros(len(pdf), dtype=np.int64),
+        np.zeros(1, dtype=np.int64),
     )
-    # the WHOLE simplify/clip/assemble/encode pass runs as flat numpy
-    # over every feature at once (functions/ragged.py — the fused
-    # vectorized twin of the reference's per-feature visitor chain,
-    # src/vector_tile_processor.ipp:82-174); rare complex features
-    # (geometry collections, fill-resolver polygons) come back as ejects
-    # and go through the scalar pipeline below
-    if multi_polygon_union or process_all_rings:
-        # non-default wagyu knobs (processor.set_multi_polygon_union /
-        # set_process_all_rings): the ragged lane models the default
-        # semantics, so every feature takes the scalar pipeline
-        feat_rows = np.empty(0, dtype=np.int64)
-        gtypes_v = np.empty(0, dtype=np.int64)
-        cmds_flat = np.empty(0, dtype=np.uint64)
-        clens = np.empty(0, dtype=np.int64)
-        ejects = list(range(len(geoms)))
-    else:
-        feat_rows, gtypes_v, cmds_flat, clens, ejects = RG.encode_batch(
-            geoms, vt, clip_box, simplify_distance, area_threshold, stats,
-            force_resolve=strictly_simple,
-        )
-    if ejects:
-        s_rows: list[int] = []
-        s_gtypes: list[int] = []
-        s_cmds: list[np.ndarray] = []
-        for i in ejects:
-            for gtype, cmds in _scalar_geom_feature(
-                geoms[i], vt, clip_box, simplify_distance, area_threshold,
-                stats, fill_type=fill_type, strictly_simple=strictly_simple,
-                multi_polygon_union=multi_polygon_union,
-                process_all_rings=process_all_rings,
-            ):  # collections: one wire feature per member
-                s_rows.append(i)
-                s_gtypes.append(gtype)
-                s_cmds.append(np.asarray(cmds, dtype=np.uint64))
-        if s_rows:
-            # merge scalar features back in original feature order
-            pieces = np.split(cmds_flat, np.cumsum(clens)[:-1]) if len(clens) else []
-            rows_all = np.concatenate([feat_rows, np.asarray(s_rows, dtype=np.int64)])
-            order = np.argsort(rows_all, kind="stable")
-            all_cmds = pieces + s_cmds
-            all_gtypes = np.concatenate([gtypes_v, np.asarray(s_gtypes, dtype=np.int64)])
-            feat_rows = rows_all[order]
-            gtypes_v = all_gtypes[order]
-            cmd_list = [all_cmds[j] for j in order]
-            cmds_flat = np.concatenate(cmd_list) if cmd_list else cmds_flat
-            clens = np.array([len(c) for c in cmd_list], dtype=np.int64)
-    if len(feat_rows) == 0 and rasters is None:
-        return b"", 0
-    keep_idx = feat_rows
-    kept_tags = tags[keep_idx]
-    tmask = kept_tags >= 0
-    ragged_args = (
-        gtypes_v,
-        cmds_flat,
-        clens,
-        kept_tags[tmask].astype(np.int64),
-        tmask.sum(axis=1).astype(np.int64),
-        ids[keep_idx].astype(np.int64) if ids is not None else None,
+    layers, unresolved = _encode_geom_groups(
+        pdf, groups, layer_name, prop_cols, extent, buffer_px,
+        simplify_distance, area_threshold, geom_col=geom_col, id_col=id_col,
+        version=version, fill_type=fill_type, strictly_simple=strictly_simple,
+        multi_polygon_union=multi_polygon_union,
+        process_all_rings=process_all_rings, key_names=key_names,
+        raster_col=raster_col,
     )
-    if rasters is None:
-        blob = pbf.encode_features_packed_ragged(*ragged_args)
-        n_out = len(feat_rows)
-    else:
-        blob, n_out = _splice_raster_frames(
-            ragged_args, feat_rows, gtypes_v, cmds_flat, clens,
-            tags, ids, rasters,
-        )
-        if n_out == 0:
-            return b"", 0
-    vals = [pbf.encode_value(v) for v in values]
-    layer = pbf.encode_layer_packed(
-        layer_name, blob, keys, vals, extent=extent, version=version
-    )
-    return layer, n_out
-
-
-def _splice_raster_frames(ragged_args, feat_rows, gtypes_v, cmds_flat,
-                          clens, tags, ids, rasters):
-    """Weave Feature.raster bytes into the batch-framed blob: frames of
-    raster-bearing rows are rebuilt by the scalar writer (field order
-    id, tags, type, geometry, raster — matching encode_feature and the
-    reference's raster_to_feature), raster-only rows (no surviving
-    geometry) are inserted at their original row position as
-    geometry-less UNKNOWN-type features. A collection row's raster
-    attaches to its FIRST member feature only."""
-    blob_b, flens = pbf.encode_features_packed_ragged(
-        *ragged_args, return_lengths=True
-    )
-    frame_off = np.concatenate([[0], np.cumsum(flens)]).astype(np.int64)
-    cmd_pieces = (
-        np.split(cmds_flat, np.cumsum(clens)[:-1]) if len(clens) else []
-    )
-    geom_rows = set(int(r) for r in feat_rows)
-    extra = [
-        i for i, r in enumerate(rasters)
-        if r is not None and i not in geom_rows
-    ]
-
-    def raster_frame(row: int, gtype: int, cmds) -> bytes:
-        trow = tags[row]
-        tm = trow >= 0
-        msg = pbf.encode_feature(
-            int(ids[row]) if ids is not None else None,
-            [int(t) for t in trow[tm]],
-            gtype,
-            [int(c) for c in cmds],
-            raster=bytes(rasters[row]),
-        )
-        framed = bytearray()
-        pbf.add_len_field(framed, 2, msg)  # Layer.features framing
-        return bytes(framed)
-
-    pieces: list[bytes] = []
-    gi = ei = 0
-    prev_row = -1
-    while gi < len(feat_rows) or ei < len(extra):
-        take_extra = gi >= len(feat_rows) or (
-            ei < len(extra) and extra[ei] < int(feat_rows[gi])
-        )
-        if take_extra:
-            pieces.append(raster_frame(extra[ei], 0, []))
-            ei += 1
-            continue
-        row = int(feat_rows[gi])
-        if rasters[row] is not None and row != prev_row:
-            pieces.append(raster_frame(row, int(gtypes_v[gi]), cmd_pieces[gi]))
-        else:
-            pieces.append(bytes(blob_b[frame_off[gi] : frame_off[gi + 1]]))
-        prev_row = row
-        gi += 1
-    return b"".join(pieces), len(pieces)
-
-
-def _layer_prefix_suffix(layer_name: str, prop_cols: list[str], extent: int, version: int):
-    prefix = bytearray()
-    pbf.add_len_field(prefix, 1, layer_name.encode("utf-8"))
-    for k in prop_cols:
-        pbf.add_len_field(prefix, 3, k.encode("utf-8"))
-    suffix = bytearray()
-    pbf.add_varint_field(suffix, 5, extent)
-    pbf.add_varint_field(suffix, 15, version)
-    return bytes(prefix), bytes(suffix)
+    if stats is not None and unresolved[0]:
+        stats["budget_exceeded"] = stats.get("budget_exceeded", 0) + int(unresolved[0])
+    return layers[0]
 
 
 # ---------------------------------------------------------------------------
-# point tiles: one clustered exchange + a streaming kernel
+# the tile stream: one clustered exchange, then this loop in the kernel
+# ---------------------------------------------------------------------------
+
+def _with_declared_ints(kernel, df: DataFrame, prop_cols: list[str]):
+    """``kernel`` fed frames whose integer property columns hold ints
+    again. Arrow hands pandas an integer column as float64 when the
+    frame holds a null, which would retype its Values (int 10 -> double
+    10.0); the declared Spark types of ``df`` say which columns to turn
+    back (an object column of ints and None)."""
+    ints = [
+        f.name for f in df.schema
+        if f.name in prop_cols
+        and f.dataType.simpleString() in ("tinyint", "smallint", "int", "bigint")
+    ]
+    if not ints:
+        return kernel
+
+    def coerce(frames):
+        for pdf in frames:
+            for c in ints:
+                if pdf[c].dtype.kind == "f":
+                    v = pdf[c].to_numpy()
+                    na = np.isnan(v)
+                    obj = np.where(na, 0, v).astype(np.int64).astype(object)
+                    obj[na] = None
+                    # dtype=object is load-bearing: pandas re-infers
+                    # [None, 0] as float64 otherwise
+                    pdf = pdf.assign(**{c: pd.Series(obj, index=pdf.index, dtype=object)})
+            yield pdf
+
+    return lambda frames: kernel(coerce(frames))
+
+
+def tile_stream(frames, whole, cols: list[str], split: int = 0, hot=None):
+    """Tile rows (DataFrames of ``cols``) of a (z, x, y)-sorted frame
+    stream — the kernel loop of both tile builders. A tile's rows are
+    gathered across frames (concatenated once per close or piece); runs
+    of complete tiles go to one ``whole(pdf)`` call. With ``split`` > 0,
+    a tile past ``split`` rows goes to ``hot(key)`` in pieces of
+    ``split`` rows as they arrive (``.piece(pdf)``), the last 1..split
+    rows at its close (then ``.close()``), so the task holds at most
+    ``split`` rows of it plus one frame."""
+
+    class Run:
+        """One tile's rows as they arrive."""
+
+        def __init__(self, key: tuple):
+            self.key = key
+            self.frames: list[pd.DataFrame] = []
+            self.n = 0
+            self.hot = None
+
+        def rows(self) -> pd.DataFrame:
+            if len(self.frames) == 1:
+                return self.frames[0]
+            return pd.concat(self.frames, ignore_index=True)
+
+        def add(self, frame: pd.DataFrame) -> list[tuple]:
+            self.frames.append(frame)
+            self.n += len(frame)
+            if not split or self.n <= split:
+                return []
+            rows = self.rows()
+            k = (self.n - 1) // split  # whole pieces; 1..split rows stay
+            if self.hot is None:
+                self.hot = hot(self.key)
+            out = []
+            for i in range(k):
+                out += self.hot.piece(rows.iloc[i * split : (i + 1) * split])
+            self.frames, self.n = [rows.iloc[k * split :]], self.n - k * split
+            return out
+
+        def close(self) -> list[tuple]:
+            if self.hot is None:
+                return whole(self.rows())
+            return self.hot.piece(self.rows()) + self.hot.close()
+
+    def complete(pdf: pd.DataFrame, bounds: np.ndarray, keys: np.ndarray,
+                 g0: int, g1: int) -> list[tuple]:
+        """Groups g0..g1-1 of a frame, each complete: runs of small
+        groups in one whole() call, every group past split in pieces."""
+        sizes = np.diff(bounds[g0 : g1 + 1])
+        big = (g0 + np.flatnonzero(sizes > split)).tolist() if split else []
+        out: list[tuple] = []
+        lo = g0
+        for g in big + [g1]:
+            if lo < g:
+                out += whole(pdf.iloc[bounds[lo] : bounds[g]])
+            if g < g1:
+                run = Run(tuple(keys[g].tolist()))
+                out += run.add(pdf.iloc[bounds[g] : bounds[g + 1]])
+                out += run.close()
+            lo = g + 1
+        return out
+
+    run = None  # the tile the stream ends in so far
+    for pdf in frames:
+        n = len(pdf)
+        if n == 0:
+            continue
+        keys, _, starts = _groups(pdf)
+        bounds = np.append(starts, n)
+        out: list[tuple] = []
+        first = 0
+        if run is not None:
+            if tuple(keys[0].tolist()) == run.key:
+                out += run.add(pdf.iloc[: bounds[1]])
+                first = 1
+            if first < len(starts):
+                out += run.close()
+                run = None
+        if run is None:
+            last = len(starts) - 1  # may go on in the next frame
+            out += complete(pdf, bounds, keys, first, last)
+            run = Run(tuple(keys[last].tolist()))
+            out += run.add(pdf.iloc[bounds[last] :])
+        if out:
+            yield pd.DataFrame(out, columns=cols)
+    if run is not None:
+        out = run.close()
+        if out:
+            yield pd.DataFrame(out, columns=cols)
+
+
+# ---------------------------------------------------------------------------
+# point tiles
 # ---------------------------------------------------------------------------
 
 def _hot_piece(pdf: pd.DataFrame, prop_cols: list[str], vbase: int):
@@ -791,18 +760,18 @@ def point_tile_kernel(
     """The mapInPandas kernel of build_point_tiles, exposed so tests and
     benches can drive it single-core. Frames in: z, x, y, the property
     columns, mx, my (and raster_col), sorted by (z, x, y, feature order);
-    frames out: TILE_SCHEMA rows.
+    frames out: TILE_SCHEMA rows, through tile_stream.
 
-    A tile's rows are gathered across Arrow batches (a list of frames,
-    concatenated once per close or piece). A tile of at most
-    ``hot_threshold`` rows goes to the cold lane whole. Past that, pieces
-    of ``hot_threshold`` rows are encoded as they arrive — each its own
+    A tile of at most ``hot_threshold`` rows goes to the batch encoder
+    (_encode_tiles_segmented) whole. Past that, pieces of
+    ``hot_threshold`` rows are encoded as they arrive — each its own
     tile row (prechunk_hot; cut in halves while it would reach
     decode.HOT_BYTES), or a pair of deflated segments (values, features)
     of one layer that are joined into one zlib stream when the tile
-    closes — so the task holds at most ``hot_threshold`` rows plus
-    one batch, plus the hot tile's compressed bytes. hot_threshold <= 0,
-    or a raster column (group lane), never splits a tile."""
+    closes — so the task holds at most ``hot_threshold`` rows plus one
+    batch, plus the hot tile's compressed bytes. hot_threshold <= 0, or
+    a raster column (the hot pieces carry no raster), never splits a
+    tile."""
     split = hot_threshold if raster_col is None and hot_threshold > 0 else 0
     prefix, suffix = _layer_prefix_suffix(layer_name, prop_cols, extent, 2)
     cols = ["z", "x", "y", "tile", "n_features", "n_layers", "painted"]
@@ -814,26 +783,13 @@ def point_tile_kernel(
         return pdf
 
     def cold(pdf: pd.DataFrame) -> list[tuple]:
-        """Whole tiles of a sorted frame, dense dictionaries."""
+        """Whole tiles of a sorted frame through the batch encoder."""
         pdf = quantized(pdf)
         if len(pdf) == 0:
             return []
-        if raster_col is None:
-            out = _encode_tiles_segmented(
-                pdf, layer_name, prop_cols, extent, 2, compress_tiles
-            )
-            if out:  # [] means nulls present -> group lane
-                return out
-        out = []
-        for (z, x, y), grp in pdf.groupby(["z", "x", "y"], sort=False):
-            layer, nf = _encode_group_prequantized(
-                grp, layer_name, prop_cols, extent, 2, raster_col
-            )
-            tile = pbf.encode_tile([layer])
-            if compress_tiles:
-                tile = Z.compress(tile)
-            out.append((int(z), int(x), int(y), tile, nf, 1, True))
-        return out
+        return _encode_tiles_segmented(
+            pdf, layer_name, prop_cols, extent, compress_tiles, raster_col
+        )
 
     def standalone(pdf: pd.DataFrame) -> list[tuple]:
         """A prechunk piece as its own tile row, cut in halves while the
@@ -850,38 +806,16 @@ def point_tile_kernel(
             return blob
         return Z.deflate_piece(blob, 6 if len(blob) < (4 << 20) else 1)
 
-    class Run:
-        """One tile's rows as they arrive."""
+    class HotTile:
+        """The pieces of one tile past the threshold."""
 
         def __init__(self, key: tuple):
             self.key = key
-            self.frames: list[pd.DataFrame] = []
-            self.n = 0
-            self.hot = False
             self.n_feat = self.n_vals = self.n_bytes = 0
             self.vals: list = []
             self.feats: list = []
 
-        def rows(self) -> pd.DataFrame:
-            if len(self.frames) == 1:
-                return self.frames[0]
-            return pd.concat(self.frames, ignore_index=True)
-
-        def add(self, frame: pd.DataFrame) -> list[tuple]:
-            self.frames.append(frame)
-            self.n += len(frame)
-            if not split or self.n <= split:
-                return []
-            rows = self.rows()
-            k = (self.n - 1) // split  # whole pieces; 1..split rows stay
-            out = []
-            for i in range(k):
-                out += self.piece(rows.iloc[i * split : (i + 1) * split])
-            self.frames, self.n = [rows.iloc[k * split :]], self.n - k * split
-            return out
-
         def piece(self, pdf: pd.DataFrame) -> list[tuple]:
-            self.hot = True
             if prechunk_hot:
                 return standalone(pdf)
             pdf = quantized(pdf)
@@ -894,11 +828,8 @@ def point_tile_kernel(
             return []
 
         def close(self) -> list[tuple]:
-            if not self.hot:
-                return cold(self.rows())
-            out = self.piece(self.rows())
             if prechunk_hot:
-                return out
+                return []
             head = bytearray()
             pbf.write_varint(head, pbf.tag(3, pbf.WT_LEN))
             pbf.write_varint(head, len(prefix) + len(suffix) + self.n_bytes)
@@ -912,58 +843,8 @@ def point_tile_kernel(
             n = self.n_feat
             return [(*self.key, tile, n, 1 if n else 0, n > 0)]
 
-    def whole(pdf: pd.DataFrame, bounds: np.ndarray, keys: np.ndarray,
-              g0: int, g1: int) -> list[tuple]:
-        """Groups g0..g1-1 of a batch, each complete: runs of cold groups
-        in one cold call, every group past the threshold in pieces."""
-        sizes = np.diff(bounds[g0 : g1 + 1])
-        big = (g0 + np.flatnonzero(sizes > split)).tolist() if split else []
-        out: list[tuple] = []
-        lo = g0
-        for g in big + [g1]:
-            if lo < g:
-                out += cold(pdf.iloc[bounds[lo] : bounds[g]])
-            if g < g1:
-                run = Run(tuple(int(v) for v in keys[g]))
-                out += run.add(pdf.iloc[bounds[g] : bounds[g + 1]])
-                out += run.close()
-            lo = g + 1
-        return out
-
     def kernel(iterator):
-        run = None  # the tile the stream ends in so far
-        for pdf in iterator:
-            n = len(pdf)
-            if n == 0:
-                continue
-            zxy = np.column_stack(
-                [pdf[c].to_numpy(np.int64) for c in ("z", "x", "y")]
-            )
-            change = np.ones(n, dtype=bool)
-            change[1:] = (zxy[1:] != zxy[:-1]).any(axis=1)
-            starts = np.flatnonzero(change)
-            bounds = np.append(starts, n)
-            keys = zxy[starts]
-            out: list[tuple] = []
-            first = 0
-            if run is not None:
-                if tuple(int(v) for v in keys[0]) == run.key:
-                    out += run.add(pdf.iloc[: bounds[1]])
-                    first = 1
-                if first < len(starts):
-                    out += run.close()
-                    run = None
-            if run is None:
-                last = len(starts) - 1  # may go on in the next batch
-                out += whole(pdf, bounds, keys, first, last)
-                run = Run(tuple(int(v) for v in keys[last]))
-                out += run.add(pdf.iloc[bounds[last] :])
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-        if run is not None:
-            out = run.close()
-            if out:
-                yield pd.DataFrame(out, columns=cols)
+        return tile_stream(iterator, cold, cols, split, HotTile)
 
     return kernel
 
@@ -1009,8 +890,9 @@ def build_point_tiles(
     same, the layer is larger when values repeat) and deflated as its
     own segment; the segments form one zlib stream at tile close.
     Feature order is (z, x, y, order) throughout. Tiles at or under the
-    threshold take the dense-dictionary kernel. hot_threshold <= 0
-    never splits; a raster_col keeps every tile on the group lane.
+    threshold take the batch encoder whole. hot_threshold <= 0, or a
+    raster_col, never splits a tile. An integer property column keeps
+    its int Values in a batch that holds a null (_with_declared_ints).
 
     prechunk_hot=True stores each hot tile as MULTIPLE rows, one valid
     standalone tile per piece — the 100x-scale storage contract: no
@@ -1035,7 +917,7 @@ def build_point_tiles(
         slim_cols.append(raster_col)
     if order_col and order_col not in slim_cols:
         slim_cols.append(order_col)
-    slim = assigned.withColumn("mx", mx).withColumn("my", my).select(*slim_cols, "mx", "my")
+    slim = assigned.select(*slim_cols, mx.alias("mx"), my.alias("my"))
     sort_col = order_col or id_col
     npart = int(slim.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     clustered = slim.repartition(npart, "z", "x", "y").sortWithinPartitions(
@@ -1045,4 +927,7 @@ def build_point_tiles(
         prop_cols, layer_name, extent, buffer_px, raster_col, compress_tiles,
         hot_threshold, prechunk_hot,
     )
-    return clustered.mapInPandas(kernel, schema=TILE_SCHEMA)
+    return clustered.mapInPandas(
+        _with_declared_ints(kernel, assigned, prop_cols), schema=TILE_SCHEMA
+    )
+

@@ -18,9 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from mapnik_vector_tile_spark import tilemath
-from mapnik_vector_tile_spark.functions import compression as Z
 from mapnik_vector_tile_spark.functions import geometry as G
-from mapnik_vector_tile_spark.functions import pbf
+from mapnik_vector_tile_spark.operators import encode as E
 
 TILE_SCHEMA = (
     "z int, x long, y long, tile binary, n_features long, n_layers int, "
@@ -289,8 +288,6 @@ def build_geom_tiles(
     renamed internally so the tile-coordinate columns cannot clobber
     them, and written to the layer key dictionary under their original
     names."""
-    from mapnik_vector_tile_spark.operators.encode import encode_geom_layer
-
     reserved = {"z", "x", "y", "tile"}
     key_names: list[str] | None = None
     clash = [c for c in dict.fromkeys([*prop_cols, *( [id_col] if id_col else [] )])
@@ -326,140 +323,58 @@ def build_geom_tiles(
     if id_col:
         slim_cols.append(id_col)
     slim = assigned.select(*dict.fromkeys(slim_cols))
-    cols = ["z", "x", "y", "tile", "n_features", "n_layers", "painted", "n_unresolved"]
-
-    def encode_group(gz: int, gx: int, gy: int, grp: pd.DataFrame) -> tuple:
-        if id_col:
-            grp = grp.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        # surfaces fill-resolver budget fallbacks so wrong-fill outputs
-        # are detectable downstream (r1 advisor finding)
-        stats: dict = {}
-        layer, nf = encode_geom_layer(
-            grp, gz, gx, gy, layer_name, prop_cols,
-            geom_col="_gpk", extent=extent, buffer_px=buffer_px,
-            simplify_distance=simplify_distance,
-            area_threshold=area_threshold,
-            id_col=None,
-            stats=stats,
-            fill_type=fill_type,
-            strictly_simple=strictly_simple,
-            multi_polygon_union=multi_polygon_union,
-            process_all_rings=process_all_rings,
-            key_names=key_names,
-        )
-        unresolved = int(stats.get("budget_exceeded", 0))
-        if nf == 0:
-            return (gz, gx, gy, b"", 0, 0, False, unresolved)
-        tile = pbf.encode_tile([layer])
-        if compress_tiles:
-            tile = Z.compress(tile)
-        return (gz, gx, gy, tile, nf, 1, True, unresolved)
-
-    # declared Spark types of the prop columns: an integer column with
-    # nulls degrades to float64 through Arrow->pandas, which would
-    # silently retype Value variants (int 10 -> double 10.0); the kernel
-    # coerces such columns back per the DECLARED schema
-    int_props = {
-        f.name for f in slim.schema
-        if f.name in prop_cols
-        and f.dataType.simpleString() in ("tinyint", "smallint", "int", "bigint")
-    }
-
-    def coerce(pdf: pd.DataFrame) -> pd.DataFrame:
-        for c in int_props:
-            if pdf[c].dtype.kind == "f":
-                # dtype=object is load-bearing: pandas re-infers
-                # [None, 0] as float64 otherwise
-                pdf = pdf.assign(**{
-                    c: pd.Series(
-                        [None if v != v else int(v) for v in pdf[c]],
-                        dtype=object, index=pdf.index,
-                    )
-                })
-        return pdf
-
-    def kernel(iterator):
-        """Explicitly repartitioned + sorted stream; tiles straddling
-        Arrow batches carry into the next batch (same pattern as the
-        point path — per-group applyInPandas left tail-heavy stages when
-        AQE coalesced the shuffle)."""
-        carry: list[pd.DataFrame] = []
-        carry_key = None
-
-        def keys_of(pdf, i):
-            return (pdf["z"].iloc[i], pdf["x"].iloc[i], pdf["y"].iloc[i])
-
-        def flush(frames) -> list[tuple]:
-            full = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-            # whole-batch ragged kernel: ONE vectorized
-            # simplify/clip/assemble/encode pass over every tile of the
-            # batch (encode._encode_geom_tiles_segmented); None means a
-            # null property value -> per-group fallback lane
-            from mapnik_vector_tile_spark.operators.encode import (
-                _encode_geom_tiles_segmented,
-            )
-
-            rows = (
-                None
-                if (multi_polygon_union or process_all_rings)
-                else _encode_geom_tiles_segmented(
-                    full, layer_name, prop_cols, extent, buffer_px,
-                    simplify_distance, area_threshold, "_gpk", compress_tiles,
-                    fill_type=fill_type, strictly_simple=strictly_simple,
-                    key_names=key_names,
-                )
-            )
-            if rows is not None:
-                return rows
-            out = []
-            for (gz, gx, gy), grp in full.groupby(["z", "x", "y"], sort=False):
-                out.append(encode_group(int(gz), int(gx), int(gy), grp.reset_index(drop=True)))
-            return out
-
-        for pdf in iterator:
-            if len(pdf) == 0:
-                continue
-            pdf = coerce(pdf)
-            if carry:
-                if keys_of(pdf, 0) == carry_key:
-                    same = (
-                        (pdf["z"] == carry_key[0])
-                        & (pdf["x"] == carry_key[1])
-                        & (pdf["y"] == carry_key[2])
-                    ).to_numpy()
-                    split = int(np.argmin(same)) if not same.all() else len(pdf)
-                    carry.append(pdf.iloc[:split])
-                    if split == len(pdf):
-                        continue
-                    rows = flush(carry)
-                    carry, carry_key = [], None
-                    if rows:
-                        yield pd.DataFrame(rows, columns=cols)
-                    pdf = pdf.iloc[split:].reset_index(drop=True)
-                else:
-                    rows = flush(carry)
-                    carry, carry_key = [], None
-                    if rows:
-                        yield pd.DataFrame(rows, columns=cols)
-            lk = keys_of(pdf, len(pdf) - 1)
-            tail_mask = (
-                (pdf["z"] == lk[0]) & (pdf["x"] == lk[1]) & (pdf["y"] == lk[2])
-            ).to_numpy()
-            n_tail = int(tail_mask[::-1].argmin()) if not tail_mask.all() else len(pdf)
-            carry = [pdf.iloc[len(pdf) - n_tail :]]
-            carry_key = lk
-            body = pdf.iloc[: len(pdf) - n_tail]
-            if len(body):
-                rows = flush([body])
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-        if carry:
-            rows = flush(carry)
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
+    kernel = geom_tile_kernel(
+        prop_cols, layer_name, extent, buffer_px, simplify_distance,
+        area_threshold, compress_tiles, fill_type, strictly_simple,
+        multi_polygon_union, process_all_rings, key_names,
+    )
     npart = int(slim.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     clustered = slim.repartition(npart, "z", "x", "y").sortWithinPartitions(
         "z", "x", "y", *([id_col] if id_col else [])
     )
-    return clustered.mapInPandas(kernel, schema=TILE_SCHEMA)
+    return clustered.mapInPandas(
+        E._with_declared_ints(kernel, slim, prop_cols), schema=TILE_SCHEMA
+    )
+
+
+def geom_tile_kernel(
+    prop_cols: list[str],
+    layer_name: str = "layer",
+    extent: int = 4096,
+    buffer_px: int = 0,
+    simplify_distance: float = 0.0,
+    area_threshold: float = 0.1,
+    compress_tiles: bool = True,
+    fill_type: str = "even_odd",
+    strictly_simple: bool = False,
+    multi_polygon_union: bool = False,
+    process_all_rings: bool = False,
+    key_names: list[str] | None = None,
+):
+    """The mapInPandas kernel of build_geom_tiles, exposed so tests can
+    drive it single-core. Frames in: z, x, y, _gpk and the property
+    columns, sorted by (z, x, y, feature order); frames out: TILE_SCHEMA
+    rows through encode.tile_stream (tiles straddling Arrow batches
+    carry into the next batch, as on the point path), each complete run
+    of tiles through one call of the geometry core
+    (encode._encode_geom_groups). n_unresolved counts a tile's
+    fill-resolver budget fallbacks, so wrong-fill outputs are detectable
+    downstream."""
+    cols = ["z", "x", "y", "tile", "n_features", "n_layers", "painted", "n_unresolved"]
+
+    def encode(pdf: pd.DataFrame) -> list[tuple]:
+        groups = E._groups(pdf)
+        layers, unresolved = E._encode_geom_groups(
+            pdf, groups, layer_name, prop_cols, extent, buffer_px,
+            simplify_distance, area_threshold, fill_type=fill_type,
+            strictly_simple=strictly_simple,
+            multi_polygon_union=multi_polygon_union,
+            process_all_rings=process_all_rings, key_names=key_names,
+        )
+        rows = E._tile_rows(groups[0], layers, compress_tiles)
+        return [(*r, int(u)) for r, u in zip(rows, unresolved)]
+
+    def kernel(iterator):
+        return E.tile_stream(iterator, encode, cols)
+
+    return kernel

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from mapnik_vector_tile_spark import tilemath
 from mapnik_vector_tile_spark.functions import compression as Z
+from mapnik_vector_tile_spark.functions import geometry as G
 from mapnik_vector_tile_spark.functions import pbf
 from mapnik_vector_tile_spark.operators import assign, composite, decode, encode
 from mapnik_vector_tile_spark.sources import images as IMG
@@ -109,12 +110,29 @@ def test_tile_binary_is_zlib_and_valid_pbf(tiles):
 
 def test_value_dictionary_type_qualified():
     """int 1, bool True, float 1.0 are distinct dictionary entries
-    (vector_tile_layer.hpp:54-69)."""
-    pdf = pd.DataFrame({"a": [1, 1], "b": [True, True], "c": [1.0, 1.0]})
-    keys, values, tags = encode.build_value_dicts(pdf, ["a", "b", "c"])
-    assert keys == ["a", "b", "c"]
-    assert len(values) == 3  # not collapsed
-    assert [pbf.value_type_tag(v) for v in values] == ["int", "bool", "float"]
+    (vector_tile_layer.hpp:54-69), whether they sit in three columns or
+    mix in one object column (as a re-encoded foreign layer gives)."""
+    pk = G.gpack(("point", np.array([1000.0, 1000.0])))
+    pdf = pd.DataFrame({
+        "_gpk": [pk] * 3,
+        "a": [1, 1, 1], "b": [True] * 3, "c": [1.0] * 3,
+        "k": pd.Series([1, True, 1.0], dtype=object),
+    })
+    layer, nf = encode.encode_geom_layer(
+        pdf, 0, 0, 0, "layer", ["a", "b", "c", "k"], geom_col="_gpk"
+    )
+    meta = pbf.decode_layer(layer)
+    assert nf == 3 and meta["keys"] == ["a", "b", "c", "k"]
+    tags = [pbf.decode_feature(f)["tags"] for f in meta["features"]]
+    typed = [
+        [(meta["keys"][t[i]], pbf.value_type_tag(meta["values"][t[i + 1]]))
+         for i in range(0, len(t), 2)]
+        for t in tags
+    ]
+    assert typed[0] == [("a", "int"), ("b", "bool"), ("c", "float"), ("k", "int")]
+    assert [row[3] for row in typed] == [("k", "int"), ("k", "bool"), ("k", "float")]
+    k_slots = [t[7] for t in tags]
+    assert len(set(k_slots)) == 3  # not collapsed into one value
 
 
 def test_value_float_narrowing():
