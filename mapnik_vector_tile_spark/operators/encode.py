@@ -325,6 +325,21 @@ def _tile_rows(keys: np.ndarray, layers: list, compress_tiles: bool) -> list[tup
 # points
 # ---------------------------------------------------------------------------
 
+def _point_frames(pdf: pd.DataFrame, tags: np.ndarray, rasters=None):
+    """_feature_frames of a quantized point batch (_px/_py set): one
+    POINT feature per row, its tags row (-1 = dropped) and raster."""
+    n = len(pdf)
+    cmds = np.column_stack([
+        np.full(n, 9, dtype=np.uint64),  # MoveTo(1)
+        Cmd.zigzag32(pdf["_px"].to_numpy()).astype(np.uint64),
+        Cmd.zigzag32(pdf["_py"].to_numpy()).astype(np.uint64),
+    ]).reshape(-1)
+    return _feature_frames(
+        tags, np.arange(n), np.full(n, Cmd.POINT, dtype=np.int64), cmds,
+        np.full(n, 3, dtype=np.int64), rasters=rasters,
+    )
+
+
 def _encode_tiles_segmented(
     pdf: pd.DataFrame,
     layer_name: str,
@@ -338,34 +353,15 @@ def _encode_tiles_segmented(
     feature stream packed once for the whole batch, and per-group
     assembly = a couple of byte slices + zlib.
 
-    Requires: rows sorted by (z,x,y); columns _px/_py present. A batch
-    with no null value and no raster takes the dense point writer
-    (pbf.encode_point_features_packed); otherwise the ragged writer
-    drops the null tags and _feature_frames adds the rasters. The two
-    writers give the same bytes on null-free input."""
+    Requires: rows sorted by (z,x,y); columns _px/_py present."""
     n = len(pdf)
     keys, gid, starts = _groups(pdf)
     tags, values = _segmented_value_dicts(
         pdf, prop_cols, gid, np.arange(n) - starts[gid], len(keys)
     )
-    zz = np.column_stack(
-        [Cmd.zigzag32(pdf["_px"].to_numpy()), Cmd.zigzag32(pdf["_py"].to_numpy())]
-    )
-    rasters = _rasters(pdf, raster_col)
-    if rasters is None and (tags >= 0).all():
-        blob, flens = pbf.encode_point_features_packed(tags, zz, return_lengths=True)
-        frame_gid = gid
-    else:
-        cmds = np.column_stack(
-            [np.full(n, 9, dtype=np.uint64), zz.astype(np.uint64)]
-        ).reshape(-1)
-        blob, flens, rows = _feature_frames(
-            tags, np.arange(n), np.full(n, Cmd.POINT, dtype=np.int64), cmds,
-            np.full(n, 3, dtype=np.int64), rasters=rasters,
-        )
-        frame_gid = gid[rows]
+    blob, flens, rows = _point_frames(pdf, tags, _rasters(pdf, raster_col))
     prefix, suffix = _layer_prefix_suffix(layer_name, prop_cols, extent, 2)
-    layers = _group_layers(len(keys), frame_gid, blob, flens, values, prefix, suffix)
+    layers = _group_layers(len(keys), gid[rows], blob, flens, values, prefix, suffix)
     return _tile_rows(keys, layers, compress_tiles)
 
 
@@ -734,16 +730,11 @@ def _hot_piece(pdf: pd.DataFrame, prop_cols: list[str], vbase: int):
         np.concatenate(lens) if lens else np.empty(0, np.int64),
         order,
     )
-    tags = np.column_stack([np.nonzero(valid)[1], vbase + np.arange(nv)]).reshape(-1)
-    cmds = np.column_stack([
-        np.full(n, 9, dtype=np.uint64),
-        Cmd.zigzag32(pdf["_px"].to_numpy()).astype(np.uint64),
-        Cmd.zigzag32(pdf["_py"].to_numpy()).astype(np.uint64),
-    ]).reshape(-1)
-    fblob = pbf.encode_features_packed_ragged(
-        np.full(n, Cmd.POINT, dtype=np.int64), cmds, np.full(n, 3, dtype=np.int64),
-        tags, 2 * valid.sum(axis=1),
-    )
+    c = len(prop_cols)
+    tags = np.full((n, 2 * c), -1, dtype=np.int64)
+    tags[:, 0::2] = np.where(valid, np.arange(c), -1)
+    tags[:, 1::2] = np.where(valid, vbase + (np.cumsum(valid.ravel()) - 1).reshape(n, c), -1)
+    fblob, _, _ = _point_frames(pdf, tags)
     return fblob, gathered.tobytes(), nv
 
 

@@ -307,9 +307,16 @@ def test_geom_layer_empty_when_nothing_survives():
 # the declared integer type through Spark
 # ---------------------------------------------------------------------------
 
-def test_build_point_tiles_keeps_nullable_int_type(spark):
+@pytest.mark.parametrize("hot_threshold,prechunk_hot", [
+    (120_000, False),  # the whole tile in one batch call
+    (1, False),  # hot pieces joined into one tile
+    (1, True),  # hot pieces as standalone tile rows
+])
+def test_build_point_tiles_keeps_nullable_int_type(spark, hot_threshold, prechunk_hot):
     """Arrow hands the kernel a nullable int column as float64 when the
-    batch holds a null; the written Values stay ints."""
+    batch holds a null; the written Values stay ints on every lane. Two
+    rows per Arrow batch: the tile straddles a float64 frame (7, null)
+    and an int64 frame (9), which the hot lanes concatenate."""
     lon = [13.40, 13.41, 13.42]
     lat = [52.52, 52.53, 52.54]
     x, y = tilemath.lonlat_to_tile_np(np.array(lon), np.array(lat), 5)
@@ -318,15 +325,27 @@ def test_build_point_tiles_keeps_nullable_int_type(spark):
         list(zip(["a", "b", "c"], [7, None, 9], lon, lat)),
         "image_id string, rank int, lon double, lat double",
     )
-    tiles = E.build_point_tiles(A.assign_tiles(df, 5), prop_cols=["image_id", "rank"],
-                                order_col="image_id")
-    (row,) = tiles.where(F.col("painted")).collect()
-    meta = pbf.decode_layer(pbf.decode_tile(zlib.decompress(bytes(row["tile"])))[0])
-    ranks = [
-        meta["values"][t[3]]
-        for t in (pbf.decode_feature(f)["tags"] for f in meta["features"])
-        if len(t) == 4
-    ]
-    assert [(pbf.value_type_tag(v), v) for v in ranks] == [("int", 7), ("int", 9)]
-    props = [dict(p) for p in D.decode_tiles(tiles).toPandas()["props"]]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        tiles = E.build_point_tiles(
+            A.assign_tiles(df, 5), prop_cols=["image_id", "rank"], order_col="image_id",
+            hot_threshold=hot_threshold, prechunk_hot=prechunk_hot,
+        )
+        rows = tiles.where(F.col("painted")).collect()
+        props = [dict(p) for p in D.decode_tiles(tiles).toPandas()["props"]]
+    finally:
+        spark.conf.set(conf, saved)
+    assert len(rows) == (3 if prechunk_hot else 1)
+    ranks = []
+    for row in sorted(rows, key=lambda r: bytes(r["tile"])):
+        meta = pbf.decode_layer(pbf.decode_tile(zlib.decompress(bytes(row["tile"])))[0])
+        ranks += [
+            meta["values"][t[3]]
+            for t in (pbf.decode_feature(f)["tags"] for f in meta["features"])
+            if len(t) == 4
+        ]
+    assert sorted((pbf.value_type_tag(v), v) for v in ranks) == [("int", 7), ("int", 9)]
     assert sorted("rank" in p for p in props) == [False, True, True]
+    assert sorted(p["rank"] for p in props if "rank" in p) == ["7", "9"]
