@@ -16,9 +16,11 @@ the resolved polygon set:
      ring orientation then distinguishes exteriors (CCW, positive
      area) from holes.
 
-Cost is O(E^2) in segments — intended for the post-clip per-feature
-scale (tile-space rings are small); the clipper gates it behind a
-vertex budget and falls back to the winding-normalization fast path.
+Step 1 and the clipper's routing predicate (rings_cross: do any two
+segments of a polygon meet?) share one pair enumerator,
+candidate_pairs, so both cost ~O(E) on real rings; the clipper still
+gates the resolver behind a vertex budget and falls back to the
+winding-normalization fast path above it.
 """
 
 from __future__ import annotations
@@ -44,25 +46,35 @@ def _segments(rings: list[np.ndarray]):
     return np.concatenate(p0s), np.concatenate(p1s)
 
 
-def candidate_pairs(P0: np.ndarray, P1: np.ndarray):
+def candidate_pairs(P0: np.ndarray, P1: np.ndarray, group: np.ndarray | None = None):
     """Grid-binned candidate segment pairs (I < J): every genuinely
     intersecting or overlapping pair shares at least one covered grid
     cell (cell coverage = all cells touching the segment bbox), so the
     exact tests downstream see every real hit while skipping the
     quadratic bulk. Long segments covering > 64 cells are tested against
-    everything (rare; keeps the expansion bounded)."""
+    everything in their group (rare; keeps the expansion bounded).
+
+    group (optional, non-decreasing per segment) keeps pairs within a
+    group: each group gets its own grid over its own bbox, about four
+    segments per cell, so a 4-segment ring is one cell (all pairs)."""
     E = len(P0)
     if E < 2:
         return np.empty(0, np.int64), np.empty(0, np.int64)
+    gstart = np.zeros(1, np.int64)
+    if group is not None:
+        gstart = np.concatenate([gstart, np.flatnonzero(group[1:] != group[:-1]) + 1])
+    gsize = np.concatenate([gstart[1:], [E]]) - gstart
+    seg_g = np.repeat(np.arange(len(gstart)), gsize)
     mins = np.minimum(P0, P1)
     maxs = np.maximum(P0, P1)
-    lo = mins.min(axis=0)
-    hi = maxs.max(axis=0)
-    g = max(1, int(np.ceil(np.sqrt(E / 4.0))))
-    span = np.maximum(hi - lo, 1e-9)
-    cw = span / g
-    c0 = np.clip(((mins - lo) / cw).astype(np.int64), 0, g - 1)
-    c1 = np.clip(((maxs - lo) / cw).astype(np.int64), 0, g - 1)
+    lo = np.minimum.reduceat(mins, gstart, axis=0)[seg_g]
+    hi = np.maximum.reduceat(maxs, gstart, axis=0)[seg_g]
+    gn = np.maximum(1, np.ceil(np.sqrt(gsize / 4.0)).astype(np.int64))
+    g = gn[seg_g][:, None]
+    cw = np.maximum(hi - lo, 1e-9) / g
+    # mins, maxs >= lo: only the top edge needs clamping
+    c0 = np.minimum(((mins - lo) / cw).astype(np.int64), g - 1)
+    c1 = np.minimum(((maxs - lo) / cw).astype(np.int64), g - 1)
     ncell = (c1[:, 0] - c0[:, 0] + 1) * (c1[:, 1] - c0[:, 1] + 1)
     big = ncell > 64
     small = np.flatnonzero(~big)
@@ -72,14 +84,16 @@ def candidate_pairs(P0: np.ndarray, P1: np.ndarray):
     if len(small):
         nc = ncell[small]
         segs = np.repeat(small, nc)
-        # enumerate covered cells row-major within each segment's rect
+        # enumerate covered cells row-major within each segment's rect;
+        # cell ids of group k start after the cells of groups < k
         off = np.cumsum(nc) - nc
         loc = np.arange(int(nc.sum())) - off[np.repeat(np.arange(len(small)), nc)]
         w = (c1[small, 0] - c0[small, 0] + 1)
         wrep = np.repeat(w, nc)
         cx = c0[segs, 0] + loc % wrep
         cy = c0[segs, 1] + loc // wrep
-        cell = cy * g + cx
+        cell_base = np.cumsum(gn * gn) - gn * gn
+        cell = cell_base[seg_g[segs]] + cy * g[segs, 0] + cx
         order = np.argsort(cell, kind="stable")
         cell_s = cell[order]
         seg_s = segs[order]
@@ -103,10 +117,11 @@ def candidate_pairs(P0: np.ndarray, P1: np.ndarray):
             pairs_i.append(ii[keep])
             pairs_j.append(jj[keep])
     if len(bigs):
-        # big segments vs everything
-        allidx = np.arange(E)
-        bi = np.repeat(bigs, E)
-        bj = np.tile(allidx, len(bigs))
+        # big segments vs everything in their group
+        n = gsize[seg_g[bigs]]
+        bi = np.repeat(bigs, n)
+        boff = np.cumsum(n) - n
+        bj = np.repeat(gstart[seg_g[bigs]] - boff, n) + np.arange(int(n.sum()))
         ii = np.minimum(bi, bj)
         jj = np.maximum(bi, bj)
         keep = ii != jj
@@ -121,11 +136,67 @@ def candidate_pairs(P0: np.ndarray, P1: np.ndarray):
     return (uk // E).astype(np.int64), (uk % E).astype(np.int64)
 
 
-def _split_params_grid(P0: np.ndarray, P1: np.ndarray) -> list[np.ndarray]:
-    """Grid-pruned sibling of _split_params_all for large inputs: exact
-    same split semantics (proper crossings at interior parameters,
-    collinear overlaps at the other segment's interior endpoints), only
-    the candidate enumeration differs."""
+# candidate pairs per exact-test block: the pair-side temporaries take
+# ~200 bytes a pair, so a block stays near 200 MB whatever the input
+_PAIR_BLOCK = 1 << 20
+
+
+def rings_cross(pts: np.ndarray, ring_len: np.ndarray, ring_group: np.ndarray,
+                ngroups: int) -> np.ndarray:
+    """The fill-resolution predicate (the clipper.hpp:226-231 routing
+    decision) for many polygons in one call: per group (polygon), do any
+    two of its segments properly cross or overlap collinearly?
+
+    pts holds the open rings back to back (ring_len each); ring_group
+    (non-decreasing) names each ring's polygon. Segments i < j of one
+    polygon meet when the sign test says they cross, or when j lies on
+    i's line with an interior parameter overlap; adjacent segments of
+    one ring (wrap-around pair included) never count. Same answers as
+    geometry._needs_fill_resolution_scalar, its test reference."""
+    out = np.zeros(ngroups, dtype=bool)
+    E = len(pts)
+    if E < 2:
+        return out
+    ring_len = np.asarray(ring_len, dtype=np.int64)
+    seg_ring = np.repeat(np.arange(len(ring_len)), ring_len)
+    soff = np.cumsum(ring_len) - ring_len
+    six = np.arange(E) - soff[seg_ring]
+    nring = ring_len[seg_ring]
+    P0 = np.asarray(pts, dtype=np.float64)
+    P1 = P0[np.where(six + 1 < nring, np.arange(E) + 1, soff[seg_ring])]
+    seg_group = np.asarray(ring_group)[seg_ring]
+    I, J = candidate_pairs(P0, P1, seg_group)
+    for s in range(0, len(I), _PAIR_BLOCK):
+        Ii, Jj = I[s:s + _PAIR_BLOCK], J[s:s + _PAIR_BLOCK]
+        a0, a1 = P0[Ii], P1[Ii]
+        b0, b1 = P0[Jj], P1[Jj]
+        ra = a1 - a0
+        rb = b1 - b0
+        d1 = rb[:, 0] * (a0[:, 1] - b0[:, 1]) - rb[:, 1] * (a0[:, 0] - b0[:, 0])
+        d2 = rb[:, 0] * (a1[:, 1] - b0[:, 1]) - rb[:, 1] * (a1[:, 0] - b0[:, 0])
+        d3 = ra[:, 0] * (b0[:, 1] - a0[:, 1]) - ra[:, 1] * (b0[:, 0] - a0[:, 0])
+        d4 = ra[:, 0] * (b1[:, 1] - a0[:, 1]) - ra[:, 1] * (b1[:, 0] - a0[:, 0])
+        hit = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
+        # collinear interior overlap (e.g. the coincident bridge pair of
+        # a double-wound ring): j on i's line, parameter ranges overlap
+        rr = (ra * ra).sum(axis=1)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            tb0 = ((b0 - a0) * ra).sum(axis=1) / rr
+            tb1 = ((b1 - a0) * ra).sum(axis=1) / rr
+        col = ((rr > 0) & (d3 == 0.0) & (d4 == 0.0)
+               & (np.maximum(tb0, tb1) > 0.0) & (np.minimum(tb0, tb1) < 1.0))
+        di = np.abs(six[Ii] - six[Jj])
+        adjacent = (seg_ring[Ii] == seg_ring[Jj]) & ((di <= 1) | (di == nring[Ii] - 1))
+        out[seg_group[Ii[(hit | col) & ~adjacent]]] = True
+    return out
+
+
+def _split_params(P0: np.ndarray, P1: np.ndarray) -> list[np.ndarray]:
+    """Per segment i: sorted split parameters in [0, 1] — proper
+    crossings at interior parameters, collinear overlaps at the other
+    segment's interior endpoints — over the grid-binned candidate pairs
+    (the r1 resolver did this with a Python double loop, which capped
+    the vertex budget at 512)."""
     E = len(P0)
     r = P1 - P0
     rr = (r * r).sum(axis=1)
@@ -133,9 +204,8 @@ def _split_params_grid(P0: np.ndarray, P1: np.ndarray) -> list[np.ndarray]:
     I, J = candidate_pairs(P0, P1)
     if len(I) == 0:
         return [np.array([0.0, 1.0]) for _ in range(E)]
-    for s in range(0, len(I), 4_000_000):
-        e = min(len(I), s + 4_000_000)
-        Ii, Jj = I[s:e], J[s:e]
+    for s in range(0, len(I), _PAIR_BLOCK):
+        Ii, Jj = I[s:s + _PAIR_BLOCK], J[s:s + _PAIR_BLOCK]
         a0 = P0[Ii]
         ra = r[Ii]
         q = P0[Jj] - a0
@@ -164,9 +234,6 @@ def _split_params_grid(P0: np.ndarray, P1: np.ndarray) -> list[np.ndarray]:
                 if 0.0 < tv < 1.0:
                     out[j].append(tv)
     return [np.array(sorted(set([0.0, 1.0] + ts))) for ts in out]
-
-
-_GRID_SPLIT_MIN_SEGS = 1500
 
 
 def _slab_winding_crossings(pts: np.ndarray, P0: np.ndarray, P1: np.ndarray):
@@ -219,50 +286,6 @@ def _slab_winding_crossings(pts: np.ndarray, P0: np.ndarray, P1: np.ndarray):
     np.add.at(wn, prow[downward & hit], -1)
     np.add.at(cr, prow[(upward | downward) & hit], 1)
     return wn, cr
-
-
-def _split_params_all(P0: np.ndarray, P1: np.ndarray) -> list[np.ndarray]:
-    """Per segment i: sorted split parameters t in (0,1) against every
-    other segment — all-pairs vectorized in row blocks (the r1 resolver
-    did this with a Python double loop, which capped the vertex budget
-    at 512)."""
-    E = len(P0)
-    if E > _GRID_SPLIT_MIN_SEGS:
-        return _split_params_grid(P0, P1)
-    r = P1 - P0
-    out: list[list[float]] = [[] for _ in range(E)]
-    if E == 0:
-        return [np.empty(0) for _ in range(E)]
-    block = max(1, min(E, 8_000_000 // max(E, 1)))
-    rr = (r * r).sum(axis=1)
-    for s in range(0, E, block):
-        e = min(E, s + block)
-        a0 = P0[s:e, None, :]      # (B,1,2)
-        ra = r[s:e, None, :]
-        q = P0[None, :, :] - a0    # (B,E,2)
-        sb = r[None, :, :]
-        denom = ra[..., 0] * sb[..., 1] - ra[..., 1] * sb[..., 0]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = (q[..., 0] * sb[..., 1] - q[..., 1] * sb[..., 0]) / denom
-            u = (q[..., 0] * ra[..., 1] - q[..., 1] * ra[..., 0]) / denom
-        proper = (denom != 0.0) & (t > 0.0) & (t < 1.0) & (u >= 0.0) & (u <= 1.0)
-        ii, jj = np.nonzero(proper)
-        for bi, tv in zip(ii, t[ii, jj]):
-            out[s + bi].append(float(tv))
-        # collinear overlaps: split at the other segment's endpoints
-        crossq = q[..., 0] * ra[..., 1] - q[..., 1] * ra[..., 0]
-        col = (denom == 0.0) & (crossq == 0.0) & (rr[s:e, None] > 0)
-        idx = np.arange(e - s)
-        col[idx, s + idx] = False  # a segment never splits itself
-        if col.any():
-            ci, cj = np.nonzero(col)
-            for bi, j in zip(ci, cj):
-                i = s + bi
-                for p in (P0[j], P1[j]):
-                    tv = float((p - P0[i]) @ r[i]) / rr[i]
-                    if 0.0 < tv < 1.0:
-                        out[i].append(tv)
-    return [np.array(sorted(set([0.0, 1.0] + ts))) for ts in out]
 
 
 def _winding_crossings_many(pts: np.ndarray, rings: list[np.ndarray]):
@@ -330,8 +353,8 @@ def resolve_fill(rings: list[np.ndarray], fill_type: str = "even_odd"):
     P0, P1 = _segments(rings)
     if len(P0) == 0:
         return []
-    # 1. split at intersections (all-pairs, vectorized)
-    ts_per_seg = _split_params_all(P0, P1)
+    # 1. split at intersections (grid-binned candidate pairs)
+    ts_per_seg = _split_params(P0, P1)
     pieces = []
     for i, ts in enumerate(ts_per_seg):
         a0, a1 = P0[i], P1[i]

@@ -389,8 +389,8 @@ def decode_geometry_vec_batch_global(
     streams — the shapes every conformant encoder emits (POINT: MoveTo
     blocks only; LINESTRING: [MoveTo(1), LineTo(k>=1)+]*; POLYGON:
     [MoveTo(1), LineTo(k>=2)+, Close]*). Feature fi's stream is
-    geom_vals[geom_off[fi]:geom_off[fi+1]] (pbf.decode_features_batch
-    return_global form).
+    geom_vals[geom_off[fi]:geom_off[fi+1]] (as pbf.decode_features_batch
+    returns it).
 
     A header walk turns the streams into one block table (command,
     count, value start, feature) — the frontier walk for short streams,

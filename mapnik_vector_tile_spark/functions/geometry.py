@@ -1361,8 +1361,9 @@ RESOLVE_VERTEX_BUDGET = 1_000_000
 
 
 def _needs_fill_resolution_scalar(rings) -> bool:
-    """Pure-float small-case twin of the vectorized check below (numpy
-    per-call overhead dominates for the typical 4-8 vertex tile ring)."""
+    """Pure-float twin of booleans.rings_cross: the test reference, and
+    the lane for inputs of <= 16 vertices (numpy per-call overhead
+    dominates for the typical 4-8 vertex tile ring)."""
     segs = []  # (ring id, seg idx, x0, y0, x1, y1)
     nring = []
     for ri, r in enumerate(rings):
@@ -1401,9 +1402,9 @@ def _needs_fill_resolution_scalar(rings) -> bool:
 
 def _needs_fill_resolution(tagged_rings, stats: dict | None = None) -> bool:
     """Proper self-intersections or cross-ring crossings require the
-    boolean resolver; plain exterior+holes assembly does not.
-    All-pairs proper-intersection test, vectorized in row blocks (the
-    r1 Python double loop capped the budget at 512 vertices)."""
+    boolean resolver; plain exterior+holes assembly does not. Tiny
+    inputs take the pure-float twin; the rest run the one vectorized
+    predicate, booleans.rings_cross, as a single group."""
     rings = [np.asarray(r, dtype=np.float64) for _t, r in tagged_rings]
     total = sum(len(r) for r in rings)
     if total > RESOLVE_VERTEX_BUDGET:
@@ -1414,117 +1415,11 @@ def _needs_fill_resolution(tagged_rings, stats: dict | None = None) -> bool:
         return False
     if total <= 16:
         return _needs_fill_resolution_scalar(rings)
-    if total > 2000:
-        return _needs_fill_resolution_grid(rings)
-    p0s, p1s, rids, sidx = [], [], [], []
-    for ri, r in enumerate(rings):
-        rr = np.vstack([r, r[:1]])
-        p0s.append(rr[:-1])
-        p1s.append(rr[1:])
-        rids.append(np.full(len(r), ri))
-        sidx.append(np.arange(len(r)))
-    P0 = np.concatenate(p0s)
-    P1 = np.concatenate(p1s)
-    rid = np.concatenate(rids)
-    six = np.concatenate(sidx)
-    nring = np.array([len(r) for r in rings])
-    E = len(P0)
-    if E == 0:
-        return False
-    block = max(1, min(E, 4_000_000 // E))
-    for s in range(0, E, block):
-        e = min(E, s + block)
-        a0, a1 = P0[s:e, None, :], P1[s:e, None, :]
-        b0, b1 = P0[None, :, :], P1[None, :, :]
-        d1 = (b1[..., 0] - b0[..., 0]) * (a0[..., 1] - b0[..., 1]) - (
-            b1[..., 1] - b0[..., 1]
-        ) * (a0[..., 0] - b0[..., 0])
-        d2 = (b1[..., 0] - b0[..., 0]) * (a1[..., 1] - b0[..., 1]) - (
-            b1[..., 1] - b0[..., 1]
-        ) * (a1[..., 0] - b0[..., 0])
-        d3 = (a1[..., 0] - a0[..., 0]) * (b0[..., 1] - a0[..., 1]) - (
-            a1[..., 1] - a0[..., 1]
-        ) * (b0[..., 0] - a0[..., 0])
-        d4 = (a1[..., 0] - a0[..., 0]) * (b1[..., 1] - a0[..., 1]) - (
-            a1[..., 1] - a0[..., 1]
-        ) * (b1[..., 0] - a0[..., 0])
-        hit = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-        # collinear overlapping edges (e.g. the coincident bridge pair of
-        # a double-wound ring) are also resolver work: same infinite
-        # line + interior parameter overlap
-        ra = a1 - a0
-        qb0 = b0 - a0
-        qb1 = b1 - a0
-        cross0 = ra[..., 0] * qb0[..., 1] - ra[..., 1] * qb0[..., 0]
-        cross1 = ra[..., 0] * qb1[..., 1] - ra[..., 1] * qb1[..., 0]
-        rr = (ra * ra).sum(axis=-1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            tb0 = (qb0 * ra).sum(axis=-1) / rr
-            tb1 = (qb1 * ra).sum(axis=-1) / rr
-        lo = np.minimum(tb0, tb1)
-        hi = np.maximum(tb0, tb1)
-        col_hit = (
-            (cross0 == 0.0) & (cross1 == 0.0) & (rr > 0) & (hi > 0.0) & (lo < 1.0)
-        )
-        same = rid[s:e, None] == rid[None, :]
-        di = np.abs(six[s:e, None] - six[None, :])
-        adjacent = same & ((di <= 1) | (di == (nring[rid] - 1)[None, :]))
-        idx = np.arange(e - s)
-        col_hit[idx, s + idx] = False  # a segment overlaps itself trivially
-        if ((hit | col_hit) & ~adjacent).any():
-            return True
-    return False
+    from mapnik_vector_tile_spark.functions.booleans import rings_cross
 
-
-def _needs_fill_resolution_grid(rings: list[np.ndarray]) -> bool:
-    """Large-input sibling of the blocked all-pairs check: grid-binned
-    candidate pairs (booleans.candidate_pairs) with the SAME proper-
-    crossing + collinear-overlap + adjacency-exclusion semantics. Every
-    genuinely intersecting pair shares a grid cell, so no hit is ever
-    missed."""
-    from mapnik_vector_tile_spark.functions.booleans import candidate_pairs
-
-    p0s, p1s, rids, sidx = [], [], [], []
-    for ri, r in enumerate(rings):
-        rr_ = np.vstack([r, r[:1]])
-        p0s.append(rr_[:-1])
-        p1s.append(rr_[1:])
-        rids.append(np.full(len(r), ri))
-        sidx.append(np.arange(len(r)))
-    P0 = np.concatenate(p0s)
-    P1 = np.concatenate(p1s)
-    rid = np.concatenate(rids)
-    six = np.concatenate(sidx)
-    nring = np.array([len(r) for r in rings])
-    I, J = candidate_pairs(P0, P1)
-    for s_ in range(0, len(I), 4_000_000):
-        e_ = min(len(I), s_ + 4_000_000)
-        Ii, Jj = I[s_:e_], J[s_:e_]
-        a0, a1 = P0[Ii], P1[Ii]
-        b0, b1 = P0[Jj], P1[Jj]
-        d1 = (b1[:, 0] - b0[:, 0]) * (a0[:, 1] - b0[:, 1]) - (
-            b1[:, 1] - b0[:, 1]) * (a0[:, 0] - b0[:, 0])
-        d2 = (b1[:, 0] - b0[:, 0]) * (a1[:, 1] - b0[:, 1]) - (
-            b1[:, 1] - b0[:, 1]) * (a1[:, 0] - b0[:, 0])
-        d3 = (a1[:, 0] - a0[:, 0]) * (b0[:, 1] - a0[:, 1]) - (
-            a1[:, 1] - a0[:, 1]) * (b0[:, 0] - a0[:, 0])
-        d4 = (a1[:, 0] - a0[:, 0]) * (b1[:, 1] - a0[:, 1]) - (
-            a1[:, 1] - a0[:, 1]) * (b1[:, 0] - a0[:, 0])
-        hit = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-        ra = a1 - a0
-        rr = (ra * ra).sum(axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            tb0 = ((b0 - a0) * ra).sum(axis=1) / rr
-            tb1 = ((b1 - a0) * ra).sum(axis=1) / rr
-        lo = np.minimum(tb0, tb1)
-        hi = np.maximum(tb0, tb1)
-        col = (rr > 0) & (d3 == 0.0) & (d4 == 0.0) & (hi > 0.0) & (lo < 1.0)
-        same = rid[Ii] == rid[Jj]
-        di = np.abs(six[Ii] - six[Jj])
-        adjacent = same & ((di <= 1) | (di == (nring[rid[Ii]] - 1)))
-        if ((hit | col) & ~adjacent).any():
-            return True
-    return False
+    return bool(rings_cross(
+        np.concatenate(rings), [len(r) for r in rings], np.zeros(len(rings), np.int64), 1
+    )[0])
 
 
 def _assemble_polygons(
@@ -1578,12 +1473,15 @@ def clip_geom(
     """geometry_clipper dispatch (clipper.hpp:109-366).
 
     fill_type in {even_odd, non_zero, positive, negative} mirrors the
-    Wagyu union fill rule (clipper.hpp:47-63). DEVIATION: this engine
-    resolves rings via box clip + winding normalization only — for
-    non-self-intersecting inputs (the reference's own fill-type test
-    corpus, test/system/round_trip_fill_type.cpp) all four rules yield
-    identical output, which the goldens pin; genuinely self-intersecting
-    rings are not re-normalized (documented gap)."""
+    Wagyu union fill rule (clipper.hpp:47-63). Simple rings take box
+    clip + winding normalization (for them all four rules agree, as the
+    reference's fill-type corpus, test/system/round_trip_fill_type.cpp,
+    and the goldens pin). Rings that self-intersect or cross each other
+    (booleans.rings_cross), and every polygon under strictly_simple, go
+    through the boolean fill resolver (booleans.resolve_fill) in
+    _assemble_polygons, where the fill rule decides; inputs over
+    RESOLVE_VERTEX_BUDGET vertices stay on the fast path (counted in
+    stats["budget_exceeded"])."""
     if fill_type not in ("even_odd", "non_zero", "positive", "negative"):
         raise ValueError(f"unknown fill_type {fill_type!r}")
     kind, val = geom

@@ -403,7 +403,7 @@ def decode_feature_arrays(data: bytes) -> dict:
     return out
 
 
-def decode_features_batch(feature_msgs: list[bytes], return_global: bool = False):
+def decode_features_batch(feature_msgs: list[bytes]):
     """Batch feature-message parse: the field walk of EVERY feature of a
     layer runs as a masked vectorized cursor (a feature has <=6 frames,
     so the walk is ~6 read_varints_at steps however many features there
@@ -412,23 +412,26 @@ def decode_features_batch(feature_msgs: list[bytes], return_global: bool = False
     (decode_feature_arrays) costs more than the actual geometry decode
     on dense small-feature tiles — this removes it.
 
-    Returns a list of decode_feature_arrays-shaped dicts, or None when
-    any feature's wire shape defeats the lockstep walk (repeated
-    fields, unknown tags, >12 frames) — the caller then parses each
-    feature individually."""
+    Returns one dict of layer-wide arrays — no per-feature objects:
+    ids, types, the global geometry and tag value arrays with their
+    per-feature offsets (geom_off / tag_off), raster spans into buf —
+    or None when any feature's wire shape defeats the lockstep walk
+    (repeated fields, unknown tags, >12 frames); the caller then parses
+    each feature individually. Callers pair it with
+    commands.decode_geometry_vec_batch_global, which walks the global
+    geometry array directly via geom_off (the frontier walk for short
+    streams, the periodic-run walk for long ones)."""
     n = len(feature_msgs)
     if n == 0:
-        if return_global:
-            z = np.zeros(0, dtype=np.int64)
-            return {
-                "n": 0, "ids": z, "types": z,
-                "geom_vals": np.zeros(0, dtype=np.uint64),
-                "geom_off": np.zeros(1, dtype=np.int64),
-                "tag_vals": z, "tag_off": np.zeros(1, dtype=np.int64),
-                "rast_s": z, "rast_l": z,
-                "buf": np.zeros(0, dtype=np.uint8),
-            }
-        return []
+        z = np.zeros(0, dtype=np.int64)
+        return {
+            "n": 0, "ids": z, "types": z,
+            "geom_vals": np.zeros(0, dtype=np.uint64),
+            "geom_off": np.zeros(1, dtype=np.int64),
+            "tag_vals": z, "tag_off": np.zeros(1, dtype=np.int64),
+            "rast_s": z, "rast_l": z,
+            "buf": np.zeros(0, dtype=np.uint8),
+        }
     lens = np.fromiter((len(m) for m in feature_msgs), dtype=np.int64, count=n)
     ends = np.cumsum(lens)
     starts = ends - lens
@@ -518,38 +521,18 @@ def decode_features_batch(feature_msgs: list[bytes], return_global: bool = False
     geom_off = np.concatenate([[0], np.cumsum(geom_counts)])
     tag_off = np.concatenate([[0], np.cumsum(tag_counts)])
 
-    if return_global:
-        # zero per-feature objects: callers pair this with
-        # commands.decode_geometry_vec_batch_global, which walks the
-        # global geometry array directly via geom_off (the frontier
-        # walk for short streams, the periodic-run walk for long ones)
-        return {
-            "n": n,
-            "ids": ids,
-            "types": types,
-            "geom_vals": geom_vals,
-            "geom_off": geom_off,
-            "tag_vals": tag_vals.astype(np.int64),
-            "tag_off": tag_off,
-            "rast_s": rast_s,
-            "rast_l": rast_l,
-            "buf": buf,
-        }
-
-    out = []
-    tag_list = tag_vals.astype(np.int64)
-    for i in range(n):
-        out.append({
-            "id": int(ids[i]),
-            "tags": tag_list[tag_off[i] : tag_off[i + 1]].tolist(),
-            "type": int(types[i]),
-            "geometry": geom_vals[geom_off[i] : geom_off[i + 1]],
-            "raster": (
-                buf[rast_s[i] : rast_s[i] + rast_l[i]].tobytes()
-                if rast_s[i] >= 0 else None
-            ),
-        })
-    return out
+    return {
+        "n": n,
+        "ids": ids,
+        "types": types,
+        "geom_vals": geom_vals,
+        "geom_off": geom_off,
+        "tag_vals": tag_vals.astype(np.int64),
+        "tag_off": tag_off,
+        "rast_s": rast_s,
+        "rast_l": rast_l,
+        "buf": buf,
+    }
 
 
 # --- vectorized packing (hot path for point layers) ---------------------------
@@ -1058,31 +1041,6 @@ def split_layer_chunks(layer_bytes: bytes, chunk_bytes: int) -> list[bytes]:
     if len(breaks) <= 2:
         return [data]
     return [hdr + region[a:b] for a, b in zip(breaks, breaks[1:])]
-
-
-def split_tile_chunks(tile_data: bytes, chunk_bytes: int) -> list[bytes]:
-    """One UNCOMPRESSED tile message -> >=1 standalone tile messages:
-    each output carries exactly one (mini-)layer. Small layers pass
-    through whole; a layer larger than chunk_bytes is cut on feature
-    boundaries via split_layer_chunks. The union of the chunks' decoded
-    rows equals the original tile's."""
-    out: list[bytes] = []
-    for layer_bytes in decode_tile(tile_data):
-        if len(layer_bytes) <= chunk_bytes:
-            parts = [layer_bytes]
-        else:
-            try:
-                parts = split_layer_chunks(layer_bytes, chunk_bytes)
-            except (IndexError, ValueError):
-                # hostile/truncated framing (ADVICE r5): ship the layer
-                # whole — the decode stage owns the error semantics, same
-                # as split_tile_chunks_smart's fallback
-                parts = [layer_bytes]
-        for p in parts:
-            buf = bytearray()
-            add_len_field(buf, 3, p)
-            out.append(bytes(buf))
-    return out if out else [tile_data]
 
 
 # ---------------------------------------------------------------------------

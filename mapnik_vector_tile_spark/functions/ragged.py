@@ -26,6 +26,7 @@ from __future__ import annotations
 import numpy as np
 
 from mapnik_vector_tile_spark.functions import geometry as G
+from mapnik_vector_tile_spark.functions.booleans import rings_cross
 from mapnik_vector_tile_spark.functions.commands import zigzag32
 
 # path types
@@ -850,97 +851,31 @@ def process_polygons(b: Batch, fkind: np.ndarray, finside: np.ndarray,
 # Polygon fill-resolution check (clipper.hpp:226-231 routing decision)
 # ---------------------------------------------------------------------------
 
-_VEC_CHECK_MAX_VERTS = 256     # per-poly; bigger polys use the scalar check
-_PAIR_CHUNK = 2_000_000
-
-
 def needs_fill_resolution_batch(b: Batch, poly_rows: np.ndarray):
     """For each distinct ppoly among poly_rows (surviving ring paths):
-    does the polygon need the boolean fill resolver? Mirrors
-    geometry._needs_fill_resolution exactly (proper crossings +
-    collinear interior overlap, adjacency-excluded,
-    RESOLVE_VERTEX_BUDGET). Returns (polys, needs, over_budget) — the
-    caller attributes over_budget to stats, skipping ejected features
-    (whose scalar rerun re-counts them)."""
+    does the polygon need the boolean fill resolver? Every under-budget
+    polygon goes through booleans.rings_cross in one call (one group
+    per polygon); polygons over RESOLVE_VERTEX_BUDGET stay on the fast
+    path. Returns (polys, needs, over_budget) — the caller attributes
+    over_budget to stats, skipping ejected features (whose scalar rerun
+    re-counts them)."""
     polys = np.unique(b.ppoly[poly_rows])
-    result = np.zeros(len(polys), dtype=bool)
     if len(polys) == 0:
-        return polys, result, result
-    starts = b.starts()
-    totals = np.zeros(len(polys), dtype=np.int64)
+        none = np.zeros(0, dtype=bool)
+        return polys, none, none
     ppos = np.searchsorted(polys, b.ppoly[poly_rows])
+    totals = np.zeros(len(polys), dtype=np.int64)
     np.add.at(totals, ppos, b.plen[poly_rows])
     over = totals > G.RESOLVE_VERTEX_BUDGET
-    big = (totals > _VEC_CHECK_MAX_VERTS) & ~over
-    if big.any():
-        for gi in np.flatnonzero(big):
-            rows = poly_rows[b.ppoly[poly_rows] == polys[gi]]
-            rings = [
-                ("x", b.pts[starts[r]: starts[r] + b.plen[r]].astype(np.float64))
-                for r in rows
-            ]
-            result[gi] = G._needs_fill_resolution(rings, stats=None)
-    small_sel = (~big & ~over)[ppos]
-    srows = poly_rows[small_sel]
-    if len(srows) == 0:
-        return polys, result, over
-    order = np.argsort(b.ppoly[srows], kind="stable")
-    srows = srows[order]
-    slen = b.plen[srows]
-    E = int(slen.sum())
-    seg_ring = np.repeat(np.arange(len(srows)), slen)
-    soff = np.cumsum(slen) - slen
-    s_local = np.arange(E) - soff[seg_ring]
-    g0 = starts[srows][seg_ring] + s_local
-    nxt = np.where(s_local + 1 < slen[seg_ring], s_local + 1, 0)
-    g1 = starts[srows][seg_ring] + nxt
-    P0 = b.pts[g0].astype(np.float64)
-    P1 = b.pts[g1].astype(np.float64)
-    seg_poly = b.ppoly[srows][seg_ring]
-    nring = slen[seg_ring]
-    _ids, counts = np.unique(seg_poly, return_counts=True)
-    block_end = np.repeat(np.cumsum(counts), counts)
-    cnt = block_end - np.arange(E) - 1
-    T = int(cnt.sum())
-    if T == 0:
-        return polys, result, over
-    # pair index construction robust to cnt==0 rows
-    I_full = np.repeat(np.arange(E), cnt)
-    coff = np.cumsum(cnt) - cnt
-    J_full = np.arange(T) - coff[I_full] + I_full + 1
-    poly_pos = {int(p): i for i, p in enumerate(polys)}
-    for cs in range(0, T, _PAIR_CHUNK):
-        ce = min(T, cs + _PAIR_CHUNK)
-        I = I_full[cs:ce]
-        J = J_full[cs:ce]
-        a0, a1 = P0[I], P1[I]
-        c0, c1p = P0[J], P1[J]
-        d1 = (c1p[:, 0] - c0[:, 0]) * (a0[:, 1] - c0[:, 1]) - (
-            c1p[:, 1] - c0[:, 1]) * (a0[:, 0] - c0[:, 0])
-        d2 = (c1p[:, 0] - c0[:, 0]) * (a1[:, 1] - c0[:, 1]) - (
-            c1p[:, 1] - c0[:, 1]) * (a1[:, 0] - c0[:, 0])
-        d3 = (a1[:, 0] - a0[:, 0]) * (c0[:, 1] - a0[:, 1]) - (
-            a1[:, 1] - a0[:, 1]) * (c0[:, 0] - a0[:, 0])
-        d4 = (a1[:, 0] - a0[:, 0]) * (c1p[:, 1] - a0[:, 1]) - (
-            a1[:, 1] - a0[:, 1]) * (c1p[:, 0] - a0[:, 0])
-        hit = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-        rx = a1[:, 0] - a0[:, 0]
-        ry = a1[:, 1] - a0[:, 1]
-        rr = rx * rx + ry * ry
-        with np.errstate(divide="ignore", invalid="ignore"):
-            tb0 = ((c0[:, 0] - a0[:, 0]) * rx + (c0[:, 1] - a0[:, 1]) * ry) / rr
-            tb1 = ((c1p[:, 0] - a0[:, 0]) * rx + (c1p[:, 1] - a0[:, 1]) * ry) / rr
-        lo = np.minimum(tb0, tb1)
-        hi = np.maximum(tb0, tb1)
-        col = (rr > 0) & (d3 == 0.0) & (d4 == 0.0) & (hi > 0.0) & (lo < 1.0)
-        same = seg_ring[I] == seg_ring[J]
-        di = np.abs(s_local[I] - s_local[J])
-        adjacent = same & ((di <= 1) | (di == nring[I] - 1))
-        bad = (hit | col) & ~adjacent
-        if bad.any():
-            for pg in np.unique(seg_poly[I[bad]]):
-                result[poly_pos[int(pg)]] = True
-    return polys, result, over
+    keep = np.flatnonzero(~over[ppos])
+    sel = keep[np.argsort(ppos[keep], kind="stable")]  # rings grouped by polygon
+    slen = b.plen[poly_rows[sel]]
+    starts = b.starts()[poly_rows[sel]]
+    # the rings back to back: point k of ring r is b.pts[starts[r] + k]
+    seg_ring = np.repeat(np.arange(len(sel)), slen)
+    gather = starts[seg_ring] + np.arange(int(slen.sum())) - (np.cumsum(slen) - slen)[seg_ring]
+    needs = rings_cross(b.pts[gather], slen, ppos[sel], len(polys))
+    return polys, needs, over
 
 
 # ---------------------------------------------------------------------------

@@ -46,7 +46,7 @@ DECODED_SCHEMA = (
 class _LayerBatch:
     """Per-layer decode state of _layer_features: feature fields as
     GLOBAL flat arrays when the lockstep wire walk holds
-    (pbf.decode_features_batch return_global), falling back to parsing
+    (pbf.decode_features_batch), falling back to parsing
     each feature message alone on few big features and exotic wire
     shapes. Either way every geometry goes through ONE vectorized
     decode (commands.decode_geometry_vec_batch_global, or its list entry
@@ -66,7 +66,7 @@ class _LayerBatch:
         few_big = len(msgs) > 0 and sum(len(m) for m in msgs) > 2048 * len(msgs)
         fb = (
             None if few_big
-            else pbf.decode_features_batch(msgs, return_global=True)
+            else pbf.decode_features_batch(msgs)
         )
         self._fb = fb
         if fb is not None:
@@ -455,9 +455,13 @@ def _split_uniform_from_sections(data: bytes, chunk_bytes: int, sec):
 
 
 def split_tile_chunks_smart(tile_data: bytes, chunk_bytes: int) -> list[bytes]:
-    """pbf.split_tile_chunks with the dictionary-slicing lane for this
-    engine's uniform point layers; any other layer shape takes the
-    generic feature-frame split with the full header repeated."""
+    """One UNCOMPRESSED tile message -> >=1 standalone tile messages,
+    each carrying exactly one (mini-)layer. Small layers pass through
+    whole; a layer larger than chunk_bytes is cut on feature boundaries:
+    this engine's uniform point layers by the dictionary-slicing lane,
+    any other layer shape by the generic feature-frame split
+    (pbf.split_layer_chunks) with the full header repeated. The union of
+    the chunks' decoded rows equals the original tile's."""
     out: list[bytes] = []
     for layer_bytes in pbf.decode_tile(tile_data):
         if len(layer_bytes) <= chunk_bytes:

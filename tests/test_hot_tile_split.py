@@ -95,7 +95,7 @@ def test_split_layer_chunks_small_layer_passthrough():
 def test_split_tile_chunks_multi_layer():
     la, lb = _dense_point_layer(400, seed=1), _dense_point_layer(5, seed=2)
     tile = pbf.encode_tile([la, lb])
-    chunks = pbf.split_tile_chunks(tile, 1024)
+    chunks = decode.split_tile_chunks_smart(tile, 1024)
     assert len(chunks) > 2
     names = []
     n_feats = 0
@@ -112,12 +112,12 @@ def test_split_tile_chunks_multi_layer():
 def test_split_tile_chunks_hostile_framing_passthrough():
     """ADVICE r5: truncated/hostile feature framing inside an oversized
     layer must ship the layer whole (decode owns error semantics), not
-    raise out of pbf.split_tile_chunks."""
+    raise out of decode.split_tile_chunks_smart."""
     layer = bytearray(_dense_point_layer(400, seed=3))
     # truncate mid-feature: the frame walk would overrun the region end
     layer = bytes(layer[:-7])
     tile = pbf.encode_tile([layer])
-    chunks = pbf.split_tile_chunks(tile, 1024)
+    chunks = decode.split_tile_chunks_smart(tile, 1024)
     assert len(chunks) == 1
     assert pbf.decode_tile(chunks[0]) == [layer]
 
