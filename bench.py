@@ -600,7 +600,7 @@ def decode_real_tile_anchor() -> dict:
                 kw = dict(version=lay["version"], tile_x=float(minx), tile_y=float(maxy),
                           scale_x=scale, scale_y=-scale)
                 for fm in lay["features"]:
-                    f = P.decode_feature_arrays(fm)
+                    f = P.decode_feature(fm)
                     if not len(f["geometry"]):
                         continue
                     g = Cmd.decode_geometry_vec_batch([f["geometry"]], [f["type"]], **kw)[0]

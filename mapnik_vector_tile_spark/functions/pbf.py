@@ -323,48 +323,12 @@ def decode_layer(data: bytes) -> dict:
 
 
 def decode_feature(data: bytes) -> dict:
-    pos = 0
-    out = {"id": 0, "tags": [], "type": 0, "geometry": [], "raster": None}
-    while pos < len(data):
-        t, pos = read_varint(data, pos)
-        field, wire = t >> 3, t & 0x7
-        if field == 1 and wire == WT_VARINT:
-            out["id"], pos = read_varint(data, pos)
-        elif field == 2 and wire == WT_LEN:
-            ln, pos = read_varint(data, pos)
-            end = pos + ln
-            tags = []
-            while pos < end:
-                v, pos = read_varint(data, pos)
-                tags.append(v)
-            out["tags"] = tags
-        elif field == 3 and wire == WT_VARINT:
-            out["type"], pos = read_varint(data, pos)
-        elif field == 4 and wire == WT_LEN:
-            ln, pos = read_varint(data, pos)
-            end = pos + ln
-            geom = []
-            while pos < end:
-                v, pos = read_varint(data, pos)
-                geom.append(v)
-            out["geometry"] = geom
-        elif field == 5 and wire == WT_LEN:
-            ln, pos = read_varint(data, pos)
-            out["raster"] = data[pos : pos + ln]
-            pos += ln
-        else:
-            pos = skip_field(data, pos, wire)
-    return out
-
-
-def decode_feature_arrays(data: bytes) -> dict:
-    """decode_feature twin that decodes a LARGE packed geometry field
-    with decode_varints_vec (one vectorized pass) instead of the
-    per-varint Python loop — the reference's decode-bench tiles carry
-    ~1.3 MB of geometry varints in a handful of features
-    (bench/readme.md), where the scalar loop alone costs seconds.
-    "geometry" is then a uint64 ndarray; small geometries keep the
-    list form (conversion overhead dominates below ~128 bytes)."""
+    """Strict scalar Feature parse (the test reference of
+    decode_features_batch). A geometry field of >= 128 bytes decodes in
+    one decode_varints_vec pass and comes back as a uint64 ndarray (the
+    reference's bench tiles carry ~1.3 MB of geometry varints in a
+    handful of features, where a per-varint loop costs seconds);
+    shorter ones stay a list. Callers test len(), not truthiness."""
     pos = 0
     out = {"id": 0, "tags": [], "type": 0, "geometry": [], "raster": None}
     while pos < len(data):
@@ -385,15 +349,17 @@ def decode_feature_arrays(data: bytes) -> dict:
         elif field == 4 and wire == WT_LEN:
             ln, pos = read_varint(data, pos)
             if ln >= 128:
+                if pos + ln > len(data):
+                    raise ValueError("truncated geometry field")
                 out["geometry"] = decode_varints_vec(data[pos : pos + ln])
                 pos += ln
-            else:
-                end = pos + ln
-                geom = []
-                while pos < end:
-                    v, pos = read_varint(data, pos)
-                    geom.append(v)
-                out["geometry"] = geom
+                continue
+            end = pos + ln
+            geom = []
+            while pos < end:
+                v, pos = read_varint(data, pos)
+                geom.append(v)
+            out["geometry"] = geom
         elif field == 5 and wire == WT_LEN:
             ln, pos = read_varint(data, pos)
             out["raster"] = data[pos : pos + ln]
@@ -409,8 +375,8 @@ def decode_features_batch(feature_msgs: list[bytes]):
     so the walk is ~6 read_varints_at steps however many features there
     are), and all geometry/tags payloads decode through ONE
     decode_varints_vec pass each. The per-feature Python message walk
-    (decode_feature_arrays) costs more than the actual geometry decode
-    on dense small-feature tiles — this removes it.
+    (decode_feature, the strict reference) costs more than the actual
+    geometry decode on dense small-feature tiles — this removes it.
 
     Returns one dict of layer-wide arrays — no per-feature objects:
     ids, types, the global geometry and tag value arrays with their
@@ -889,64 +855,6 @@ def decode_varints_vec(data: bytes, return_lengths: bool = False):
     return vals
 
 
-def layer_features_region(data: bytes) -> tuple[dict, bytes | None]:
-    """decode_layer variant that additionally returns the features
-    region as ONE contiguous byte slice when all Feature fields are
-    adjacent (always true for this engine's encoders). The per-feature
-    walk then collapses into a single vectorized varint decode."""
-    pos = 0
-    out = {"name": None, "version": 1, "extent": 4096, "keys": [], "values": []}
-    feat_start = feat_end = None
-    contiguous = True
-    while pos < len(data):
-        t, pos = read_varint(data, pos)
-        field, wire = t >> 3, t & 0x7
-        if field == 2 and wire == WT_LEN:
-            tag_pos = pos - 1  # the 0x12 frame tag is one byte
-            if feat_start is None:
-                # this engine writes all features as the layer suffix:
-                # if every remaining byte belongs to feature frames the
-                # vectorized decoder's structure checks will confirm it
-                # (and reject trailing fields), so take the rest and stop
-                feat_start = tag_pos
-                feat_end = len(data)
-                return out, data[feat_start:feat_end]
-            ln, pos = read_varint(data, pos)
-            pos += ln
-            feat_end = pos
-        elif field == 1 and wire == WT_LEN:
-            ln, pos = read_varint(data, pos)
-            out["name"] = data[pos : pos + ln].decode("utf-8")
-            pos += ln
-        elif field == 15 and wire == WT_VARINT:
-            out["version"], pos = read_varint(data, pos)
-            out["_seen_ver"] = True
-        elif field == 5 and wire == WT_VARINT:
-            out["extent"], pos = read_varint(data, pos)
-            out["_seen_ext"] = True
-        elif field == 3 and wire == WT_LEN:
-            ln, pos = read_varint(data, pos)
-            out["keys"].append(data[pos : pos + ln].decode("utf-8"))
-            pos += ln
-        elif field == 4 and wire == WT_LEN:
-            ln, pos = read_varint(data, pos)
-            # inline fast path for the dominant case: Value{string=..}
-            if ln >= 2 and data[pos] == 0x0A:
-                slen, spos = read_varint(data, pos + 1)
-                if spos + slen == pos + ln:
-                    out["values"].append(data[spos : spos + slen].decode("utf-8"))
-                    pos += ln
-                    continue
-            out["values"].append(decode_value(data[pos : pos + ln]))
-            pos += ln
-        else:
-            pos = skip_field(data, pos, wire)
-    if out["name"] is None:
-        raise ValueError("layer missing required name (v2 check)")
-    region = data[feat_start:feat_end] if contiguous and feat_start is not None else None
-    return out, region
-
-
 # ---------------------------------------------------------------------------
 # hot-layer span split (J3/S2 scale path): feature messages are
 # independently framed after the layer header, so a monolithic layer can
@@ -1048,8 +956,10 @@ def split_layer_chunks(layer_bytes: bytes, chunk_bytes: int) -> list[bytes]:
 # worst-case decode cost (r1 VERDICT: 2.1x off the reference's 481k feats/s
 # per core, bench/readme.md:24-30). This walks the headers of a WHOLE batch
 # of layers with masked numpy cursors — cost per step is O(active layers),
-# and steps = max frame count, not sum. Layers with exotic shapes (unknown
-# fields, huge frame counts) drop out to the per-layer Python fallback.
+# and steps = max frame count, not sum. A layer still walking after the
+# step budget (a dense layer's long value run) finishes on
+# layer_header_hop; a layer with an unknown field drops out to the caller's
+# strict decode_layer lane.
 # ---------------------------------------------------------------------------
 
 def read_varints_at(buf: np.ndarray, pos: np.ndarray):
@@ -1127,10 +1037,12 @@ def uniform_point_columns(data, c: int):
     verification is exactly _packed_rows_ok's, column for column.
 
     Returns (vidx (n,c) uint64, zz (n,2) uint32, row_ok (n,) bool) or
-    None when the stream does not even frame as n*w varints (caller
-    falls back to the generic walk). row_ok flags rows whose constant
-    bytes or declared lengths fail — callers keep their per-layer
-    fallback semantics for concatenated multi-layer regions."""
+    None when the stream does not even frame as n*w varints (the
+    columnar kernel then sends its layers to the strict decode_layer
+    lane, the hot-tile split to pbf.split_layer_chunks). row_ok flags
+    rows whose constant bytes or declared lengths fail — callers keep
+    their per-layer fallback semantics for concatenated multi-layer
+    regions."""
     buf = data if isinstance(data, np.ndarray) else np.frombuffer(data, dtype=np.uint8)
     if len(buf) == 0 or c < 0 or c > 127:
         return None
@@ -1192,247 +1104,84 @@ def uniform_point_columns(data, c: int):
     return vidx, zz, row_ok
 
 
-def _chain_finish(buf, starts, ends, pos, straggler_idx,
-                  name_s, name_l, extent, version, seen_ext, seen_ver,
-                  feat_start, ok, rec_layer, rec_field, rec_ps, rec_pl):
-    """Vectorized finisher for layers whose header has more frames than
-    the masked walk's step budget (many-value layers — the dense-tile
-    shape, bench/readme.md:24-30). Strategy:
+def layer_header_hop(data: bytes, pos: int = 0):
+    """Scalar hop over one layer message's header frames, from byte
+    `pos` up to the first Feature frame: decode_layer's walk with the
+    payloads left unread (callers read every frame's span afterwards in
+    one vectorized pass, read_varints_at at frame start + 1). A run of
+    Value frames — the bulk of a dense header — costs two byte reads
+    per frame.
 
-      1. candidate positions = bytes matching a valid single-byte layer
-         tag (0x0A name / 0x12 feature / 0x1A key / 0x22 value /
-         0x28 extent / 0x78 version) in the unconsumed regions;
-      2. per-candidate next-frame pointer (lean vectorized varints);
-      3. sieve rounds drop junk candidates (payload bytes) whose
-         pointer does not land on another live candidate or the region
-         end — true frames always survive;
-      4. pointer-doubling enumeration of each layer's chain FROM ITS
-         TRUE WALK POSITION over the sieved set: the orbit follows true
-         pointers only, so junk candidates are simply unreachable and
-         the enumerated frames are exactly the frame sequence a
-         sequential parse would visit, cut at the first Feature frame.
-
-    Mutates the caller's per-layer arrays / record lists like the
-    masked walk; returns rows for the per-layer Python fallback
-    (chains past the cap or malformed mid-chain)."""
-    S = len(straggler_idx)
-    if S == 0:
-        return []
-    B = len(buf)
-    p0 = pos[straggler_idx]
-    pend = ends[straggler_idx]
-
-    # 1. candidates over the straggler regions. 0x0A (name) is NOT a
-    # candidate: the masked walk always consumes the name frame in its
-    # first steps, and every Value message payload starts with 0x0A —
-    # including it would double the candidate set. A (foreign) layer
-    # whose name appears this late breaks its chain on the missing
-    # candidate and takes the Python fallback — slower, never wrong.
-    is_tag = (
-        (buf == 0x12) | (buf == 0x1A)
-        | (buf == 0x22) | (buf == 0x28) | (buf == 0x78)
-    )
-    cand_all = np.flatnonzero(is_tag)
-    lo = np.searchsorted(cand_all, p0)
-    hi = np.searchsorted(cand_all, pend)
-    seg = hi - lo
-    take = np.repeat(lo, seg) + (np.arange(int(seg.sum())) -
-                                 np.repeat(np.cumsum(seg) - seg, seg))
-    cand = cand_all[take]
-    crow = np.repeat(np.arange(S), seg)
-    C = len(cand)
-    if C == 0:
-        return [int(i) for i in straggler_idx]
-
-    # 2. next-frame pointers (lean varint at cand+1, bounds-guarded).
-    # Lanes compact each round: 1-byte varints (ASCII payload junk and
-    # most real lengths) exit after round one, so later rounds touch
-    # only the long-varint tail.
-    cend = pend[crow]
-    limit = np.minimum(cend, B)
-    q0 = cand + 1
-    val = np.zeros(C, dtype=np.int64)
-    ln = np.zeros(C, dtype=np.int64)
-    idx = np.flatnonzero(q0 < limit)
-    q = q0[idx]
-    shift = 0
-    while len(idx) and shift < 70:
-        bb = buf[q].astype(np.int64)
-        val[idx] |= (bb & 0x7F) << shift
-        ln[idx] += 1
-        q = q + 1
-        cont = bb >= 128
-        still = cont & (q < limit[idx])
-        ln[idx[cont & ~still]] = 0
-        idx = idx[still]
-        q = q[still]
-        shift += 7
-    ln[idx] = 0
-    tagb = buf[cand].astype(np.int64)
-    wire0 = (tagb == 0x28) | (tagb == 0x78)
-    nxt = np.where(wire0, cand + 1 + ln, cand + 1 + ln + val)
-    valid = (ln > 0) & (nxt <= cend)
-
-    # 3. sieve (pure shrink; correctness comes from the orbit in step 4).
-    # Membership via an O(1) byte-position mask — searchsorted over the
-    # full candidate set per round dominated the dense-tile profile.
-    mask_at = np.zeros(B + 1, dtype=bool)
-    mask_at[cand[valid]] = True
-    alive = valid.copy()
-    live_idx = np.flatnonzero(valid)
-    for _ in range(3):
-        if len(live_idx) == 0:
-            break
-        keep = mask_at[nxt[live_idx]] | (nxt[live_idx] == cend[live_idx])
-        if keep.all():
-            break
-        died = live_idx[~keep]
-        mask_at[cand[died]] = False
-        alive[died] = False
-        live_idx = live_idx[keep]
-
-    scand = cand[alive]
-    snxt = nxt[alive]
-    stag = tagb[alive]
-    sval = val[alive]
-    sln = ln[alive]
-    scend = cend[alive]
-    srow_local = crow[alive]
-    Cs = len(scand)
-    DONE, BAD = Cs, Cs + 1
-    # 4. jump table over survivors
-    jump = np.full(Cs + 2, BAD, dtype=np.int64)
-    jump[DONE] = DONE
-    jump[BAD] = BAD
-    pos2idx = np.full(B + 1, -1, dtype=np.int32)
-    if Cs:
-        pos2idx[scand] = np.arange(Cs, dtype=np.int32)
-        ni = pos2idx[snxt]
-        hitm = ni >= 0
-        jump[:Cs][hitm] = ni[hitm]
-        jump[:Cs][~hitm & (snxt == scend)] = DONE
-        # feature frames terminate the walk regardless of their pointer
-        jump[:Cs][stag == 0x12] = DONE
-
-    sidx = pos2idx[p0].astype(np.int64)
-    s_ok = sidx >= 0
-    py_rows = [int(i) for i in straggler_idx[~s_ok]]
-    rows_sel = np.flatnonzero(s_ok)
-    if len(rows_sel) == 0:
-        return py_rows
-
-    frames_parts: list[np.ndarray] = []
-    frow_parts: list[np.ndarray] = []
-
-    # 4a. linear-chain fast path: in a well-formed layer the sieved
-    # survivors ARE the frame chain in byte order — jump[i] == i+1 up to
-    # the terminating frame — so the orbit is an arange. One ragged
-    # verification pass replaces the O(log n) pointer-doubling matrices
-    # (the dense-tile profile's hot spot). Rows that deviate (junk
-    # survivors, malformed chains) fall through to the doubling orbit.
-    start = sidx[rows_sel]
-    done_pos = np.flatnonzero(jump[:Cs] == DONE)
-    lin_rows = np.zeros(len(rows_sel), dtype=bool)
-    if len(done_pos):
-        di = np.searchsorted(done_pos, start)
-        has_done = di < len(done_pos)
-        j_end = np.where(has_done, done_pos[np.minimum(di, len(done_pos) - 1)], 0)
-        cand_lin = has_done & (srow_local[j_end] == srow_local[start])
-        spans = np.where(cand_lin, j_end - start, 0)
-        tot = int(spans.sum())
-        row_ok = np.ones(len(rows_sel), dtype=bool)
-        if tot:
-            base = np.repeat(start, spans)
-            offs = np.arange(tot) - np.repeat(np.cumsum(spans) - spans, spans)
-            ii = base + offs
-            bad_idx = np.flatnonzero(jump[ii] != ii + 1)
-            if len(bad_idx):
-                seg_ends = np.cumsum(spans)
-                row_ok[np.searchsorted(seg_ends, bad_idx, side="right")] = False
-        lin_rows = cand_lin & row_ok
-        if lin_rows.any():
-            spans_l = (j_end - start + 1)[lin_rows]
-            base = np.repeat(start[lin_rows], spans_l)
-            offs = np.arange(int(spans_l.sum())) - np.repeat(
-                np.cumsum(spans_l) - spans_l, spans_l
-            )
-            frames_parts.append(base + offs)
-            frow_parts.append(
-                straggler_idx[np.repeat(rows_sel[lin_rows], spans_l)]
-            )
-
-    # 4b. pointer-doubling orbit for the remaining rows
-    rows_dbl = rows_sel[~lin_rows]
-    if len(rows_dbl):
-        blocks = [sidx[rows_dbl][:, None]]
-        JP = jump.copy()
-        width = 1
-        CAP = 1 << 17
-        while width < CAP:
-            allc = np.concatenate(blocks, axis=1)
-            if (blocks[-1] >= Cs).all():
-                break
-            if allc.size * 2 > 64_000_000:
-                break
-            # jump^width applied to entries 0..width-1 yields width..2width-1
-            blocks.append(JP[allc])
-            JP = JP[JP]
-            width *= 2
-        allc = np.concatenate(blocks, axis=1)
-        unfinished = allc[:, -1] < Cs
-        ended_bad = np.zeros(len(rows_dbl), dtype=bool)
-        fin = ~unfinished
-        ended_bad[fin] = allc[fin, -1] == BAD
-        py_rows += [int(straggler_idx[rows_dbl[i]]) for i in np.flatnonzero(unfinished)]
-        ok[straggler_idx[rows_dbl[ended_bad]]] = False
-        keep = ~unfinished & ~ended_bad
-        rows_keep = rows_dbl[keep]
-        allc = allc[keep]
-        if len(rows_keep):
-            flat = allc.reshape(-1)
-            fvalid = flat < Cs
-            frames_parts.append(flat[fvalid])
-            frow_parts.append(
-                straggler_idx[np.repeat(rows_keep, allc.shape[1])[fvalid]]
-            )
-
-    if not frames_parts:
-        return py_rows
-    frames = np.concatenate(frames_parts)
-    frow = np.concatenate(frow_parts)
-    ft = stag[frames]
-    fvv = sval[frames]
-    pay_s = scand[frames] + 1 + sln[frames]
-    feat_m = ft == 0x12
-    if feat_m.any():
-        feat_start[frow[feat_m]] = scand[frames[feat_m]]
-    nm = ft == 0x0A
-    if nm.any():
-        name_s[frow[nm]] = pay_s[nm]
-        name_l[frow[nm]] = fvv[nm]
-    ex = ft == 0x28
-    if ex.any():
-        extent[frow[ex]] = fvv[ex]
-        seen_ext[frow[ex]] = True
-    vr = ft == 0x78
-    if vr.any():
-        version[frow[vr]] = fvv[vr]
-        seen_ver[frow[vr]] = True
-    kv = (ft == 0x1A) | (ft == 0x22)
-    if kv.any():
-        rec_layer.append(frow[kv])
-        rec_field.append(np.where(ft[kv] == 0x1A, 3, 4))
-        rec_ps.append(pay_s[kv])
-        rec_pl.append(fvv[kv])
-    return py_rows
+    Returns (name, keys, values, extent, version, feat): the start of
+    the last name frame (-1: none), the key and value frame starts, the
+    extent and version declared before the features (-1: not declared)
+    and the first Feature frame's start (-1: no feature). Returns None
+    on any frame outside this engine's layer fields (an unknown field,
+    a multi-byte tag, a varint past 63 bits) and on a frame that runs
+    past the layer's end — the caller then takes the strict lane."""
+    n = len(data)
+    name = extent = version = feat = -1
+    keys: list[int] = []
+    vals: list[int] = []
+    append_v = vals.append
+    try:
+        while pos < n:
+            b = data[pos]
+            if b == 0x22:  # Value frames: hop the whole run
+                while True:
+                    append_v(pos)
+                    b0 = data[pos + 1]
+                    if b0 < 0x80:
+                        pos += 2 + b0
+                    else:
+                        b1 = data[pos + 2]
+                        if b1 < 0x80:
+                            pos += 3 + ((b0 & 0x7F) | (b1 << 7))
+                        else:
+                            ln, p = read_varint(data, pos + 1)
+                            pos = p + ln
+                    if pos >= n or data[pos] != 0x22:
+                        break
+            elif b == 0x28 or b == 0x78:  # extent / version
+                v, pos = read_varint(data, pos + 1)
+                if v >> 63:
+                    return None
+                if b == 0x28:
+                    extent = v
+                else:
+                    version = v
+            elif b == 0x0A or b == 0x12 or b == 0x1A:  # name / feature / key
+                ln, p = read_varint(data, pos + 1)
+                if p + ln > n:
+                    return None
+                if b == 0x12:
+                    feat = pos
+                    break
+                if b == 0x0A:
+                    name = pos
+                else:
+                    keys.append(pos)
+                pos = p + ln
+            else:
+                return None
+    except (IndexError, ValueError):  # a varint cut by the layer's end
+        return None
+    if pos > n:
+        return None
+    return name, keys, vals, extent, version, feat
 
 
 def parse_layers_batch(layer_blobs: list[bytes]) -> dict:
     """Header walk over many layer messages at once.
 
     Expects this engine's layout (name, keys, values, extent, version —
-    then Feature frames as a pure suffix); any layer that deviates is
-    flagged ``ok=False`` and the caller parses it with decode_layer.
+    then Feature frames as a pure suffix). The masked walk takes every
+    layer's first 96 header frames in lockstep; a layer still walking
+    after that finishes on layer_header_hop, and the spans of the frames
+    it found are read in one vectorized pass. Any layer that deviates
+    (unknown field, overrun, extent/version not declared before the
+    features) is flagged ``ok=False`` and the caller parses it with
+    decode_layer.
 
     Returns flat arrays:
       ok (bool per layer), name (object per layer), version, extent,
@@ -1460,13 +1209,12 @@ def parse_layers_batch(layer_blobs: list[bytes]) -> dict:
     rec_pl: list[np.ndarray] = []
 
     active_idx = np.arange(n)
-    py_finish: list[int] = []
     # long-tail escape: the masked walk costs O(active) per FRAME step,
     # so a single huge layer (e.g. a monolithic hot tile with 10^5 value
     # frames) would dominate; after max_steps the stragglers finish on
-    # the per-frame Python walker and splice back in below
+    # the scalar hop below
     max_steps = 96
-    for step in range(max_steps):
+    for _step in range(max_steps):
         if len(active_idx) == 0:
             break
         p = pos[active_idx]
@@ -1530,34 +1278,39 @@ def parse_layers_batch(layer_blobs: list[bytes]) -> dict:
         pos[active_idx] = nxt
         keep = ~bad & ~feat & (nxt < ends[active_idx])
         active_idx = active_idx[keep]
-        if step == max_steps - 1 and len(active_idx):
-            py_finish = _chain_finish(
-                buf, starts, ends, pos, active_idx,
-                name_s, name_l, extent, version, seen_ext, seen_ver,
-                feat_start, ok, rec_layer, rec_field, rec_ps, rec_pl,
-            )
 
-    py_parsed: dict[int, tuple] = {}
-    for i in py_finish:
-        blob = layer_blobs[i]
-        try:
-            layer, region = layer_features_region(blob)
-        except Exception:
+    hop_parts: list[tuple[int, int, np.ndarray]] = []  # (layer, field, starts)
+    for i in active_idx.tolist():
+        s0 = int(starts[i])
+        hop = layer_header_hop(layer_blobs[i], int(pos[i]) - s0)
+        if hop is None:
             ok[i] = False
             continue
-        if region is None:
-            ok[i] = False
-            continue
-        # same early-stop trust rule as the vectorized walk: the region
-        # starts at the first Feature frame, so extent/version must have
-        # been declared before it (the packed layout always does)
-        if not (layer.get("_seen_ext") and layer.get("_seen_ver")):
-            ok[i] = False
-            continue
-        py_parsed[i] = (layer, region)
-        version[i] = layer["version"]
-        extent[i] = layer["extent"]
-        feat_start[i] = starts[i] + (len(blob) - len(region))
+        nm, ks, vs, ext, ver, feat = hop
+        if ext >= 0:
+            extent[i], seen_ext[i] = ext, True
+        if ver >= 0:
+            version[i], seen_ver[i] = ver, True
+        if feat >= 0:
+            feat_start[i] = s0 + feat
+        for f, fs in ((1, [nm] if nm >= 0 else ()), (3, ks), (4, vs)):
+            if len(fs):
+                hop_parts.append((i, f, s0 + np.asarray(fs, dtype=np.int64)))
+    if hop_parts:
+        h_start = np.concatenate([a for _i, _f, a in hop_parts])
+        h_layer = np.concatenate([np.full(len(a), i) for i, _f, a in hop_parts])
+        h_field = np.concatenate([np.full(len(a), f) for _i, f, a in hop_parts])
+        h_len, h_ll = read_varints_at(buf, h_start + 1)
+        h_ps = h_start + 1 + h_ll
+        h_pl = h_len.astype(np.int64)
+        nm_m = h_field == 1  # one name per layer at most: the last one
+        name_s[h_layer[nm_m]] = h_ps[nm_m]
+        name_l[h_layer[nm_m]] = h_pl[nm_m]
+        kv = ~nm_m
+        rec_layer.append(h_layer[kv])
+        rec_field.append(h_field[kv])
+        rec_ps.append(h_ps[kv])
+        rec_pl.append(h_pl[kv])
 
     ok &= name_s >= 0
     # a walk that stopped at the first Feature frame never saw anything
@@ -1565,8 +1318,6 @@ def parse_layers_batch(layer_blobs: list[bytes]) -> dict:
     # there) — trust the early stop only when both were declared first,
     # like this engine's packed writer does; anything else falls back
     ok &= (feat_start < 0) | (seen_ext & seen_ver)
-    for i in py_finish:
-        ok[i] = i in py_parsed  # name/keys/values spliced in below
 
     # bulk utf8: gather payload bytes once, split via pyarrow offsets
     import pyarrow as pa  # noqa: F811 — kept local-name for clarity
@@ -1591,11 +1342,6 @@ def parse_layers_batch(layer_blobs: list[bytes]) -> dict:
         r_field = np.concatenate(rec_field)
         r_ps = np.concatenate(rec_ps)
         r_pl = np.concatenate(rec_pl)
-        if py_parsed:  # drop partial records of python-finished layers
-            keep_m = ~np.isin(r_layer, np.fromiter(py_parsed, dtype=np.int64))
-            r_layer, r_field, r_ps, r_pl = (
-                r_layer[keep_m], r_field[keep_m], r_ps[keep_m], r_pl[keep_m]
-            )
         order = np.lexsort((r_ps, r_layer))
         r_layer, r_field, r_ps, r_pl = (
             r_layer[order], r_field[order], r_ps[order], r_pl[order]
@@ -1632,33 +1378,6 @@ def parse_layers_batch(layer_blobs: list[bytes]) -> dict:
                 # falls back to the strict parser) instead of failing
                 # the whole batch
                 ok[val_layer[i]] = False
-
-    if py_parsed:  # splice python-finished layers' keys/values/names
-        kpos: list[int] = []
-        kvals: list = []
-        klay: list[int] = []
-        vpos: list[int] = []
-        vvals: list = []
-        vlay: list[int] = []
-        for i in sorted(py_parsed):
-            layer, _region = py_parsed[i]
-            name_vals[i] = layer["name"]
-            if layer["name"] is None:
-                ok[i] = False
-            kp = int(np.searchsorted(key_layer, i))
-            kpos.extend([kp] * len(layer["keys"]))
-            kvals.extend(layer["keys"])
-            klay.extend([i] * len(layer["keys"]))
-            vp = int(np.searchsorted(val_layer, i))
-            vpos.extend([vp] * len(layer["values"]))
-            vvals.extend(layer["values"])
-            vlay.extend([i] * len(layer["values"]))
-        if kpos:
-            keys = np.insert(keys.astype(object), kpos, kvals)
-            key_layer = np.insert(key_layer, kpos, klay)
-        if vpos:
-            values = np.insert(values.astype(object), vpos, vvals)
-            val_layer = np.insert(val_layer, vpos, vlay)
 
     return {
         "ok": ok,

@@ -811,12 +811,14 @@ def process_polygons(b: Batch, fkind: np.ndarray, finside: np.ndarray,
     # (f) fill-resolution routing per polygon -> eject whole features
     ejects: list[int] = []
     if len(ring_rows):
-        polys, needs, over = needs_fill_resolution_batch(b1, ring_rows)
         if force_resolve:
             # strictly_simple: every under-budget polygon takes the
             # resolver (the reference processor's default routes all
-            # rings through wagyu, processor.hpp:61)
-            needs = needs | ~over
+            # rings through wagyu, processor.hpp:61) — no predicate run
+            polys, _ppos, over = _poly_budget(b1, ring_rows)
+            needs = ~over
+        else:
+            polys, needs, over = needs_fill_resolution_batch(b1, ring_rows)
         ejected_feats = np.empty(0, dtype=np.int64)
         if needs.any():
             bad_polys = polys[needs]
@@ -851,6 +853,17 @@ def process_polygons(b: Batch, fkind: np.ndarray, finside: np.ndarray,
 # Polygon fill-resolution check (clipper.hpp:226-231 routing decision)
 # ---------------------------------------------------------------------------
 
+def _poly_budget(b: Batch, poly_rows: np.ndarray):
+    """The distinct ppoly among poly_rows (surviving ring paths), each
+    ring row's index into them, and which polygons are over
+    RESOLVE_VERTEX_BUDGET -> (polys, ppos, over)."""
+    polys = np.unique(b.ppoly[poly_rows])
+    ppos = np.searchsorted(polys, b.ppoly[poly_rows])
+    totals = np.zeros(len(polys), dtype=np.int64)
+    np.add.at(totals, ppos, b.plen[poly_rows])
+    return polys, ppos, totals > G.RESOLVE_VERTEX_BUDGET
+
+
 def needs_fill_resolution_batch(b: Batch, poly_rows: np.ndarray):
     """For each distinct ppoly among poly_rows (surviving ring paths):
     does the polygon need the boolean fill resolver? Every under-budget
@@ -859,14 +872,9 @@ def needs_fill_resolution_batch(b: Batch, poly_rows: np.ndarray):
     path. Returns (polys, needs, over_budget) — the caller attributes
     over_budget to stats, skipping ejected features (whose scalar rerun
     re-counts them)."""
-    polys = np.unique(b.ppoly[poly_rows])
+    polys, ppos, over = _poly_budget(b, poly_rows)
     if len(polys) == 0:
-        none = np.zeros(0, dtype=bool)
-        return polys, none, none
-    ppos = np.searchsorted(polys, b.ppoly[poly_rows])
-    totals = np.zeros(len(polys), dtype=np.int64)
-    np.add.at(totals, ppos, b.plen[poly_rows])
-    over = totals > G.RESOLVE_VERTEX_BUDGET
+        return polys, over, over
     keep = np.flatnonzero(~over[ppos])
     sel = keep[np.argsort(ppos[keep], kind="stable")]  # rings grouped by polygon
     slen = b.plen[poly_rows[sel]]

@@ -109,8 +109,9 @@ def q_dense_tile_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 at the reference's bench shape (bench/readme.md:24-30): FEW,
     LARGE multi-feature tiles. z=2 packs the 4000-row parity fixture
     into <=16 tiles (hundreds-to-thousands of tagged features each, past
-    the batched header walk's step budget -> exercises the vectorized
-    dense chain finisher), then decodes through the columnar scale path.
+    the batched header walk's step budget -> exercises the header hop
+    that finishes long layers), then decodes through the columnar scale
+    path.
     Conservation oracle: every row decodes back in its assigned cell
     exactly once with image_id, caption and fmt intact."""
     from mapnik_vector_tile_spark.operators import assign, decode, encode

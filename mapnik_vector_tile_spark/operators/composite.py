@@ -154,7 +154,7 @@ def upgrade_layer_v1_to_v2(layer_bytes: bytes) -> bytes:
     feats_out: list[bytes] = []
     for fmsg in lay["features"]:
         f = pbf.decode_feature(fmsg)
-        if f["geometry"]:
+        if len(f["geometry"]):
             g = _px_geom(f["geometry"], f["type"])
             if g is None:
                 continue

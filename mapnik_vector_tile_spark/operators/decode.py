@@ -18,7 +18,15 @@ and every scan is a projection of that walk:
   * the columnar kernel's fallback lane takes mx/my from single-point
     features (NaN for every other feature). Its fast lane
     (pbf.parse_layers_batch -> pbf.uniform_point_columns) decodes this
-    engine's uniform point framing without the walk.
+    engine's uniform point framing without the walk; a layer the batch
+    header parse does not prove (foreign layout, unknown field, corrupt
+    frame) takes the fallback lane.
+
+Layer headers have two parsers: the strict pbf.decode_layer, and the
+batch parse (a masked numpy walk whose long layers finish on the scalar
+pbf.layer_header_hop). The hop also feeds the hot-tile split's
+dictionary-slicing lane; any other layer shape splits through the
+generic pbf.split_layer_chunks.
 
 Decode applies tile_x/tile_y/scale like the reference:
 scale = extent / tile_mercator_size(z); decoded coord =
@@ -46,10 +54,11 @@ DECODED_SCHEMA = (
 class _LayerBatch:
     """Per-layer decode state of _layer_features: feature fields as
     GLOBAL flat arrays when the lockstep wire walk holds
-    (pbf.decode_features_batch), falling back to parsing
-    each feature message alone on few big features and exotic wire
-    shapes. Either way every geometry goes through ONE vectorized
-    decode (commands.decode_geometry_vec_batch_global, or its list entry
+    (pbf.decode_features_batch); on few big features and exotic wire
+    shapes, each feature message parses alone through the strict
+    pbf.decode_feature (whose long geometries decode vectorized). Either
+    way every geometry goes through ONE vectorized decode
+    (commands.decode_geometry_vec_batch_global, or its list entry
     decode_geometry_vec_batch), and `batched` holds its per-feature
     output: a packed dict, the EMPTY marker, or None (declined)."""
 
@@ -81,7 +90,7 @@ class _LayerBatch:
                 fb["geom_vals"], fb["geom_off"], fb["types"], **dec_args,
             )
         else:  # exotic wire shapes: parse each feature alone
-            feats = [pbf.decode_feature_arrays(m) for m in layer["features"]]
+            feats = [pbf.decode_feature(m) for m in layer["features"]]
             self._feats = feats
             self.n = len(feats)
             self.ids = [f["id"] for f in feats]
@@ -192,10 +201,24 @@ def _tile_layers(z: int, x: int, y: int, tile: bytes, bbox=None, typed: bool = F
     Yields one feature list per layer, in wire order."""
     if not tile:
         return
-    data = Z.decompress(bytes(tile))
+    try:
+        layers = pbf.decode_tile(Z.decompress(bytes(tile)))
+    except Exception as exc:
+        exc.add_note(_where(z, x, y))
+        raise
     bounds = tilemath.tile_mercator_bbox_np(x, y, z)
-    for layer_bytes in pbf.decode_tile(data):
-        yield _layer_features(layer_bytes, bounds, bbox=bbox, typed=typed)
+    for li, layer_bytes in enumerate(layers):
+        try:
+            feats = _layer_features(layer_bytes, bounds, bbox=bbox, typed=typed)
+        except Exception as exc:
+            exc.add_note(_where(z, x, y, li))
+            raise
+        yield feats
+
+
+def _where(z: int, x: int, y: int, li: int | None = None) -> str:
+    """The note a decode error carries: which tile (and layer) failed."""
+    return f"while decoding tile z/x/y {z}/{x}/{y}" + ("" if li is None else f", layer {li}")
 
 
 def _wkt_rows(z: int, x: int, y: int, feats: list[tuple]) -> list[tuple]:
@@ -250,185 +273,53 @@ def _scan(tiles: DataFrame, schema: str, columns: list[str], rows_of, keep=()) -
     return tiles.select("z", "x", "y", "tile", *keep).mapInPandas(kernel, schema=schema)
 
 
-def _layer_sections(data: bytes):
-    """One walk over a layer message's top-level fields ->
-    (misc_bytes, n_keys, value starts (CONTIGUOUS run only — None if
-    value frames are interleaved with other fields), value run end,
-    feature runs [(start, end)]). misc keeps name, keys, extent,
-    version and unknown fields verbatim, order preserved. The walk is
-    the only per-frame Python loop of the split — kept minimal (frame
-    length reads, no payload parsing)."""
-    n = len(data)
-    pos = 0
-    misc = bytearray()
-    n_keys = 0
-    vstart: list[int] = []
-    vend = 0
-    v_contig = True
-    runs: list[tuple[int, int]] = []
-    read_varint = pbf.read_varint
-    append_v = vstart.append
-    while pos < n:
-        start = pos
-        b = data[pos]
-        if b == 0x12 or b == 0x22:  # Feature frame / Value frame
-            b0 = data[pos + 1]
-            if b0 < 0x80:
-                pos = pos + 2 + b0
-            else:
-                ln, p2 = read_varint(data, pos + 1)
-                pos = p2 + ln
-            if b == 0x12:
-                if runs and runs[-1][1] == start:
-                    runs[-1] = (runs[-1][0], pos)
-                else:
-                    runs.append((start, pos))
-            else:
-                if vstart and vend != start:
-                    v_contig = False
-                append_v(start)
-                vend = pos
-            continue
-        t, pos = read_varint(data, pos)
-        field, wire = t >> 3, t & 0x7
-        if wire == 2:  # WT_LEN
-            ln, pos = read_varint(data, pos)
-            pos += ln
-        else:
-            pos = pbf.skip_field(data, pos, wire)
-        if field == 3 and wire == 2:
-            n_keys += 1
-        misc += data[start:pos]
-    return bytes(misc), n_keys, (vstart if v_contig else None), vend, runs
-
-
-def _layer_sections_fast(data: bytes):
-    """Fast lane of `_layer_sections` for this engine's own layer layout
-    (pbf.encode_layer_packed: name, keys, values run, extent, version,
-    features as the pure suffix). The only per-frame loop left is a
-    minimal value-frame hop (two byte reads per value); feature frames
-    are NOT walked at all — the caller's vectorized varint decode +
-    `_packed_rows_ok` structural check validates the suffix, so a layer
-    that merely looks right cannot slip through. Returns None whenever
-    the layout assumptions break (caller falls back to the generic
-    walk)."""
-    n = len(data)
-    pos = 0
-    misc = bytearray()
-    n_keys = 0
-    read_varint = pbf.read_varint
-    # header fields before the values run
-    while pos < n and data[pos] != 0x22:
-        start = pos
-        b = data[pos]
-        if b == 0x12:
-            return None  # features before values: not our layout
-        t, pos = read_varint(data, pos)
-        field, wire = t >> 3, t & 0x7
-        if wire == 2:
-            ln, pos = read_varint(data, pos)
-            pos += ln
-        else:
-            pos = pbf.skip_field(data, pos, wire)
-        if field == 3 and wire == 2:
-            n_keys += 1
-        misc += data[start:start + (pos - start)]
-    if pos >= n:
-        return None
-    # values run: tight hop (lengths <= 2 varint bytes, else bail)
-    vstart: list[int] = []
-    append_v = vstart.append
-    while pos < n and data[pos] == 0x22:
-        append_v(pos)
-        b0 = data[pos + 1]
-        if b0 < 0x80:
-            pos = pos + 2 + b0
-        else:
-            b1 = data[pos + 2]
-            if b1 >= 0x80:
-                return None
-            pos = pos + 3 + ((b0 & 0x7F) | (b1 << 7))
-    if pos > n:
-        return None
-    vend = pos
-    # trailing scalar fields (extent, version) before the feature suffix
-    while pos < n and data[pos] != 0x12:
-        start = pos
-        b = data[pos]
-        if b == 0x22:
-            return None  # second value run: generic walk owns this
-        t, pos = read_varint(data, pos)
-        field, wire = t >> 3, t & 0x7
-        if wire == 2:
-            ln, pos = read_varint(data, pos)
-            pos += ln
-        else:
-            pos = pbf.skip_field(data, pos, wire)
-        if field == 3 and wire == 2:
-            n_keys += 1
-        misc += data[start:start + (pos - start)]
-    if pos >= n:
-        return None
-    # everything from the first feature frame on is taken as the feature
-    # run; the caller's % w + _packed_rows_ok checks reject impostors
-    return bytes(misc), n_keys, vstart, vend, [(pos, n)]
-
-
 def _split_uniform_point_layer(layer_bytes: bytes, chunk_bytes: int):
     """Dictionary-slicing split for this engine's uniform point framing
     (the hot-tile encoder's output — operators/encode.py — whose
     per-occurrence dictionary makes values ~70% of a hot tile's bytes):
     each chunk re-encodes its features with tag value indices SHIFTED so
-    it carries only the [vmin, vmax] slice of the value dictionary its
-    features actually reference — no dictionary repetition across
-    chunks. Returns list[bytes] or None when the layer is not uniform
-    (caller falls back to the generic full-header split)."""
+    it carries only the value-dictionary entries its features actually
+    reference — no dictionary repetition across chunks. The header comes
+    from pbf.layer_header_hop; a chunk's header is the layer's bytes
+    before the value run plus those between the run's end and the first
+    Feature frame. Returns list[bytes] or None (caller falls back to the
+    generic full-header split) when the hop declines the header, the
+    values are not one contiguous run, extent/version are not declared
+    before the features, or the feature suffix is not uniform."""
     data = bytes(layer_bytes)
-    try:
-        sec = _layer_sections_fast(data)
-    except (IndexError, ValueError):
-        sec = None
-    if sec is not None:
-        out = _split_uniform_from_sections(data, chunk_bytes, sec)
-        if out is not None:
-            return out
-        # the fast lane's unwalked feature suffix failed verification:
-        # one layer in a thousand has trailing fields — re-walk generically
-    try:
-        sec = _layer_sections(data)
-    except (IndexError, ValueError):
+    hop = pbf.layer_header_hop(data)
+    if hop is None:
         return None
-    return _split_uniform_from_sections(data, chunk_bytes, sec)
-
-
-def _split_uniform_from_sections(data: bytes, chunk_bytes: int, sec):
-    misc, c, vstart, vend, runs = sec
-    if c == 0 or not vstart or not runs:
+    _name, keys, vals, extent, version, feat = hop
+    c = len(keys)
+    if c == 0 or not vals or feat < 0 or extent < 0 or version < 0:
         return None
-    region = (
-        data[runs[0][0] : runs[0][1]]
-        if len(runs) == 1
-        else b"".join(data[a:b] for a, b in runs)
-    )
+    region = data[feat:]
     res = pbf.uniform_point_columns(region, c)
     if res is None:
         return None
     vidx, zz, row_ok = res
     if not row_ok.all():
         return None
-    n = len(vidx)
-    # value spans: starts + one shared end (the walk proved the run is
-    # contiguous, so each frame ends where the next begins)
-    vs = np.empty(len(vstart) + 1, dtype=np.int64)
-    vs[:-1] = vstart
-    vs[-1] = vend
-    if int(vidx.max()) >= len(vstart):
+    buf = np.frombuffer(data, dtype=np.uint8)
+    # value spans: frame starts + one shared end, once the run is proven
+    # contiguous (each frame ends where the next begins)
+    vs = np.empty(len(vals) + 1, dtype=np.int64)
+    vs[:-1] = vals
+    vlen, vll = pbf.read_varints_at(buf, vs[:-1] + 1)
+    vends = vs[:-1] + 1 + vll + vlen.astype(np.int64)
+    if (vends[:-1] != vs[1:-1]).any():
+        return None
+    vs[-1] = vends[-1]
+    if int(vidx.max()) >= len(vals):
         return None  # dangling value reference: keep the layer whole
-    n_chunks = max(1, -(-(len(region) + (vend - vstart[0])) // chunk_bytes))
+    vend = int(vs[-1])
+    misc = data[: vals[0]] + data[vend:feat]
+    n = len(vidx)
+    n_chunks = max(1, -(-(len(region) + (vend - vals[0])) // chunk_bytes))
     if n_chunks <= 1:
         return None
     rows_per = -(-n // n_chunks)
-    buf = np.frombuffer(data, dtype=np.uint8)
     # exact referenced-value gather + compact index remap per chunk: a
     # chunk carries ONLY the dictionary entries its features use (a
     # range slice degenerates when a shared value sits at the far end of
@@ -784,14 +675,19 @@ def features_at_point(
 # benchmark direction, bench/readme.md:24-30)
 # ---------------------------------------------------------------------------
 
-def _fallback_rows(z: int, x: int, y: int, layer_bytes: bytes) -> list[tuple]:
+def _fallback_rows(z: int, x: int, y: int, layer_bytes: bytes, li: int) -> list[tuple]:
     """Columnar-kernel fallback: every feature of a layer the fast lane
-    cannot take, as (z, x, y, layer, mx, my, props). Single-point
-    features carry their exact decoded coordinates; every other feature
-    carries NaN by design."""
+    cannot take (layer `li` of its tile), as (z, x, y, layer, mx, my,
+    props). Single-point features carry their exact decoded coordinates;
+    every other feature carries NaN by design."""
     bounds = tilemath.tile_mercator_bbox_np(x, y, z)
+    try:
+        feats = _layer_features(layer_bytes, bounds)
+    except Exception as exc:
+        exc.add_note(_where(z, x, y, li))
+        raise
     rows = []
-    for name, _fid, _gt, pk, props, _raster in _layer_features(layer_bytes, bounds):
+    for name, _fid, _gt, pk, props, _raster in feats:
         mx = my = float("nan")
         if pk is not None and pk["kind"] == "multipoint" and len(pk["xs"]) == 1:
             mx, my = float(pk["xs"][0]), float(pk["ys"][0])
@@ -806,8 +702,11 @@ def _packed_rows_ok(m: np.ndarray, ml: np.ndarray, c: int) -> np.ndarray:
     tags, geometry) is checked against the actual varint byte lengths,
     and tag key indices must equal their column position — so a foreign
     layer whose byte stream merely *parses* as varints cannot slip
-    through the reshape (closes the layer_features_region early-return
-    trust gap)."""
+    through the reshape. The batch header parse stops at the first
+    Feature frame and takes the rest of the layer as its feature suffix;
+    this check proves that suffix. It is the test reference of
+    pbf.uniform_point_columns, which runs the same checks in
+    production."""
     mi = m.astype(np.int64, copy=False)
     ok = (
         (mi[:, 0] == 0x12)
@@ -858,6 +757,7 @@ def columnar_kernel(prop_keys: list[str]):
             ys = pdf["y"].to_numpy()
             tiles_col = pdf["tile"].to_numpy()
             blob_tile: list[int] = []
+            blob_li: list[int] = []
             blobs: list[bytes] = []
             fallback_rows: list[tuple] = []
             for t in range(n_tiles):
@@ -865,9 +765,16 @@ def columnar_kernel(prop_keys: list[str]):
                 if not tile:
                     continue
                 data = Z.decompress(bytes(tile))
-                for layer_bytes in pbf.decode_tile(data):
+                for li, layer_bytes in enumerate(pbf.decode_tile(data)):
                     blobs.append(layer_bytes)  # already a bytes slice
                     blob_tile.append(t)
+                    blob_li.append(li)
+
+            def fallback(i):  # layer i of the batch -> the strict lane
+                t = blob_tile[i]
+                fallback_rows.extend(_fallback_rows(
+                    int(zs[t]), int(xs[t]), int(ys[t]), blobs[i], blob_li[i]))
+
             frames = []
             nlay = len(blobs)
             if nlay:
@@ -880,11 +787,8 @@ def columnar_kernel(prop_keys: list[str]):
                 except Exception:
                     meta = None
             if nlay and meta is None:
-                for i, lb in enumerate(blobs):
-                    t = blob_tile[i]
-                    fallback_rows.extend(
-                        _fallback_rows(int(zs[t]), int(xs[t]), int(ys[t]), lb)
-                    )
+                for i in range(nlay):
+                    fallback(i)
                 nlay = 0
             if nlay:
                 buf = meta["buf"]
@@ -924,10 +828,7 @@ def columnar_kernel(prop_keys: list[str]):
                 uniform = np.zeros(nlay, dtype=bool)
                 uniform[cand] = True
                 for i in np.flatnonzero(~uniform):
-                    t = blob_tile[i]
-                    fallback_rows.extend(
-                        _fallback_rows(int(zs[t]), int(xs[t]), int(ys[t]), blobs[i])
-                    )
+                    fallback(i)
 
             if nlay and len(cand):
                 flen = meta["feat_end"][cand] - meta["feat_start"][cand]
@@ -954,11 +855,7 @@ def columnar_kernel(prop_keys: list[str]):
                     bad_meta = np.zeros(len(cand), dtype=bool)
                     np.logical_or.at(bad_meta, rep, ~row_ok)
                     for ci in np.flatnonzero(bad_meta):
-                        i = cand[ci]
-                        t = blob_tile[i]
-                        fallback_rows.extend(
-                            _fallback_rows(int(zs[t]), int(xs[t]), int(ys[t]), blobs[i])
-                        )
+                        fallback(cand[ci])
                     keep = ~bad_meta[rep]
                     if res is not None:
                         vidx_m, zz_m = vidx_m[keep], zz_m[keep]

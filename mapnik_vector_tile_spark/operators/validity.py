@@ -246,7 +246,7 @@ def validate_tile(z: int, x: int, y: int, tile: bytes) -> tuple[list, list]:
                     findings.append((z, x, y, name, fid, "FEATURE_TAG_KEY_OOB", str(tags[i])))
                 if tags[i + 1] >= nvals:
                     findings.append((z, x, y, name, fid, "FEATURE_TAG_VALUE_OOB", str(tags[i + 1])))
-            if feat["geometry"]:
+            if len(feat["geometry"]):
                 try:
                     Cmd.decode_geometry(feat["geometry"], feat["type"], version=meta["version"])
                 except Cmd.DecodeError as exc:

@@ -146,7 +146,7 @@ def _expected(version: int, layer_bytes: bytes, bbox) -> list[dict]:
     vals = [None if v is None else str(v) for v in lay["values"]]
     out = []
     for m in lay["features"]:
-        f = pbf.decode_feature_arrays(m)
+        f = pbf.decode_feature(m)
         g = ("empty", None)
         if len(f["geometry"]):
             g = Cmd.decode_geometry(list(f["geometry"]), f["type"], **kw)

@@ -233,7 +233,7 @@ def test_parity_reference_bench_tiles(name, z, x, y):
         lay = pbf.decode_layer(lb)
         scale = lay["extent"] / (float(maxx) - float(minx))
         for fm in lay["features"]:
-            f = pbf.decode_feature_arrays(fm)
+            f = pbf.decode_feature(fm)
             if not len(f["geometry"]):
                 continue
             kw = dict(version=lay["version"], tile_x=float(minx),
@@ -245,14 +245,21 @@ def test_parity_reference_bench_tiles(name, z, x, y):
     assert n_vec > 0
 
 
-def test_decode_feature_arrays_matches_decode_feature():
+def test_decode_feature_long_geometry_vectorized():
+    """A geometry field of >= 128 bytes decodes in one vectorized pass
+    (a uint64 ndarray) to the same values as the per-varint walk that
+    shorter fields take (a list); a truncated long field still raises."""
     z = Cmd._zz32
     geom = [(50 << 3) | 1] + [z((i * 37) % 4096) for i in range(100)]
     feat = pbf.encode_feature(7, [0, 1], 1, geom)
     a = pbf.decode_feature(feat)
-    b = pbf.decode_feature_arrays(feat)
-    assert a["id"] == b["id"] and a["tags"] == b["tags"] and a["type"] == b["type"]
-    assert list(a["geometry"]) == [int(v) for v in b["geometry"]]
+    assert isinstance(a["geometry"], np.ndarray)
+    assert a["id"] == 7 and a["tags"] == [0, 1] and a["type"] == 1
+    assert [int(v) for v in a["geometry"]] == geom
+    short = pbf.decode_feature(pbf.encode_feature(7, [0, 1], 1, geom[:9]))
+    assert short["geometry"] == geom[:9]
+    with pytest.raises(ValueError):
+        pbf.decode_feature(feat[:-3])
 
 
 def _flat(gm):
@@ -295,7 +302,7 @@ def test_packed_matches_list_api_reference_tiles(name, z, x, y):
         lay = pbf.decode_layer(lb)
         scale = lay["extent"] / (float(maxx) - float(minx))
         for fm in lay["features"]:
-            f = pbf.decode_feature_arrays(fm)
+            f = pbf.decode_feature(fm)
             if not len(f["geometry"]):
                 continue
             kw = dict(version=lay["version"], tile_x=float(minx),

@@ -106,7 +106,9 @@ def _decoded_layer(layer: bytes) -> list[tuple]:
             v = meta["values"][t[i + 1]]
             props[meta["keys"][t[i]]] = (pbf.value_type_tag(v), v)
         raster = None if d["raster"] is None else bytes(d["raster"])
-        out.append((d["id"], props, d["type"], d["geometry"], raster))
+        # decode_feature returns a >= 128-byte geometry as an ndarray
+        geom = [int(c) for c in d["geometry"]]
+        out.append((d["id"], props, d["type"], geom, raster))
     return out
 
 

@@ -166,3 +166,29 @@ def test_overlapping_simple_polygons_do_not_flag_each_other():
     assert (np.array([G._needs_fill_resolution_scalar(p) for p in polys]) == want).all()
     assert (_batch_answers(polys) == want).all()
     assert (_ragged_answers(polys) == want).all()
+
+
+def test_force_resolve_skips_the_predicate(monkeypatch):
+    """Under strictly_simple (force_resolve) every under-budget polygon
+    takes the resolver whatever the predicate would say, so the batch
+    does not run it; without force_resolve it runs once per batch."""
+    rng = np.random.default_rng(5)
+    vt = G.ViewTransform(0.0, 0.0, 4096.0, 4096.0, 4096, 4096)
+    box = (-8, -8, 4104, 4104)
+    rings = [_convex(rng, n, cx=2048.0, cy=2048.0, r=1000.0) for n in (5, 40, 300)]
+    rings.append(_tangled(rng, 60) + 2048.0)
+    blobs = [G.gpack(("polygon", [r])) for r in rings]
+    calls = []
+    real = R.rings_cross
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(R, "rings_cross", counting)
+    *_, ejects = R.encode_batch_gpack(blobs, vt, box, force_resolve=True)
+    assert calls == []
+    assert list(ejects) == [0, 1, 2, 3]
+    *_, ejects = R.encode_batch_gpack(blobs, vt, box)
+    assert len(calls) == 1
+    assert list(ejects) == [3]

@@ -50,6 +50,29 @@ def P_ZZ(v: int) -> int:
     return (v << 1) ^ (v >> 63) if v >= 0 else ((-v) << 1) - 1
 
 
+def _long_header_layer(nvals=150, nfeat=4):
+    """This engine's packed layout (extent/version before the feature
+    suffix) with more header frames than parse_layers_batch's 96-step
+    masked walk: the tail of its header is parsed by the header hop.
+    Values mix strings, ints and floats. Returns (layer, byte offset of
+    the first Feature frame)."""
+    values = [P.encode_value(v) for i in range(nvals) for v in (f"v{i}", i, 0.5 * i)]
+    values = values[:nvals]
+    tags = np.array([[0, i, 1, nvals - 1 - i] for i in range(nfeat)], dtype=np.int64)
+    zz = np.array([[P_ZZ(10 + i), P_ZZ(20 + i)] for i in range(nfeat)], dtype=np.uint32)
+    blob = P.encode_point_features_packed(tags, zz)
+    layer = P.encode_layer_packed("long", blob, ["a", "b"], values)
+    return layer, len(layer) - len(blob)
+
+
+def _framed(features):
+    """Feature messages -> their Feature frames, concatenated."""
+    buf = bytearray()
+    for f in features:
+        P.add_len_field(buf, 2, f)
+    return bytes(buf)
+
+
 def _tile(layers):
     return P.encode_tile(layers)
 
@@ -97,20 +120,27 @@ def test_truncated_at_every_byte():
 
 def test_truncated_batch_parse_never_lies():
     """parse_layers_batch on truncated layer messages: any layer it
-    reports ok must parse identically to the strict per-layer parser."""
-    layer = _simple_layer(nfeat=5)
-    for i in range(1, len(layer)):
-        blob = layer[:i]
-        meta = P.parse_layers_batch([blob])
-        if not meta["ok"][0]:
-            continue
-        try:
-            ref, region = P.layer_features_region(blob)
-        except Exception:
-            pytest.fail(f"batch ok at truncation {i} but strict parser raises")
-        assert meta["name"][0] == ref["name"]
-        assert list(meta["keys"][meta["key_layer"] == 0]) == ref["keys"]
-        assert list(meta["values"][meta["val_layer"] == 0]) == ref["values"]
+    reports ok must parse identically to the strict per-layer parser.
+    The long-header layer is truncated inside the part of its header
+    the header hop walks. An intact layer follows the truncated one in
+    the batch, so a frame read past the truncation meets real bytes."""
+    long_layer, feat0 = _long_header_layer()
+    for layer, cuts in (
+        (_simple_layer(nfeat=5), None),
+        (long_layer, range(len(long_layer) // 3, feat0 + 3)),
+    ):
+        for i in cuts or range(1, len(layer)):
+            blob = layer[:i]
+            meta = P.parse_layers_batch([blob, layer])
+            if not meta["ok"][0]:
+                continue
+            try:
+                ref = P.decode_layer(blob)
+            except Exception:
+                pytest.fail(f"batch ok at truncation {i} but strict parser raises")
+            assert meta["name"][0] == ref["name"], i
+            assert list(meta["keys"][meta["key_layer"] == 0]) == ref["keys"], i
+            assert list(meta["values"][meta["val_layer"] == 0]) == ref["values"], i
 
 
 # ---------------------------------------------------------------------------
@@ -140,7 +170,7 @@ def test_tile_with_extra_layer_fields():
     # and the batched walk either agrees or falls back — never lies
     meta = P.parse_layers_batch([bytes(layer)])
     if meta["ok"][0]:
-        ref, _ = P.layer_features_region(bytes(layer))
+        ref = P.decode_layer(bytes(layer))
         assert meta["name"][0] == ref["name"]
 
 
@@ -226,29 +256,78 @@ def test_interleaved_through_columnar_kernel(spark):
     assert [p["k"] for p in got["props"]] == ["a", "b"]
 
 
+def test_decode_error_names_its_tile(spark):
+    """A tile whose value dictionary holds invalid UTF-8 fails both the
+    columnar and the packed scan with its original exception type, and
+    the message names the tile (z/x/y) and the layer that failed."""
+    import pandas as pd
+
+    from mapnik_vector_tile_spark.functions import compression as Z
+    from mapnik_vector_tile_spark.operators import decode as D
+
+    zz = np.array([[P_ZZ(10), P_ZZ(20)]], dtype=np.uint32)
+    good = P.encode_layer_packed(
+        "ok", P.encode_point_features_packed(np.array([[0, 0]]), zz), ["k"],
+        [P.encode_value("v")],
+    )
+    bad = P.encode_layer_packed(
+        "bad", P.encode_point_features_packed(np.array([[0, 0]]), zz), ["k"],
+        [b"\x0a\x02\xff\xfe"],  # Value{string_value = invalid UTF-8}
+    )
+    df = spark.createDataFrame(pd.DataFrame({
+        "z": [9, 9], "x": [301, 302], "y": [171, 172],
+        "tile": [Z.compress(_tile([good])), Z.compress(_tile([good, bad]))],
+    }))
+    for scan in (lambda: D.decode_tiles_columnar(df, ["k"]), lambda: D.decode_tiles_packed(df)):
+        with pytest.raises(Exception) as info:
+            scan().collect()
+        msg = str(info.value)
+        assert "UnicodeDecodeError" in msg
+        assert "tile z/x/y 9/302/172, layer 1" in msg
+        assert "9/301/171" not in msg
+
+
 # ---------------------------------------------------------------------------
 # random corruption fuzz: batch parse must agree with the strict parser
 # or fall back — never return different values for an ok layer
 # ---------------------------------------------------------------------------
 
-def test_corruption_fuzz_batch_vs_strict():
-    rng = np.random.default_rng(42)
-    base = _simple_layer(nfeat=8)
-    for trial in range(300):
+def _mutations(rng, base, lo, hi, trials=300):
+    """Seeded byte mutations of `base` at positions in [lo, hi): flip a
+    byte, truncate, or splice in 1-5 random bytes (cycling)."""
+    for trial in range(trials):
         b = bytearray(base)
         mode = trial % 3
         if mode == 0:  # flip a byte
-            i = int(rng.integers(0, len(b)))
+            i = int(rng.integers(lo, hi))
             b[i] = int(rng.integers(0, 256))
         elif mode == 1:  # truncate
-            b = b[: int(rng.integers(1, len(b)))]
+            b = b[: int(rng.integers(max(lo, 1), hi))]
         else:  # splice random bytes
-            i = int(rng.integers(0, len(b)))
+            i = int(rng.integers(lo, hi))
             ins = bytes(rng.integers(0, 256, size=int(rng.integers(1, 6))).tolist())
             b = b[:i] + ins + b[i:]
-        blob = bytes(b)
+        yield trial, bytes(b)
+
+
+def test_corruption_fuzz_batch_vs_strict():
+    """The simple layer is mutated anywhere. The long-header layer (past
+    the masked walk's step budget, so the header hop parses its tail) is
+    mutated only in the header's last two thirds — its feature suffix is
+    proven downstream by pbf.uniform_point_columns, not by the header
+    parse — and parsed with the intact layer after it, so a frame read
+    past its end meets real bytes."""
+    rng = np.random.default_rng(42)
+    simple = _simple_layer(nfeat=8)
+    long_layer, feat0 = _long_header_layer()
+    cases = [
+        ((), _mutations(rng, simple, 0, len(simple))),
+        ((long_layer,), _mutations(
+            np.random.default_rng(43), long_layer, len(long_layer) // 3, feat0)),
+    ]
+    for trial, blob, tail in ((*t, tail) for tail, case in cases for t in case):
         try:
-            meta = P.parse_layers_batch([blob])
+            meta = P.parse_layers_batch([blob, *tail])
         except Exception:
             continue  # batch-global rejection: callers route to strict
         if meta["ok"][0]:
@@ -263,12 +342,10 @@ def test_corruption_fuzz_batch_vs_strict():
             assert meta["extent"][0] == ref["extent"], trial
             assert meta["version"][0] == ref["version"], trial
             if meta["feat_start"][0] >= 0:
-                # claimed feature region: must equal the strict walk's
-                refl, region = P.layer_features_region(blob)
-                assert region is not None, trial
-                assert refl.get("_seen_ext") and refl.get("_seen_ver"), trial
+                # claimed feature region: exactly the strict parser's
+                # Feature frames
                 fs, fe = meta["feat_start"][0], meta["feat_end"][0]
-                assert meta["buf"][fs:fe].tobytes() == region, trial
+                assert meta["buf"][fs:fe].tobytes() == _framed(ref["features"]), trial
 
 
 @pytest.mark.skipif(
@@ -328,7 +405,7 @@ def test_mutation_fuzz_real_tiles_total(seed):
                 for lb in P.decode_tile(Z2.decompress(data)):
                     lay = P.decode_layer(lb)
                     for fm in lay["features"][:50]:
-                        f = P.decode_feature_arrays(fm)
+                        f = P.decode_feature(fm)
                         if not len(f["geometry"]):
                             continue
                         g = Cmd.decode_geometry_vec_batch(

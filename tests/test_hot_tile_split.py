@@ -259,6 +259,54 @@ def test_uniform_split_declines_non_uniform():
     assert n == 200
 
 
+def test_uniform_split_header_routing():
+    """The dictionary-slicing lane takes this engine's uniform point
+    layer (header read by pbf.layer_header_hop) and reproduces its
+    features exactly; the same features with extent/version written
+    after them, or with an unknown header field, go to the generic
+    split, which still preserves every feature."""
+    from mapnik_vector_tile_spark.functions import commands as Cmd
+
+    n = 400
+    rng = np.random.default_rng(11)
+    pxy = rng.integers(0, 4096, size=(n, 2)).astype(np.int64)
+    zz = np.column_stack([Cmd.zigzag32(pxy[:, 0]), Cmd.zigzag32(pxy[:, 1])])
+    tags = np.stack([np.zeros(n, dtype=np.int64), np.arange(n) % 20], axis=1)
+    blob = pbf.encode_point_features_packed(tags, zz)
+    values = [pbf.encode_value(f"value-{i:05d}") for i in range(20)]
+    packed = pbf.encode_layer_packed("pts", blob, ["id"], values)
+    trailing = bytearray()
+    pbf.add_len_field(trailing, 1, b"pts")
+    pbf.add_len_field(trailing, 3, b"id")
+    for v in values:
+        pbf.add_len_field(trailing, 4, v)
+    trailing += blob
+    pbf.add_varint_field(trailing, 5, 4096)
+    pbf.add_varint_field(trailing, 15, 2)
+    unknown = bytearray()
+    pbf.add_len_field(unknown, 14, b"ext")
+    unknown = bytes(unknown) + packed
+
+    def rows(layer_msgs):
+        out = []
+        for lm in layer_msgs:
+            d = pbf.decode_layer(lm)
+            for m in d["features"]:
+                f = pbf.decode_feature(m)
+                out.append((d["values"][f["tags"][1]], tuple(f["geometry"])))
+        return out
+
+    want = rows([packed])
+    assert len(decode._split_uniform_point_layer(packed, 2048)) > 2
+    for layer in (bytes(trailing), unknown):
+        assert rows([layer]) == want
+        assert decode._split_uniform_point_layer(layer, 2048) is None
+    for layer in (packed, bytes(trailing), unknown):
+        chunks = decode.split_tile_chunks_smart(pbf.encode_tile([layer]), 2048)
+        assert len(chunks) > 2
+        assert rows(pbf.decode_tile(ch)[0] for ch in chunks) == want
+
+
 def test_explode_hot_tiles_geom_layers(spark):
     """Line/polygon features (multi-frame geometries) survive the
     generic split. The layer carries one shared property (a tiny

@@ -117,9 +117,10 @@ def test_parse_layers_batch_matrix():
     assert meta2["ok"][0] and not meta2["ok"][1] and meta2["ok"][2]
 
 
-def test_parse_layers_batch_python_finish_splice():
-    """A layer with a huge value run exits the masked walk and splices
-    back via the per-frame Python walker (salted hot tiles)."""
+def test_parse_layers_batch_long_header_hop():
+    """A layer with a long value run outlasts the masked walk's step
+    budget and finishes on the header hop; its records merge with the
+    masked walk's in layer order."""
     import numpy as np
 
     from mapnik_vector_tile_spark.functions import commands as Cmd
@@ -148,12 +149,12 @@ def test_parse_layers_batch_python_finish_splice():
     assert meta["feat_start"][0] >= 0 and meta["feat_start"][1] >= 0
 
 
-def test_parse_layers_batch_dense_chain_finisher():
-    """Layers whose header frame count exceeds the masked walk's step
-    budget (dense tiles, bench/readme.md:24-30 shape) must parse
-    IDENTICALLY through the vectorized chain finisher as through the
-    per-layer Python walk — names, keys, values, extent, version,
-    feature regions."""
+def test_parse_layers_batch_dense_header_hop():
+    """Layers whose header frame chain is longer than the masked walk's
+    step budget (dense tiles, bench/readme.md:24-30 shape) finish on the
+    header hop and must parse IDENTICALLY to the strict decode_layer —
+    names, keys, values, extent, version, and a feature region that is
+    exactly decode_layer's Feature frames."""
     import numpy as np
 
     from mapnik_vector_tile_spark.functions import commands as Cmd
@@ -175,8 +176,8 @@ def test_parse_layers_batch_dense_chain_finisher():
         values = []
         for i in range(n):
             values.append(P.encode_value(f"im-{li}-{i:07d}"))
-            # adversarial captions: bytes that mimic frame tags (x, (,
-            # quotes, control chars) to stress the candidate sieve
+            # adversarial captions: payload bytes that mimic frame tags
+            # (x, (, quotes, control chars) must never be read as frames
             values.append(P.encode_value(f'x(x" tile {li} caption\x12\x1a\x22 {i} xx(('))
         values.append(P.encode_value("png"))
         layers.append(
@@ -185,7 +186,10 @@ def test_parse_layers_batch_dense_chain_finisher():
     meta = P.parse_layers_batch(layers)
     assert meta["ok"].all(), meta["ok"]
     for li, blob in enumerate(layers):
-        ref, region = P.layer_features_region(blob)
+        ref = P.decode_layer(blob)
+        region = bytearray()
+        for f in ref["features"]:
+            P.add_len_field(region, 2, f)
         assert meta["name"][li] == ref["name"]
         assert meta["version"][li] == ref["version"]
         assert meta["extent"][li] == ref["extent"]

@@ -326,8 +326,8 @@ def test_columnar_decode_mixed_uniform_and_fallback(spark, tiles):
 
 def test_columnar_decode_salted_hot_tiles(spark, located):
     """Columnar decode handles salted hot-path tiles (huge value runs →
-    the batch header walk's Python-finish splice) identically to the
-    generic decoder."""
+    the batch header walk finishes them on the header hop) identically
+    to the generic decoder."""
     from mapnik_vector_tile_spark.operators import assign as A
     from mapnik_vector_tile_spark.operators import decode as D
     from mapnik_vector_tile_spark.operators import encode as E
