@@ -11,8 +11,10 @@ ring winding classification (first ring defines exterior orientation,
 v2 rejects CW first ring), negative-scale ring reversal. Two decoders:
 the scalar cursor `decode_geometry` (the error matrix and the test
 reference) and the vectorized `decode_geometry_vec_batch_global` (plus
-its list entry), which decodes a layer's canonical streams in array
-ops and declines everything else to the cursor.
+its list entry). The vectorized decoder takes the canonical streams of
+a whole Arrow batch of tiles in one call, each feature with its own
+layer's version and tile transform (scalars or per-feature arrays), and
+declines everything else to the cursor.
 """
 
 from __future__ import annotations
@@ -385,7 +387,7 @@ def decode_geometry_vec_batch_global(
     scale_y: float = 1.0,
     bbox=None,
 ):
-    """Vectorized decode of a layer's geometries for CANONICAL command
+    """Vectorized decode of a batch of geometries for CANONICAL command
     streams — the shapes every conformant encoder emits (POINT: MoveTo
     blocks only; LINESTRING: [MoveTo(1), LineTo(k>=1)+]*; POLYGON:
     [MoveTo(1), LineTo(k>=2)+, Close]*). Feature fi's stream is
@@ -400,6 +402,9 @@ def decode_geometry_vec_batch_global(
     four-vertex polygons) pays ~9 array ops for its whole header walk;
     the reference's multi_line bench feature (168k (MoveTo(1),
     LineTo(1)) pairs) pays a handful of strided compares.
+
+    version, tile_x, tile_y, scale_x and scale_y are scalars or
+    per-feature ndarrays (each feature with its own layer's transform).
 
     Returns one entry per feature: the packed dict {kind, xs, ys,
     offsets[, exterior]} (kind multipoint / multilinestring /
@@ -418,6 +423,11 @@ def decode_geometry_vec_batch_global(
     G_all = np.asarray(geom_vals)
     if G_all.dtype != np.uint32:  # the scalar cursor's & 0xFFFFFFFF
         G_all = np.asarray(geom_vals, dtype=np.uint64).astype(np.uint32)
+    # one transform for every feature (a one-layer batch) stays scalar
+    version, tile_x, tile_y, scale_x, scale_y = (
+        a[0] if isinstance(a, np.ndarray) and len(a) and (a == a[0]).all() else a
+        for a in (version, tile_x, tile_y, scale_x, scale_y)
+    )
     mlen = np.diff(geom_off)
     feat_ok = (mlen > 0) & ((gtypes == POINT) | (gtypes == LINESTRING) | (gtypes == POLYGON))
     short = feat_ok & (mlen < _FRONTIER_MAX)
@@ -438,6 +448,11 @@ def decode_geometry_vec_batch_global(
         _batch_decode_core(out, G_all, mlen, *table, feat_ok, gtypes, version,
                            tile_x, tile_y, scale_x, scale_y, bbox)
     return out
+
+
+def _at(a, idx):
+    """A scalar-or-per-feature argument at feature indices idx."""
+    return a[idx] if isinstance(a, np.ndarray) else a
 
 
 def _frontier_walk(G, geom_off, feats, feat_ok):
@@ -588,8 +603,7 @@ def _batch_decode_core(out, G_all, mlen, cmds, cnts, vstarts, bfeat, feat_ok, gt
             # both start with MT(1), and every MT is followed by a LineTo
             # (LINESTRING v1 tolerates repeated and trailing MoveTos)
             rule = (new_feat & ~is_mt) | (is_mt & (cnts != 1))
-            if gt == POLYGON or version != 1:
-                rule |= is_mt & ~nxt_lt
+            rule |= is_mt & ~nxt_lt & ((gt == POLYGON) | (_at(version, bfeat) != 1))
             if gt == LINESTRING:
                 rule |= is_cl
             else:  # strict (MT(1), LT+, CLOSE)* grouping
@@ -671,6 +685,9 @@ def _cursor_pass(G_all, vmask, vstarts, cnts, bfeat, tile_x, tile_y, scale_x, sc
     buf = np.empty((int((p_hi - p_lo).max()), 2), dtype=np.int64)
     carry = np.zeros(2, dtype=np.int64)
     over = None
+    pt_feat = None
+    if any(isinstance(a, np.ndarray) for a in (tile_x, tile_y, scale_x, scale_y)):
+        pt_feat = np.repeat(bfeat, cnts)
     for a, b, ga, gb in zip(p_lo.tolist(), p_hi.tolist(), g_lo.tolist(), g_hi.tolist()):
         vs = G_all[ga:gb][vmask[ga:gb]]
         d = (vs >> 1).view(np.int32)  # unzigzag32, in 4-byte lanes
@@ -693,10 +710,11 @@ def _cursor_pass(G_all, vmask, vstarts, cnts, bfeat, tile_x, tile_y, scale_x, sc
                 over = np.zeros(n, dtype=bool)
             over[a:b] = (np.abs(seg) > _REACH).any(axis=1)
         pts[a:b] = seg
-        np.divide(seg[:, 0], scale_x, out=X[a:b])
-        X[a:b] += tile_x
-        np.divide(seg[:, 1], scale_y, out=Y[a:b])
-        Y[a:b] += tile_y
+        pf = None if pt_feat is None else pt_feat[a:b]
+        np.divide(seg[:, 0], _at(scale_x, pf), out=X[a:b])
+        X[a:b] += _at(tile_x, pf)
+        np.divide(seg[:, 1], _at(scale_y, pf), out=Y[a:b])
+        Y[a:b] += _at(tile_y, pf)
     return pts, X, Y, over
 
 
@@ -775,10 +793,9 @@ def _assemble_paths(out, feat_ok, gt, version, X, Y, px, py, cmds, cnts, bfeat,
     # a part needs its MoveTo plus >=1 (line) or >=2 (ring) LineTos
     bad_grp = counts <= (1 if gt == LINESTRING else 2)
     if bad_grp.any():
-        if version != 1:
-            # per-FEATURE decline; the scalar walk replays the exact error
-            feat_ok[gfeat[bad_grp]] = False
-            bad_grp = ~feat_ok[gfeat]
+        # v2: per-FEATURE decline; the scalar walk replays the exact error
+        feat_ok[gfeat[bad_grp & (_at(version, gfeat) != 1)]] = False
+        bad_grp |= ~feat_ok[gfeat]
         # v1 leniency (the cursor's "move_to"/"close" resets): a part
         # whose LineTos all collapsed is silently dropped; its deltas
         # already advanced the shared cursor via the cumsum
@@ -827,8 +844,9 @@ def _assemble_paths(out, feat_ok, gt, version, X, Y, px, py, cmds, cnts, bfeat,
     ford = np.cumsum(ffirst) - 1
     cw = areas[vi] < 0.0
     first_cw = cw[ffirst]
-    if version != 1 and first_cw.any():
-        feat_ok[vfeat[ffirst][first_cw]] = False
+    if first_cw.any():  # v2 rejects a clockwise first ring
+        reject = first_cw & (_at(version, vfeat[ffirst]) != 1)
+        feat_ok[vfeat[ffirst][reject]] = False
     ext = cw == first_cw[ford]
     in_box = (np.ones(len(vi), dtype=bool) if bbox is None
               else _in_box(_part_envelopes(X, Y, starts), bbox)[vi])
@@ -837,7 +855,7 @@ def _assemble_paths(out, feat_ok, gt, version, X, Y, px, py, cmds, cnts, bfeat,
     owner = np.maximum.accumulate(np.where(ext, np.arange(len(vi)), 0))
     keep = in_box & in_box[owner] & feat_ok[vfeat]
     ri = vi[keep]
-    rev = (reverse_sign != first_cw[ford])[keep]
+    rev = (_at(reverse_sign, vfeat) != first_cw[ford])[keep]
     lens_o = out_len[ri]
     if len(ri) == len(out_len) and not need.any() and not rev.any():
         xs, ys = X, Y  # nothing dropped, closed, or reversed

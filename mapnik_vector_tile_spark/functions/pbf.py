@@ -273,25 +273,10 @@ def decode_layer(data: bytes) -> dict:
         "name": None, "version": 1, "extent": 4096, "keys": [], "values": [],
         "features": [], "has_extent": False,
     }
-    features = out["features"]
     while pos < n_data:
-        # inline fast path for Feature frames (tag 0x12, 1-2 byte
-        # length) — a dense layer is thousands of these and the generic
-        # read_varint call per frame costs more than the slicing
         if data[pos] == 0x12:
-            b0 = data[pos + 1] if pos + 1 < n_data else 0x80
-            if b0 < 0x80:
-                ln, p2 = b0, pos + 2
-            else:
-                b1 = data[pos + 2] if pos + 2 < n_data else 0x80
-                if b1 < 0x80:
-                    ln, p2 = (b0 & 0x7F) | (b1 << 7), pos + 3
-                else:
-                    ln, p2 = -1, pos
-            if ln >= 0:
-                features.append(data[p2 : p2 + ln])
-                pos = p2 + ln
-                continue
+            pos = feature_run(data, pos, out["features"])
+            continue
         t, pos = read_varint(data, pos)
         field, wire = t >> 3, t & 0x7
         if field == 1 and wire == WT_LEN:
@@ -311,7 +296,7 @@ def decode_layer(data: bytes) -> dict:
             ln, pos = read_varint(data, pos)
             out["values"].append(decode_value(data[pos : pos + ln]))
             pos += ln
-        elif field == 2 and wire == WT_LEN:
+        elif field == 2 and wire == WT_LEN:  # a Feature with a long tag
             ln, pos = read_varint(data, pos)
             out["features"].append(data[pos : pos + ln])
             pos += ln
@@ -320,6 +305,31 @@ def decode_layer(data: bytes) -> dict:
     if out["name"] is None:
         raise ValueError("layer missing required name (v2 check)")
     return out
+
+
+def feature_run(data: bytes, pos: int, out: list) -> int:
+    """Append the payloads of the run of Feature frames (tag 0x12) that
+    starts at `pos` to `out`; returns the position after the run (the
+    first non-Feature frame, or the end). decode_layer's Feature walk,
+    and the batch decode's walk of a layer's feature suffix. A frame cut
+    by the layer's end keeps what is left of it, as in decode_layer."""
+    n = len(data)
+    append = out.append
+    while pos < n and data[pos] == 0x12:
+        # 1-2 byte lengths inline: a dense layer is thousands of frames
+        # and the generic read_varint call costs more than the slicing
+        b0 = data[pos + 1] if pos + 1 < n else 0x80
+        if b0 < 0x80:
+            ln, pos = b0, pos + 2
+        else:
+            b1 = data[pos + 2] if pos + 2 < n else 0x80
+            if b1 < 0x80:
+                ln, pos = (b0 & 0x7F) | (b1 << 7), pos + 3
+            else:
+                ln, pos = read_varint(data, pos + 1)
+        append(data[pos : pos + ln])
+        pos += ln
+    return pos
 
 
 def decode_feature(data: bytes) -> dict:
@@ -370,34 +380,25 @@ def decode_feature(data: bytes) -> dict:
 
 
 def decode_features_batch(feature_msgs: list[bytes]):
-    """Batch feature-message parse: the field walk of EVERY feature of a
-    layer runs as a masked vectorized cursor (a feature has <=6 frames,
-    so the walk is ~6 read_varints_at steps however many features there
-    are), and all geometry/tags payloads decode through ONE
-    decode_varints_vec pass each. The per-feature Python message walk
-    (decode_feature, the strict reference) costs more than the actual
-    geometry decode on dense small-feature tiles — this removes it.
+    """Batch feature-message parse: the field walk of EVERY feature runs
+    as a masked vectorized cursor (a feature has <=6 frames, so the walk
+    is ~6 read_varints_at steps however many features there are), and
+    all geometry/tags payloads decode through ONE decode_varints_vec
+    pass each. The per-feature Python message walk (decode_feature, the
+    strict reference) costs more than the actual geometry decode on
+    dense small-feature tiles — this removes it.
 
-    Returns one dict of layer-wide arrays — no per-feature objects:
-    ids, types, the global geometry and tag value arrays with their
-    per-feature offsets (geom_off / tag_off), raster spans into buf —
-    or None when any feature's wire shape defeats the lockstep walk
-    (repeated fields, unknown tags, >12 frames); the caller then parses
-    each feature individually. Callers pair it with
+    Returns one dict of flat arrays — no per-feature objects: ids,
+    types, the global geometry and tag value arrays with their
+    per-feature offsets (geom_off / tag_off), raster spans into buf, and
+    ok. A feature whose wire shape defeats the lockstep walk (repeated
+    fields, unknown tags, >12 frames, a payload that ends mid-varint)
+    is declined alone: ok=False, no geometry, tags or raster, and the
+    caller parses it with decode_feature. Callers pair it with
     commands.decode_geometry_vec_batch_global, which walks the global
     geometry array directly via geom_off (the frontier walk for short
     streams, the periodic-run walk for long ones)."""
     n = len(feature_msgs)
-    if n == 0:
-        z = np.zeros(0, dtype=np.int64)
-        return {
-            "n": 0, "ids": z, "types": z,
-            "geom_vals": np.zeros(0, dtype=np.uint64),
-            "geom_off": np.zeros(1, dtype=np.int64),
-            "tag_vals": z, "tag_off": np.zeros(1, dtype=np.int64),
-            "rast_s": z, "rast_l": z,
-            "buf": np.zeros(0, dtype=np.uint8),
-        }
     lens = np.fromiter((len(m) for m in feature_msgs), dtype=np.int64, count=n)
     ends = np.cumsum(lens)
     starts = ends - lens
@@ -411,40 +412,38 @@ def decode_features_batch(feature_msgs: list[bytes]):
     tags_l = np.zeros(n, dtype=np.int64)
     rast_s = np.full(n, -1, dtype=np.int64)
     rast_l = np.zeros(n, dtype=np.int64)
+    ok = np.ones(n, dtype=bool)
 
     pos = starts.copy()
-    active = np.arange(n)
+    active = np.flatnonzero(lens > 0)
     for _step in range(12):
         if len(active) == 0:
             break
         p = pos[active]
         tags_v, tl = read_varints_at(buf, p)
-        if (tl == 0).any():
-            return None
         field = (tags_v >> np.uint64(3)).astype(np.int64)
         wire = (tags_v & np.uint64(7)).astype(np.int64)
         vv, vl = read_varints_at(buf, p + tl)
-        if (vl == 0).any():
-            return None
         is_var = wire == WT_VARINT
         is_len = wire == WT_LEN
-        if (~is_var & ~is_len).any():
-            return None
         payload_s = p + tl + vl
-        nxt = np.where(is_len, payload_s + vv.astype(np.int64), p + tl + vl)
-        if (nxt > ends[active]).any():
-            return None
+        nxt = np.where(is_len, payload_s + vv.astype(np.int64), payload_s)
         f1 = is_var & (field == 1)
         f3 = is_var & (field == 3)
         f2 = is_len & (field == 2)
         f4 = is_len & (field == 4)
         f5 = is_len & (field == 5)
-        known = f1 | f3 | f2 | f4 | f5
-        if not known.all():
-            return None
-        # repeated fields defeat the lockstep walk -> decline
-        if (f2 & (tags_s[active] >= 0)).any() or (f4 & (geom_s[active] >= 0)).any():
-            return None
+        bad = (
+            (tl == 0) | (vl == 0) | ~(f1 | f3 | f2 | f4 | f5)
+            | (nxt > ends[active]) | (nxt < payload_s)
+            # repeated fields defeat the lockstep walk
+            | (f2 & (tags_s[active] >= 0)) | (f4 & (geom_s[active] >= 0))
+        )
+        if bad.any():
+            ok[active[bad]] = False
+            good = ~bad
+            active, vv, payload_s, nxt = active[good], vv[good], payload_s[good], nxt[good]
+            f1, f2, f3, f4, f5 = f1[good], f2[good], f3[good], f4[good], f5[good]
         ids[active[f1]] = vv[f1].astype(np.int64)
         types[active[f3]] = vv[f3].astype(np.int64)
         tags_s[active[f2]] = payload_s[f2]
@@ -455,46 +454,43 @@ def decode_features_batch(feature_msgs: list[bytes]):
         rast_l[active[f5]] = vv[f5].astype(np.int64)
         pos[active] = nxt
         active = active[nxt < ends[active]]
-    if len(active):
-        return None  # >12 frames: decline
+    ok[active] = False  # >12 frames
 
     def _ragged_varints(s_arr, l_arr):
-        """regions -> (global uint64 values, per-feature value counts)."""
-        have = s_arr >= 0
-        lens_r = np.where(have, l_arr, 0)
-        tot = int(lens_r.sum())
-        if tot == 0:
-            return np.empty(0, dtype=np.uint64), np.zeros(n, dtype=np.int64)
-        gbase = np.repeat(np.where(have, s_arr, 0), lens_r)
-        goffs = np.arange(tot, dtype=np.int64) - np.repeat(
-            np.cumsum(lens_r) - lens_r, lens_r
-        )
-        gathered = buf[gbase + goffs]
-        vals = decode_varints_vec(gathered)
+        """regions -> (global uint64 values, per-feature value counts).
+        A region that ends mid-varint or holds a varint past 10 bytes
+        declines its feature."""
+        while True:
+            lens_r = np.where(ok & (s_arr >= 0), l_arr, 0)
+            region_ends = np.cumsum(lens_r)
+            gathered = ragged_gather(buf, np.maximum(s_arr, 0), lens_r, np.arange(n))[0]
+            is_end = gathered < 0x80
+            cut = np.zeros(n, dtype=bool)
+            has = lens_r > 0
+            cut[has] = ~is_end[region_ends[has] - 1]
+            end_pos = np.flatnonzero(is_end)
+            long = end_pos[np.diff(end_pos, prepend=-1) > 10]
+            if len(long):
+                cut[np.searchsorted(region_ends, long, side="right")] = True
+            if not cut.any():
+                break
+            ok[cut] = False
         # values per region = count of varint-terminator bytes in it
-        is_end = (gathered & 0x80) == 0
-        region_ends = np.cumsum(lens_r)
-        counts = np.empty(n, dtype=np.int64)
         cum = np.concatenate([[0], np.cumsum(is_end)])
-        counts = cum[region_ends] - cum[region_ends - lens_r]
-        return vals, counts
+        return decode_varints_vec(gathered), cum[region_ends] - cum[region_ends - lens_r]
 
-    try:
-        geom_vals, geom_counts = _ragged_varints(geom_s, geom_l)
-        tag_vals, tag_counts = _ragged_varints(tags_s, tags_l)
-    except ValueError:
-        return None  # truncated/overlong varints in some payload
-    geom_off = np.concatenate([[0], np.cumsum(geom_counts)])
-    tag_off = np.concatenate([[0], np.cumsum(tag_counts)])
-
+    # tags first: a feature the geometry pass declines keeps no geometry
+    tag_vals, tag_counts = _ragged_varints(tags_s, tags_l)
+    geom_vals, geom_counts = _ragged_varints(geom_s, geom_l)
+    rast_s[~ok] = -1
     return {
-        "n": n,
+        "ok": ok,
         "ids": ids,
         "types": types,
         "geom_vals": geom_vals,
-        "geom_off": geom_off,
+        "geom_off": np.concatenate([[0], np.cumsum(geom_counts)]),
         "tag_vals": tag_vals.astype(np.int64),
-        "tag_off": tag_off,
+        "tag_off": np.concatenate([[0], np.cumsum(tag_counts)]),
         "rast_s": rast_s,
         "rast_l": rast_l,
         "buf": buf,
@@ -1322,20 +1318,30 @@ def parse_layers_batch(layer_blobs: list[bytes]) -> dict:
     # bulk utf8: gather payload bytes once, split via pyarrow offsets
     import pyarrow as pa  # noqa: F811 — kept local-name for clarity
 
-    def _strings(ps: np.ndarray, pl: np.ndarray):
+    def _strings(ps: np.ndarray, pl: np.ndarray, owner: np.ndarray):
         if len(ps) == 0:
             return np.empty(0, dtype=object)
         gathered, offs = ragged_gather(buf, ps, pl, np.arange(len(ps)))
+        raw = gathered.tobytes()
         arr = pa.StringArray.from_buffers(
-            len(ps),
-            pa.py_buffer(offs.astype(np.int32).tobytes()),
-            pa.py_buffer(gathered.tobytes()),
+            len(ps), pa.py_buffer(offs.astype(np.int32).tobytes()), pa.py_buffer(raw)
         )
-        return arr.to_numpy(zero_copy_only=False)
+        try:
+            return arr.to_numpy(zero_copy_only=False)
+        except pa.ArrowException:
+            # invalid UTF-8 somewhere: reject only the layers that own a
+            # bad string (the strict parser raises the error for them)
+            out = np.full(len(ps), None, dtype=object)
+            for i, (a, b) in enumerate(zip(offs[:-1].tolist(), offs[1:].tolist())):
+                try:
+                    out[i] = raw[a:b].decode("utf-8")
+                except UnicodeDecodeError:
+                    ok[owner[i]] = False
+            return out
 
     name_vals = np.full(n, None, dtype=object)
-    has_name = name_s >= 0
-    name_vals[has_name] = _strings(name_s[has_name], name_l[has_name])
+    has_name = np.flatnonzero(name_s >= 0)
+    name_vals[has_name] = _strings(name_s[has_name], name_l[has_name], has_name)
 
     if rec_layer:
         r_layer = np.concatenate(rec_layer)
@@ -1351,7 +1357,7 @@ def parse_layers_batch(layer_blobs: list[bytes]) -> dict:
 
     keys_m = r_field == 3
     key_layer, key_ps, key_pl = r_layer[keys_m], r_ps[keys_m], r_pl[keys_m]
-    keys = _strings(key_ps, key_pl)
+    keys = _strings(key_ps, key_pl, key_layer)
 
     vals_m = r_field == 4
     val_layer, val_ps, val_pl = r_layer[vals_m], r_ps[vals_m], r_pl[vals_m]
@@ -1366,7 +1372,7 @@ def parse_layers_batch(layer_blobs: list[bytes]) -> dict:
             & (1 + sll + slen.astype(np.int64) == val_pl)
         )
         values[is_str] = _strings(
-            (val_ps + 1 + sll)[is_str], slen.astype(np.int64)[is_str]
+            (val_ps + 1 + sll)[is_str], slen.astype(np.int64)[is_str], val_layer[is_str]
         )
         slow = np.flatnonzero(~is_str)
         raw = buf.tobytes() if len(slow) else b""

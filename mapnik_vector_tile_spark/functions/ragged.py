@@ -139,154 +139,6 @@ def _splice(
     )
 
 
-# ---------------------------------------------------------------------------
-# Build: unpacked world geometries -> quantized ragged batch
-# ---------------------------------------------------------------------------
-
-def build(geoms: list, vt):
-    """geoms: list of (kind, val) in world coordinates (gunpack output).
-
-    Quantizes every coordinate in ONE pass (transform_visitor semantics,
-    src/vector_tile_strategy.hpp:44-56: out-of-range points dropped) and
-    applies the per-kind validity rules of geometry.transform_geom.
-
-    vt: a G.ViewTransform (one tile), OR a (ox, oy, sx, sy) tuple of
-    per-FEATURE float64 arrays — the multi-tile form used by the
-    segmented batch encoder (px=(x-ox)*sx, py=(oy-y)*sy, then
-    std::round + hiRange mask, bit-identical to ViewTransform.forward
-    when ox=minx, oy=maxy, sx=sy=extent/tile_size).
-
-    Returns (batch, fkind (F,) int8, eject_rows): eject_rows are
-    geometrycollection features, which keep the scalar pipeline.
-    """
-    F = len(geoms)
-    fkind = np.zeros(F, dtype=np.int8)
-    ejects: list[int] = []
-
-    parts: list[np.ndarray] = []
-    plen: list[int] = []
-    pfeat: list[int] = []
-    ptype: list[int] = []
-    ppoly: list[int] = []
-    pfirst: list[bool] = []
-    polyctr = 0
-
-    for i, (kind, val) in enumerate(geoms):
-        if kind == "empty":
-            continue
-        if kind == "geometrycollection":
-            ejects.append(i)
-            continue
-        if kind == "point":
-            parts.append(np.asarray(val, dtype=np.float64).reshape(1, 2))
-            plen.append(1); pfeat.append(i); ptype.append(PT_POINT)
-            ppoly.append(-1); pfirst.append(False)
-            fkind[i] = FK_POINT
-        elif kind == "multipoint":
-            a = np.asarray(val, dtype=np.float64).reshape(-1, 2)
-            if len(a) == 0:
-                continue
-            parts.append(a)
-            plen.append(len(a)); pfeat.append(i); ptype.append(PT_MPOINT)
-            ppoly.append(-1); pfirst.append(False)
-            fkind[i] = FK_MPOINT
-        elif kind == "linestring":
-            a = np.asarray(val, dtype=np.float64).reshape(-1, 2)
-            if len(a) < 2:
-                continue
-            parts.append(a)
-            plen.append(len(a)); pfeat.append(i); ptype.append(PT_LINE)
-            ppoly.append(-1); pfirst.append(False)
-            fkind[i] = FK_LINE
-        elif kind == "multilinestring":
-            any_part = False
-            for line in val:
-                a = np.asarray(line, dtype=np.float64).reshape(-1, 2)
-                if len(a) < 2:
-                    continue
-                parts.append(a)
-                plen.append(len(a)); pfeat.append(i); ptype.append(PT_LINE)
-                ppoly.append(-1); pfirst.append(False)
-                any_part = True
-            if any_part:
-                fkind[i] = FK_LINE
-        elif kind == "polygon":
-            added = _add_poly(
-                val, i, parts, plen, pfeat, ptype, ppoly, pfirst, polyctr
-            )
-            polyctr += added
-            if added:
-                fkind[i] = FK_POLY
-        elif kind == "multipolygon":
-            added = 0
-            for poly in val:
-                added += _add_poly(
-                    poly, i, parts, plen, pfeat, ptype, ppoly, pfirst,
-                    polyctr + added,
-                )
-            polyctr += added
-            if added:
-                fkind[i] = FK_POLY
-        else:
-            raise ValueError(kind)
-
-    if parts:
-        coords = np.concatenate(parts, axis=0)
-        if isinstance(vt, G.ViewTransform):
-            px, ok = G.quantize(coords, vt)
-        else:
-            ox, oy, sx, sy = vt
-            fpt = np.repeat(np.asarray(pfeat, dtype=np.int64),
-                            np.asarray(plen, dtype=np.int64))
-            fx = (coords[:, 0] - ox[fpt]) * sx[fpt]
-            fy = (oy[fpt] - coords[:, 1]) * sy[fpt]
-            pxf = G.round_half_away(np.stack([fx, fy], axis=1))
-            ok = (
-                (pxf[:, 0] > G.COORD_MIN) & (pxf[:, 0] < G.COORD_MAX)
-                & (pxf[:, 1] > G.COORD_MIN) & (pxf[:, 1] < G.COORD_MAX)
-            )
-            px = np.clip(pxf, G.COORD_MIN, G.COORD_MAX).astype(np.int64)
-    else:
-        px = _EMPTY_PTS
-        ok = _EMPTY_B
-
-    b = Batch(
-        px,
-        np.asarray(plen, dtype=np.int64),
-        np.asarray(pfeat, dtype=np.int64),
-        np.asarray(ptype, dtype=np.int8),
-        np.asarray(ppoly, dtype=np.int64),
-        np.asarray(pfirst, dtype=bool),
-    )
-
-    if len(ok) and not ok.all():
-        b = _apply_point_keep(b, ok)
-        b = _revalidate_after_pointdrop(b, fkind)
-    return b, fkind, ejects
-
-
-def _add_poly(rings_in, feat, parts, plen, pfeat, ptype, ppoly, pfirst,
-              poly_id) -> int:
-    """Append one polygon's rings; returns 1 if the polygon was added.
-    transform_geom rule: a polygon whose first ring has < 3 points is
-    dropped whole; degenerate inner rings are dropped here (the clip
-    stage skips them before any other effect)."""
-    if not rings_in:
-        return 0
-    rings = [np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in rings_in]
-    if len(rings[0]) < 3:
-        return 0
-    first = True
-    for r in rings:
-        if not first and len(r) < 3:
-            continue
-        parts.append(r)
-        plen.append(len(r)); pfeat.append(feat); ptype.append(PT_RING)
-        ppoly.append(poly_id); pfirst.append(first)
-        first = False
-    return 1
-
-
 def _revalidate_after_pointdrop(b: Batch, fkind: np.ndarray) -> Batch:
     """transform_geom validity rules after out-of-range point drops:
     lines < 2 pts die; a polygon whose FIRST ring fell below 3 dies
@@ -954,14 +806,13 @@ def encode_batch(
     stats: dict | None = None,
     force_resolve: bool = False,
 ):
-    """Full vectorized transform->simplify->clip->encode for a feature
-    batch. Returns (feat_rows, gtypes, flat_cmds, feat_cmd_lens,
-    eject_rows): eject_rows (sorted, unique) are features the caller
-    must run through the scalar pipeline (geometry collections +
-    fill-resolver polygons)."""
-    b, fkind, ejects = build(geoms, vt)
-    return _encode_batch_core(
-        b, fkind, ejects, len(geoms), clip_box, simplify_distance,
+    """encode_batch_gpack over (kind, val) world geometries (gunpack
+    output), packed first. Returns (feat_rows, gtypes, flat_cmds,
+    feat_cmd_lens, eject_rows): eject_rows (sorted, unique) are features
+    the caller must run through the scalar pipeline (geometry
+    collections + fill-resolver polygons)."""
+    return encode_batch_gpack(
+        [G.gpack(g) for g in geoms], vt, clip_box, simplify_distance,
         area_threshold, stats, force_resolve,
     )
 
@@ -975,10 +826,12 @@ def encode_batch_gpack(
     stats: dict | None = None,
     force_resolve: bool = False,
 ):
-    """encode_batch over raw geometry.gpack blobs — skips the per-feature
-    gunpack/tuple round-trip by parsing the packed wire format
-    ([code u8][nr u32][counts u32*nr][parts u32*nr][coords f64]) into
-    the ragged arrays directly (single-ring features fully vectorized)."""
+    """Full vectorized transform->simplify->clip->encode for a batch of
+    geometry.gpack blobs, parsed straight into the ragged arrays by
+    build_gpack. Returns (feat_rows, gtypes, flat_cmds, feat_cmd_lens,
+    eject_rows): eject_rows (sorted, unique) are features the caller
+    must run through the scalar pipeline (geometry collections +
+    fill-resolver polygons)."""
     b, fkind, ejects, F = build_gpack(blobs, vt)
     return _encode_batch_core(
         b, fkind, ejects, F, clip_box, simplify_distance,
@@ -1035,7 +888,19 @@ def build_gpack(blobs, vt):
     u32le * nr][ring->part ids u32le * nr][coords f64le]. Single-ring
     features (the dominant tile shape) parse fully vectorized; nr>1
     features take a small per-feature lane and are spliced back in
-    feature order. Returns (batch, fkind, ejects(empty), n_features)."""
+    feature order.
+
+    Quantizes every coordinate in one pass (transform_visitor semantics,
+    src/vector_tile_strategy.hpp:44-56: out-of-range points dropped) and
+    applies the per-kind validity rules of geometry.transform_geom.
+    vt: a G.ViewTransform (one tile), OR a (ox, oy, sx, sy) tuple of
+    per-FEATURE float64 arrays — the multi-tile form used by the
+    segmented batch encoder (px=(x-ox)*sx, py=(oy-y)*sy, then
+    std::round + hiRange mask, bit-identical to ViewTransform.forward
+    when ox=minx, oy=maxy, sx=sy=extent/tile_size).
+
+    Returns (batch, fkind, ejects, n_features): ejects are the geometry
+    collection rows, which keep the scalar pipeline."""
     F = len(blobs)
     fkind = np.zeros(F, dtype=np.int8)
     if F == 0:
@@ -1050,7 +915,7 @@ def build_gpack(blobs, vt):
     boffs = np.cumsum(lens) - lens
     codes = buf[boffs].astype(np.int64)
     # geometry collections (gpack code 8, nested tree header) keep the
-    # scalar pipeline, like the tuple lane's build() ejects them
+    # scalar pipeline
     coll = codes == G._GP_COLLECTION
     gc_ejects = np.flatnonzero(coll).tolist()
     present = (codes != _GPC_EMPTY) & ~coll
@@ -1070,7 +935,8 @@ def build_gpack(blobs, vt):
     # --- vectorized single-ring lane -------------------------------------
     srows = np.flatnonzero(single)
     npts = (lens[srows] - 13) // 16
-    # validity rules of build(): lines need >=2 pts, rings >=3, any >=1
+    # transform_geom's validity rules: lines need >=2 pts, rings >=3,
+    # any >=1
     c = codes[srows]
     keep = np.where(
         (c == _GPC_LINE) | (c == _GPC_MLINE), npts >= 2,
@@ -1179,7 +1045,7 @@ def build_gpack(blobs, vt):
                 new_pfirst=np.asarray(m_first, dtype=bool),
             )
 
-    # --- quantize (identical math to build()) -----------------------------
+    # --- quantize ---------------------------------------------------------
     coords = b1.pts
     if len(coords):
         if isinstance(vt, G.ViewTransform):

@@ -2,38 +2,39 @@
 
 The reference decodes through one feature iterator,
 tile_featureset_pbf::next (src/vector_tile_datasource_pbf.ipp:35-194,
-src/vector_tile_featureset_pbf.ipp:113-325). Here that iterator is
-`_layer_features`: the only code that turns a layer message into
-features. It yields EVERY feature as (name, feature_id, geom_type,
-packed-or-None, props, raster), the geometry in the packed ragged form
-{kind, xs, ys, offsets[, exterior]} in mercator coordinates. One tile
-loop (`_tile_layers`: decompress, tile bounds, layer split) feeds it,
-and every scan is a projection of that walk:
+src/vector_tile_featureset_pbf.ipp:113-325). Here that iterator is one
+kernel that runs once per Arrow batch of tiles:
 
-  * WKT rows (decode_layer_rows / decode_tile_rows / decode_tiles)
-    render the packed form with geometry.wkt_from_packed;
-  * the packed and gpack scans (iter_layer_packed / decode_tiles_packed
-    / decode_tiles_gpack) drop features with no geometry and no raster,
-    like the reference's next() skip;
-  * the columnar kernel's fallback lane takes mx/my from single-point
-    features (NaN for every other feature). Its fast lane
-    (pbf.parse_layers_batch -> pbf.uniform_point_columns) decodes this
-    engine's uniform point framing without the walk; a layer the batch
-    header parse does not prove (foreign layout, unknown field, corrupt
-    frame) takes the fallback lane.
+  1. split: decompress every tile and cut it into layer messages;
+  2. header parse: one pbf.parse_layers_batch over every layer. A layer
+     it rejects, or whose feature suffix holds a non-Feature frame,
+     parses its header (only) through the strict pbf.decode_layer;
+  3. feature parse: one pbf.decode_features_batch over every feature
+     message. A feature it declines, and every feature of a few-big
+     layer, parses alone through pbf.decode_feature;
+  4. geometry decode: one commands.decode_geometry_vec_batch_global
+     over every geometry, each with its own layer's transform
+     (scale = extent / tile_mercator_size(z); coord = tile_origin +
+     px / scale, datasource_pbf.ipp:150-170). A geometry it declines
+     replays through the scalar decode_geometry, which owns the exact
+     v1/v2 error matrix.
 
-Layer headers have two parsers: the strict pbf.decode_layer, and the
-batch parse (a masked numpy walk whose long layers finish on the scalar
-pbf.layer_header_hop). The hop also feeds the hot-tile split's
-dictionary-slicing lane; any other layer shape splits through the
-generic pbf.split_layer_chunks.
-
-Decode applies tile_x/tile_y/scale like the reference:
-scale = extent / tile_mercator_size(z); decoded coord =
-tile_origin + px / scale (datasource_pbf.ipp:150-170).
+The kernel yields per-feature columns (tile row, layer, name, id, type,
+packed geometry {kind, xs, ys, offsets[, exterior]} in mercator
+coordinates, props, raster) and every scan projects them: WKT rows
+(decode_layer_rows / decode_tile_rows / decode_tiles), packed and gpack
+rows (iter_layer_packed / decode_tiles_packed / decode_tiles_gpack,
+which drop features with no geometry and no raster, like the
+reference's next() skip), and the columnar kernel, which decodes this
+engine's uniform point framing straight from the header parse and
+sends every other layer through the kernel. Errors name the tile (and
+layer) that raised them.
 """
 
 from __future__ import annotations
+
+from itertools import chain
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -50,86 +51,10 @@ DECODED_SCHEMA = (
     "geom_wkt string, props map<string,string>, raster binary"
 )
 
-
-class _LayerBatch:
-    """Per-layer decode state of _layer_features: feature fields as
-    GLOBAL flat arrays when the lockstep wire walk holds
-    (pbf.decode_features_batch); on few big features and exotic wire
-    shapes, each feature message parses alone through the strict
-    pbf.decode_feature (whose long geometries decode vectorized). Either
-    way every geometry goes through ONE vectorized decode
-    (commands.decode_geometry_vec_batch_global, or its list entry
-    decode_geometry_vec_batch), and `batched` holds its per-feature
-    output: a packed dict, the EMPTY marker, or None (declined)."""
-
-    __slots__ = ("n", "ids", "types", "tags", "tag_off", "glen",
-                 "batched", "_feats", "_fb")
-
-    def __init__(self, layer: dict, dec_args: dict):
-        msgs = layer["features"]
-        # shape heuristic: the lockstep walk + ragged gathers win on
-        # MANY SMALL features (the dense-tile shape) but cost ~3x the
-        # per-feature parse on a few huge ones (the reference's enf /
-        # multi_line bench tiles, ~40KB/feature) — those take the
-        # per-feature lane, whose geometry decode is vectorized anyway
-        few_big = len(msgs) > 0 and sum(len(m) for m in msgs) > 2048 * len(msgs)
-        fb = (
-            None if few_big
-            else pbf.decode_features_batch(msgs)
-        )
-        self._fb = fb
-        if fb is not None:
-            self._feats = None
-            self.n = fb["n"]
-            self.ids = fb["ids"].tolist()
-            self.types = fb["types"].tolist()
-            self.tags = fb["tag_vals"].tolist()
-            self.tag_off = fb["tag_off"].tolist()
-            self.glen = np.diff(fb["geom_off"]).tolist()
-            self.batched = Cmd.decode_geometry_vec_batch_global(
-                fb["geom_vals"], fb["geom_off"], fb["types"], **dec_args,
-            )
-        else:  # exotic wire shapes: parse each feature alone
-            feats = [pbf.decode_feature(m) for m in layer["features"]]
-            self._feats = feats
-            self.n = len(feats)
-            self.ids = [f["id"] for f in feats]
-            self.types = [f["type"] for f in feats]
-            tags: list[int] = []
-            tag_off = [0]
-            for f in feats:
-                tags.extend(f["tags"])
-                tag_off.append(len(tags))
-            self.tags, self.tag_off = tags, tag_off
-            self.glen = [len(f["geometry"]) for f in feats]
-            self.batched = Cmd.decode_geometry_vec_batch(
-                [f["geometry"] for f in feats], self.types, **dec_args,
-            )
-
-    def geom(self, fi: int):
-        if self._feats is not None:
-            return self._feats[fi]["geometry"]
-        fb = self._fb
-        return fb["geom_vals"][fb["geom_off"][fi] : fb["geom_off"][fi + 1]]
-
-    def raster(self, fi: int):
-        if self._feats is not None:
-            return self._feats[fi]["raster"]
-        fb = self._fb
-        s = fb["rast_s"][fi]
-        return fb["buf"][s : s + fb["rast_l"][fi]].tobytes() if s >= 0 else None
-
-    def props_of(self, fi: int, keys: list, vals_str: list) -> dict:
-        # out-of-range indices are silently skipped, like the reference
-        # featureset (vector_tile_featureset_pbf.ipp:147-148)
-        props = {}
-        tags, n_keys, n_vals = self.tags, len(keys), len(vals_str)
-        for i in range(self.tag_off[fi], self.tag_off[fi + 1] - 1, 2):
-            ki, vi = tags[i], tags[i + 1]
-            if ki >= n_keys or vi >= n_vals:
-                continue
-            props[keys[ki]] = vals_str[vi]
-        return props
+# a layer whose features average more bytes than this parses them one by
+# one: the lockstep walk costs ~3x the scalar parse on ~40KB features
+# (the reference's enf / multi_line bench tiles)
+FEW_BIG_BYTES = 2048
 
 
 def _layer_ok(layer: dict) -> bool:
@@ -146,93 +71,237 @@ def _layer_ok(layer: dict) -> bool:
     return True
 
 
-def _layer_dec_args(layer: dict, bounds, bbox) -> dict:
-    minx, miny, maxx, maxy = bounds
-    # decode transform: px -> mercator (datasource_pbf scale semantics)
-    scale = layer["extent"] / (float(maxx) - float(minx))
-    return dict(
-        version=layer["version"],
-        tile_x=float(minx),
-        tile_y=float(maxy),
-        scale_x=scale,
-        scale_y=-scale,  # y down in tile space
-        bbox=bbox,
-    )
-
-
-def _layer_features(layer_bytes: bytes, bounds, bbox=None, typed: bool = False) -> list[tuple]:
-    """One layer message -> one (name, feature_id, geom_type, packed,
-    props, raster) tuple per feature, in wire order — the engine's only
-    layer decode. packed is the ragged geometry {kind, xs, ys,
-    offsets[, exterior]} or None (no geometry, or all of it outside
-    `bbox`). Features the vectorized decoder declines replay through the
-    scalar decode_geometry, which owns the exact v1/v2 error matrix.
-    typed=True keeps property values as their decoded python variants
-    (int/float/bool/str) instead of stringifying — the re-encode merge
-    path needs the Value types back (vector_tile_load_tile.hpp:93-137)."""
-    layer = pbf.decode_layer(bytes(layer_bytes))
-    if not _layer_ok(layer):
-        return []
-    kw = _layer_dec_args(layer, bounds, bbox)
-    lb = _LayerBatch(layer, kw)
-    keys = layer["keys"]
-    if typed:
-        vals = list(layer["values"])
-    else:
-        vals = [None if v is None else str(v) for v in layer["values"]]
-    name = layer["name"]
-    out = []
-    for fi in range(lb.n):
-        pk = None
-        if lb.glen[fi]:
-            g = lb.batched[fi]
-            if g is None:
-                g = _pack_from_parts(Cmd.decode_geometry(lb.geom(fi), lb.types[fi], **kw))[1]
-            pk = g if isinstance(g, dict) else None
-        out.append(
-            (name, lb.ids[fi], lb.types[fi], pk, lb.props_of(fi, keys, vals), lb.raster(fi))
-        )
-    return out
-
-
-def _tile_layers(z: int, x: int, y: int, tile: bytes, bbox=None, typed: bool = False):
-    """The tile loop of every walk-based scan: decompress, the tile's
-    mercator bounds once, then each layer through _layer_features.
-    Yields one feature list per layer, in wire order."""
-    if not tile:
-        return
-    try:
-        layers = pbf.decode_tile(Z.decompress(bytes(tile)))
-    except Exception as exc:
-        exc.add_note(_where(z, x, y))
-        raise
-    bounds = tilemath.tile_mercator_bbox_np(x, y, z)
-    for li, layer_bytes in enumerate(layers):
-        try:
-            feats = _layer_features(layer_bytes, bounds, bbox=bbox, typed=typed)
-        except Exception as exc:
-            exc.add_note(_where(z, x, y, li))
-            raise
-        yield feats
-
-
 def _where(z: int, x: int, y: int, li: int | None = None) -> str:
     """The note a decode error carries: which tile (and layer) failed."""
     return f"while decoding tile z/x/y {z}/{x}/{y}" + ("" if li is None else f", layer {li}")
 
 
-def _wkt_rows(z: int, x: int, y: int, feats: list[tuple]) -> list[tuple]:
-    wkts = G.wkt_from_packed([f[3] for f in feats])
-    return [
-        (z, x, y, name, fid, gt, wkt, props, raster)
-        for (name, fid, gt, _pk, props, raster), wkt in zip(feats, wkts)
-    ]
+def _u64(values) -> np.ndarray:
+    """Python varints, wrapped to 64 bits, -> uint64 (a decode_feature
+    geometry may already be a uint64 ndarray)."""
+    if isinstance(values, np.ndarray):
+        return values
+    return np.array([v & 0xFFFFFFFFFFFFFFFF for v in values], dtype=np.uint64)
 
 
-def _kept(feats: list[tuple]) -> list[tuple]:
+def _i64(values: list) -> np.ndarray:
+    """Python varints -> int64, wrapped like the batch parse's uint64."""
+    return _u64(values).view(np.int64)
+
+
+def _split(keys, tiles):
+    """Kernel step 1: every tile of a batch -> its layer messages, with
+    each layer's tile row and its index within that tile."""
+    blobs: list[bytes] = []
+    ltile: list[int] = []
+    lli: list[int] = []
+    for t, tile in enumerate(tiles):
+        if not tile:
+            continue
+        try:
+            layers = pbf.decode_tile(Z.decompress(bytes(tile)))
+        except Exception as exc:
+            exc.add_note(_where(*(k[t] for k in keys)))
+            raise
+        for li, layer in enumerate(layers):
+            blobs.append(layer)
+            ltile.append(t)
+            lli.append(li)
+    return blobs, np.asarray(ltile, dtype=np.int64), np.asarray(lli, dtype=np.int64)
+
+
+def _decode_layers(blobs, ltile, lli, bounds, keys=None, bbox=None, typed=False,
+                   meta=None, todo=None):
+    """Kernel steps 2-4: blobs[i] is layer lli[i] of tile row ltile[i];
+    bounds are the tiles' (minx, miny, maxx, maxy) mercator arrays and
+    keys their (z, x, y) arrays, which error notes name. meta is the
+    batch header parse (made here when absent); todo masks the layers
+    to decode. typed=True keeps property values as their decoded python
+    variants (int/float/bool/str) instead of strings — the re-encode
+    merge path needs the Value types back (vector_tile_load_tile.hpp:
+    93-137).
+
+    Returns per-feature columns in tile, layer and wire order: tile
+    (row), layer (index into blobs), li, name, ids, types, geom (packed
+    dict or None), props and raster."""
+    n_lay = len(blobs)
+    if meta is None:
+        meta = pbf.parse_layers_batch(blobs)
+    minx, _miny, maxx, maxy = bounds
+
+    def note(exc, i):
+        if keys is not None and i >= 0:
+            exc.add_note(_where(*(k[ltile[i]] for k in keys), lli[i]))
+
+    # --- step 2: headers; a strict layer appends its dictionaries ---
+    ok = meta["ok"]
+    names, version = meta["name"].copy(), meta["version"].copy()
+    extent = meta["extent"].astype(np.float64)
+    kcnt = np.bincount(meta["key_layer"], minlength=n_lay)
+    vcnt = np.bincount(meta["val_layer"], minlength=n_lay)
+    koff, voff = np.cumsum(kcnt) - kcnt, np.cumsum(vcnt) - vcnt
+    keys_x: list = []
+    vals_x: list = []
+    feats: list = [()] * n_lay
+    i = -1
+    try:
+        for i in range(n_lay) if todo is None else np.flatnonzero(todo).tolist():
+            blob = blobs[i]
+            if ok[i]:
+                fs = int(meta["feat_start"][i] - meta["layer_start"][i])
+                if fs < 0 or version[i] not in (1, 2):
+                    continue
+                msgs: list = []
+                if pbf.feature_run(blob, fs, msgs) >= len(blob):
+                    feats[i] = msgs
+                    continue
+            layer = pbf.decode_layer(bytes(blob))
+            if _layer_ok(layer):
+                names[i], version[i], extent[i] = layer["name"], layer["version"], layer["extent"]
+                koff[i], kcnt[i] = len(meta["keys"]) + len(keys_x), len(layer["keys"])
+                voff[i], vcnt[i] = len(meta["values"]) + len(vals_x), len(layer["values"])
+                keys_x += layer["keys"]
+                vals_x += layer["values"]
+                feats[i] = layer["features"]
+    except Exception as exc:
+        note(exc, i)
+        raise
+    nf = np.fromiter(map(len, feats), dtype=np.int64, count=n_lay)
+    layer = np.repeat(np.arange(n_lay), nf)
+    msgs = list(chain.from_iterable(feats))
+    n = len(msgs)
+
+    # --- step 3: one batch feature parse; a few-big layer's features
+    # (handed over empty) and the declined ones parse alone, appended
+    # after the batch in parse order ---
+    few_big = np.fromiter((sum(map(len, f)) > FEW_BIG_BYTES * len(f) for f in feats),
+                          dtype=bool, count=n_lay)[layer]
+    fb = pbf.decode_features_batch([b"" if a else m for m, a in zip(msgs, few_big.tolist())])
+    alone = np.flatnonzero(few_big | ~fb["ok"]).tolist()
+    parsed = []
+    try:
+        for j in alone:
+            parsed.append(pbf.decode_feature(msgs[j]))
+    except Exception as exc:
+        note(exc, int(layer[j]))
+        raise
+    ids, types = fb["ids"], fb["types"]
+    ids[alone] = _i64([f["id"] for f in parsed])
+    types[alone] = _i64([f["type"] for f in parsed])
+    layer_p = np.concatenate([layer, layer[alone]])
+    types_p = np.concatenate([types, types[alone]])
+    glen = np.concatenate([np.diff(fb["geom_off"]),
+                           np.array([len(f["geometry"]) for f in parsed], dtype=np.int64)])
+    geom_off = np.concatenate([[0], np.cumsum(glen)])
+    # uint32, the cursor's & 0xFFFFFFFF
+    geom_vals = np.concatenate([fb["geom_vals"], *(_u64(f["geometry"]) for f in parsed)],
+                               dtype=np.uint32, casting="unsafe")
+
+    # --- step 4: one geometry decode, per-feature transforms ---
+    t_p, ver_p = ltile[layer_p], version[layer_p]
+    tx, ty = minx[t_p], maxy[t_p]
+    scale = extent[layer_p] / (maxx[t_p] - minx[t_p])
+    geoms = Cmd.decode_geometry_vec_batch_global(
+        geom_vals, geom_off, types_p, version=ver_p, tile_x=tx, tile_y=ty,
+        scale_x=scale, scale_y=-scale, bbox=bbox,
+    )
+    j = -1
+    try:
+        for j in np.flatnonzero(glen > 0).tolist():
+            if geoms[j] is None:
+                geoms[j] = _pack_from_parts(Cmd.decode_geometry(
+                    geom_vals[geom_off[j] : geom_off[j + 1]], int(types_p[j]),
+                    version=int(ver_p[j]), tile_x=float(tx[j]), tile_y=float(ty[j]),
+                    scale_x=float(scale[j]), scale_y=-float(scale[j]), bbox=bbox,
+                ))[1]
+    except Exception as exc:
+        note(exc, int(layer_p[j]))
+        raise
+    geoms = [g if isinstance(g, dict) else None for g in geoms]
+
+    # --- props: out-of-range indices are silently skipped, like the
+    # reference featureset (vector_tile_featureset_pbf.ipp:147-148) ---
+    all_keys = np.concatenate([meta["keys"], np.array(keys_x, dtype=object)])
+    all_vals = np.concatenate([meta["values"], np.array(vals_x, dtype=object)])
+    if not typed:
+        all_vals = np.array([None if v is None else str(v) for v in all_vals], dtype=object)
+    tags = np.concatenate([fb["tag_vals"], _i64([t for f in parsed for t in f["tags"]])])
+    tcnt = np.concatenate([np.diff(fb["tag_off"]),
+                           np.array([len(f["tags"]) for f in parsed], dtype=np.int64)])
+    npair = tcnt // 2
+    pf = np.repeat(np.arange(len(tcnt)), npair)
+    ki = np.repeat(np.cumsum(tcnt) - tcnt - 2 * (np.cumsum(npair) - npair), npair)
+    ki += 2 * np.arange(len(pf))
+    ki, vi, pl = tags[ki], tags[ki + 1], layer_p[pf]
+    good = (ki >= 0) & (ki < kcnt[pl]) & (vi >= 0) & (vi < vcnt[pl])
+    kl = all_keys[(koff[pl] + ki)[good]].tolist()
+    vl = all_vals[(voff[pl] + vi)[good]].tolist()
+    pend = np.cumsum(np.bincount(pf[good], minlength=len(tcnt))).tolist()
+    props = [dict(zip(kl[a:b], vl[a:b])) for a, b in zip([0, *pend[:-1]], pend)]
+
+    rasters = [None] * n
+    for j in np.flatnonzero(fb["rast_s"] >= 0).tolist():
+        s = fb["rast_s"][j]
+        rasters[j] = fb["buf"][s : s + fb["rast_l"][j]].tobytes()
+    for k, j in enumerate(alone):  # parse order -> wire order
+        geoms[j], props[j], rasters[j] = geoms[n + k], props[n + k], parsed[k]["raster"]
+    return SimpleNamespace(
+        tile=ltile[layer], layer=layer, li=lli[layer], name=names[layer], ids=ids,
+        types=types, geom=geoms[:n], props=props[:n], raster=rasters,
+    )
+
+
+def _decode_tiles(keys, tiles, bbox=None, typed=False):
+    """The decode kernel over one batch of tiles: keys = (z, x, y)
+    arrays, one entry per tile."""
+    blobs, ltile, lli = _split(keys, tiles)
+    bounds = tilemath.tile_mercator_bbox_np(keys[1], keys[2], keys[0])
+    return _decode_layers(blobs, ltile, lli, bounds, keys, bbox, typed)
+
+
+def _one_layer(layer_bytes: bytes, bounds, keys=None, bbox=None, typed=False):
+    """The decode kernel over one layer message of a tile with these
+    mercator bounds."""
+    zero = np.zeros(1, dtype=np.int64)
+    return _decode_layers([bytes(layer_bytes)], zero, zero,
+                          [np.full(1, float(v)) for v in bounds], keys, bbox, typed)
+
+
+def _keys(pdf: pd.DataFrame):
+    return pdf["z"].to_numpy(), pdf["x"].to_numpy(), pdf["y"].to_numpy()
+
+
+def _project(tiles: DataFrame, schema: str, project, bbox=None, typed=False, keep=()):
+    """A decode scan: one decode kernel call per Arrow batch, then
+    project(pdf, features) -> the scan's frame."""
+
+    def kernel(iterator):
+        for pdf in iterator:
+            out = project(pdf, _decode_tiles(_keys(pdf), pdf["tile"].to_numpy(), bbox, typed))
+            if len(out):
+                yield out
+
+    return tiles.select("z", "x", "y", "tile", *keep).mapInPandas(kernel, schema=schema)
+
+
+def _head(pdf, f, k) -> dict:
+    """The key columns of features k of a scan's frame."""
+    t = f.tile[k]
+    z, x, y = _keys(pdf)
+    return {"z": z[t], "x": x[t], "y": y[t], "layer": f.name[k],
+            "feature_id": f.ids[k], "geom_type": f.types[k]}
+
+
+def _kept(f) -> np.ndarray:
     """The packed scans' filter: features with no geometry and no raster
     are dropped, like the reference featureset's next() skip."""
-    return [f for f in feats if f[3] is not None or f[5] is not None]
+    return np.flatnonzero([g is not None or r is not None for g, r in zip(f.geom, f.raster)])
+
+
+def _wkt_rows(z: int, x: int, y: int, f) -> list[tuple]:
+    n = len(f.ids)
+    return list(zip([z] * n, [x] * n, [y] * n, f.name.tolist(), f.ids.tolist(),
+                    f.types.tolist(), G.wkt_from_packed(f.geom), f.props, f.raster))
 
 
 def decode_layer_rows(
@@ -240,37 +309,16 @@ def decode_layer_rows(
 ) -> list[tuple]:
     """One layer message -> decoded feature rows (mercator coordinates,
     WKT geometry). `bounds` is the tile mercator bbox (computed from
-    z/x/y if absent) — passing it lets callers amortize it across a
-    tile's layers."""
+    z/x/y if absent)."""
     if bounds is None:
         bounds = tilemath.tile_mercator_bbox_np(x, y, z)
-    return _wkt_rows(z, x, y, _layer_features(layer_bytes, bounds, bbox=bbox))
+    return _wkt_rows(z, x, y, _one_layer(layer_bytes, bounds, ([z], [x], [y]), bbox))
 
 
 def decode_tile_rows(z: int, x: int, y: int, tile: bytes, bbox=None) -> list[tuple]:
     """One tile -> decoded feature rows (mercator coordinates)."""
-    rows = []
-    for feats in _tile_layers(z, x, y, tile, bbox=bbox):
-        rows.extend(_wkt_rows(z, x, y, feats))
-    return rows
-
-
-def _scan(tiles: DataFrame, schema: str, columns: list[str], rows_of, keep=()) -> DataFrame:
-    """mapInPandas scaffold of the walk-based scans: rows_of(z, x, y,
-    tile, extras) -> output rows of one tile, where extras are the
-    tile's values of the `keep` columns."""
-
-    def kernel(iterator):
-        for pdf in iterator:
-            out = []
-            for z, x, y, tile, *extras in zip(
-                pdf["z"], pdf["x"], pdf["y"], pdf["tile"], *(pdf[c] for c in keep)
-            ):
-                out.extend(rows_of(int(z), int(x), int(y), tile, tuple(extras)))
-            if out:
-                yield pd.DataFrame(out, columns=columns)
-
-    return tiles.select("z", "x", "y", "tile", *keep).mapInPandas(kernel, schema=schema)
+    keys = (np.asarray([z]), np.asarray([x]), np.asarray([y]))
+    return _wkt_rows(z, x, y, _decode_tiles(keys, [tile], bbox))
 
 
 def _split_uniform_point_layer(layer_bytes: bytes, chunk_bytes: int):
@@ -387,11 +435,11 @@ def explode_hot_tiles(
     300k-feature z13 straggler) is split on feature-frame boundaries
     into standalone mini-tiles of ~chunk_bytes each, which then decode
     in PARALLEL tasks. Output schema is (z, x, y, tile) — the chunks are
-    valid uncompressed tile messages, so the shared tile loop of
+    valid uncompressed tile messages, so the decode kernel behind
     decode_tiles / decode_tiles_packed / decode_tiles_gpack and the
-    columnar kernel consume them unchanged (decompress passes raw pbf
+    columnar kernel consumes them unchanged (decompress passes raw pbf
     through). A chunk is a layer cut on feature-frame boundaries, so the
-    one layer walk decodes it exactly as it decodes the whole layer.
+    kernel decodes it exactly as it decodes the whole layer.
 
     Only rows whose stored payload is >= hot_bytes pay the split + the
     round-robin shuffle that spreads their chunks across tasks; cold
@@ -443,11 +491,12 @@ def decode_tiles(tiles: DataFrame, bbox=None) -> DataFrame:
     """tiles: (z, x, y, tile binary, ...) -> decoded feature rows (WKT
     text out — the compat/interop scan; pipelines ride the packed/gpack
     forms). `bbox` pushes a mercator query box into the decoder."""
-    return _scan(
-        tiles, DECODED_SCHEMA,
-        ["z", "x", "y", "layer", "feature_id", "geom_type", "geom_wkt", "props", "raster"],
-        lambda z, x, y, tile, _extras: decode_tile_rows(z, x, y, tile, bbox=bbox),
-    )
+
+    def project(pdf, f):
+        return pd.DataFrame({**_head(pdf, f, slice(None)), "geom_wkt": G.wkt_from_packed(f.geom),
+                             "props": f.props, "raster": f.raster})
+
+    return _project(tiles, DECODED_SCHEMA, project, bbox)
 
 
 PACKED_SCHEMA = (
@@ -461,11 +510,13 @@ def iter_layer_packed(layer_bytes: bytes, bounds, bbox=None, typed: bool = False
     """One layer message -> (name, feature_id, geom_type, pk_dict, props,
     raster) tuples, where pk_dict is the packed ragged geometry
     {kind, xs, ys, offsets[, exterior]} or None (raster-only feature):
-    the layer walk with empty/bbox-filtered geometry features without
+    the kernel with empty/bbox-filtered geometry features without
     raster dropped, like the reference featureset's next() skip
     (src/vector_tile_featureset_pbf.ipp:113-180). typed as in
-    _layer_features."""
-    return _kept(_layer_features(layer_bytes, bounds, bbox=bbox, typed=typed))
+    _decode_layers."""
+    f = _one_layer(layer_bytes, bounds, bbox=bbox, typed=typed)
+    return [(f.name[j], int(f.ids[j]), int(f.types[j]), f.geom[j], f.props[j], f.raster[j])
+            for j in _kept(f).tolist()]
 
 
 def decode_tiles_packed(tiles: DataFrame, bbox=None) -> DataFrame:
@@ -477,24 +528,18 @@ def decode_tiles_packed(tiles: DataFrame, bbox=None) -> DataFrame:
     list columns JVM-side. `bbox` pushes a mercator query box INTO the
     geometry decoder (the reference's filter_at_point/bbox query,
     src/vector_tile_datasource_pbf.ipp:196-216)."""
-    no_geom = (None,) * 5
 
-    def rows_of(z, x, y, tile, _extras):
-        return [
-            (z, x, y, name, fid, gt,
-             *(no_geom if pk is None else
-               (pk["kind"], pk["xs"], pk["ys"], pk["offsets"], pk.get("exterior"))),
-             props, raster)
-            for feats in _tile_layers(z, x, y, tile, bbox=bbox)
-            for name, fid, gt, pk, props, raster in _kept(feats)
-        ]
+    def project(pdf, f):
+        k = _kept(f).tolist()
+        pks = [f.geom[j] for j in k]
+        return pd.DataFrame({
+            **_head(pdf, f, k),
+            **{c: [None if pk is None else pk.get(c) for pk in pks]
+               for c in ("kind", "xs", "ys", "offsets", "exterior")},
+            "props": [f.props[j] for j in k], "raster": [f.raster[j] for j in k],
+        })
 
-    return _scan(
-        tiles, PACKED_SCHEMA,
-        ["z", "x", "y", "layer", "feature_id", "geom_type", "kind", "xs", "ys",
-         "offsets", "exterior", "props", "raster"],
-        rows_of,
-    )
+    return _project(tiles, PACKED_SCHEMA, project, bbox)
 
 
 GPACK_SCHEMA = (
@@ -539,43 +584,39 @@ def decode_tiles_gpack(
     by_name = {f.name: f for f in tiles.schema}
     for c in keep:
         schema += f", {c} {by_name[c].dataType.simpleString()}"
-    out_cols = [
-        "z", "x", "y", "layer", "feature_id", "geom_type",
-        "_gpk", "env_minx", "env_miny", "env_maxx", "env_maxy", "props",
-    ]
-    if ordinals:
-        out_cols += ["layer_idx", "feat_idx"]
-    if typed:
-        out_cols += ["ptype"]
-    if with_raster:
-        out_cols += ["raster"]
-    out_cols += keep
     no_geom = (bytes([0]), (float("nan"),) * 4)
 
-    def rows_of(z, x, y, tile, extras):
-        out = []
-        for li, feats in enumerate(_tile_layers(z, x, y, tile, bbox=bbox, typed=typed)):
-            # the default scan drops raster-only features: nothing to re-tile
-            kept = _kept(feats) if with_raster else [f for f in feats if f[3] is not None]
-            for fi, (name, fid, gt, pk, props, raster) in enumerate(kept):
-                gpk, env = no_geom if pk is None else G.gpack_from_packed(
-                    pk["kind"], pk["xs"], pk["ys"], pk["offsets"], pk.get("exterior"),
-                )
-                rec = [z, x, y, name, fid, gt, gpk, env[0], env[1], env[2], env[3]]
-                if typed:
-                    rec.append({k: None if v is None else str(v) for k, v in props.items()})
-                else:
-                    rec.append(props)
-                if ordinals:
-                    rec += [li, fi]
-                if typed:
-                    rec.append({k: _vtag(v) for k, v in props.items()})
-                if with_raster:
-                    rec.append(raster)
-                out.append((*rec, *extras))
-        return out
+    def project(pdf, f):
+        # the default scan drops raster-only features: nothing to re-tile
+        k = _kept(f) if with_raster else np.flatnonzero([g is not None for g in f.geom])
+        gpk, env = [], []
+        for pk in (f.geom[j] for j in k.tolist()):
+            g, e = no_geom if pk is None else G.gpack_from_packed(
+                pk["kind"], pk["xs"], pk["ys"], pk["offsets"], pk.get("exterior"),
+            )
+            gpk.append(g)
+            env.append(e)
+        env = np.asarray(env, dtype=np.float64).reshape(-1, 4)
+        props = [f.props[j] for j in k.tolist()]
+        cols = {**_head(pdf, f, k), "_gpk": gpk, "env_minx": env[:, 0], "env_miny": env[:, 1],
+                "env_maxx": env[:, 2], "env_maxy": env[:, 3], "props": props}
+        if typed:
+            cols["props"] = [{c: None if v is None else str(v) for c, v in p.items()}
+                             for p in props]
+        if ordinals:
+            lay = f.layer[k]
+            run = np.flatnonzero(np.r_[True, lay[1:] != lay[:-1]]) if len(k) else k
+            cols["layer_idx"] = f.li[k]
+            cols["feat_idx"] = np.arange(len(k)) - np.repeat(run, np.diff(np.r_[run, len(k)]))
+        if typed:
+            cols["ptype"] = [{c: _vtag(v) for c, v in p.items()} for p in props]
+        if with_raster:
+            cols["raster"] = [f.raster[j] for j in k.tolist()]
+        for c in keep:
+            cols[c] = pdf[c].to_numpy()[f.tile[k]]
+        return pd.DataFrame(cols)
 
-    return _scan(tiles, schema, out_cols, rows_of, keep=keep)
+    return _project(tiles, schema, project, bbox, typed, keep)
 
 
 def _vtag(v) -> str:
@@ -610,9 +651,7 @@ def _pack_from_parts(geom) -> tuple:
     kind, val = geom
     if kind == "empty":
         return ("empty", None)
-    if kind == "point":
-        parts, out_kind, ext = [np.atleast_2d(val)], "multipoint", None
-    elif kind == "multipoint":
+    if kind in ("point", "multipoint"):
         parts, out_kind, ext = [np.atleast_2d(val)], "multipoint", None
     elif kind == "linestring":
         parts, out_kind, ext = [np.asarray(val)], "multilinestring", None
@@ -675,26 +714,6 @@ def features_at_point(
 # benchmark direction, bench/readme.md:24-30)
 # ---------------------------------------------------------------------------
 
-def _fallback_rows(z: int, x: int, y: int, layer_bytes: bytes, li: int) -> list[tuple]:
-    """Columnar-kernel fallback: every feature of a layer the fast lane
-    cannot take (layer `li` of its tile), as (z, x, y, layer, mx, my,
-    props). Single-point features carry their exact decoded coordinates;
-    every other feature carries NaN by design."""
-    bounds = tilemath.tile_mercator_bbox_np(x, y, z)
-    try:
-        feats = _layer_features(layer_bytes, bounds)
-    except Exception as exc:
-        exc.add_note(_where(z, x, y, li))
-        raise
-    rows = []
-    for name, _fid, _gt, pk, props, _raster in feats:
-        mx = my = float("nan")
-        if pk is not None and pk["kind"] == "multipoint" and len(pk["xs"]) == 1:
-            mx, my = float(pk["xs"][0]), float(pk["ys"][0])
-        rows.append((z, x, y, name, mx, my, props))
-    return rows
-
-
 def _packed_rows_ok(m: np.ndarray, ml: np.ndarray, c: int) -> np.ndarray:
     """Per-row structural verification of the packed point framing.
 
@@ -731,7 +750,7 @@ def decode_tiles_columnar(tiles: DataFrame, prop_keys: list[str]) -> DataFrame:
     """Scale-path decode: point tiles -> columnar rows (one column per
     property key). The per-tile varint streams of a whole Arrow batch
     concatenate into ONE vectorized decode + reshape (tiny tiles cost
-    ~zlib only); non-uniform layers fall back to the generic walk."""
+    ~zlib only); every other layer goes through the decode kernel."""
     out_schema = (
         "z int, x long, y long, layer string, mx double, my double, "
         + ", ".join(f"`{k}` string" for k in prop_keys)
@@ -744,172 +763,115 @@ def columnar_kernel(prop_keys: list[str]):
     """The mapInPandas kernel of decode_tiles_columnar, exposed so the
     bench harness can drive the exact distributed stages single-core
     (the dense-tile decode anchor)."""
-    c_expected = len(prop_keys)
-    w = 11 + 2 * c_expected
 
     def kernel(iterator):
         for pdf in iterator:
-            n_tiles = len(pdf)
-            if n_tiles == 0:
+            keys = _keys(pdf)
+            blobs, ltile, lli = _split(keys, pdf["tile"].to_numpy())
+            if not blobs:
                 continue
-            zs = pdf["z"].to_numpy()
-            xs = pdf["x"].to_numpy()
-            ys = pdf["y"].to_numpy()
-            tiles_col = pdf["tile"].to_numpy()
-            blob_tile: list[int] = []
-            blob_li: list[int] = []
-            blobs: list[bytes] = []
-            fallback_rows: list[tuple] = []
-            for t in range(n_tiles):
-                tile = tiles_col[t]
-                if not tile:
-                    continue
-                data = Z.decompress(bytes(tile))
-                for li, layer_bytes in enumerate(pbf.decode_tile(data)):
-                    blobs.append(layer_bytes)  # already a bytes slice
-                    blob_tile.append(t)
-                    blob_li.append(li)
-
-            def fallback(i):  # layer i of the batch -> the strict lane
-                t = blob_tile[i]
-                fallback_rows.extend(_fallback_rows(
-                    int(zs[t]), int(xs[t]), int(ys[t]), blobs[i], blob_li[i]))
-
-            frames = []
-            nlay = len(blobs)
-            if nlay:
-                # one vectorized header walk for the whole batch (the
-                # per-layer Python walk was ~75% of worst-case decode);
-                # a batch-global parse failure (hostile bytes) routes
-                # every layer through the strict per-layer parser
-                try:
-                    meta = pbf.parse_layers_batch(blobs)
-                except Exception:
-                    meta = None
-            if nlay and meta is None:
-                for i in range(nlay):
-                    fallback(i)
-                nlay = 0
-            if nlay:
-                buf = meta["buf"]
-                ltile = np.asarray(blob_tile, dtype=np.int64)
-
-                key_counts = np.bincount(
-                    meta["key_layer"], minlength=nlay
-                ) if len(meta["key_layer"]) else np.zeros(nlay, dtype=np.int64)
-                koff = np.concatenate([[0], np.cumsum(key_counts)[:-1]])
-                cand = np.flatnonzero(
-                    meta["ok"]
-                    & (key_counts == c_expected)
-                    & (meta["feat_start"] >= 0)
-                    & (meta["feat_end"] > meta["feat_start"])
-                )
-                for j, kname in enumerate(prop_keys):
-                    if len(cand) == 0:
-                        break
-                    cand = cand[meta["keys"][koff[cand] + j] == kname]
-                # varint count per candidate region: segmented terminator
-                # sums via reduceat (a full-buffer cumsum was the batch's
-                # single most expensive numpy op)
-                nvals = np.empty(0, dtype=np.int64)
-                if len(cand):
-                    # one zero pad: a region ending exactly at the buffer
-                    # end would otherwise be an out-of-bounds reduceat index
-                    term = np.concatenate(
-                        [((buf & 0x80) == 0).astype(np.int32), np.zeros(1, np.int32)]
-                    )
-                    bounds = np.stack(
-                        [meta["feat_start"][cand], meta["feat_end"][cand]], axis=1
-                    ).reshape(-1)
-                    nvals = np.add.reduceat(term, bounds)[::2].astype(np.int64)
-                    keep_c = nvals % w == 0
-                    cand, nvals = cand[keep_c], nvals[keep_c]
-
-                uniform = np.zeros(nlay, dtype=bool)
-                uniform[cand] = True
-                for i in np.flatnonzero(~uniform):
-                    fallback(i)
-
-            if nlay and len(cand):
-                flen = meta["feat_end"][cand] - meta["feat_start"][cand]
-                big, _offs = pbf.ragged_gather(
-                    buf, meta["feat_start"][cand], flen, np.arange(len(cand))
-                )
-                # targeted-column decode: boundaries once, then only the
-                # value-index + coord columns gather-decode; constants
-                # and declared lengths verify per row (the full-stream
-                # decode_varints_vec was ~8 whole-buffer passes)
-                res = pbf.uniform_point_columns(big, c_expected)
-                feat_counts = nvals // w
-                rep = np.repeat(np.arange(len(cand)), feat_counts)
-                if res is None:
-                    # stream does not frame at all (hostile): per-layer
-                    # strict fallback for every candidate layer
-                    vidx_m = np.empty((0, c_expected), dtype=np.uint64)
-                    zz_m = np.empty((0, 2), dtype=np.uint32)
-                    row_ok = np.zeros(len(rep), dtype=bool)
-                else:
-                    vidx_m, zz_m, row_ok = res
-                if not row_ok.all():
-                    # exotic framing: fall back ONLY the offending layers
-                    bad_meta = np.zeros(len(cand), dtype=bool)
-                    np.logical_or.at(bad_meta, rep, ~row_ok)
-                    for ci in np.flatnonzero(bad_meta):
-                        fallback(cand[ci])
-                    keep = ~bad_meta[rep]
-                    if res is not None:
-                        vidx_m, zz_m = vidx_m[keep], zz_m[keep]
-                    rep = rep[keep]
-                if len(rep):
-                    tz = zs[ltile[cand]][rep]
-                    tx = xs[ltile[cand]][rep]
-                    ty = ys[ltile[cand]][rep]
-                    names = meta["name"][cand][rep]
-                    extents = meta["extent"][cand].astype(np.float64)[rep]
-                    minx, miny, maxx, maxy = tilemath.tile_mercator_bbox_np(tx, ty, tz)
-                    scale = extents / (maxx - minx)
-                    px = Cmd.unzigzag32(zz_m[:, 0]).astype(np.float64)
-                    py = Cmd.unzigzag32(zz_m[:, 1]).astype(np.float64)
-                    mx = minx + px / scale
-                    my = maxy - py / scale
-                    # global value dictionary: concat per-layer dicts (flat
-                    # from the batch parse), shift tag indices per layer
-                    all_counts = np.bincount(
-                        meta["val_layer"], minlength=nlay
-                    ) if len(meta["val_layer"]) else np.zeros(nlay, dtype=np.int64)
-                    gl_off = np.concatenate([[0], np.cumsum(all_counts)[:-1]])
-                    vc = all_counts[cand]
-                    local_off = np.concatenate([[0], np.cumsum(vc)[:-1]])
-                    take = (
-                        np.repeat(gl_off[cand], vc)
-                        + np.arange(int(vc.sum()))
-                        - np.repeat(local_off, vc)
-                    )
-                    all_vals = meta["values"][take]
-                    shift = local_off[rep]
-                    cols = {}
-                    for j, k in enumerate(prop_keys):
-                        idx = vidx_m[:, j].astype(np.int64) + shift
-                        cols[k] = all_vals[idx] if len(all_vals) else np.array([], dtype=object)
-                    frames.append(
-                        pd.DataFrame(
-                            {"z": tz.astype(np.int32), "x": tx, "y": ty,
-                             "layer": names, "mx": mx, "my": my, **cols}
-                        )
-                    )
-            if fallback_rows:
-                fz, fx, fy, fname, fmx, fmy, fprops = zip(*fallback_rows)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "z": fz, "x": fx, "y": fy, "layer": fname,
-                            "mx": np.array(fmx, dtype=np.float64),
-                            "my": np.array(fmy, dtype=np.float64),
-                            **{k: [p.get(k) for p in fprops] for k in prop_keys},
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            # one vectorized header walk for the whole batch (the
+            # per-layer Python walk was ~75% of worst-case decode)
+            meta = pbf.parse_layers_batch(blobs)
+            frame, rest = _uniform_points(meta, keys, ltile, prop_keys)
+            frames = [] if frame is None else [frame]
+            if rest.any():
+                f = _decode_layers(
+                    blobs, ltile, lli, tilemath.tile_mercator_bbox_np(keys[1], keys[2], keys[0]),
+                    keys, meta=meta, todo=rest)
+                # single-point features carry their exact decoded
+                # coordinates; every other feature carries NaN
+                xy = np.array([(pk["xs"][0], pk["ys"][0]) if pk is not None
+                               and pk["kind"] == "multipoint" and len(pk["xs"]) == 1
+                               else (np.nan, np.nan) for pk in f.geom]).reshape(-1, 2)
+                head = _head(pdf, f, slice(None))
+                frames.append(pd.DataFrame({
+                    **{c: head[c] for c in ("z", "x", "y", "layer")},
+                    "mx": xy[:, 0], "my": xy[:, 1],
+                    **{k: [p.get(k) for p in f.props] for k in prop_keys},
+                }))
+            out = pd.concat(frames, ignore_index=True) if frames else ()
+            if len(out):
+                yield out
 
     return kernel
+
+
+def _uniform_points(meta: dict, keys, ltile, prop_keys: list[str]):
+    """The columnar kernel's fast lane: layers in this engine's uniform
+    point framing (pbf.uniform_point_columns) with exactly prop_keys as
+    keys decode straight from the batch header parse. Returns (frame or
+    None, mask of the layers it did not take)."""
+    c_expected = len(prop_keys)
+    w = 11 + 2 * c_expected
+    nlay = len(meta["ok"])
+    rest = np.ones(nlay, dtype=bool)
+    buf = meta["buf"]
+    key_counts = np.bincount(meta["key_layer"], minlength=nlay)
+    koff = np.concatenate([[0], np.cumsum(key_counts)[:-1]])
+    cand = np.flatnonzero(
+        meta["ok"]
+        & (key_counts == c_expected)
+        & (meta["feat_start"] >= 0)
+        & (meta["feat_end"] > meta["feat_start"])
+    )
+    for j, kname in enumerate(prop_keys):
+        if len(cand) == 0:
+            break
+        cand = cand[meta["keys"][koff[cand] + j] == kname]
+    if len(cand) == 0:
+        return None, rest
+    # varint count per candidate region: segmented terminator sums via
+    # reduceat (a full-buffer cumsum was the batch's single most
+    # expensive numpy op); one zero pad: a region ending exactly at the
+    # buffer end would otherwise be an out-of-bounds reduceat index
+    term = np.concatenate([((buf & 0x80) == 0).astype(np.int32), np.zeros(1, np.int32)])
+    bounds = np.stack([meta["feat_start"][cand], meta["feat_end"][cand]], axis=1).reshape(-1)
+    nvals = np.add.reduceat(term, bounds)[::2].astype(np.int64)
+    keep_c = nvals % w == 0
+    cand, nvals = cand[keep_c], nvals[keep_c]
+    if len(cand) == 0:
+        return None, rest
+    flen = meta["feat_end"][cand] - meta["feat_start"][cand]
+    big, _offs = pbf.ragged_gather(buf, meta["feat_start"][cand], flen, np.arange(len(cand)))
+    # targeted-column decode: boundaries once, then only the value-index
+    # + coord columns gather-decode; constants and declared lengths
+    # verify per row (the full-stream decode_varints_vec was ~8
+    # whole-buffer passes)
+    res = pbf.uniform_point_columns(big, c_expected)
+    if res is None:  # the stream does not frame at all (hostile)
+        return None, rest
+    vidx, zz_m, row_ok = res
+    rep = np.repeat(np.arange(len(cand)), nvals // w)
+    vcnt = np.bincount(meta["val_layer"], minlength=nlay)
+    vidx = vidx.astype(np.int64)
+    # a dangling value reference leaves the fast lane too: the kernel
+    # skips it, like the reference featureset
+    row_ok &= ((vidx >= 0) & (vidx < vcnt[cand][rep][:, None])).all(axis=1)
+    if not row_ok.all():
+        # exotic framing: only the offending layers leave the fast lane
+        bad = np.zeros(len(cand), dtype=bool)
+        np.logical_or.at(bad, rep, ~row_ok)
+        keep = ~bad[rep]
+        vidx, zz_m, rep = vidx[keep], zz_m[keep], rep[keep]
+        rest[cand[~bad]] = False
+    else:
+        rest[cand] = False
+    if len(rep) == 0:
+        return None, rest
+    lt = ltile[cand][rep]
+    tz, tx, ty = (k[lt] for k in keys)
+    names = meta["name"][cand][rep]
+    extents = meta["extent"][cand].astype(np.float64)[rep]
+    minx, miny, maxx, maxy = tilemath.tile_mercator_bbox_np(tx, ty, tz)
+    scale = extents / (maxx - minx)
+    px = Cmd.unzigzag32(zz_m[:, 0]).astype(np.float64)
+    py = Cmd.unzigzag32(zz_m[:, 1]).astype(np.float64)
+    mx = minx + px / scale
+    my = maxy - py / scale
+    # tag value indices -> the batch parse's flat value dictionary
+    vidx += (np.cumsum(vcnt) - vcnt)[cand][rep][:, None]
+    cols = {k: meta["values"][vidx[:, j]] for j, k in enumerate(prop_keys)}
+    frame = pd.DataFrame({"z": tz.astype(np.int32), "x": tx, "y": ty,
+                          "layer": names, "mx": mx, "my": my, **cols})
+    return frame, rest

@@ -135,15 +135,17 @@ def _bbox(version: int, use_bbox: bool):
     return (minx + 0.25 * w, miny + 0.2 * h, minx + 0.7 * w, miny + 0.75 * h)
 
 
-def _expected(version: int, layer_bytes: bytes, bbox) -> list[dict]:
+def _scalar_layer(z: int, x: int, y: int, layer_bytes: bytes, bbox,
+                  typed: bool = False) -> list[dict]:
     """Every feature of a layer through the scalar reference walk."""
-    z, x, y = TILES[version]
     minx, _miny, maxx, maxy = tilemath.tile_mercator_bbox_np(x, y, z)
     lay = pbf.decode_layer(layer_bytes)
+    if not D._layer_ok(lay):
+        return []
     scale = lay["extent"] / (float(maxx) - float(minx))
     kw = dict(version=lay["version"], tile_x=float(minx), tile_y=float(maxy),
               scale_x=scale, scale_y=-scale, bbox=bbox)
-    vals = [None if v is None else str(v) for v in lay["values"]]
+    vals = lay["values"] if typed else [None if v is None else str(v) for v in lay["values"]]
     out = []
     for m in lay["features"]:
         f = pbf.decode_feature(m)
@@ -161,6 +163,10 @@ def _expected(version: int, layer_bytes: bytes, bbox) -> list[dict]:
             props=props, raster=f["raster"],
         ))
     return out
+
+
+def _expected(version: int, layer_bytes: bytes, bbox) -> list[dict]:
+    return _scalar_layer(*TILES[version], layer_bytes, bbox)
 
 
 def _expected_tile(version: int, bbox) -> list[list[dict]]:
@@ -344,3 +350,240 @@ def test_columnar_fallback_points_match_fast_lane():
     assert list(a["id"]) == list(b["id"]) == [f"p{i}" for i in range(n)]
     assert np.array_equal(a["mx"].to_numpy(), b["mx"].to_numpy())
     assert np.array_equal(a["my"].to_numpy(), b["my"].to_numpy())
+
+
+# ---------------------------------------------------------------------------
+# one kernel call over a batch that mixes every lane
+# ---------------------------------------------------------------------------
+
+def _header_first(name, feats, keys, values, version=2, tail=b"") -> bytes:
+    """A layer in this engine's header-first layout (extent and version
+    before the features), so the batch header parse takes it; `tail`
+    is appended after the Feature frames."""
+    blob = bytearray()
+    for f in feats:
+        pbf.add_len_field(blob, 2, f)
+    return pbf.encode_layer_packed(name, bytes(blob) + tail, keys, values,
+                                   version=version)
+
+
+def _odd_features() -> list[bytes]:
+    """Small features of every shape, a raster-only one, and two the
+    batch feature parse declines: an unknown field and a repeated tags
+    field (the last one wins, as in decode_feature)."""
+    rng = np.random.default_rng(9)
+    out = []
+    for i in range(30):
+        x0, y0 = (int(v) for v in rng.integers(0, 4000, size=2))
+        ring = np.array([[x0, y0], [x0 + 9, y0], [x0 + 9, y0 + 9], [x0, y0 + 9]])
+        shape = [("polygon", [ring]), ("linestring", ring[:3]), ("point", ring[0])][i % 3]
+        out.append(pbf.encode_feature(i, [0, i % 4, 1, 1], *_geom(shape)))
+    out.append(pbf.encode_feature(100, [1, 2], 0, [], raster=b"raster-only"))
+    unknown = bytearray(pbf.encode_feature(101, [0, 1], *_geom(("point", np.array([5, 5])))))
+    pbf.add_varint_field(unknown, 9, 7)
+    out.append(bytes(unknown))
+    repeated = bytearray(pbf.encode_feature(102, [0, 0], *_geom(("point", np.array([6, 6])))))
+    pbf.add_len_field(repeated, 2, pbf.pack_varints([1, 3]))
+    out.append(bytes(repeated))
+    out.append(pbf.encode_feature(103, [0, 2], *_geom(("point", np.array([7, 7]))),
+                                  raster=b"raster+point"))
+    return out
+
+
+MIXED_KEYS = ["kind", "n"]
+MIXED_VALUES = [pbf.encode_value(v) for v in ("a", 1, 2.5, True)]
+
+
+def _mixed_batch() -> pd.DataFrame:
+    """Five tiles, one Arrow batch: header-first v2 and v1 layers (batch
+    header lane), the generated v1/v2 layers (extent after the features:
+    strict header lane, with few-big layers), a layer whose suffix ends
+    in a key frame (strict header lane), an unknown-version layer and a
+    v2 layer without an extent (no features), and an empty tile."""
+    odd = _odd_features()
+    tail = bytearray()
+    pbf.add_len_field(tail, 3, b"late_key")
+    no_extent = bytearray()
+    pbf.add_len_field(no_extent, 1, b"no_extent")
+    pbf.add_varint_field(no_extent, 15, 2)
+    pbf.add_len_field(no_extent, 2, odd[0])
+    tiles = [
+        [_header_first("hf2", odd, MIXED_KEYS, MIXED_VALUES), *_layers(2)],
+        [],
+        [*_layers(1), _header_first("hf1", odd, MIXED_KEYS, MIXED_VALUES, version=1)],
+        [_header_first("v3", odd, MIXED_KEYS, MIXED_VALUES, version=3), bytes(no_extent),
+         _header_first("tail", odd, MIXED_KEYS, MIXED_VALUES, tail=bytes(tail))],
+        [_header_first("hf2b", odd[::-1], MIXED_KEYS, MIXED_VALUES)],
+    ]
+    keys = [(14, 13089, 8506), (14, 13090, 8506), (13, 1310, 3166), (12, 600, 700),
+            (12, 601, 700)]
+    return pd.DataFrame({
+        "z": np.array([k[0] for k in keys], dtype=np.int32),
+        "x": np.array([k[1] for k in keys], dtype=np.int64),
+        "y": np.array([k[2] for k in keys], dtype=np.int64),
+        "tile": [zlib.compress(pbf.encode_tile(t)) if t else b"" for t in tiles],
+    })
+
+
+def _scalar_tile(z, x, y, tile: bytes, bbox, typed) -> list[tuple]:
+    """The per-tile scalar reference: (layer index, feature) pairs."""
+    if not tile:
+        return []
+    layers = pbf.decode_tile(zlib.decompress(tile))
+    return [(li, e) for li, lb in enumerate(layers)
+            for e in _scalar_layer(z, x, y, lb, bbox, typed)]
+
+
+def _typed_props(props: dict) -> dict:
+    return {k: (type(v), v) for k, v in props.items()}
+
+
+@pytest.mark.parametrize("use_bbox", [False, True])
+@pytest.mark.parametrize("typed", [False, True])
+def test_one_batch_mixes_every_lane(use_bbox, typed):
+    """One kernel call over the mixed batch, row for row and in order,
+    against the per-tile scalar reference."""
+    pdf = _mixed_batch()
+    bbox = _bbox(2, use_bbox)
+    f = D._decode_tiles(D._keys(pdf), pdf["tile"].to_numpy(), bbox=bbox, typed=typed)
+    want = [
+        (t, *row)
+        for t, (z, x, y, tile) in enumerate(zip(pdf["z"], pdf["x"], pdf["y"], pdf["tile"]))
+        for row in _scalar_tile(int(z), int(x), int(y), tile, bbox, typed)
+    ]
+    assert len(f.ids) == len(want) > 1000
+    lanes = {(int(f.tile[j]), f.name[j]) for j in range(len(want))}
+    assert {(0, "hf2"), (0, "enf"), (2, "small"), (2, "hf1"), (3, "tail"), (4, "hf2b")} <= lanes
+    assert not any(t in (1,) or n in ("v3", "no_extent") for t, n in lanes)
+    n_geom = 0
+    for j, (t, li, e) in enumerate(want):
+        assert (f.tile[j], f.li[j], f.name[j], f.ids[j], f.types[j]) == (
+            t, li, e["name"], e["id"], e["type"]), j
+        assert f.raster[j] == e["raster"], j
+        if typed:
+            assert _typed_props(f.props[j]) == _typed_props(e["props"]), j
+        else:
+            assert f.props[j] == e["props"], j
+        if e["packed"] is None:
+            assert f.geom[j] is None, j
+        else:
+            _assert_packed(f.geom[j], e["packed"])
+            n_geom += 1
+    assert 0 < n_geom < len(want)
+
+
+def _counting(monkeypatch, module, name) -> list:
+    calls = []
+    real = getattr(module, name)
+
+    def wrapper(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(module, name, wrapper)
+    return calls
+
+
+def test_one_parse_and_one_geometry_decode_per_batch(monkeypatch):
+    """Each Arrow batch makes one header parse, one feature parse and
+    one geometry decode, whatever lanes its layers take."""
+    counts = {name: _counting(monkeypatch, mod, name) for mod, name in (
+        (pbf, "parse_layers_batch"), (pbf, "decode_features_batch"),
+        (Cmd, "decode_geometry_vec_batch_global"))}
+    strict = _counting(monkeypatch, pbf, "decode_layer")
+    single = _counting(monkeypatch, pbf, "decode_feature")
+    replay = _counting(monkeypatch, Cmd, "decode_geometry")
+    pdf = _mixed_batch()
+    f = D._decode_tiles(D._keys(pdf), pdf["tile"].to_numpy())
+    assert len(f.ids) > 1000
+    assert {k: len(v) for k, v in counts.items()} == dict.fromkeys(counts, 1)
+    # strict headers: the six generated layers, "no_extent" and "tail";
+    # features alone: the 70 few-big ones, and the unknown-field and
+    # repeated-field feature of the four layers holding them
+    assert (len(strict), len(single)) == (8, 70 + 2 * 4)
+    # scalar geometry replays: only the two streams past 2^25 of each
+    # generated small layer; every canonical stream decodes vectorized,
+    # each with its own tile's transform
+    assert len(replay) == 4
+    # the columnar kernel: two Arrow batches, two calls of each
+    out = list(D.columnar_kernel(MIXED_KEYS)(iter([pdf, pdf.iloc[::-1]])))
+    assert len(out) == 2 and len(out[0]) == len(f.ids)
+    assert {k: len(v) for k, v in counts.items()} == dict.fromkeys(counts, 3)
+    # a batch with no stream past 2^25 replays nothing
+    tile = zlib.compress(pbf.encode_tile(
+        [_header_first("hf", _odd_features(), MIXED_KEYS, MIXED_VALUES)]))
+    keys = (np.full(3, 12), np.arange(3) + 600, np.full(3, 700))
+    replay.clear()
+    assert len(D._decode_tiles(keys, [tile] * 3).ids) == 3 * 34
+    assert replay == []
+
+
+def test_one_bad_layer_makes_one_strict_layer(monkeypatch):
+    """Invalid UTF-8 in one layer's value dictionary rejects that layer
+    alone from the batch header parse: 200 good tiles and 1 bad one make
+    one strict decode_layer call, and the error names the bad tile."""
+    zz = np.array([[Cmd._zz32(10), Cmd._zz32(20)]], dtype=np.uint32)
+
+    def layer(value: bytes) -> bytes:
+        return pbf.encode_layer_packed(
+            "pts", pbf.encode_point_features_packed(np.array([[0, 0]]), zz), ["k"], [value])
+
+    good = zlib.compress(pbf.encode_tile([layer(pbf.encode_value("v"))]))
+    bad = zlib.compress(pbf.encode_tile([layer(b"\x0a\x02\xff\xfe")]))
+    pdf = pd.DataFrame({
+        "z": np.full(201, 9, dtype=np.int32), "x": np.arange(201, dtype=np.int64),
+        "y": np.full(201, 7, dtype=np.int64), "tile": [good] * 200 + [bad],
+    })
+    calls = _counting(monkeypatch, pbf, "decode_layer")
+    for run in (
+        lambda: D._decode_tiles(D._keys(pdf), pdf["tile"].to_numpy()),
+        lambda: list(D.columnar_kernel(["k"])(iter([pdf]))),
+    ):
+        calls.clear()
+        with pytest.raises(UnicodeDecodeError) as info:
+            run()
+        assert len(calls) == 1
+        assert "tile z/x/y 9/200/7, layer 0" in str(info.value.__notes__)
+
+
+def test_columnar_dangling_value_reference():
+    """A uniform point feature whose tag value index is past its layer's
+    value dictionary gets no property (the reference featureset skips
+    the pair), in the fast lane as in the kernel — not the value of the
+    next layer of the batch."""
+    zz = np.array([[Cmd._zz32(10), Cmd._zz32(20)]], dtype=np.uint32)
+
+    def tile(vidx: int, value: str) -> bytes:
+        layer = pbf.encode_layer_packed(
+            "pts", pbf.encode_point_features_packed(np.array([[0, vidx]]), zz), ["k"],
+            [pbf.encode_value(value)])
+        return zlib.compress(pbf.encode_tile([layer]))
+
+    pdf = pd.DataFrame({"z": np.full(2, 9, dtype=np.int32), "x": np.arange(2, dtype=np.int64),
+                        "y": np.full(2, 7, dtype=np.int64), "tile": [tile(1, "a"), tile(0, "b")]})
+    out = pd.concat(list(D.columnar_kernel(["k"])(iter([pdf]))), ignore_index=True)
+    got = dict(zip(out["x"], out["k"]))
+    assert got == {0: None, 1: "b"}
+    want = [e["props"].get("k") for t in pdf["tile"]
+            for lb in pbf.decode_tile(zlib.decompress(t))
+            for e in _scalar_layer(9, 0, 7, lb, None)]
+    assert want == [None, "b"]
+
+
+@pytest.mark.parametrize("per_feature", [False, True])
+def test_vectorized_decode_declines_coordinates_past_reach(per_feature):
+    """A stream whose cursor passes 2^25 is declined to the scalar walk
+    (exact int area math), with scalar and with per-feature transforms;
+    its canonical neighbour still decodes vectorized."""
+    far = int(Cmd._zz32(1 << 26))
+    ring = np.array([[0, 0], [20, 0], [20, 20], [0, 20]])
+    gt, cmds = _geom(("polygon", [ring]))
+    kw = dict(tile_x=1.0, tile_y=2.0, scale_x=3.0, scale_y=-3.0)
+    if per_feature:
+        kw = {k: np.array([v, v + 1.0]) for k, v in kw.items()}
+    got = Cmd.decode_geometry_vec_batch(
+        [[9, far, 20, 10, 4, 4], cmds], [Cmd.LINESTRING, gt], **kw)
+    assert got[0] is None and isinstance(got[1], dict)
+    want = Cmd.decode_geometry(cmds, gt, **{k: (v[1] if per_feature else v)
+                                            for k, v in kw.items()})
+    _assert_packed(got[1], D._pack_from_parts(want)[1])

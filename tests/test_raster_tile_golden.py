@@ -33,7 +33,7 @@ pytestmark = pytest.mark.skipif(
 HALF = tilemath.HALF_OF_EQUATOR
 
 
-def _tile_layers(tile_bytes: bytes) -> list[dict]:
+def _layers_of_tile(tile_bytes: bytes) -> list[dict]:
     """tile bytes -> [{name, features: [feature dicts]}] (decompressing
     if the sink compressed)."""
     body = C.decompress(tile_bytes)
@@ -74,7 +74,7 @@ def test_raster_tile_output_1(natural_earth):
     feat = pbf.encode_feature(1, [], 0, [], raster=ras)
     layer = pbf.encode_layer("layer", [feat], [], [])
     tile = pbf.encode_tile([layer])
-    layers = _tile_layers(tile)
+    layers = _layers_of_tile(tile)
     assert len(layers) == 1
     name, feats = layers[0]["name"], layers[0]["features"]
     assert name == "layer" and len(feats) == 1
@@ -95,7 +95,7 @@ def test_raster_tile_output_2_overzoom():
     # through the tile: encode feature -> decode raster bytes -> overzoom
     feat = pbf.encode_feature(1, [], 0, [], raster=ras)
     tile = pbf.encode_tile([pbf.encode_layer("layer", [feat], [], [])])
-    f = _tile_layers(tile)[0]["features"][0]
+    f = _layers_of_tile(tile)[0]["features"][0]
     dec = J.decode(f["raster"])
     over = GT.warp_to_tile(dec, world, 2, 0, 1, 256)
     golden = R.png_decode(open(f"{FIXT}/expected-3.png", "rb").read())
@@ -123,7 +123,7 @@ def test_raster_tiles_operator_carries_webp(spark, images_small):
     tiles = raster_assoc.raster_tiles(located, 3, prop_cols=["fmt"])
     n_rasters = 0
     for trow in tiles.collect():
-        for lay in _tile_layers(bytes(trow["tile"])):
+        for lay in _layers_of_tile(bytes(trow["tile"])):
             for f in lay["features"]:
                 if f["raster"]:
                     n_rasters += 1
