@@ -15,4 +15,6 @@ citations in docstrings point at the *behaviour* being reproduced.
 
 __version__ = "0.1.0"
 
-from mapnik_vector_tile_spark import tilemath  # noqa: F401
+from mapnik_vector_tile_spark import importcache, tilemath  # noqa: F401
+
+importcache.install()

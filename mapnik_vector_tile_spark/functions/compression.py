@@ -18,11 +18,45 @@ def is_gzip_compressed(data: bytes) -> bool:
     return len(data) > 1 and data[0] == 0x1F and data[1] == 0x8B
 
 
+# Most bytes one tile may inflate to. A hostile row (a zlib bomb) fails
+# here instead of growing a Python worker without bound. The largest tile
+# the engine's own benchmarks read inflates to ~245 MB (bench.py's
+# 3M-feature hot_tile_sf1 anchor).
+INFLATE_CAP = 1 << 29
+# deflate's densest block (a 258-byte match per 2 bits) expands 1032:1,
+# so an input this much smaller than the cap cannot pass it
+_DEFLATE_MAX_RATIO = 1032
+
+
+def _inflate(data: bytes, wbits: int, cap: int) -> bytes:
+    """Inflate a zlib (wbits 15) or gzip (wbits 31, every member) stream
+    to at most ``cap`` bytes."""
+    out: list[bytes] = []
+    n = 0
+    while True:
+        d = zlib.decompressobj(wbits)
+        chunk = d.decompress(data, cap - n + 1)
+        n += len(chunk)
+        if n > cap:
+            raise ValueError(f"tile inflates past the {cap}-byte inflate cap")
+        if not d.eof:
+            raise zlib.error("incomplete or truncated stream")
+        out.append(chunk)
+        # gzip.decompress' rule: zero padding may follow the last member
+        data = d.unused_data.lstrip(b"\x00") if wbits == 31 else b""
+        if not data:
+            return b"".join(out)
+
+
 def decompress(data: bytes) -> bytes:
+    """Inflate a zlib or gzip tile (or pass a raw one through), raising
+    ValueError past INFLATE_CAP output bytes."""
     if is_gzip_compressed(data):
-        return gzip.decompress(data)
+        return _inflate(data, 31, INFLATE_CAP)
     if is_zlib_compressed(data):
-        return zlib.decompress(data)
+        if len(data) * _DEFLATE_MAX_RATIO <= INFLATE_CAP:
+            return zlib.decompress(data)
+        return _inflate(data, 15, INFLATE_CAP)
     return data
 
 

@@ -19,6 +19,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+# Most rows one block of cosine_near_dups' exact path may hold: a block
+# pair's Gram matrix is rows_a x rows_b float64, so 8,192 rows bound it
+# at 512 MiB per task.
+MAX_BLOCK_ROWS = 8192
+
 
 def _components(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return df.select(
@@ -157,7 +162,9 @@ def cosine_near_dups(
     irreducible movement of an exact quadratic baseline — instead of
     dim x N^2/2 exploded component rows through a sort-merge exchange.
     Size n_blocks so a block holds at most a few thousand rows
-    (~N/1024) to bound per-task Gram memory.
+    (~N/1024) to bound per-task Gram memory; a block over
+    MAX_BLOCK_ROWS rows raises a ValueError naming n_blocks and its
+    size (its rows never cross to Python).
     use_lsh=True: the scale path — only pairs sharing a hyperplane
     bucket in any table are scored (bucket equi-join, never all-pairs);
     recall vs exact is pinned in tests.
@@ -199,12 +206,16 @@ def cosine_near_dups(
         )
     spark = df.sparkSession
     thr = float(threshold)
+    bound = MAX_BLOCK_ROWS
     packed = (
         df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
         .where(F.col("vid").isNotNull() & F.col("vec").isNotNull())
         .withColumn("blk", F.pmod(F.xxhash64("vid"), F.lit(n_blocks)).cast("int"))
         .groupBy("blk")
         .agg(F.collect_list(F.struct("vid", "vec")).alias("rows"))
+        # an oversized block ships its size alone, which gram reports
+        .select("blk", F.size("rows").alias("n"),
+                F.when(F.size("rows") <= bound, F.col("rows")).alias("rows"))
     )
     pair_keys = (
         spark.range(n_blocks * n_blocks)
@@ -214,11 +225,15 @@ def cosine_near_dups(
         )
         .where(F.col("ba") <= F.col("bb"))
     )
-    a_side = packed.select(F.col("blk").alias("ba"), F.col("rows").alias("rows_a"))
-    b_side = packed.select(F.col("blk").alias("bb"), F.col("rows").alias("rows_b"))
+    a_side = packed.select(F.col("blk").alias("ba"), F.col("n").alias("n_a"),
+                           F.col("rows").alias("rows_a"))
+    b_side = packed.select(F.col("blk").alias("bb"), F.col("n").alias("n_b"),
+                           F.col("rows").alias("rows_b"))
     joined = pair_keys.join(a_side, "ba").join(b_side, "bb").select(
         "ba",
         "bb",
+        "n_a",
+        "n_b",
         "rows_a",
         # diag pairs read only rows_a — don't ship the duplicate copy
         F.when(F.col("ba") < F.col("bb"), F.col("rows_b")).alias("rows_b"),
@@ -236,9 +251,15 @@ def cosine_near_dups(
     def gram(iterator):
         for pdf in iterator:
             out_a, out_b, out_c = [], [], []
-            for ba, bb, rows_a, rows_b in zip(
-                pdf["ba"], pdf["bb"], pdf["rows_a"], pdf["rows_b"]
+            for ba, bb, n_a, n_b, rows_a, rows_b in zip(
+                pdf["ba"], pdf["bb"], pdf["n_a"], pdf["n_b"], pdf["rows_a"], pdf["rows_b"]
             ):
+                for blk, n in ((ba, n_a), (bb, n_b)):
+                    if n > bound:
+                        raise ValueError(
+                            f"cosine_near_dups: block {blk} holds {n} rows, over the "
+                            f"{bound}-row block bound at n_blocks={n_blocks}; raise "
+                            f"n_blocks to at least {n_blocks * -(-n // bound)}")
                 ids_a, Ma = _mat(rows_a)
                 if ba == bb:
                     ids_b, Mb = ids_a, Ma

@@ -469,7 +469,11 @@ def explode_hot_tiles(
             for z, x, y, tile in zip(pdf["z"], pdf["x"], pdf["y"], pdf["tile"]):
                 if not tile:
                     continue
-                data = Z.decompress(bytes(tile))
+                try:
+                    data = Z.decompress(bytes(tile))
+                except Exception as exc:
+                    exc.add_note(_where(z, x, y))
+                    raise
                 for chunk in split_tile_chunks_smart(data, chunk_bytes):
                     out_z.append(z)
                     out_x.append(x)

@@ -587,3 +587,39 @@ def test_vectorized_decode_declines_coordinates_past_reach(per_feature):
     want = Cmd.decode_geometry(cmds, gt, **{k: (v[1] if per_feature else v)
                                             for k, v in kw.items()})
     _assert_packed(got[1], D._pack_from_parts(want)[1])
+
+
+@pytest.mark.parametrize("wbits", [15, 31], ids=["zlib", "gzip"])
+def test_inflate_bomb_names_its_tile(monkeypatch, wbits):
+    """A stored tile that inflates past compression.INFLATE_CAP (a zlib
+    or gzip bomb: one unknown field holding cap zero bytes, which a tile
+    parse would skip) fails decode_tiles_columnar's kernel with a
+    ValueError naming the cap and the tile, after good tiles of the same
+    batch. The cap is lowered to 1 MiB; the kernel reads it in-process."""
+    from mapnik_vector_tile_spark.functions import compression as Z
+
+    cap = 1 << 20
+    monkeypatch.setattr(Z, "INFLATE_CAP", cap)
+    co = zlib.compressobj(9, zlib.DEFLATED, wbits)
+    head = bytearray(b"\x7a")  # field 15, length-delimited
+    pbf.write_varint(head, cap)
+    zeros = bytes(1 << 16)
+    bomb = co.compress(bytes(head)) + b"".join(co.compress(zeros) for _ in range(cap >> 16))
+    bomb += co.flush()
+    assert len(bomb) * 1032 > cap  # small enough to build, big enough to be capped
+    zz = np.array([[Cmd._zz32(10), Cmd._zz32(20)]], dtype=np.uint32)
+    good = zlib.compress(pbf.encode_tile([pbf.encode_layer_packed(
+        "pts", pbf.encode_point_features_packed(np.array([[0, 0]]), zz), ["k"],
+        [pbf.encode_value("v")])]))
+    pdf = pd.DataFrame({
+        "z": np.full(3, 9, dtype=np.int32), "x": np.arange(3, dtype=np.int64),
+        "y": np.full(3, 7, dtype=np.int64), "tile": [good, good, bomb],
+    })
+    assert len(list(D.columnar_kernel(["k"])(iter([pdf.iloc[:2]])))[0]) == 2
+    for run in (
+        lambda: list(D.columnar_kernel(["k"])(iter([pdf]))),
+        lambda: D._decode_tiles(D._keys(pdf), pdf["tile"].to_numpy()),
+    ):
+        with pytest.raises(ValueError, match=f"{cap}-byte inflate cap") as info:
+            run()
+        assert info.value.__notes__ == ["while decoding tile z/x/y 9/2/7"]

@@ -3,6 +3,8 @@ semantics) + tile I/O sniffing."""
 
 from __future__ import annotations
 
+import gzip
+
 import numpy as np
 import pytest
 
@@ -244,3 +246,57 @@ def test_segmented_deflate_stream_roundtrip():
         assert Z.is_zlib_compressed(stream)
         assert zlib.decompress(stream) == b"".join(parts)
         assert Z.decompress(stream) == b"".join(parts)
+
+
+def _inflate_exactly(n: int, gz: bool = False, members: int = 1) -> tuple[bytes, bytes]:
+    """(payload, stream): `members` gzip members (or one zlib stream) that
+    inflate to n bytes in all."""
+    import zlib
+
+    payload = (b"feature-tag-" * (n // 12 + 1))[:n]
+    if not gz:
+        return payload, zlib.compress(payload, 9)
+    cut = np.linspace(0, n, members + 1).astype(int)
+    stream = b"".join(
+        gzip.compress(payload[a:b], mtime=0) for a, b in zip(cut, cut[1:]))
+    return payload, stream
+
+
+@pytest.mark.parametrize("gz,members", [(False, 1), (True, 1), (True, 3)])
+def test_inflate_cap_boundary(monkeypatch, gz, members):
+    """A stream that inflates to exactly INFLATE_CAP bytes decodes (gzip
+    members joined); one byte more raises a ValueError naming the cap.
+    The cap is lowered below the zlib fast-path ratio so both lanes run."""
+    cap = 1 << 16
+    monkeypatch.setattr(Z, "INFLATE_CAP", cap)
+    payload, stream = _inflate_exactly(cap, gz, members)
+    assert len(stream) * 1032 > cap  # the capped inflate, not the fast path
+    assert Z.decompress(stream) == payload
+    _, over = _inflate_exactly(cap + 1, gz, members)
+    with pytest.raises(ValueError, match=f"{cap}-byte inflate cap"):
+        Z.decompress(over)
+    # far under the ratio: plain zlib.decompress (no cap check needed)
+    small, s = _inflate_exactly(100, gz)
+    assert Z.decompress(s) == small
+
+
+def test_gzip_padding_and_truncation_match_gzip_module():
+    """The capped gzip inflate keeps gzip.decompress' rules: members
+    join, trailing zero padding is ignored, and a truncated or corrupt
+    stream raises instead of returning a prefix."""
+    import zlib
+
+    payload, stream = _inflate_exactly(5000, gz=True, members=2)
+    assert Z.decompress(stream + b"\x00" * 7) == gzip.decompress(stream + b"\x00" * 7) == payload
+    for bad in (stream[:-3], stream[:40]):
+        with pytest.raises((zlib.error, EOFError)):
+            gzip.decompress(bad)
+        with pytest.raises(zlib.error):
+            Z.decompress(bad)
+    flipped = bytearray(stream)
+    flipped[-6] ^= 0xFF  # the last member's CRC32
+    with pytest.raises(zlib.error):
+        Z.decompress(bytes(flipped))
+    zs = zlib.compress(payload)
+    with pytest.raises(zlib.error):
+        Z.decompress(zs[:-5])

@@ -230,6 +230,29 @@ def test_cosine_near_dups_block_gram_exact(vectors):
     assert got1 == got
 
 
+def test_cosine_near_dups_block_bound(vectors, monkeypatch):
+    """A block over ann.MAX_BLOCK_ROWS fails the exact path with an
+    error naming n_blocks and the block's size; at a bound the largest
+    block meets, the pairs are those of the default bound."""
+    import re
+
+    base = ann.cosine_near_dups(vectors, threshold=0.3, n_blocks=2).toPandas()
+    monkeypatch.setattr(ann, "MAX_BLOCK_ROWS", 5)
+    with pytest.raises(Exception) as info:
+        ann.cosine_near_dups(vectors, threshold=0.3, n_blocks=2).collect()
+    m = re.search(r"block \d holds (\d+) rows, over the 5-row block bound at n_blocks=2",
+                  str(info.value))
+    assert m, str(info.value)[-500:]
+    sizes = vectors.select(
+        (F.pmod(F.xxhash64("vec_id"), F.lit(2))).alias("b")).groupBy("b").count().toPandas()
+    assert int(m.group(1)) in set(sizes["count"])
+    monkeypatch.setattr(ann, "MAX_BLOCK_ROWS", int(sizes["count"].max()))
+    same = ann.cosine_near_dups(vectors, threshold=0.3, n_blocks=2).toPandas()
+    key = ["doc_a", "doc_b"]
+    assert same.sort_values(key).reset_index(drop=True).equals(
+        base.sort_values(key).reset_index(drop=True))
+
+
 def test_cosine_near_dups_ragged_and_degenerate(spark):
     """Exact-path parity with the component-equi-join semantics on the
     inputs the kernel must not crash on: mixed vector widths (dot over
